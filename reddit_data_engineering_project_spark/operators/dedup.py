@@ -625,6 +625,11 @@ def _verify_jaccard(
     streaming loops sharing a session with caller-owned caches) pass
     ``persisted_out``: the intermediates this call persists are appended
     there for the caller to ``unpersist()`` after its action completes.
+
+    Eager: building the returned DataFrame already runs the candidate
+    DAG (shingle, sign, band, candidate pairs) once, through the
+    ``cand_docs.count()`` broadcast-size guard below. A caller that only
+    plans or explains the query still pays for that job.
     """
     cand_docs = (
         candidates.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id"))

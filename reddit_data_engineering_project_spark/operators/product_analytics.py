@@ -424,9 +424,10 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reuses the basket-comprehension pair generation from
     :func:`q21_copurchase_lift` (one shuffle, no fact self-join), then
-    mirrors each undirected pair into both directions. The half list is
-    persisted in :func:`_copurchase_half_edges`, so the mirror union
-    reads the cache twice instead of running the basket DAG twice.
+    mirrors each undirected pair into both directions. The half list from
+    :func:`_copurchase_half_edges` is lazy (deliberately unpersisted), so
+    the mirror union evaluates the basket DAG twice; consumers that read
+    the edges more often persist at their own level.
     """
     pairs = _copurchase_half_edges(spark, sf_dir)
     return pairs.union(

@@ -8,9 +8,11 @@ logic lived in Redshift. Here the engine owns it natively, in two forms:
    plus a re-run batch with corrections, keep exactly one row per key
    (the latest), oracle-checked.
 2. :func:`upsert_parquet` — the write-path form: merge a batch into a
-   date-partitioned parquet target with dynamic partition overwrite, so
-   only touched partitions rewrite. ``tests/test_upsert.py`` proves the
-   idempotency contract (apply twice → same table).
+   date-partitioned parquet target with dynamic partition overwrite.
+   The merge unions the batch with the whole target, so every partition
+   is rewritten on every merge (ROADMAP item 1 narrows it to the
+   touched ones). ``tests/test_upsert.py`` proves the idempotency
+   contract (apply twice → same table).
 3. ``q19_scd2_history`` — the keep-HISTORY dual of keep-latest: slowly
    changing dimension type 2. Where R16 overwrites, SCD2 versions — the
    other half of what the reference's Redshift layer would serve.
@@ -20,9 +22,11 @@ Scale notes (100 TB design point):
   rows (WindowGroupLimit prunes to 1 during the sort) — strictly cheaper
   than groupBy(max_by) on wide rows because only the rank column is
   evaluated during the sort.
-- The write path never rewrites the whole table: dynamic partition
-  overwrite touches only partitions present in the incoming batch — the
-  daily re-run rewrites one day, not 100 TB.
+- The write path reads and rewrites the whole table: the merged output
+  covers every partition of the target, so dynamic partition overwrite
+  replaces all of them and a merge's cost grows with the table's age,
+  not the batch's size. Rewriting only the partitions the batch touches
+  is ROADMAP item 1.
 """
 
 from __future__ import annotations
@@ -59,9 +63,12 @@ def upsert_parquet(
 ) -> None:
     """Merge ``batch`` into a parquet target, keeping the latest row per key.
 
-    Read-merge-overwrite with ``partitionOverwriteMode=dynamic``: only
-    partitions present in the merged output are replaced. Re-applying the
-    same batch is a no-op by construction (the reference's R16 contract).
+    Read-merge-overwrite with ``partitionOverwriteMode=dynamic``: the
+    partitions present in the merged output are replaced. The merged
+    output is the batch unioned with the WHOLE target, so every partition
+    is read and rewritten, not only those the batch touches (ROADMAP
+    item 1). Re-applying the same batch is a no-op by construction (the
+    reference's R16 contract).
     """
     try:
         existing: DataFrame | None = spark.read.parquet(target_path)

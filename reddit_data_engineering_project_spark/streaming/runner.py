@@ -10,13 +10,19 @@ implies (reference ``dags/reddit_dag.py:23``, SURVEY §1.4).
 micro-batches then stops: the idempotent catch-up/backfill trigger. With
 the checkpoint retained, a re-run ingests nothing new — the streaming
 rendering of R16 idempotency.
+
+Every live runner of the package — here and in ``stateful.py`` — is
+built on one file-stream driver: :func:`_file_stream` (the replayable
+source), :func:`_overwrite_sink` (the per-batch idempotent sink) and
+:func:`_drain` (the one availableNow query). A runner keeps only its own
+plan and batch body.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..session import ensure_session_confs
 from ..tables import contract_observe_metrics
@@ -92,6 +98,93 @@ def raise_on_contract_violations(
         )
 
 
+def _file_stream(
+    spark: SparkSession,
+    source_dir: str,
+    *columns,
+    contract_table: str | None = None,
+) -> DataFrame:
+    """The replayable source: ``source_dir``'s parquet files, one file
+    per micro-batch, read under the schema of the files there now.
+
+    ``columns`` project the stream BEFORE ``contract_table``'s ingest
+    contract is attached (:func:`observe_ingest_contract`), so the gate
+    checks exactly the terms over the columns the runner scans."""
+    ensure_session_confs(spark)
+    schema = spark.read.parquet(source_dir).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(source_dir)
+    )
+    if columns:
+        stream = stream.select(*columns)
+    return observe_ingest_contract(stream, contract_table)
+
+
+def _overwrite_sink(sink_dir: str, shape=None):
+    """The idempotent sink as a ``foreachBatch`` body: each micro-batch,
+    passed through ``shape`` when given, overwrites its own
+    ``batch=<id>`` directory.
+
+    foreachBatch is at-least-once: a batch whose files were written but
+    whose checkpoint commit was lost is REPLAYED on restart. Writing
+    each batch to its own overwrite-mode directory makes the replay
+    rewrite the same files instead of appending duplicates — the
+    standard idempotent-sink contract keyed on batch_id."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        out = batch_df if shape is None else shape(batch_df)
+        out.write.mode("overwrite").parquet(
+            os.path.join(sink_dir, f"batch={batch_id}")
+        )
+
+    return write_batch
+
+
+def _drain(
+    df: DataFrame,
+    on_batch,
+    checkpoint_dir: str,
+    output_mode: str,
+    *,
+    state_shards: int | None = None,
+    contract_table: str | None = None,
+):
+    """Run ``df`` through ``on_batch`` over everything the source holds:
+    one ``trigger(availableNow=True)`` query, awaited to its end. Returns
+    the finished ``StreamingQuery``.
+
+    ``state_shards`` sizes the state-store partition count through
+    ``spark.sql.shuffle.partitions``; it binds only on a FRESH
+    checkpoint (pinned there thereafter). The session's prior value is
+    restored however the run ends, so batch queries keep their tuned
+    parallelism. After the run, ``contract_table``'s gate
+    (:func:`raise_on_contract_violations`) reads the metrics that
+    :func:`_file_stream` attached."""
+    spark = df.sparkSession
+    writer = (
+        df.writeStream.outputMode(output_mode)
+        .foreachBatch(on_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
+    # Swapped immediately before the try so an exception anywhere
+    # earlier cannot leak the shard count into the session.
+    prior = None
+    if state_shards is not None:
+        prior = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_shards))
+    try:
+        q = writer.start()
+        q.awaitTermination()
+    finally:
+        if prior is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", prior)
+    raise_on_contract_violations(q, contract_table, spark)
+    return q
+
+
 def run_enrich_stream(
     spark: SparkSession,
     source_dir: str,
@@ -116,35 +209,15 @@ def run_enrich_stream(
     row. Pass ``None`` for sources that are not a declared corpus
     table.
     """
-    ensure_session_confs(spark)
-    schema = spark.read.parquet(source_dir).schema
-    stream = observe_ingest_contract(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir),
-        contract_table,
-    )
+    stream = _file_stream(spark, source_dir, contract_table=contract_table)
     enriched = stream.join(F.broadcast(dim), on, "left")
-
-    # foreachBatch is at-least-once: a batch whose files were written but
-    # whose checkpoint commit was lost is REPLAYED on restart. Writing
-    # each batch to its own overwrite-mode directory makes the replay
-    # rewrite the same files instead of appending duplicates — the
-    # standard idempotent-sink contract keyed on batch_id.
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink_dir, f"batch={batch_id}")
-        )
-
-    q = (
-        enriched.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        enriched,
+        _overwrite_sink(sink_dir),
+        checkpoint_dir,
+        "append",
+        contract_table=contract_table,
     )
-    q.awaitTermination()
-    raise_on_contract_violations(q, contract_table, spark)
 
 
 def run_upsert_stream(
@@ -160,8 +233,10 @@ def run_upsert_stream(
 
     Each micro-batch merges into the parquet target through
     :func:`..operators.upsert.upsert_parquet` — keep-latest per key,
-    dynamic partition overwrite, so a batch touching one day rewrites one
-    day. Two idempotency layers compose:
+    written with dynamic partition overwrite. The merge unions the batch
+    with the WHOLE target, so every micro-batch rewrites every partition
+    of the target (ROADMAP item 1 narrows it to the touched ones). Two
+    idempotency layers compose:
 
     1. the checkpoint: a re-run with the same checkpoint re-reads nothing;
     2. the merge: even a *fresh* checkpoint re-delivering every file
@@ -171,20 +246,10 @@ def run_upsert_stream(
     duplicates", reference ``README.md:13``) and never implemented;
     layer 1 is the exactly-once bookkeeping Structured Streaming adds.
 
-    Scale note: within a micro-batch the merge reads only the target's
-    existing partitions; at 100 TB the target must be partitioned (pass
-    ``partition_col``) so each micro-batch's read-merge-overwrite touches
-    the touched days, not the table.
+    Scale note: each micro-batch's read-merge-overwrite costs the size
+    of the whole target, not of the batch, and grows as the target ages.
     """
-    ensure_session_confs(spark)
     from ..operators.upsert import upsert_parquet
-
-    schema = spark.read.parquet(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         upsert_parquet(
@@ -196,13 +261,8 @@ def run_upsert_stream(
             partition_col=partition_col,
         )
 
-    (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain(
+        _file_stream(spark, source_dir), merge_batch, checkpoint_dir, "update"
     )
 
 
@@ -229,14 +289,7 @@ def run_tumbling_stream(
     dominates: 8 shards measured 2.2× the 32-shard wall at sf0.1/8
     files (SCALE.md). Size to ~2-4× executor cores on a real cluster.
     """
-    ensure_session_confs(spark)
-    schema = spark.read.parquet(source_dir).schema
-    stream = observe_ingest_contract(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir),
-        contract_table,
-    )
+    stream = _file_stream(spark, source_dir, contract_table=contract_table)
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"), "event_type")
@@ -251,32 +304,14 @@ def run_tumbling_stream(
             "total_value",
         )
     )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # overwrite (not append) into the per-batch dir: an at-least-once
-        # replay of a committed-but-unacked batch rewrites its own files
-        # rather than duplicating them.
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink_dir, f"batch={batch_id}")
-        )
-
-    # Set immediately before the try so an exception anywhere earlier
-    # cannot leak the shard count into the session (the stateful.py
-    # runners' discipline).
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_shards))
-    try:
-        q = (
-            agg.writeStream.outputMode("append")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    raise_on_contract_violations(q, contract_table, spark)
+    _drain(
+        agg,
+        _overwrite_sink(sink_dir),
+        checkpoint_dir,
+        "append",
+        state_shards=state_shards,
+        contract_table=contract_table,
+    )
 
 
 def run_session_stream(
@@ -299,14 +334,7 @@ def run_session_stream(
     sessions emit on watermark advance (append mode), which is why the
     sink sees a session only after its gap has provably expired.
     """
-    ensure_session_confs(spark)
-    schema = spark.read.parquet(source_dir).schema
-    stream = observe_ingest_contract(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir),
-        contract_table,
-    )
+    stream = _file_stream(spark, source_dir, contract_table=contract_table)
     agg = (
         stream.withColumn("value", F.coalesce(F.col("value"), F.lit(0.0)))
         .withWatermark("ts", watermark)
@@ -325,21 +353,13 @@ def run_session_stream(
             "session_value",
         )
     )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink_dir, f"batch={batch_id}")
-        )
-
-    q = (
-        agg.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        agg,
+        _overwrite_sink(sink_dir),
+        checkpoint_dir,
+        "append",
+        contract_table=contract_table,
     )
-    q.awaitTermination()
-    raise_on_contract_violations(q, contract_table, spark)
 
 
 def run_dedup_index_stream(
@@ -384,15 +404,9 @@ def run_dedup_index_stream(
     correct relaxation then is subset + direct-collision coverage, not
     weakening the batch oracle.
     """
-    ensure_session_confs(spark)
     from ..operators.dedup import incremental_neardup_with_index
 
-    schema = spark.read.parquet(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
+    write_pairs = _overwrite_sink(sink_dir)
 
     def flag_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -414,19 +428,12 @@ def run_dedup_index_stream(
             index_table,
             persisted_out=batch_persisted,
         )
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(sink_dir, f"batch={batch_id}")
-        )
+        write_pairs(pairs, batch_id)
         for cached in batch_persisted:
             cached.unpersist(False)
 
-    (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(flag_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain(
+        _file_stream(spark, source_dir), flag_batch, checkpoint_dir, "append"
     )
 
 
@@ -453,15 +460,7 @@ def run_profile_stream(
     replay rewrites the same rows instead of duplicating them (the same
     idempotent-sink contract as the other runners, applied to stats).
     """
-    ensure_session_confs(spark)
     from ..operators.profile import batch_profile
-
-    schema = spark.read.parquet(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
 
     def profile_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -493,14 +492,8 @@ def run_profile_stream(
             stats_table
         )
 
-    (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(profile_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    stream = _file_stream(spark, source_dir)
+    _drain(stream, profile_batch, checkpoint_dir, "append")
 
 
 def run_topk_stream(
@@ -529,15 +522,9 @@ def run_topk_stream(
     overwrites its own ``batch=N`` directory, so an at-least-once
     replay rewrites rather than duplicates.
     """
-    ensure_session_confs(spark)
-    schema = spark.read.parquet(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
     agg = (
-        stream.withWatermark("ts", watermark)
+        _file_stream(spark, source_dir)
+        .withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
@@ -553,27 +540,12 @@ def run_topk_stream(
         )
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window as W
-
-        rank_w = W.partitionBy("window_start").orderBy(
+    def top_k(batch_df: DataFrame) -> DataFrame:
+        rank_w = Window.partitionBy("window_start").orderBy(
             F.col("cents").desc(), F.col("user_id").asc()
         )
-        ranked = (
-            batch_df.withColumn(
-                "rank", F.row_number().over(rank_w).cast("bigint")
-            )
-            .filter(F.col("rank") <= k)
-        )
-        ranked.write.mode("overwrite").parquet(
-            os.path.join(sink_dir, f"batch={batch_id}")
-        )
+        return batch_df.withColumn(
+            "rank", F.row_number().over(rank_w).cast("bigint")
+        ).filter(F.col("rank") <= k)
 
-    (
-        agg.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(agg, _overwrite_sink(sink_dir, top_k), checkpoint_dir, "append")

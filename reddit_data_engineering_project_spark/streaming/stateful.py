@@ -120,20 +120,13 @@ def run_profile_stream(
     resumes the state store, so profiles accumulate across runs exactly
     like a continuously-running query.
     """
-    from ..session import ensure_session_confs
-
-    ensure_session_confs(spark)
-    schema = spark.read.parquet(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        # only what the fold reads crosses the Arrow boundary, and
-        # event time crosses as epoch-µs longs (see ts_us_expr)
-        .select("user_id", "value", ts_us_expr())
-    )
     from pyspark.sql import functions as F
 
+    from .runner import _drain, _file_stream, _overwrite_sink
+
+    # only what the fold reads crosses the Arrow boundary, and event
+    # time crosses as epoch-µs longs (see ts_us_expr)
+    stream = _file_stream(spark, source_dir, "user_id", "value", ts_us_expr())
     profiles = stream.groupBy("user_id").applyInPandasWithState(
         update_user_profile,
         outputStructType=PROFILE_SCHEMA,
@@ -146,22 +139,7 @@ def run_profile_stream(
         "total_value",
         F.timestamp_micros("last_ts_us").alias("last_ts"),
     )
-
-    # foreachBatch is at-least-once: overwrite keyed on batch_id makes a
-    # replayed batch rewrite its own directory, not append duplicates.
-    def write_batch(batch_df, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            f"{sink_dir}/batch={batch_id}"
-        )
-
-    (
-        profiles.writeStream.outputMode("update")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(profiles, _overwrite_sink(sink_dir), checkpoint_dir, "update")
 
 
 # ---------------------------------------------------------------------------
@@ -497,17 +475,16 @@ def run_zscore_stream(
     columns the fold reads enter the shuffle/Arrow channel, and
     ``state_shards`` bounds the per-shard fixed cost.
     """
-    from ..session import ensure_session_confs
-    from .runner import observe_ingest_contract
+    from .runner import _drain, _file_stream, _overwrite_sink
 
-    ensure_session_confs(spark)
-    schema = spark.read.parquet(source_dir).schema
-    stream = observe_ingest_contract(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .select("user_id", "event_id", "value", ts_us_expr()),
-        contract_table,
+    stream = _file_stream(
+        spark,
+        source_dir,
+        "user_id",
+        "event_id",
+        "value",
+        ts_us_expr(),
+        contract_table=contract_table,
     )
     scored = stream.groupBy("user_id").applyInPandasWithState(
         score_rolling_zscore,
@@ -517,28 +494,14 @@ def run_zscore_stream(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    # foreachBatch is at-least-once: overwrite-mode per batch_id makes a
-    # replayed batch rewrite its own directory instead of appending
-    # duplicates (the idempotent-sink contract, see runner.py).
-    def write_batch(batch_df, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{sink_dir}/batch={batch_id}")
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_shards))
-    try:
-        q = (
-            scored.writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    from .runner import raise_on_contract_violations
-
-    raise_on_contract_violations(q, contract_table, spark)
+    _drain(
+        scored,
+        _overwrite_sink(sink_dir),
+        checkpoint_dir,
+        "update",
+        state_shards=state_shards,
+        contract_table=contract_table,
+    )
 
 
 #: Per-BUCKET z-score state: each bucketed user's trailing ≤7-value
@@ -673,25 +636,17 @@ def run_zscore_stream_bucketed(
     """
     from pyspark.sql import functions as F
 
-    from ..session import ensure_session_confs
-    from .runner import observe_ingest_contract
+    from .runner import _drain, _file_stream, _overwrite_sink
 
-    ensure_session_confs(spark)
-    schema = spark.read.parquet(source_dir).schema
-    stream = observe_ingest_contract(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .select(
-            "user_id",
-            "event_id",
-            "value",
-            ts_us_expr(),
-            F.pmod(F.xxhash64(F.col("user_id")), F.lit(n_buckets)).alias(
-                "bucket"
-            ),
-        ),
-        contract_table,
+    stream = _file_stream(
+        spark,
+        source_dir,
+        "user_id",
+        "event_id",
+        "value",
+        ts_us_expr(),
+        F.pmod(F.xxhash64(F.col("user_id")), F.lit(n_buckets)).alias("bucket"),
+        contract_table=contract_table,
     )
     scored = stream.groupBy("bucket").applyInPandasWithState(
         score_rolling_zscore_bucketed,
@@ -701,25 +656,14 @@ def run_zscore_stream_bucketed(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    def write_batch(batch_df, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{sink_dir}/batch={batch_id}")
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_shards))
-    try:
-        q = (
-            scored.writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    from .runner import raise_on_contract_violations
-
-    raise_on_contract_violations(q, contract_table, spark)
+    _drain(
+        scored,
+        _overwrite_sink(sink_dir),
+        checkpoint_dir,
+        "update",
+        state_shards=state_shards,
+        contract_table=contract_table,
+    )
 
 
 #: Session-gap threshold shared with the batch sessionizer
@@ -1051,17 +995,15 @@ def run_session_stream(
     pinned by ``test_session_stream_ignores_nat_event_times`` in
     ``tests/test_stateful_stream.py``.
     """
-    from ..session import ensure_session_confs
-    from .runner import observe_ingest_contract
+    from .runner import _drain, _file_stream, _overwrite_sink
 
-    ensure_session_confs(spark)
-    schema = spark.read.parquet(source_dir).schema
-    stream = observe_ingest_contract(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .select("user_id", "ts", "event_id"),
-        contract_table,
+    stream = _file_stream(
+        spark,
+        source_dir,
+        "user_id",
+        "ts",
+        "event_id",
+        contract_table=contract_table,
     )
     # exact epoch-µs longs for the fold + the ns-safe clamped ts for
     # the watermark/late-drop machinery (see _WM_CEILING_US); ts_us is
@@ -1081,29 +1023,14 @@ def run_session_stream(
         )
     )
 
-    def write_batch(batch_df, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            f"{sink_dir}/batch={batch_id}"
-        )
-
-    # state_shards only binds on a FRESH checkpoint; restore the session
-    # conf afterwards so batch queries keep their tuned parallelism.
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_shards))
-    try:
-        q = (
-            sessions.writeStream.outputMode("append")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    from .runner import raise_on_contract_violations
-
-    raise_on_contract_violations(q, contract_table, spark)
+    q = _drain(
+        sessions,
+        _overwrite_sink(sink_dir),
+        checkpoint_dir,
+        "append",
+        state_shards=state_shards,
+        contract_table=contract_table,
+    )
     _warn_wm_saturation(q)
 
 
@@ -1297,26 +1224,18 @@ def run_session_stream_bucketed(
     """
     from pyspark.sql import functions as F
 
-    from ..session import ensure_session_confs
-    from .runner import observe_ingest_contract
+    from .runner import _drain, _file_stream, _overwrite_sink
 
-    ensure_session_confs(spark)
-    schema = spark.read.parquet(source_dir).schema
-    stream = observe_ingest_contract(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            # applyInPandasWithState requires the grouping key to be a
-            # concrete column of the child, not a groupBy expression
-            F.pmod(F.xxhash64(F.col("user_id")), F.lit(n_buckets)).alias(
-                "bucket"
-            ),
-        ),
-        contract_table,
+    stream = _file_stream(
+        spark,
+        source_dir,
+        "user_id",
+        "ts",
+        "event_id",
+        # applyInPandasWithState requires the grouping key to be a
+        # concrete column of the child, not a groupBy expression
+        F.pmod(F.xxhash64(F.col("user_id")), F.lit(n_buckets)).alias("bucket"),
+        contract_table=contract_table,
     )
     stream = _observe_wm_saturation(stream)
     stream = stream.select(
@@ -1332,25 +1251,12 @@ def run_session_stream_bucketed(
         )
     )
 
-    def write_batch(batch_df, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            f"{sink_dir}/batch={batch_id}"
-        )
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_shards))
-    try:
-        q = (
-            sessions.writeStream.outputMode("append")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    from .runner import raise_on_contract_violations
-
-    raise_on_contract_violations(q, contract_table, spark)
+    q = _drain(
+        sessions,
+        _overwrite_sink(sink_dir),
+        checkpoint_dir,
+        "append",
+        state_shards=state_shards,
+        contract_table=contract_table,
+    )
     _warn_wm_saturation(q)

@@ -1,0 +1,109 @@
+"""The one file-stream driver behind every live runner
+(``streaming/runner.py``: ``_file_stream``, ``_overwrite_sink``,
+``_drain``).
+
+Two pins:
+
+1. the ``state_shards`` swap of ``spark.sql.shuffle.partitions`` is
+   scoped to the run: the session's prior value comes back after a
+   normal run AND after a run whose batch write fails;
+2. no module of the package opens, sinks or triggers a file stream
+   except through the driver, so "how a file stream is run" lives in
+   one place.
+"""
+
+from __future__ import annotations
+
+import ast
+import importlib
+import os
+import pathlib
+
+import pytest
+
+from pyspark.errors import StreamingQueryException
+from pyspark.sql import functions as F
+
+from conftest import SF_DIR
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / (
+    "reddit_data_engineering_project_spark"
+)
+
+SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "runner.run_tumbling_stream",
+        "stateful.run_zscore_stream",
+        "stateful.run_zscore_stream_bucketed",
+        "stateful.run_session_stream",
+        "stateful.run_session_stream_bucketed",
+    ],
+)
+def test_state_shards_swap_is_scoped_to_the_run(spark, tmp_path, case):
+    from reddit_data_engineering_project_spark.tables import table
+
+    module, name = case.split(".")
+    run = getattr(
+        importlib.import_module(
+            f"reddit_data_engineering_project_spark.streaming.{module}"
+        ),
+        name,
+    )
+    src = str(tmp_path / "src")
+    table(spark, SF_DIR, "events").filter(
+        F.col("event_id") < 300
+    ).coalesce(1).write.parquet(src)
+    # a regular file where the sink's parent directory should be: the
+    # first batch write fails inside the running query
+    blocker = tmp_path / "blocker"
+    blocker.write_text("")
+
+    before = spark.conf.get(SHUFFLE)
+    # 5 differs from every runner's state_shards default
+    spark.conf.set(SHUFFLE, "5")
+    try:
+        run(spark, src, str(tmp_path / "sink"), str(tmp_path / "ckpt"))
+        assert spark.conf.get(SHUFFLE) == "5"
+
+        with pytest.raises(StreamingQueryException):
+            run(spark, src, str(blocker / "sink"), str(tmp_path / "ckpt2"))
+        assert spark.conf.get(SHUFFLE) == "5"
+    finally:
+        spark.conf.set(SHUFFLE, before)
+
+
+def _stream_entries(tree: ast.Module):
+    """(enclosing top-level name, entry) for every ``.readStream``,
+    ``.writeStream`` and ``trigger(availableNow=...)`` in a module."""
+    for top in tree.body:
+        owner = getattr(top, "name", None)
+        for node in ast.walk(top):
+            if isinstance(node, ast.Attribute) and node.attr in (
+                "readStream",
+                "writeStream",
+            ):
+                yield owner, node.attr
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "trigger"
+                and any(k.arg == "availableNow" for k in node.keywords)
+            ):
+                yield owner, "trigger(availableNow)"
+
+
+def test_file_streams_run_only_through_the_driver():
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        tree = ast.parse(path.read_text(), filename=str(path))
+        found += [(rel, owner, what) for owner, what in _stream_entries(tree)]
+    assert sorted(found) == [
+        ("streaming/runner.py", "_drain", "trigger(availableNow)"),
+        ("streaming/runner.py", "_drain", "writeStream"),
+        ("streaming/runner.py", "_file_stream", "readStream"),
+    ], os.linesep.join(map(str, found))

@@ -17,6 +17,8 @@ Three call sites get coverage:
 
 from __future__ import annotations
 
+import datetime
+import importlib
 import importlib.util
 import os
 import pathlib
@@ -78,71 +80,97 @@ def test_preflight_ingest_contract_stage(spark, tmp_path):
     assert not ok and "ValueError" in msg
 
 
-def test_tumbling_runner_rejects_out_of_domain_batch(spark, tmp_path):
-    """The live ingest gate: a source containing an out-of-domain
-    events.value fails the run with a ValueError naming the counts —
-    the observe() metrics ride the stream's own scan. contract_table=
-    None disables the gate for non-corpus sources."""
-    from reddit_data_engineering_project_spark.streaming.runner import (
-        run_tumbling_stream,
+#: Past TIME_DOMAINS["events"]'s 2999-12-31 ceiling, yet a legal
+#: TimestampType value every runner's plan can window and sessionize.
+_FAR_FUTURE = datetime.datetime(3000, 6, 1)
+
+
+def _gated_runner(case: str):
+    """``"<module>.<runner>"`` -> a ``(spark, src, sink, ckpt, **kw)``
+    callable (the enrich runner also takes a dimension to join)."""
+    module, name = case.split(".")
+    run = getattr(
+        importlib.import_module(
+            f"reddit_data_engineering_project_spark.streaming.{module}"
+        ),
+        name,
     )
+    if name != "run_enrich_stream":
+        return run
+
+    def enrich(spark, src, sink, ckpt, **kw):
+        dim = spark.createDataFrame(
+            [("view", "engagement")], ["event_type", "category"]
+        )
+        run(spark, src, dim, sink, ckpt, on="event_type", **kw)
+
+    return enrich
+
+
+#: (runner, source columns, planted event_id, column, value, message)
+_GATE_CASES = [
+    ("runner.run_tumbling_stream", None, 7, "value", -1e9,
+     "out-of-domain"),
+    ("runner.run_enrich_stream", ("event_id", "ts", "event_type", "value"),
+     3, "event_id", None, "null-primary-key"),
+    ("runner.run_session_stream", None, 11, "ts", _FAR_FUTURE,
+     "out-of-domain"),
+    ("stateful.run_zscore_stream", None, 5, "value", 7e7,
+     "out-of-domain"),
+    ("stateful.run_zscore_stream_bucketed", None, 5, "value", 7e7,
+     "out-of-domain"),
+    ("stateful.run_session_stream", None, 11, "ts", _FAR_FUTURE,
+     "out-of-domain"),
+    ("stateful.run_session_stream_bucketed", None, 11, "ts", _FAR_FUTURE,
+     "out-of-domain"),
+]
+
+
+@pytest.mark.parametrize(
+    "case,columns,event_id,column,planted,match",
+    [pytest.param(*c, id=c[0]) for c in _GATE_CASES],
+)
+def test_gated_runner_rejects_planted_violation(
+    spark, tmp_path, case, columns, event_id, column, planted, match
+):
+    """The live ingest gate on every runner that carries one: a tiny
+    one-file source with one contract-violating row fails the run with a
+    ValueError naming the counts — the observe() metrics ride the
+    stream's own scan. Each plant sits in a column the runner's
+    projection keeps and that its plan processes without crashing, so
+    the run completes and the post-run gate is what fails it (a null
+    event_id would make the z-score fold fail loudly before the gate
+    ever ran). contract_table=None disables the gate for non-corpus
+    sources: on the tumbling runner the same source then streams
+    through."""
     from reddit_data_engineering_project_spark.tables import table
 
+    run = _gated_runner(case)
     src = os.path.join(str(tmp_path), "src")
-    ev = table(spark, SF_DIR, "events")
+    ev = table(spark, SF_DIR, "events").filter(F.col("event_id") < 300)
+    if columns:
+        ev = ev.select(*columns)
     ev.withColumn(
-        "value",
-        F.when(F.col("event_id") == 7, F.lit(-1e9)).otherwise(
-            F.col("value")
+        column,
+        F.when(F.col("event_id") == event_id, F.lit(planted)).otherwise(
+            F.col(column)
         ),
     ).coalesce(1).write.parquet(src)
 
-    with pytest.raises(ValueError, match="out-of-domain"):
-        run_tumbling_stream(
+    with pytest.raises(ValueError, match=match):
+        run(
             spark,
             src,
             os.path.join(str(tmp_path), "sink"),
             os.path.join(str(tmp_path), "ckpt"),
         )
-    # gate off: the same source streams through
-    run_tumbling_stream(
-        spark,
-        src,
-        os.path.join(str(tmp_path), "sink2"),
-        os.path.join(str(tmp_path), "ckpt2"),
-        contract_table=None,
-    )
-
-
-def test_enrich_runner_rejects_null_primary_key(spark, tmp_path):
-    """Null event_id (the declared NOT-NULL arrival-sequence key) in
-    any micro-batch fails the enrich ingest run."""
-    from reddit_data_engineering_project_spark.streaming.runner import (
-        run_enrich_stream,
-    )
-    from reddit_data_engineering_project_spark.tables import table
-
-    src = os.path.join(str(tmp_path), "src")
-    ev = table(spark, SF_DIR, "events").select(
-        "event_id", "ts", "event_type", "value"
-    )
-    ev.withColumn(
-        "event_id",
-        F.when(F.col("event_id") == 3, F.lit(None)).otherwise(
-            F.col("event_id")
-        ),
-    ).coalesce(1).write.parquet(src)
-    dim = spark.createDataFrame(
-        [("view", "engagement")], ["event_type", "category"]
-    )
-    with pytest.raises(ValueError, match="null-primary-key"):
-        run_enrich_stream(
+    if case == "runner.run_tumbling_stream":
+        run(
             spark,
             src,
-            dim,
-            os.path.join(str(tmp_path), "sink"),
-            os.path.join(str(tmp_path), "ckpt"),
-            on="event_type",
+            os.path.join(str(tmp_path), "sink2"),
+            os.path.join(str(tmp_path), "ckpt2"),
+            contract_table=None,
         )
 
 
@@ -216,32 +244,6 @@ def test_zscore_fold_paths_identical(monkeypatch):
                 assert a_missing == b_missing
                 if not a_missing:
                     assert a == b
-
-
-def test_stateful_zscore_runner_rejects_out_of_domain(spark, tmp_path):
-    """The stateful runners (stateful.py) carry the same observe()-based
-    ingest gate as the runner.py ingest paths: an out-of-domain
-    events.value fails the run after completion."""
-    from reddit_data_engineering_project_spark.streaming.stateful import (
-        run_zscore_stream,
-    )
-    from reddit_data_engineering_project_spark.tables import table
-
-    src = os.path.join(str(tmp_path), "src")
-    ev = table(spark, SF_DIR, "events")
-    ev.withColumn(
-        "value",
-        F.when(F.col("event_id") == 5, F.lit(7e7)).otherwise(
-            F.col("value")
-        ),
-    ).coalesce(1).write.parquet(src)
-    with pytest.raises(ValueError, match="out-of-domain"):
-        run_zscore_stream(
-            spark,
-            src,
-            os.path.join(str(tmp_path), "sink"),
-            os.path.join(str(tmp_path), "ckpt"),
-        )
 
 
 def test_finite_embedding_contract(spark, tmp_path):
