@@ -52,9 +52,13 @@ def _last_committed(ckpt: str) -> int:
     return max(commits)
 
 def _rm_with_crc(path: str) -> None:
-    """Remove a file AND its Hadoop ChecksumFs sidecar — a stale
-    ``.{name}.crc`` makes Spark's later atomic re-write of the same
-    path fail as 'concurrently used' instead of replaying."""
+    """Remove a file AND its Hadoop checksum sidecar ``.{name}.crc``,
+    as a crash that loses the file would. A local checkpoint is written
+    through the FileSystem-based checkpoint manager (``_drain``), whose
+    rename replaces a stale sidecar with the new file's own, so the
+    later re-write of the same path succeeds either way; under Spark's
+    default FileContext manager a stale sidecar would make that
+    re-write fail as 'concurrently used' instead of replaying."""
     os.remove(path)
     crc = os.path.join(
         os.path.dirname(path), f".{os.path.basename(path)}.crc"

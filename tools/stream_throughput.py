@@ -6,7 +6,11 @@ stages the sf events table as an N-file parquet source directory, then
 runs the REAL ``run_tumbling_stream`` runner (file stream → watermark →
 tumbling agg → idempotent per-batch parquet sink with checkpointing,
 ``maxFilesPerTrigger=1`` so every file is its own micro-batch) and
-reports end-to-end rows/sec including checkpoint commits.
+reports end-to-end rows/sec including checkpoint commits. On Linux it
+also reports, for the timed pass, the CPU seconds of the child processes
+the JVM reaped (``jvm_child_cpu_s``: Hadoop's shell-outs such as
+``chmod``, from ``/proc/<jvm pid>/stat``) and the host's process and
+thread creations (``process_creations``, from ``/proc/stat``).
 
 ``--runner session`` drives ``run_session_stream`` instead — the S9
 ``applyInPandasWithState`` event-time-timeout sessionizer, the
@@ -51,6 +55,33 @@ from reddit_data_engineering_project_spark.streaming.runner import (  # noqa: E4
 from reddit_data_engineering_project_spark.tables import table  # noqa: E402
 
 
+def _fork_counters(jvm_pid: int) -> tuple[float, int] | None:
+    """(CPU s of the JVM's reaped children, host process creations), or
+    None where ``/proc`` is not available."""
+    try:
+        with open(f"/proc/{jvm_pid}/stat") as f:
+            # fields after the ")"-terminated comm: cutime, cstime are 16, 17
+            fields = f.read().rsplit(")", 1)[1].split()
+        with open("/proc/stat") as f:
+            created = next(
+                int(line.split()[1]) for line in f
+                if line.startswith("processes ")
+            )
+    except (OSError, StopIteration):
+        return None
+    ticks = int(fields[13]) + int(fields[14])
+    return ticks / os.sysconf("SC_CLK_TCK"), created
+
+
+def _fork_delta(before, after) -> dict:
+    if before is None or after is None:
+        return {"jvm_child_cpu_s": None, "process_creations": None}
+    return {
+        "jvm_child_cpu_s": round(after[0] - before[0], 2),
+        "process_creations": after[1] - before[1],
+    }
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
@@ -74,6 +105,7 @@ def main() -> int:
     args = ap.parse_args()
 
     spark = get_spark(app_name="stream_throughput")
+    jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
     events = table(spark, args.sf, "events")
     n_rows = events.count()
 
@@ -132,9 +164,11 @@ def main() -> int:
                 runner_fn(
                     spark, warm + "/src", warm + "/sink", warm + "/ckpt"
                 )
+            forks0 = _fork_counters(jvm_pid)
             t0 = time.time()
             runner_fn(spark, src, sink, ckpt)
             wall = time.time() - t0
+            forks1 = _fork_counters(jvm_pid)
         else:
             events.repartition(args.files).write.mode("overwrite").parquet(
                 src
@@ -151,9 +185,11 @@ def main() -> int:
                 run_tumbling_stream(
                     spark, warm + "/src", warm + "/sink", warm + "/ckpt"
                 )
+            forks0 = _fork_counters(jvm_pid)
             t0 = time.time()
             run_tumbling_stream(spark, src, sink, ckpt)
             wall = time.time() - t0
+            forks1 = _fork_counters(jvm_pid)
             metric = "stream_tumbling_rows_per_sec"
         out_rows = spark.read.parquet(os.path.join(sink, "batch=*")).count()
         print(
@@ -166,6 +202,7 @@ def main() -> int:
                     "micro_batches": args.files,
                     "wall_sec": round(wall, 2),
                     "output_rows": out_rows,
+                    **_fork_delta(forks0, forks1),
                 }
             )
         )
