@@ -105,6 +105,81 @@ def shingles(
     return exploded.dropDuplicates(["doc_id", "shingle"]) if distinct else exploded
 
 
+#: Exact-Jaccard threshold of every verified near-dup pair set (the
+#: oracles spell the same ``>= 0.6``).
+_JACCARD_MIN = 0.6
+
+
+def _shingle_overlap(sh: DataFrame) -> DataFrame:
+    """Sparse inverted-index overlap of a DISTINCT ``(doc_id, shingle)``
+    stream: ``(doc_a, doc_b, inter, n_a, n_b)`` for every pair
+    ``doc_a < doc_b`` that shares a shingle, with ``inter`` = |A∩B| and
+    ``n_a`` / ``n_b`` the per-doc distinct-shingle counts.
+
+    |A∩B| comes from the self-join on shingle (only docs sharing a
+    shingle ever meet — never all-pairs), the sizes from a per-doc count
+    over the same stream. Callers add only their own filter and
+    projection (Jaccard |A∩B|/(|A|+|B|-|A∩B|), containment |A∩B|/|A|).
+    Three plan branches read ``sh`` (both join sides + the counts), so
+    callers pass it persisted. :data:`_OVERLAP_SQL` is the oracle twin.
+    """
+    counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    a = sh.alias("a")
+    b = sh.alias("b")
+    inter = (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("inter"))
+    )
+    ca = counts.alias("ca")
+    cb = counts.alias("cb")
+    return (
+        inter.join(ca, F.col("doc_a") == F.col("ca.doc_id"))
+        .join(cb, F.col("doc_b") == F.col("cb.doc_id"))
+        .select(
+            "doc_a",
+            "doc_b",
+            "inter",
+            F.col("ca.n").alias("n_a"),
+            F.col("cb.n").alias("n_b"),
+        )
+    )
+
+
+#: DuckDB twin of :func:`shingles` (n=4, distinct) + :func:`_shingle_overlap`:
+#: the leading CTEs of every shingle-overlap oracle, ending in
+#: ``overlap(doc_a, doc_b, inter, n_a, n_b)``. Oracles compose it by
+#: f-string and keep their own filter and final SELECT. SQL text only —
+#: no oracle shares code with the engine it checks.
+_OVERLAP_SQL = """toks AS (
+        SELECT doc_id, string_split(text, ' ') AS w FROM documents
+    ),
+    sh AS (
+        SELECT DISTINCT doc_id,
+               -- list slice (not positional ||) so docs shorter than 4
+               -- tokens yield their whole text, matching shingles()
+               array_to_string(w[gs.i:gs.i+3], '_') AS shingle
+        FROM toks CROSS JOIN LATERAL (
+            SELECT unnest(range(1, greatest(len(w) - 2, 2))) AS i
+        ) gs
+    ),
+    counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+    pairs AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    ),
+    overlap AS (
+        SELECT doc_a, doc_b, inter, ca.n AS n_a, cb.n AS n_b
+        FROM pairs
+        JOIN counts ca ON doc_a = ca.doc_id
+        JOIN counts cb ON doc_b = cb.doc_id
+    )"""
+
+
 @register(
     "x01_dedup_exact_key",
     oracle="""
@@ -170,44 +245,25 @@ def x01_dedup_content_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x02_neardup_jaccard",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               -- list slice (not positional ||) so docs shorter than 4
-               -- tokens yield their whole text, matching shingles()
-               array_to_string(w[gs.i:gs.i+3], '_') AS shingle
-        FROM toks CROSS JOIN LATERAL (
-            SELECT unnest(range(1, greatest(len(w) - 2, 2))) AS i
-        ) gs
-    ),
-    counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    oracle=f"""
+    WITH {_OVERLAP_SQL}
     SELECT
         doc_a,
         doc_b,
-        round(inter::DOUBLE / (ca.n + cb.n - inter) * 1000000.0) / 1000000.0
+        round(inter::DOUBLE / (n_a + n_b - inter) * 1000000.0) / 1000000.0
             AS jaccard
-    FROM pairs
-    JOIN counts ca ON doc_a = ca.doc_id
-    JOIN counts cb ON doc_b = cb.doc_id
-    WHERE inter::DOUBLE / (ca.n + cb.n - inter) >= 0.6
+    FROM overlap
+    WHERE inter::DOUBLE / (n_a + n_b - inter) >= 0.6
     """,
     tags=("dedup", "X2"),
 )
 def x02_neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2a: exact near-dup pairs via inverted-index shingle join.
 
-    |A∩B| comes from the self-join on shingle (sparse — only docs sharing
-    a shingle ever meet); |A∪B| = |A|+|B|-|A∩B| from per-doc counts.
-    Finds the 25 planted near-dup pairs at J ≥ 0.6. This is also the
-    verification stage the LSH variant reuses.
+    |A∩B| and the per-doc sizes come from :func:`_shingle_overlap`;
+    |A∪B| = |A|+|B|-|A∩B|. Finds the 25 planted near-dup pairs at
+    J ≥ 0.6. The same overlap kernel is the verification stage the LSH
+    variants run (:func:`_verify_jaccard`).
     """
     # Persist the shingle stream once (r17 opt): three plan branches
     # read it (both inverted-index join sides + the size counts) and
@@ -218,30 +274,18 @@ def x02_neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle stream is its canonical intermediate (production would
     # checkpoint it).
     sh = shingles(table(spark, sf_dir, "documents")).persist()
-    counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
-    jac = F.col("inter") / (F.col("ca.n") + F.col("cb.n") - F.col("inter"))
+    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
     return (
-        pairs.join(ca, F.col("doc_a") == F.col("ca.doc_id"))
-        .join(cb, F.col("doc_b") == F.col("cb.doc_id"))
-        .filter(jac >= 0.6)
+        _shingle_overlap(sh)
+        .filter(jac >= _JACCARD_MIN)
         .select("doc_a", "doc_b", dround(jac, 6).alias("jaccard"))
     )
 
 
-def _simhash_signatures(docs: DataFrame) -> DataFrame:
-    """Per-doc 64-bit SimHash packed-lane aggregate: ``doc_id``,
-    ``n_shingles`` (overflow-guarded), ``p0..p15``.
+def _simhash_signatures_over(sh: DataFrame) -> DataFrame:
+    """Per-doc 64-bit SimHash packed-lane aggregate over a DISTINCT
+    ``(doc_id, shingle)`` stream: ``doc_id``, ``n_shingles``
+    (overflow-guarded), ``p0..p15``.
 
     Each distinct shingle votes ±1 on every one of 64 bit positions
     (weight = the shingle hash's bit); the signature is the sign
@@ -259,14 +303,6 @@ def _simhash_signatures(docs: DataFrame) -> DataFrame:
     ~3× slower than either form: HOF lambdas run interpreted, outside
     whole-stage codegen.)
     """
-    return _simhash_signatures_over(shingles(docs))
-
-
-def _simhash_signatures_over(sh: DataFrame) -> DataFrame:
-    """Packed-lane SimHash aggregate over an existing DISTINCT
-    ``(doc_id, shingle)`` stream — the seam that lets one persisted
-    shingle relation feed both candidate generation and verification
-    (see :func:`_simhash_signatures` for the lane layout)."""
     h = F.xxhash64(F.col("shingle"))
     packed = []
     for k in range(16):
@@ -288,8 +324,8 @@ def _simhash_signatures_over(sh: DataFrame) -> DataFrame:
             F.raise_error(
                 F.format_string(
                     "simhash lane overflow: doc %s has %s distinct "
-                    "shingles (limit 65535); use the unpacked 64-column "
-                    "aggregate for such documents",
+                    "shingles; the packed-lane signature supports at "
+                    "most 65535 per document, so it is rejected",
                     F.col("doc_id").cast("string"),
                     F.col("n_shingles").cast("string"),
                 )
@@ -346,13 +382,13 @@ def _probe_masks(band_bits: int, radius: int) -> list[int]:
 
 
 def _simhash_candidates(
-    docs: DataFrame,
+    sh: DataFrame,
     band_bits: int,
     radius: int,
     max_hamming: int | None = 15,
-    sh_stream: DataFrame | None = None,
 ) -> DataFrame:
-    """SimHash candidate pairs via pigeonhole banding with in-band
+    """SimHash candidate pairs over a DISTINCT ``(doc_id, shingle)``
+    stream (:func:`shingles`) via pigeonhole banding with in-band
     multi-probe: two signatures within Hamming distance
     ``(radius + 1) * n_bands - 1`` must have SOME band at distance
     ≤ ``radius``, so the equi-join on (band, probed_value) captures
@@ -398,12 +434,6 @@ def _simhash_candidates(
     # bucket relation computes the signature DAG once: measured 5.0 s →
     # 1.4 s for candidate generation at sf0.1 (both band widths). Guide
     # §5 persist rule; lifecycle identical to _verify_jaccard's caches.
-    # ``sh_stream`` (r18): callers that also verify share ONE persisted
-    # distinct-shingle relation between the signature aggregate here and
-    # the exact-Jaccard verify stage — the corpus is scanned+tokenized
-    # once per query instead of twice (guide §2.4 "remove shuffles/
-    # passes outright"; see _verify_jaccard's sh_stream).
-    sh = sh_stream if sh_stream is not None else shingles(docs)
     buckets = _simhash_buckets(_simhash_signatures_over(sh), band_bits).persist()
     r_l = (radius + 1) // 2
     r_r = radius - r_l
@@ -446,32 +476,34 @@ def _simhash_candidates(
     )
 
 
+def _simhash_pairs_over(
+    docs: DataFrame, band_bits: int, radius: int
+) -> DataFrame:
+    """SimHash near-dup pairs over an arbitrary ``(doc_id, text)``
+    corpus — the body both SimHash entries share (they differ only in
+    ``(band_bits, radius)``) and the counterpart of
+    :func:`minhash_pairs_over` (``tools/scale_curve.py`` times it).
+
+    One persisted distinct-shingle relation feeds BOTH the signature
+    aggregate and the exact-Jaccard verify (r18): one corpus
+    scan+tokenize per query, not two.
+    """
+    sh = shingles(docs).persist()
+    return _verify_jaccard(
+        docs,
+        _simhash_candidates(sh, band_bits, radius),
+        sh_stream=sh,
+        sh_stream_distinct=True,
+    )
+
+
 @register(
     "x02_simhash_neardup",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               -- list slice (not positional ||) so docs shorter than 4
-               -- tokens yield their whole text, matching shingles()
-               array_to_string(w[gs.i:gs.i+3], '_') AS shingle
-        FROM toks CROSS JOIN LATERAL (
-            SELECT unnest(range(1, greatest(len(w) - 2, 2))) AS i
-        ) gs
-    ),
-    counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    oracle=f"""
+    WITH {_OVERLAP_SQL}
     SELECT doc_a, doc_b
-    FROM pairs
-    JOIN counts ca ON doc_a = ca.doc_id
-    JOIN counts cb ON doc_b = cb.doc_id
-    WHERE inter::DOUBLE / (ca.n + cb.n - inter) >= 0.6
+    FROM overlap
+    WHERE inter::DOUBLE / (n_a + n_b - inter) >= 0.6
     """,
     tags=("dedup", "X2", "simhash"),
 )
@@ -491,50 +523,20 @@ def x02_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     band pair). Still no all-pairs Hamming scan anywhere. Candidates are
     verified with exact Jaccard ≥ 0.6; with the planted corpus the
     verified output equals the ground-truth pair set, so the entry is
-    hash-checked. Shared machinery: :func:`_simhash_signatures` /
-    :func:`_simhash_buckets` / :func:`_simhash_candidates` — the 16-bit
-    large-corpus variant (``x02_simhash16_neardup``) differs only in
-    ``(band_bits, radius)``.
+    hash-checked. Shared machinery: :func:`_simhash_pairs_over` — the
+    16-bit large-corpus variant (``x02_simhash16_neardup``) differs only
+    in ``(band_bits, radius)``.
     """
-    docs = table(spark, sf_dir, "documents")
-    # One persisted distinct-shingle relation feeds BOTH the signature
-    # aggregate and the exact-Jaccard verify (r18): one corpus
-    # scan+tokenize per query, not two.
-    sh = shingles(docs).persist()
-    return _verify_jaccard(
-        docs,
-        _simhash_candidates(docs, band_bits=8, radius=1, sh_stream=sh),
-        sh_stream=sh,
-        sh_stream_distinct=True,
-    )
+    return _simhash_pairs_over(table(spark, sf_dir, "documents"), 8, 1)
 
 
 @register(
     "x02_simhash16_neardup",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               -- list slice (not positional ||) so docs shorter than 4
-               -- tokens yield their whole text, matching shingles()
-               array_to_string(w[gs.i:gs.i+3], '_') AS shingle
-        FROM toks CROSS JOIN LATERAL (
-            SELECT unnest(range(1, greatest(len(w) - 2, 2))) AS i
-        ) gs
-    ),
-    counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    oracle=f"""
+    WITH {_OVERLAP_SQL}
     SELECT doc_a, doc_b
-    FROM pairs
-    JOIN counts ca ON doc_a = ca.doc_id
-    JOIN counts cb ON doc_b = cb.doc_id
-    WHERE inter::DOUBLE / (ca.n + cb.n - inter) >= 0.6
+    FROM overlap
+    WHERE inter::DOUBLE / (n_a + n_b - inter) >= 0.6
     """,
     tags=("dedup", "X2", "simhash"),
 )
@@ -563,18 +565,14 @@ def x02_simhash16_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Regime guidance (SCALE.md near-dup section): MinHash-LSH stays the
     default; prefer this form over the 8-bit one when corpus size
-    makes 256-value buckets collide, and shrink ``radius`` (1 → 17
-    masks) in the very-high-similarity regime (J ≳ 0.95) where the
-    distance budget is small.
+    makes 256-value buckets collide. In the very-high-similarity regime
+    (J ≳ 0.95), where the distance budget is small, radius 1 (17 masks)
+    suffices — but it guarantees capture only up to Hamming distance
+    (1+1)·4−1 = 7, so it must come with ``max_hamming=7``:
+    ``_simhash_candidates(sh, 16, 1, max_hamming=7)`` (under the
+    default ``max_hamming=15`` the call raises ``ValueError``).
     """
-    docs = table(spark, sf_dir, "documents")
-    sh = shingles(docs).persist()
-    return _verify_jaccard(
-        docs,
-        _simhash_candidates(docs, band_bits=16, radius=3, sh_stream=sh),
-        sh_stream=sh,
-        sh_stream_distinct=True,
-    )
+    return _simhash_pairs_over(table(spark, sf_dir, "documents"), 16, 3)
 
 
 #: Candidate-id broadcast guard (r18, ADVICE): above this many candidate
@@ -589,12 +587,13 @@ _BROADCAST_CAND_MAX_ROWS = 8_000_000
 def _verify_jaccard(
     docs: DataFrame,
     candidates: DataFrame,
-    threshold: float = 0.6,
     persisted_out: list | None = None,
     sh_stream: DataFrame | None = None,
     sh_stream_distinct: bool = False,
 ) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs (shared by LSH variants).
+    """Exact-Jaccard verification of candidate pairs (shared by LSH
+    variants): the :func:`_shingle_overlap` of the candidate documents,
+    kept at J ≥ ``_JACCARD_MIN``.
 
     DOCS are semi-joined to candidate ids before any shingling, so the
     verification stage tokenizes only candidate documents — the corpus is
@@ -617,7 +616,8 @@ def _verify_jaccard(
     scoped unpersist). Harness loops that run many queries in one
     session must ``spark.catalog.clearCache()`` between queries or
     accumulated cache pressure inflates later timings ~10x (measured;
-    bench.py / tools/check_oracle.py / tools/scale_curve.py all do).
+    bench.py / tools/check_oracle.py / tools/scale_curve.py and
+    perfbench's ``after_op`` all do).
     At 100 TB the equivalent is an explicit checkpoint of cand_docs and
     sh_cand with TTL cleanup — the candidate set is small by
     construction, so the cost is bounded either way. Callers that need
@@ -679,24 +679,10 @@ def _verify_jaccard(
         ).persist()
     if persisted_out is not None:
         persisted_out.extend((cand_docs, sh_cand))
-    counts = sh_cand.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh_cand.alias("a")
-    b = sh_cand.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
-    jac = F.col("inter") / (F.col("ca.n") + F.col("cb.n") - F.col("inter"))
+    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
     return (
-        inter.join(ca, F.col("doc_a") == F.col("ca.doc_id"))
-        .join(cb, F.col("doc_b") == F.col("cb.doc_id"))
-        .filter(jac >= threshold)
+        _shingle_overlap(sh_cand)
+        .filter(jac >= _JACCARD_MIN)
         .select("doc_a", "doc_b")
     )
 
@@ -718,30 +704,11 @@ def minhash_signatures(sh: DataFrame) -> DataFrame:
 
 @register(
     "x02_minhash_lsh_neardup",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               -- list slice (not positional ||) so docs shorter than 4
-               -- tokens yield their whole text, matching shingles()
-               array_to_string(w[gs.i:gs.i+3], '_') AS shingle
-        FROM toks CROSS JOIN LATERAL (
-            SELECT unnest(range(1, greatest(len(w) - 2, 2))) AS i
-        ) gs
-    ),
-    counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    oracle=f"""
+    WITH {_OVERLAP_SQL}
     SELECT doc_a, doc_b
-    FROM pairs
-    JOIN counts ca ON doc_a = ca.doc_id
-    JOIN counts cb ON doc_b = cb.doc_id
-    WHERE inter::DOUBLE / (ca.n + cb.n - inter) >= 0.6
+    FROM overlap
+    WHERE inter::DOUBLE / (n_a + n_b - inter) >= 0.6
     """,
     tags=("dedup", "X2", "lsh"),
 )
@@ -949,32 +916,15 @@ def incremental_neardup_with_index(
 
 @register(
     "x02_dedup_clusters",
-    oracle="""
-    WITH RECURSIVE toks AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(w[gs.i:gs.i+3], '_') AS shingle
-        FROM toks CROSS JOIN LATERAL (
-            SELECT unnest(range(1, greatest(len(w) - 2, 2))) AS i
-        ) gs
-    ),
-    counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    rawpairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT doc_a, doc_b FROM rawpairs
-        JOIN counts ca ON doc_a = ca.doc_id
-        JOIN counts cb ON doc_b = cb.doc_id
-        WHERE inter::DOUBLE / (ca.n + cb.n - inter) >= 0.6
+    oracle=f"""
+    WITH RECURSIVE {_OVERLAP_SQL},
+    verified AS (
+        SELECT doc_a, doc_b FROM overlap
+        WHERE inter::DOUBLE / (n_a + n_b - inter) >= 0.6
     ),
     edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL SELECT doc_b, doc_a FROM pairs
+        SELECT doc_a AS src, doc_b AS dst FROM verified
+        UNION ALL SELECT doc_b, doc_a FROM verified
     ),
     reach AS (
         SELECT src AS doc, src AS root FROM edges
@@ -1137,30 +1087,13 @@ def propagate_min_labels(pairs: DataFrame) -> DataFrame:
 
 @register(
     "x02_incremental_neardup",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(w[gs.i:gs.i+3], '_') AS shingle
-        FROM toks CROSS JOIN LATERAL (
-            SELECT unnest(range(1, greatest(len(w) - 2, 2))) AS i
-        ) gs
-    ),
-    counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    oracle=f"""
+    WITH {_OVERLAP_SQL}
     SELECT
         CASE WHEN doc_a % 10 = 0 THEN doc_a ELSE doc_b END AS inc_doc,
         CASE WHEN doc_a % 10 = 0 THEN doc_b ELSE doc_a END AS corpus_doc
-    FROM pairs
-    JOIN counts ca ON doc_a = ca.doc_id
-    JOIN counts cb ON doc_b = cb.doc_id
-    WHERE inter::DOUBLE / (ca.n + cb.n - inter) >= 0.6
+    FROM overlap
+    WHERE inter::DOUBLE / (n_a + n_b - inter) >= 0.6
       AND ((doc_a % 10 = 0) <> (doc_b % 10 = 0))
     """,
     tags=("dedup", "X2", "lsh", "incremental"),
@@ -1232,29 +1165,11 @@ def x02_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipeline_split_leakage_audit",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(w[gs.i:gs.i+3], '_') AS shingle
-        FROM toks CROSS JOIN LATERAL (
-            SELECT unnest(range(1, greatest(len(w) - 2, 2))) AS i
-        ) gs
-    ),
-    counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_OVERLAP_SQL},
     verified AS (
-        SELECT doc_a, doc_b
-        FROM pairs
-        JOIN counts ca ON doc_a = ca.doc_id
-        JOIN counts cb ON doc_b = cb.doc_id
-        WHERE inter::DOUBLE / (ca.n + cb.n - inter) >= 0.6
+        SELECT doc_a, doc_b FROM overlap
+        WHERE inter::DOUBLE / (n_a + n_b - inter) >= 0.6
     ),
     labeled AS (
         SELECT doc_a, doc_b,
@@ -1309,32 +1224,15 @@ def pipeline_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x02_dedup_keep_best",
-    oracle="""
-    WITH RECURSIVE toks AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(w[gs.i:gs.i+3], '_') AS shingle
-        FROM toks CROSS JOIN LATERAL (
-            SELECT unnest(range(1, greatest(len(w) - 2, 2))) AS i
-        ) gs
-    ),
-    counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    rawpairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT doc_a, doc_b FROM rawpairs
-        JOIN counts ca ON doc_a = ca.doc_id
-        JOIN counts cb ON doc_b = cb.doc_id
-        WHERE inter::DOUBLE / (ca.n + cb.n - inter) >= 0.6
+    oracle=f"""
+    WITH RECURSIVE {_OVERLAP_SQL},
+    verified AS (
+        SELECT doc_a, doc_b FROM overlap
+        WHERE inter::DOUBLE / (n_a + n_b - inter) >= 0.6
     ),
     edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL SELECT doc_b, doc_a FROM pairs
+        SELECT doc_a AS src, doc_b AS dst FROM verified
+        UNION ALL SELECT doc_b, doc_a FROM verified
     ),
     reach AS (
         SELECT src AS doc, src AS root FROM edges
@@ -1452,35 +1350,18 @@ def x02_fuzzy_levenshtein_neardup(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "x02_containment_pairs",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(w[gs.i:gs.i+3], '_') AS shingle
-        FROM toks CROSS JOIN LATERAL (
-            SELECT unnest(range(1, greatest(len(w) - 2, 2))) AS i
-        ) gs
-    ),
-    counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    oracle=f"""
+    WITH {_OVERLAP_SQL}
     SELECT
         doc_a,
         doc_b,
         CAST(inter AS BIGINT) AS inter,
-        CAST(round(inter::DOUBLE / ca.n * 1000000.0) AS BIGINT)
+        CAST(round(inter::DOUBLE / n_a * 1000000.0) AS BIGINT)
             AS contain_a_e6,
-        CAST(round(inter::DOUBLE / cb.n * 1000000.0) AS BIGINT)
+        CAST(round(inter::DOUBLE / n_b * 1000000.0) AS BIGINT)
             AS contain_b_e6
-    FROM pairs
-    JOIN counts ca ON doc_a = ca.doc_id
-    JOIN counts cb ON doc_b = cb.doc_id
-    WHERE inter::DOUBLE / ca.n >= 0.8 OR inter::DOUBLE / cb.n >= 0.8
+    FROM overlap
+    WHERE inter::DOUBLE / n_a >= 0.8 OR inter::DOUBLE / n_b >= 0.8
     """,
     tags=("dedup", "X2", "containment"),
 )
@@ -1496,9 +1377,10 @@ def x02_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair, and both directional scores are emitted so the consumer
     can tell quote-of from quoted-in.
 
-    Same sparse inverted-index intersection as the exact-Jaccard rung
-    (only docs SHARING a shingle ever meet — never all-pairs), same
-    per-doc size table; only the normalization differs. At 100 TB the
+    Same sparse inverted-index intersection as the exact-Jaccard rung,
+    :func:`_shingle_overlap` (only docs SHARING a shingle ever meet —
+    never all-pairs), same per-doc sizes; only the normalization
+    differs. At 100 TB the
     production form feeds LSH candidates into this verifier unchanged;
     the scaled-BIGINT scores are one IEEE division each over exact
     integer counts.
@@ -1506,27 +1388,10 @@ def x02_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persist the shingle stream once (r17 opt) — same three-branch
     # re-evaluation as x02_neardup_jaccard, same lifecycle.
     sh = shingles(table(spark, sf_dir, "documents")).persist()
-    counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
-    c_ab = F.col("inter") / F.col("ca.n")
-    c_ba = F.col("inter") / F.col("cb.n")
+    c_ab = F.col("inter") / F.col("n_a")
+    c_ba = F.col("inter") / F.col("n_b")
     return (
-        pairs.join(ca, F.col("doc_a") == F.col("ca.doc_id"))
-        .join(cb, F.col("doc_b") == F.col("cb.doc_id"))
+        _shingle_overlap(sh)
         .filter((c_ab >= 0.8) | (c_ba >= 0.8))
         .select(
             "doc_a",

@@ -15,6 +15,7 @@ from reddit_data_engineering_project_spark.operators.dedup import (
     _probe_masks,
     _simhash_candidates,
     _verify_jaccard,
+    shingles,
 )
 
 registry.load_all_operators()
@@ -68,21 +69,21 @@ def test_simhash16_cuts_candidates_at_equal_recall(spark):
     recall)."""
     docs = _skewed_corpus(spark)
     # raw collision stream = join output before the popcount pre-filter
-    n8 = _simhash_candidates(docs, 8, 1, max_hamming=None).count()
-    n16 = _simhash_candidates(docs, 16, 3, max_hamming=None).count()
+    n8 = _simhash_candidates(shingles(docs), 8, 1, max_hamming=None).count()
+    n16 = _simhash_candidates(shingles(docs), 16, 3, max_hamming=None).count()
     # observed ~5.8x on this corpus; pin a conservative 3x
     assert n16 < n8 / 3, (n8, n16)
 
     v8 = {
         tuple(r)
         for r in _verify_jaccard(
-            docs, _simhash_candidates(docs, 8, 1)
+            docs, _simhash_candidates(shingles(docs), 8, 1)
         ).collect()
     }
     v16 = {
         tuple(r)
         for r in _verify_jaccard(
-            docs, _simhash_candidates(docs, 16, 3)
+            docs, _simhash_candidates(shingles(docs), 16, 3)
         ).collect()
     }
     assert v8 == v16

@@ -61,7 +61,7 @@ def test_s09_sample_duckdb_matches_reference():
     assert 30 <= len(got - {None}) <= 95
 
 
-def test_simhash_invariants_raise_not_assert():
+def test_simhash_invariants_raise_not_assert(spark):
     """Capture-guarantee / band-width violations must raise ValueError
     (survives ``python -O``, r10 advice) instead of assert."""
     from reddit_data_engineering_project_spark.operators import dedup
@@ -74,6 +74,14 @@ def test_simhash_invariants_raise_not_assert():
         dedup._simhash_candidates(
             object(), band_bits=16, radius=2, max_hamming=15
         )
+    # 16-bit bands, radius 1, max_hamming=7: (1+1)*4-1 = 7 -> the
+    # J >~ 0.95 setting documented in x02_simhash16_neardup and SCALE.md
+    # must build
+    sh = spark.createDataFrame([(1, "a_b_c_d")], "doc_id long, shingle string")
+    try:
+        dedup._simhash_candidates(sh, band_bits=16, radius=1, max_hamming=7)
+    finally:
+        spark.catalog.clearCache()
 
 
 def _window_checker():

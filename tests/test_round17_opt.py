@@ -262,13 +262,14 @@ def test_simhash_buckets_cached_once(spark):
     5.0 s -> 1.4 s at sf0.1 for candidate generation."""
     from reddit_data_engineering_project_spark.operators.dedup import (
         _simhash_candidates,
+        shingles,
     )
     from reddit_data_engineering_project_spark.tables import table
 
     try:
         plan = plan_of(
             spark,
-            _simhash_candidates(table(spark, SF_DIR, "documents"), 8, 1),
+            _simhash_candidates(shingles(table(spark, SF_DIR, "documents")), 8, 1),
         )
     finally:
         spark.catalog.clearCache()

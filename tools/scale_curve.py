@@ -165,14 +165,14 @@ def simhash16_curve(spark: SparkSession, sf_dir: str, multiplier: int) -> None:
     Same constant-near-dup-density replication as the LSH curve (each
     replica's rotation substitution preserves ITS planted pairs while
     destroying cross-replica shingle overlap), measured through the
-    registered entry's exact composition: 16-bit band candidates at
-    probe radius 3, then candidate-only exact-Jaccard verification.
+    registered entry's exact composition, ``_simhash_pairs_over(docs,
+    16, 3)``: one persisted shingle stream feeds 16-bit band candidates
+    at probe radius 3 and the candidate-only exact-Jaccard verification.
     The claim under test is the band-fanout one — candidate volume
     (and so wall) stays ~linear in docs because 65 536-value buckets
     keep random collisions at ~4.3% per pair-band, never quadratic."""
     from reddit_data_engineering_project_spark.operators.dedup import (
-        _simhash_candidates,
-        _verify_jaccard,
+        _simhash_pairs_over,
     )
 
     for label, mult in ((os.path.basename(sf_dir.rstrip("/")), 1),
@@ -181,8 +181,7 @@ def simhash16_curve(spark: SparkSession, sf_dir: str, multiplier: int) -> None:
         spark.catalog.clearCache()
         n_docs = docs.count()
         t0 = time.time()
-        cands = _simhash_candidates(docs, band_bits=16, radius=3)
-        n_pairs = _verify_jaccard(docs, cands).count()
+        n_pairs = _simhash_pairs_over(docs, 16, 3).count()
         print(
             json.dumps(
                 {
