@@ -1,5 +1,6 @@
 """Streaming surface: batch-equivalent S1-S5 queries, the live
-availableNow runners, and the applyInPandasWithState stateful operator.
+availableNow runners, and the two applyInPandasWithState stateful
+operators (rolling z-score, event-time-timeout sessionizer).
 
 Every live runner (``runner.py`` and ``stateful.py``) runs on the one
 file-stream driver in ``runner.py``: ``_file_stream`` (replayable

@@ -416,6 +416,38 @@ def run_session_stream(
     )
 
 
+def run_user_profile_stream(
+    spark: SparkSession,
+    source_dir: str,
+    sink_dir: str,
+    checkpoint_dir: str,
+) -> None:
+    """File-source stream → per-user running profile → parquet sink.
+
+    The online-feature-store shape: event count, value sum (a NULL
+    value counts as 0.0) and last event time per user, kept across
+    micro-batches and restarts in the checkpoint's state store. It is
+    a built-in streaming aggregation, which the engine incrementalizes
+    itself — no Python state function. Update mode: each micro-batch
+    emits the current profile of every user it touched, so the latest
+    row per user equals the batch ``groupBy`` over everything read so
+    far; ``last_ts`` is NULL for a user whose event times are all NULL,
+    as in the batch ``max``.
+    """
+    profiles = (
+        _file_stream(spark, source_dir)
+        .groupBy("user_id")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum(F.coalesce(F.col("value"), F.lit(0.0))).alias(
+                "total_value"
+            ),
+            F.max("ts").alias("last_ts"),
+        )
+    )
+    _drain(profiles, _overwrite_sink(sink_dir), checkpoint_dir, "update")
+
+
 def run_dedup_index_stream(
     spark: SparkSession,
     source_dir: str,

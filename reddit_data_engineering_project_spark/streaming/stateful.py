@@ -1,13 +1,22 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState``.
+"""Custom stateful streaming operators via ``applyInPandasWithState``.
 
-The S5 state-store surface generalized: arbitrary per-key state the
-built-in operators can't express. The demo operator maintains a per-user
-running profile (event count, value sum, last-seen timestamp) across
-micro-batches — the online-feature-store shape.
+The S5 state-store surface generalized: per-key state for logic the
+built-in stateful aggregations cannot express. There is one operator
+per shape, and each keeps its state per BUCKET of users
+(``pmod(xxhash64(user_id), n_buckets)``), which amortizes the pandas
+protocol's fixed per-key cost over the users of a bucket:
 
-``tests/test_stateful_stream.py`` drives it live: two availableNow passes
-over a growing file source prove state persists across restarts via the
-checkpoint, and the final profile equals the batch groupBy.
+- :func:`run_zscore_stream` / :func:`score_rolling_zscore` — the
+  rolling z-score anomaly gate (state: each user's trailing frame);
+- :func:`run_session_stream` / :func:`close_idle_sessions` — the
+  event-time-timeout sessionizer (state: each user's open session).
+
+A per-user running profile (count, sum, max) needs no Python: it is
+the native streaming aggregation ``runner.run_user_profile_stream``.
+
+Both transition functions are driver-graded in batch: the s08 and s09
+replay entries (``stream_queries.py``) fold one user per call through
+them against independent SQL oracles.
 
 Scale notes: state is partitioned by the grouping key across executors
 (RocksDB-backed in production configs); each micro-batch touches only
@@ -60,99 +69,9 @@ def ts_us_expr():
     )
 
 
-#: Per-user profile state: (n_events, total_value, last_ts-as-epoch-µs).
-STATE_SCHEMA = StructType(
-    [
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-        StructField("last_ts_us", LongType()),
-    ]
-)
-
-#: Boundary output: ``last_ts_us`` stays an epoch-µs long through the
-#: pandas seam; the runner casts it to TimestampType relationally.
-PROFILE_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-        StructField("last_ts_us", LongType()),
-    ]
-)
-
-
-def update_user_profile(
-    key: tuple,
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Fold this micro-batch's events into the user's running profile."""
-    (user_id,) = key
-    if state.exists:
-        n, total, last_us = state.get
-    else:
-        n, total, last_us = 0, 0.0, 0
-
-    for pdf in batches:
-        n += len(pdf)
-        total += float(pdf["value"].fillna(0.0).sum())
-        # epoch-µs longs (NAT_US for NULL ts) — the sentinel is int64
-        # min, so it never wins the max unless every row is NULL.
-        last_us = max(last_us, int(pdf["ts_us"].max()))
-
-    state.update((n, total, last_us))
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "n_events": [n],
-            "total_value": [total],
-            "last_ts_us": [last_us],
-        }
-    )
-
-
-def run_profile_stream(
-    spark, source_dir: str, sink_dir: str, checkpoint_dir: str
-) -> None:
-    """File stream → per-user stateful profile → parquet (update mode).
-
-    One ``availableNow`` pass; re-running with the same checkpoint
-    resumes the state store, so profiles accumulate across runs exactly
-    like a continuously-running query.
-    """
-    from pyspark.sql import functions as F
-
-    from .runner import _drain, _file_stream, _overwrite_sink
-
-    # only what the fold reads crosses the Arrow boundary, and event
-    # time crosses as epoch-µs longs (see ts_us_expr)
-    stream = _file_stream(spark, source_dir, "user_id", "value", ts_us_expr())
-    profiles = stream.groupBy("user_id").applyInPandasWithState(
-        update_user_profile,
-        outputStructType=PROFILE_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    ).select(
-        "user_id",
-        "n_events",
-        "total_value",
-        F.timestamp_micros("last_ts_us").alias("last_ts"),
-    )
-    _drain(profiles, _overwrite_sink(sink_dir), checkpoint_dir, "update")
-
-
 # ---------------------------------------------------------------------------
 # Streaming rolling z-score: the live twin of batch q22_rolling_zscore.
 # ---------------------------------------------------------------------------
-
-#: Per-user carry state: the trailing ≤7 values (event-time order), so an
-#: arriving event's 8-deep frame = state tail + itself. O(frame) per key.
-ZSCORE_STATE_SCHEMA = StructType(
-    [
-        StructField("tail", ArrayType(DoubleType())),
-    ]
-)
 
 ZSCORE_OUT_SCHEMA = StructType(
     [
@@ -192,18 +111,17 @@ def _zscore_fold(tail: list, event_ids, values) -> tuple:
     """Fold one user's (ts, event_id)-ordered events through the
     trailing-8 z-score frame.
 
-    Returns ``(event_ids_i64, values_e4, values_mask, z_e4, z_mask,
-    new_tail)`` — int64 ndarrays with their missing-masks (mask True =
-    NULL), and the ≤7-value state tail as a plain float list. Raw
-    numpy so the bucketed caller can concatenate users without
-    per-user pandas objects. This is the anomaly gate's transition
-    core — shared verbatim by the per-user operator
-    (:func:`score_rolling_zscore`, which the s08 replay entry drives
-    row-for-row against the SQL window oracle) and the bucketed
-    operator (:func:`score_rolling_zscore_bucketed`). NULL-value rows
-    OCCUPY a frame slot (aging out older values) but contribute nothing
-    to the stats — exactly how count(value)/sum(value) over a ROWS
-    frame treat NULLs; encoded as NaN in the array<double> state.
+    ``event_ids`` and ``values`` are int64 and float64 ndarrays (NaN =
+    NULL value). Returns ``(event_ids_i64, values_e4, values_mask,
+    z_e4, z_mask, new_tail)`` — int64 ndarrays with their missing-masks
+    (mask True = NULL), and the ≤7-value state tail as a plain float
+    list. Raw numpy so :func:`score_rolling_zscore` can concatenate
+    users without per-user pandas objects. This is the anomaly gate's
+    transition core, which the s08 replay entry drives one user per
+    call against the SQL window oracle. NULL-value rows OCCUPY a frame
+    slot (aging out older values) but contribute nothing to the stats
+    — exactly how count(value)/sum(value) over a ROWS frame treat
+    NULLs; encoded as NaN in the array<double> state.
 
     Hybrid execution (r11 verdict item 4, then measured): above
     ``_VECTOR_MIN`` events per call, every event's 8-slot frame is a
@@ -232,36 +150,8 @@ def _zscore_fold(tail: list, event_ids, values) -> tuple:
     """
     import numpy as np
 
-    if isinstance(values, np.ndarray):
-        vals = values if values.dtype == np.float64 else values.astype(
-            "float64"
-        )
-    elif hasattr(values, "to_numpy"):
-        vals = values.to_numpy(dtype="float64", na_value=np.nan)
-    else:
-        vals = np.asarray(
-            [np.nan if v is None else float(v) for v in values],
-            dtype="float64",
-        )
-    if isinstance(event_ids, np.ndarray):
-        ev = (
-            event_ids
-            if event_ids.dtype == np.int64
-            else event_ids.astype("int64")
-        )
-    elif hasattr(event_ids, "to_numpy"):
-        # Exact conversion: a float64 round-trip would silently corrupt
-        # BIGINT ids above 2^53, and a null id must fail loudly — it is
-        # the declared primary key (r12 advice).
-        if hasattr(event_ids, "isna") and event_ids.isna().any():
-            raise ValueError(
-                "null event_id in z-score fold input — event_id is the "
-                "events primary key (tables.PRIMARY_KEYS); the ingest "
-                "contract gate rejects such batches before state updates"
-            )
-        ev = event_ids.to_numpy(dtype="int64")
-    else:
-        ev = np.asarray(event_ids).astype("int64")
+    vals = np.asarray(values, dtype="float64")
+    ev = np.asarray(event_ids, dtype="int64")
 
     if not len(vals):
         empty_i = np.empty(0, "int64")
@@ -406,108 +296,23 @@ def _zscore_fold_seq(tail: list, ev, vals) -> tuple:
         tail,
     )
 
+def _user_bucket(n_buckets: int):
+    """The grouping key of both operators: ``user_id`` hashed into one
+    of ``n_buckets`` buckets, as a concrete column of the stream
+    (``applyInPandasWithState`` requires the grouping key to be a
+    column of its child, not a groupBy expression)."""
+    from pyspark.sql import functions as F
 
-def score_rolling_zscore(
-    key: tuple,
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Score each arriving event against its trailing 8-value frame.
-
-    Assumes per-key event-time-ordered arrival across micro-batches (the
-    file-stream contract in the runner: files land in time order);
-    within a batch, rows are re-sorted by (ts, event_id) to make the
-    frame deterministic. The variance formula is the batch operator's
-    sum/sum-of-squares identity with the identical 1e-12 floor, so the
-    streaming score converges to the batch score on ordered input.
-    """
-    (user_id,) = key
-    tail: list[float] = list(state.get[0]) if state.exists else []
-
-    frames = [pdf for pdf in batches if len(pdf)]
-    if not frames:
-        state.update((tail,))
-        return
-    import numpy as np
-
-    pdf = frames[0] if len(frames) == 1 else pd.concat(frames)
-    # (ts, event_id) order with NULL ts LAST — the sentinel NAT_US is
-    # int64 min, so remap it to int64 max for the sort key (same
-    # discipline as the bucketed fold; NULL-ts rows keep their frame
-    # slot, their fold position is load-bearing for row identity).
-    ts_us = pdf["ts_us"].to_numpy("int64")
-    ts_key = np.where(
-        ts_us == NAT_US, np.iinfo("int64").max, ts_us
-    )
-    pdf = pdf.iloc[np.lexsort((*_eid_sort_keys(pdf["event_id"]), ts_key))]
-
-    ev, val, val_mask, z, z_mask, tail = _zscore_fold(
-        tail, pdf["event_id"], pdf["value"]
-    )
-
-    state.update((tail,))
-    yield pd.DataFrame(
-        {
-            "user_id": pd.array([user_id] * len(ev), dtype="Int64"),
-            "event_id": pd.array(ev, dtype="Int64"),
-            "value_e4": pd.arrays.IntegerArray(val, mask=val_mask),
-            "z_e4": pd.arrays.IntegerArray(z, mask=z_mask),
-        }
-    )
-
-
-def run_zscore_stream(
-    spark,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    state_shards: int = 16,
-    contract_table: str | None = "events",
-) -> None:
-    """File stream → per-user stateful rolling z-score → parquet.
-
-    Each event is scored exactly once, in the micro-batch it arrives;
-    the checkpoint carries the per-user tail across restarts, so a
-    resumed stream scores new events against history it never re-reads
-    — the anomaly-gate shape for a 100 TB/day event firehose (state is
-    8 doubles per user, RocksDB-sharded by user across executors).
-    Same throughput shape as the sessionizer (SCALE.md): only the four
-    columns the fold reads enter the shuffle/Arrow channel, and
-    ``state_shards`` bounds the per-shard fixed cost.
-    """
-    from .runner import _drain, _file_stream, _overwrite_sink
-
-    stream = _file_stream(
-        spark,
-        source_dir,
-        "user_id",
-        "event_id",
-        "value",
-        ts_us_expr(),
-        contract_table=contract_table,
-    )
-    scored = stream.groupBy("user_id").applyInPandasWithState(
-        score_rolling_zscore,
-        outputStructType=ZSCORE_OUT_SCHEMA,
-        stateStructType=ZSCORE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-    _drain(
-        scored,
-        _overwrite_sink(sink_dir),
-        checkpoint_dir,
-        "update",
-        state_shards=state_shards,
-        contract_table=contract_table,
+    return F.pmod(F.xxhash64(F.col("user_id")), F.lit(n_buckets)).alias(
+        "bucket"
     )
 
 
 #: Per-BUCKET z-score state: each bucketed user's trailing ≤7-value
-#: frame, as parallel arrays (tails carry NaN for null-value slots,
-#: same encoding as the per-user state).
-BUCKET_ZSCORE_STATE_SCHEMA = StructType(
+#: frame (event-time order), as parallel arrays; tails carry NaN for
+#: null-value slots. An arriving event's 8-deep frame = its user's tail
+#: + itself, so state is O(frame) per user.
+ZSCORE_STATE_SCHEMA = StructType(
     [
         StructField("user_ids", ArrayType(LongType(), containsNull=True)),
         StructField("tails", ArrayType(ArrayType(DoubleType()))),
@@ -515,21 +320,28 @@ BUCKET_ZSCORE_STATE_SCHEMA = StructType(
 )
 
 
-def score_rolling_zscore_bucketed(
+def score_rolling_zscore(
     key: tuple,
     batches: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    """Per-BUCKET rolling z-score: one state key carries the trailing
-    frames of every user in the bucket.
+    """Score each arriving event against its user's trailing 8-value
+    frame; one state key carries the frames of every user in the
+    bucket.
 
-    Key-coarsening twin of :func:`close_idle_sessions_bucketed` — the
-    anomaly gate is the stateful stream with the MOST keys at 100 TB
-    (every active entity), so the ~7 ms/key `applyInPandasWithState`
-    protocol cost is the dominant term long before the fold is. Each
-    user's events fold through the SAME :func:`_zscore_fold` core the
-    s08 replay hash-verifies; output is row-identical to per-user
-    keying (pinned by ``test_bucketed_zscore_stream_matches_per_user``).
+    Assumes per-user event-time-ordered arrival across micro-batches
+    (the file-stream contract in the runner: files land in time
+    order); within a batch, rows are sorted by (ts NULLS LAST,
+    event_id) to make the frame deterministic. The variance formula is
+    the batch operator's sum/sum-of-squares identity with the identical
+    1e-12 floor, so the streaming score converges to the batch score on
+    ordered input.
+
+    Why buckets: the anomaly gate is the stateful stream with the MOST
+    keys at 100 TB (every active entity), so the ~7 ms/key
+    ``applyInPandasWithState`` protocol cost is the dominant term long
+    before the fold is. Each user's events fold through
+    :func:`_zscore_fold`, the core the s08 replay hash-verifies.
     """
     import numpy as np
 
@@ -544,10 +356,10 @@ def score_rolling_zscore_bucketed(
     if frames:
         pdf = frames[0] if len(frames) == 1 else pd.concat(frames)
         ts_us = pdf["ts_us"].to_numpy("int64")
-        # NULL ts (NAT_US = int64 min) must sort LAST to match the
-        # per-user path — the z-score fold KEEPS null-ts rows (they
-        # occupy a frame slot), so their position in the fold order is
-        # load-bearing for row-identity (r11 advice).
+        # NULL ts (NAT_US = int64 min) must sort LAST, as in the SQL
+        # window the replay is graded against: the z-score fold KEEPS
+        # null-ts rows (they occupy a frame slot), so their position in
+        # the fold order is load-bearing (r11 advice).
         ts_key = np.where(
             ts_us == NAT_US, np.iinfo("int64").max, ts_us
         )
@@ -559,7 +371,7 @@ def score_rolling_zscore_bucketed(
         # per-user pandas construction was most of the fold wall.
         # eid_keys[0] is the exact int64 id view (never a lossy float
         # round-trip); a null id must fail loudly before it reaches the
-        # fold as the pandas path does — it is the declared primary key.
+        # fold — it is the declared primary key.
         if len(eid_keys) > 1 and eid_keys[1].any():
             raise ValueError(
                 "null event_id in z-score fold input — event_id is the "
@@ -609,7 +421,7 @@ def score_rolling_zscore_bucketed(
         )
 
 
-def run_zscore_stream_bucketed(
+def run_zscore_stream(
     spark,
     source_dir: str,
     sink_dir: str,
@@ -618,12 +430,16 @@ def run_zscore_stream_bucketed(
     state_shards: int = 4,
     contract_table: str | None = "events",
 ) -> None:
-    """File stream → bucketed rolling z-score → parquet.
+    """File stream → bucketed stateful rolling z-score → parquet.
 
-    Row-identical output to :func:`run_zscore_stream`; grouping by
-    ``pmod(xxhash64(user_id), n_buckets)`` amortizes the per-key
-    protocol cost over the bucket (see
-    :func:`score_rolling_zscore_bucketed`).
+    Each event is scored exactly once, in the micro-batch it arrives;
+    the checkpoint carries every user's tail across restarts, so a
+    resumed stream scores new events against history it never re-reads
+    — the anomaly-gate shape for a 100 TB/day event firehose (state is
+    ≤7 doubles per user, RocksDB-sharded by bucket across executors).
+    Only the columns the fold reads enter the shuffle/Arrow channel,
+    grouped by ``pmod(xxhash64(user_id), n_buckets)`` (see
+    :func:`score_rolling_zscore`).
 
     Sizing (measured at sf0.1/8 triggers, SCALE.md): per-TRIGGER fixed
     cost (~0.65 s: state commit, python-runner task setup, offset-log
@@ -634,8 +450,6 @@ def run_zscore_stream_bucketed(
     per trigger, not per row — 90k rows/s at one 100k-row trigger vs
     17.7k at eight 12.5k-row triggers).
     """
-    from pyspark.sql import functions as F
-
     from .runner import _drain, _file_stream, _overwrite_sink
 
     stream = _file_stream(
@@ -645,13 +459,13 @@ def run_zscore_stream_bucketed(
         "event_id",
         "value",
         ts_us_expr(),
-        F.pmod(F.xxhash64(F.col("user_id")), F.lit(n_buckets)).alias("bucket"),
+        _user_bucket(n_buckets),
         contract_table=contract_table,
     )
     scored = stream.groupBy("bucket").applyInPandasWithState(
-        score_rolling_zscore_bucketed,
+        score_rolling_zscore,
         outputStructType=ZSCORE_OUT_SCHEMA,
-        stateStructType=BUCKET_ZSCORE_STATE_SCHEMA,
+        stateStructType=ZSCORE_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -666,15 +480,28 @@ def run_zscore_stream_bucketed(
     )
 
 
+# ---------------------------------------------------------------------------
+# Event-time-timeout sessionizer: the live twin of batch q21_sessionize_gap.
+# ---------------------------------------------------------------------------
+
 #: Session-gap threshold shared with the batch sessionizer
 #: (q21_sessionize_gap) and the S3 session window: 30 minutes.
 _SESSION_GAP_MS = 30 * 60 * 1000
 
+#: Per-BUCKET sessionizer state: the open sessions of every user hashed
+#: into the bucket, as parallel arrays (user_ids may contain None — the
+#: NULL-user group is a first-class session key). ``timeout_ms`` is the
+#: user's CLAMPED close instant ``max(last + gap, watermark + 1)``, not
+#: the raw last+gap deadline: under late arrivals the two differ, and
+#: Spark's ``timeout < watermark`` firing rule applies to the clamped
+#: value (see :func:`close_idle_sessions`).
 SESSION_STATE_SCHEMA = StructType(
     [
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n_events", LongType()),
+        StructField("user_ids", ArrayType(LongType(), containsNull=True)),
+        StructField("start_us", ArrayType(LongType())),
+        StructField("last_us", ArrayType(LongType())),
+        StructField("n_events", ArrayType(LongType())),
+        StructField("timeout_ms", ArrayType(LongType())),
     ]
 )
 
@@ -807,12 +634,10 @@ def _gap_fold(
     """Fold one user's time-sorted event times (µs int64 array) into the
     open session ``cur`` = (start_us, last_us, n_events) or None.
 
-    Returns ``(closed_segments, new_open)``. This is the sessionizer's
-    transition core — shared verbatim by the per-user operator
-    (:func:`close_idle_sessions`, which the s09 replay entries drive
-    row-for-row against the SQL oracle) and the bucketed operator
-    (:func:`close_idle_sessions_bucketed`), so the replay-verified fold
-    IS the fold the high-throughput path runs.
+    Returns ``(closed_segments, new_open)``. This is the transition
+    core of :func:`close_idle_sessions`, which the s09 replay entries
+    drive one user per call against the SQL oracle, so the
+    replay-verified fold IS the fold the live stream runs.
     """
     import numpy as np
 
@@ -847,250 +672,49 @@ def close_idle_sessions(
     batches: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    """Per-user sessionization with EVENT-TIME timeout close.
+    """Sessionization with EVENT-TIME timeout close; one state key
+    carries the open sessions of every user in the bucket.
 
-    The mechanism the profile/z-score operators don't exercise: an
-    open session lives in state with ``setTimeoutTimestamp(last_event
-    + gap)``; when the WATERMARK passes that instant the function is
-    re-invoked for the key with ``state.hasTimedOut`` and NO data, and
-    the session closes with ``closed_by='timeout'`` — the only way a
-    streaming sessionizer can ever emit the LAST session of an idle
-    user (a gap-split needs a next event; a timeout needs only time to
-    pass). In-batch and cross-batch gap splits close eagerly with
-    ``closed_by='gap'``. Event-time (not processing-time) timeouts
-    keep replays deterministic: the close fires at the same point in
-    the DATA under any wall-clock schedule, which is what makes the
-    availableNow test reproducible.
-    """
-    (user_id,) = key
+    An open session lives in state until the WATERMARK passes its
+    close instant ``last_event + gap``; then it closes with
+    ``closed_by='timeout'`` — the only way a streaming sessionizer can
+    ever emit the LAST session of an idle user (a gap-split needs a
+    next event; a timeout needs only time to pass). In-batch and
+    cross-batch gap splits close eagerly with ``closed_by='gap'``.
+    Event-time (not processing-time) timeouts keep replays
+    deterministic: the close fires at the same point in the DATA under
+    any wall-clock schedule, which is what makes the availableNow tests
+    reproducible.
 
-    def emit(sessions: list[tuple], why: str) -> pd.DataFrame:
-        # ONE frame per invocation, not one per closed session: a
-        # replay folds a user's WHOLE history through one call, so
-        # per-session 1-row DataFrames turn O(sessions) allocator work
-        # into the bottleneck (measured 41 s -> ~5 s at sf0.1). Columns
-        # are built as numpy arrays — a pd.Timestamp-per-session list
-        # comprehension was ~40% of the LIVE path's per-key cost (the
-        # live stream calls emit ~once per user per micro-batch).
-        import numpy as np
+    Per invocation:
 
-        starts = np.fromiter(
-            (s[0] for s in sessions), dtype="int64", count=len(sessions)
-        )
-        ends = np.fromiter(
-            (s[1] for s in sessions), dtype="int64", count=len(sessions)
-        )
-        counts = np.fromiter(
-            (s[2] for s in sessions), dtype="int64", count=len(sessions)
-        )
-        return pd.DataFrame(
-            {
-                "user_id": pd.array(
-                    [user_id] * len(sessions), dtype="Int64"
-                ),
-                "session_start": starts,
-                "session_end": ends,
-                "n_events": counts,
-                "closed_by": [why] * len(sessions),
-            }
-        )
+    - users WITH data in the batch fold through :func:`_gap_fold`, the
+      core the s09 replays verify;
+    - users WITHOUT data close by timeout iff their stored CLAMPED
+      close instant fell strictly behind the current watermark —
+      Spark's own ``timeoutTimestamp < watermark`` firing rule for a
+      key without data. Storing the clamp (not the raw last+gap
+      deadline) matters under LATE arrivals: a late event that extends
+      a behind-deadline session defers its close to wm+1, so a further
+      within-gap late event still merges — recomputing from the
+      deadline would timeout-close the just-extended session in the
+      SAME batch (r11 advice);
+    - the bucket's timeout timestamp is the MIN over its users, so the
+      bucket is re-invoked in the micro-batch in which its earliest
+      user's timeout fires.
 
-    if state.hasTimedOut:
-        start_us, last_us, n = state.get
-        state.remove()
-        yield emit([(start_us, last_us, n)], "timeout")
-        return
-
-    cur = state.get if state.exists else None
-    closed: list[tuple] = []
-    # A key's micro-batch data can span multiple Arrow chunks (~10k rows
-    # each); sorting chunks independently would fold events out of order
-    # (mis-fired gap splits, last_us moving backward). Concat ALL chunks
-    # first, drop NaT event times (they carry no event-time position),
-    # then sort ONCE by (ts, event_id) — same discipline as
-    # score_rolling_zscore above. The gap fold itself is vectorized
-    # (boundary mask over the µs diffs, segment slicing): a per-event
-    # Python loop was the replay's bottleneck (measured ~5 s -> ~1 s of
-    # per-group work at 1M events) and is pure overhead for the live
-    # stream too.
-    frames = [pdf for pdf in batches if len(pdf)]
-    gap_us = _SESSION_GAP_MS * 1000
-    if frames:
-        import numpy as np
-
-        # Numpy end-to-end: the pandas concat → boolean-mask → multi-key
-        # sort_values pipeline cost ~7 ms per key invocation, which at
-        # ~1500 users × 9 micro-batches was MOST of the live stream's
-        # wall (the replay amortizes it over whole histories; the live
-        # path pays it per user per batch). Same order semantics:
-        # lexsort is stable like sort_values, NaT drops, NaN event_ids
-        # sort last.
-        pdf = frames[0] if len(frames) == 1 else pd.concat(frames)
-        ts_us_all = pdf["ts_us"].to_numpy("int64")
-        eid_keys = _eid_sort_keys(pdf["event_id"])
-        mask = ts_us_all != NAT_US  # NULL ts carries no position
-        if not mask.all():
-            ts_us_all = ts_us_all[mask]
-            eid_keys = tuple(k[mask] for k in eid_keys)
-        order = np.lexsort((*eid_keys, ts_us_all))
-        ts_us = ts_us_all[order]
-        newly_closed, cur = _gap_fold(cur, ts_us, gap_us)
-        closed.extend(newly_closed)
-    if cur is None:
-        # Only empty/NaT-ts chunks and no prior state: nothing to track.
-        return
-    state.update(cur)
-    # Clamp to just past the watermark when the open session's deadline
-    # already fell behind it (possible only under LATE arrivals — an
-    # event older than the watermark extends a session whose deadline
-    # passed): Spark rejects event-time timeouts at/behind the
-    # watermark, and wm+1 re-fires next batch, which is when the passed
-    # deadline would be acted on anyway. On in-order corpora the clamp
-    # never binds (deadline > watermark by construction), so replay
-    # semantics are untouched (the replay stand-in's watermark is 0).
-    state.setTimeoutTimestamp(
-        max(
-            cur[1] // 1000 + _SESSION_GAP_MS,
-            state.getCurrentWatermarkMs() + 1,
-        )
-    )
-    if closed:
-        yield emit(closed, "gap")
-
-
-def run_session_stream(
-    spark,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    state_shards: int = 16,
-    contract_table: str | None = "events",
-) -> None:
-    """File stream → watermarked event-time sessionizer → parquet.
-
-    Throughput shape (r10 verdict item 3 — measured at sf0.1/8
-    micro-batches, SCALE.md): the stateful stage's cost is per-KEY
-    protocol overhead (state row round-trip + per-group pandas
-    machinery), not data volume, so (a) only the three columns the
-    transition function reads (``user_id, ts, event_id``) enter the
-    shuffle and the Arrow channel — the full event row tripled the
-    per-key transfer for nothing — and (b) ``state_shards`` sizes the
-    state-store partition count at FIRST start (it is pinned in the
-    checkpoint thereafter): per-shard fixed cost (store open/commit,
-    python runner handshake) makes 32 shards for ~1.5k live keys
-    strictly slower than 16. On a real cluster size it to ~2-4× the
-    executor-core count claimed by the stream.
-
-    The watermark (0 s delay — the corpus files arrive in time order)
-    is what drives the timeout: after each micro-batch it advances to
-    that batch's max event time, and every open session whose
-    last-event + gap fell behind it closes on the NEXT batch. Append
-    mode: only CLOSED sessions are emitted, exactly once each.
-
-    Null event times: rows with NaT ``ts`` are dropped inside
-    :func:`close_idle_sessions` (they carry no event-time position).
-    This is a deliberate live-path semantics change from the pre-r09
-    fold, which coerced NaT to int64-min and force-split sessions —
-    the drop matches the s09 oracle's ``ts IS NOT NULL`` filter and is
-    pinned by ``test_session_stream_ignores_nat_event_times`` in
-    ``tests/test_stateful_stream.py``.
-    """
-    from .runner import _drain, _file_stream, _overwrite_sink
-
-    stream = _file_stream(
-        spark,
-        source_dir,
-        "user_id",
-        "ts",
-        "event_id",
-        contract_table=contract_table,
-    )
-    # exact epoch-µs longs for the fold + the ns-safe clamped ts for
-    # the watermark/late-drop machinery (see _WM_CEILING_US); ts_us is
-    # computed from the RAW ts before the clamp, and the saturation
-    # counter rides the same scan on the raw column
-    stream = _observe_wm_saturation(stream)
-    stream = stream.select(
-        "user_id", "event_id", ts_us_expr(), _clamped_wm_ts()
-    ).withWatermark("ts", "0 seconds")
-    sessions = cast_session_bounds(
-        stream.groupBy("user_id").applyInPandasWithState(
-            close_idle_sessions,
-            outputStructType=SESSION_OUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-    q = _drain(
-        sessions,
-        _overwrite_sink(sink_dir),
-        checkpoint_dir,
-        "append",
-        state_shards=state_shards,
-        contract_table=contract_table,
-    )
-    _warn_wm_saturation(q)
-
-
-# ---------------------------------------------------------------------------
-# Bucketed sessionizer: the high-throughput form of the same operator.
-# ---------------------------------------------------------------------------
-
-#: Per-BUCKET state: the open sessions of every user hashed into the
-#: bucket, as parallel arrays (user_ids may contain None — the NULL-user
-#: group is a first-class session key, same as the per-user operator).
-#: ``timeout_ms`` is the user's CLAMPED close instant — what the
-#: per-user operator passed to ``setTimeoutTimestamp`` — not the raw
-#: last+gap deadline: under late arrivals the two differ (the per-user
-#: clamp defers a behind-watermark deadline to wm+1), and replicating
-#: Spark's ``timeout < watermark`` firing rule needs the clamped value.
-BUCKET_SESSION_STATE_SCHEMA = StructType(
-    [
-        StructField("user_ids", ArrayType(LongType(), containsNull=True)),
-        StructField("start_us", ArrayType(LongType())),
-        StructField("last_us", ArrayType(LongType())),
-        StructField("n_events", ArrayType(LongType())),
-        StructField("timeout_ms", ArrayType(LongType())),
-    ]
-)
-
-
-def close_idle_sessions_bucketed(
-    key: tuple,
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Per-BUCKET sessionization: one state key carries the open
-    sessions of every user in the bucket.
-
-    Why this exists: ``applyInPandasWithState`` costs ~7 ms of fixed
+    Why buckets: ``applyInPandasWithState`` costs ~7 ms of fixed
     protocol machinery per KEY invocation (state row round-trip,
     per-group pandas construction, per-emit Arrow coercion — measured
     at sf0.1, SCALE.md), dwarfing the ~0.3 ms the transition fold
-    itself needs. Keying by ``pmod(xxhash64(user_id), B)`` instead of
-    ``user_id`` amortizes that fixed cost over ~|users|/B users per
-    invocation — the standard key-coarsening move for high-cardinality
-    stateful streams. Output is row-identical to the per-user operator
-    (pinned by ``test_bucketed_session_stream_matches_per_user``):
+    itself needs. Keying by ``pmod(xxhash64(user_id), B)`` amortizes
+    that fixed cost over ~|users|/B users per invocation — the standard
+    key-coarsening move for high-cardinality stateful streams.
 
-    - users WITH data in the batch fold through the SAME
-      :func:`_gap_fold` core the s09 replays verify — gap splits and
-      continuations are byte-identical;
-    - users WITHOUT data close by timeout iff their stored CLAMPED
-      timeout instant fell strictly behind the current watermark —
-      exactly Spark's own ``timeoutTimestamp < watermark`` firing rule
-      the per-user operator relies on. Storing the clamp (not the raw
-      last+gap deadline) matters under LATE arrivals: the per-user
-      operator defers a behind-watermark deadline to wm+1 and only
-      closes once the watermark moves past it, so a further within-gap
-      late event still merges — recomputing from the deadline would
-      timeout-close the just-extended session in the SAME batch and
-      break row-identity (r11 advice). The bucket's timeout timestamp
-      is the MIN per-user timeout, so the bucket is re-invoked in the
-      same micro-batch in which the earliest per-user timeout would
-      have fired.
+    Null event times (``NAT_US``) are dropped: they carry no event-time
+    position, so they neither split a session nor count toward it —
+    the s09 oracle's ``ts IS NOT NULL`` filter, pinned by
+    ``test_session_stream_ignores_nat_event_times``.
     """
     import numpy as np
 
@@ -1109,6 +733,12 @@ def close_idle_sessions_bucketed(
     out_why: list[str] = []
 
     if not state.hasTimedOut:
+        # A bucket's micro-batch data can span several Arrow chunks
+        # (~10k rows each); sorting chunks independently would fold
+        # events out of order (mis-fired gap splits, last_us moving
+        # backward). Concat ALL chunks, drop NaT event times, then sort
+        # ONCE by (ts, event_id) — numpy end-to-end: lexsort is stable,
+        # and NaN event_ids sort last.
         frames = [pdf for pdf in batches if len(pdf)]
         if frames:
             pdf = frames[0] if len(frames) == 1 else pd.concat(frames)
@@ -1123,8 +753,7 @@ def close_idle_sessions_bucketed(
             pdf = pdf.iloc[order]
             ts_us_all = ts_arr[order]
             # groupby(sort=False) preserves the (ts, event_id) order
-            # within each user — the fold sees the same sequence the
-            # per-user operator sorts for itself.
+            # within each user
             for u, idx in pdf.groupby(
                 "user_id", dropna=False, sort=False
             ).indices.items():
@@ -1140,10 +769,13 @@ def close_idle_sessions_bucketed(
                     out_rows.append(seg)
                     out_why.append("gap")
                 if cur is not None:
-                    # The per-user operator's setTimeoutTimestamp,
-                    # clamp included: a touched user's timeout is
-                    # always > wm, so the expiry scan below can never
-                    # close a session extended this batch.
+                    # The clamped close instant: Spark rejects event-time
+                    # timeouts at/behind the watermark, so a deadline
+                    # already behind it (possible only under LATE
+                    # arrivals) defers to wm+1. A touched user's instant
+                    # is therefore always > wm, and the expiry scan
+                    # below can never close a session extended this
+                    # batch. On in-order data the clamp never binds.
                     open_[u] = cur + (
                         max(
                             cur[1] // 1000 + _SESSION_GAP_MS,
@@ -1151,11 +783,10 @@ def close_idle_sessions_bucketed(
                         ),
                     )
 
-    # Users with no data this batch whose CLAMPED timeout the watermark
-    # passed: the per-user operator's timeout branch, applied
-    # selectively (Spark fires a key's timeout iff it got no data and
-    # timeout < watermark — touched users' refreshed timeouts are > wm
-    # by construction, so the untouched set is exactly {t < wm}).
+    # Users with no data this batch whose clamped close instant the
+    # watermark passed (Spark fires a key's timeout iff it got no data
+    # and timeout < watermark — touched users' refreshed instants are
+    # > wm by construction, so the untouched set is exactly {t < wm}).
     expired = [u for u, v in open_.items() if v[3] < wm_ms]
     for u in expired:
         s, l, n, _t = open_.pop(u)
@@ -1174,7 +805,7 @@ def close_idle_sessions_bucketed(
             )
         )
         # Spark rejects event-time timeouts at/behind the watermark;
-        # wm+1 re-fires next batch, which is when a passed per-user
+        # wm+1 re-fires next batch, which is when a passed user
         # timeout would be acted on anyway.
         min_timeout = min(v[3] for v in open_.values())
         state.setTimeoutTimestamp(max(min_timeout, wm_ms + 1))
@@ -1202,7 +833,7 @@ def close_idle_sessions_bucketed(
         )
 
 
-def run_session_stream_bucketed(
+def run_session_stream(
     spark,
     source_dir: str,
     sink_dir: str,
@@ -1211,19 +842,27 @@ def run_session_stream_bucketed(
     state_shards: int = 8,
     contract_table: str | None = "events",
 ) -> None:
-    """File stream → bucketed event-time sessionizer → parquet.
+    """File stream → watermarked, bucketed event-time sessionizer →
+    parquet.
 
-    Same watermark/timeout/append contract and row-identical output to
-    :func:`run_session_stream`; the grouping key is
-    ``pmod(xxhash64(user_id), n_buckets)`` so the per-key protocol cost
-    amortizes over the bucket (see
-    :func:`close_idle_sessions_bucketed`). Size ``n_buckets`` to keep
-    protocol cost negligible while leaving enough keys to spread across
+    The watermark (0 s delay — the corpus files arrive in time order)
+    is what drives the timeout: after each micro-batch it advances to
+    that batch's max event time, and every open session whose
+    last-event + gap fell behind it closes on the NEXT batch. Append
+    mode: only CLOSED sessions are emitted, exactly once each.
+
+    Throughput shape (r10 verdict item 3 — measured at sf0.1/8
+    micro-batches, SCALE.md): the stateful stage's cost is per-KEY
+    protocol overhead, not data volume, so (a) only the three columns
+    the transition function reads (``user_id, ts, event_id``) enter the
+    shuffle and the Arrow channel, and (b) the grouping key is
+    ``pmod(xxhash64(user_id), n_buckets)`` (see
+    :func:`close_idle_sessions`). Size ``n_buckets`` to keep protocol
+    cost negligible while leaving enough keys to spread across
     ``state_shards`` (and, on a cluster, executors): buckets ≫ shards,
-    users ≫ buckets.
+    users ≫ buckets. ``state_shards`` sizes the state-store partition
+    count at FIRST start (it is pinned in the checkpoint thereafter).
     """
-    from pyspark.sql import functions as F
-
     from .runner import _drain, _file_stream, _overwrite_sink
 
     stream = _file_stream(
@@ -1232,20 +871,22 @@ def run_session_stream_bucketed(
         "user_id",
         "ts",
         "event_id",
-        # applyInPandasWithState requires the grouping key to be a
-        # concrete column of the child, not a groupBy expression
-        F.pmod(F.xxhash64(F.col("user_id")), F.lit(n_buckets)).alias("bucket"),
+        _user_bucket(n_buckets),
         contract_table=contract_table,
     )
+    # exact epoch-µs longs for the fold + the ns-safe clamped ts for
+    # the watermark/late-drop machinery (see _WM_CEILING_US); ts_us is
+    # computed from the RAW ts before the clamp, and the saturation
+    # counter rides the same scan on the raw column
     stream = _observe_wm_saturation(stream)
     stream = stream.select(
         "user_id", "event_id", "bucket", ts_us_expr(), _clamped_wm_ts()
     ).withWatermark("ts", "0 seconds")
     sessions = cast_session_bounds(
         stream.groupBy("bucket").applyInPandasWithState(
-            close_idle_sessions_bucketed,
+            close_idle_sessions,
             outputStructType=SESSION_OUT_SCHEMA,
-            stateStructType=BUCKET_SESSION_STATE_SCHEMA,
+            stateStructType=SESSION_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )

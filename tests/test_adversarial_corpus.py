@@ -208,6 +208,24 @@ def degenerate_dirs(tmp_path_factory):
     return out_empty, out_one
 
 
+def test_degenerate_corpus_command_line_runs():
+    """The sweep above starts with ``python tools/degenerate_corpus.py``:
+    run as a script, the module must define everything ``main`` uses
+    (``COMPOSED`` among them) before ``main`` runs."""
+    import subprocess
+
+    tool = os.path.join(
+        os.path.dirname(os.path.dirname(__file__)),
+        "tools",
+        "degenerate_corpus.py",
+    )
+    done = subprocess.run(
+        [sys.executable, tool, "--help"], capture_output=True, text=True
+    )
+    assert done.returncode == 0, done.stderr
+    assert "--out-empty" in done.stdout
+
+
 def _duck_for(sf_dir):
     con = duckdb.connect()
     for t in TABLES:

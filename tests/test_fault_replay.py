@@ -116,7 +116,7 @@ def test_stateful_zscore_replay_after_lost_commit(spark, tmp_path):
     N-1 from the store and re-folds — output must equal the
     uninterrupted run row-for-row (update-mode emissions included)."""
     from reddit_data_engineering_project_spark.streaming.stateful import (
-        run_zscore_stream_bucketed,
+        run_zscore_stream,
     )
 
     src = os.path.join(str(tmp_path), "src")
@@ -128,18 +128,18 @@ def test_stateful_zscore_replay_after_lost_commit(spark, tmp_path):
     )
     events.repartition(4).write.parquet(src)
 
-    run_zscore_stream_bucketed(spark, src, sink, ckpt)
+    run_zscore_stream(spark, src, sink, ckpt)
     clean = _sorted_rows(spark, sink)
     assert clean, "stateful stream emitted nothing"
 
     _inject_crash(ckpt, sink, torn_sink=True)
 
-    run_zscore_stream_bucketed(spark, src, sink, ckpt)
+    run_zscore_stream(spark, src, sink, ckpt)
     assert _sorted_rows(spark, sink) == clean
 
     # and a full checkpointed re-run after the repair is still a no-op
     before = _sorted_rows(spark, sink)
-    run_zscore_stream_bucketed(spark, src, sink, ckpt)
+    run_zscore_stream(spark, src, sink, ckpt)
     assert _sorted_rows(spark, sink) == before
 
 
@@ -223,7 +223,7 @@ def test_session_bucketed_replay_after_lost_commit(spark, tmp_path):
     reloads state version N-1 AND re-arms event-time timeouts — the
     timer path no clean run replays. Output must match row-for-row."""
     from reddit_data_engineering_project_spark.streaming.stateful import (
-        run_session_stream_bucketed,
+        run_session_stream,
     )
 
     src = os.path.join(str(tmp_path), "src")
@@ -243,13 +243,13 @@ def test_session_bucketed_replay_after_lost_commit(spark, tmp_path):
             ordered[i * third : (i + 1) * third], schema=events.schema
         ).coalesce(1).write.mode("append").parquet(src)
 
-    run_session_stream_bucketed(spark, src, sink, ckpt, n_buckets=4)
+    run_session_stream(spark, src, sink, ckpt, n_buckets=4)
     clean = _sorted_rows(spark, sink)
     assert clean, "sessionizer emitted nothing"
 
     _inject_crash(ckpt, sink, torn_sink=True)
 
-    run_session_stream_bucketed(spark, src, sink, ckpt, n_buckets=4)
+    run_session_stream(spark, src, sink, ckpt, n_buckets=4)
     assert _sorted_rows(spark, sink) == clean
 
 

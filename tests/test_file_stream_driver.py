@@ -68,9 +68,7 @@ def _events_source(spark, tmp_path) -> str:
         "runner.run_upsert_stream",
         "runner.run_tumbling_stream",
         "stateful.run_zscore_stream",
-        "stateful.run_zscore_stream_bucketed",
         "stateful.run_session_stream",
-        "stateful.run_session_stream_bucketed",
     ],
 )
 def test_state_shards_swap_is_scoped_to_the_run(spark, tmp_path, case):

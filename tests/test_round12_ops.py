@@ -117,11 +117,7 @@ _GATE_CASES = [
      "out-of-domain"),
     ("stateful.run_zscore_stream", None, 5, "value", 7e7,
      "out-of-domain"),
-    ("stateful.run_zscore_stream_bucketed", None, 5, "value", 7e7,
-     "out-of-domain"),
     ("stateful.run_session_stream", None, 11, "ts", _FAR_FUTURE,
-     "out-of-domain"),
-    ("stateful.run_session_stream_bucketed", None, 11, "ts", _FAR_FUTURE,
      "out-of-domain"),
 ]
 

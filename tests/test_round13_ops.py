@@ -109,31 +109,6 @@ def test_zscore_fold_unquantized_takes_sequential_arm(monkeypatch):
     assert calls == [100, 100, 100]
 
 
-def test_zscore_fold_event_ids_exact_and_null_loud():
-    """event_id conversion from pandas must be EXACT above 2^53 (no
-    float64 round-trip) and a null event_id — the declared primary
-    key — must raise, not NaN-cast (r12 advice)."""
-    import pandas as pd
-    import pytest
-
-    from reddit_data_engineering_project_spark.streaming.stateful import (
-        _zscore_fold,
-    )
-
-    big = 2**53 + 1  # not representable in float64
-    ev, *_ = _zscore_fold(
-        [], pd.Series([big, big + 2]), pd.Series([1.0, 2.0])
-    )
-    assert list(ev) == [big, big + 2]
-
-    with pytest.raises(ValueError, match="primary key"):
-        _zscore_fold(
-            [],
-            pd.Series([1, None], dtype="Int64"),
-            pd.Series([1.0, 2.0]),
-        )
-
-
 # ------------------------------------- r12 advice: progress coverage
 
 

@@ -18,7 +18,11 @@ from reddit_data_engineering_project_spark import registry
 from reddit_data_engineering_project_spark.registry import ORACLES
 from reddit_data_engineering_project_spark.streaming import stream_queries
 from reddit_data_engineering_project_spark.streaming.stateful import (
+    NAT_US,
     close_idle_sessions,
+)
+from reddit_data_engineering_project_spark.streaming.stream_queries import (
+    _ReplayGroupState,
 )
 
 registry.load_all_operators()
@@ -104,30 +108,11 @@ def test_close_idle_sessions_multichunk_and_degenerate_input():
     level: (a) events spanning multiple Arrow chunks fold in global
     (ts, event_id) order — a gap that exists only under per-chunk
     sorting must NOT split; (b) NaT event times are dropped; (c) a
-    call with only empty chunks and no prior state returns without
-    touching state."""
-
-    class S:
-        hasTimedOut = False
-        exists = False
-        get = None
-        updated = None
-        timeout = None
-
-        def update(self, v):
-            self.updated = v
-
-        def setTimeoutTimestamp(self, ms):
-            self.timeout = ms
-
-        def getCurrentWatermarkMs(self):
-            return 0  # batch stand-in, same as _ReplayGroupState
+    call with only empty chunks and no prior state leaves no state and
+    no timeout. State is the bucket's parallel arrays (one user here):
+    ``(user_ids, start_us, last_us, n_events, timeout_ms)``."""
 
     def chunk(eids, tss):
-        from reddit_data_engineering_project_spark.streaming.stateful import (
-            NAT_US,
-        )
-
         return pd.DataFrame(
             {"event_id": eids,
              "ts_us": [
@@ -142,7 +127,7 @@ def test_close_idle_sessions_multichunk_and_degenerate_input():
     # exceed 30 min strictly... make them: 00:00, 00:29, 00:58, 01:27
     # (gaps 29 min) = ONE session. Per-chunk sorting would see
     # 00:00 -> 01:00 (60 min, a bogus split).
-    st = S()
+    st = _ReplayGroupState()
     out = list(
         close_idle_sessions(
             (7,),
@@ -156,11 +141,11 @@ def test_close_idle_sessions_multichunk_and_degenerate_input():
         )
     )
     assert out == []  # one still-open session, no gap close
-    assert st.updated is not None and st.updated[2] == 4  # all 4 events
-    assert st.timeout is not None
+    assert st.exists and st.get[3] == [4]  # all 4 events
+    assert st.timeout_ts is not None
 
     # NaT rows dropped: only the real event reaches state
-    st = S()
+    st = _ReplayGroupState()
     list(
         close_idle_sessions(
             (7,),
@@ -168,12 +153,12 @@ def test_close_idle_sessions_multichunk_and_degenerate_input():
             st,
         )
     )
-    assert st.updated[2] == 1
+    assert st.get[3] == [1]
 
-    # Degenerate: empty chunks, no prior state -> no update, no timeout
-    st = S()
+    # Degenerate: empty chunks, no prior state -> no state, no timeout
+    st = _ReplayGroupState()
     out = list(close_idle_sessions((7,), iter([chunk([], [])]), st))
-    assert out == [] and st.updated is None and st.timeout is None
+    assert out == [] and not st.exists and st.timeout_ts is None
 
 
 # --------------------------------------------- x00 adversarial audit
@@ -239,36 +224,10 @@ def test_close_idle_sessions_state_continuation_branches():
     a replay folds each user in ONE call from empty state): (a) a
     later batch within the gap MERGES into the carried open session
     (start and count carry over); (b) a later batch beyond the gap
-    CLOSES the carried session as 'gap' and opens a new one."""
-
-    class S:
-        hasTimedOut = False
-
-        def __init__(self):
-            self._v = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-        def setTimeoutTimestamp(self, ms):
-            pass
-
-        def getCurrentWatermarkMs(self):
-            return 0  # batch stand-in, same as _ReplayGroupState
+    CLOSES the carried session as 'gap' and opens a new one. State is
+    the bucket's parallel arrays (one user here)."""
 
     def chunk(eids, tss):
-        from reddit_data_engineering_project_spark.streaming.stateful import (
-            NAT_US,
-        )
-
         return pd.DataFrame(
             {"event_id": eids,
              "ts_us": [
@@ -280,15 +239,15 @@ def test_close_idle_sessions_state_continuation_branches():
 
     # (a) merge: batch 1 opens at 00:00 (2 events), batch 2 arrives
     # 29 min after the last event -> same session, count 3, start 00:00
-    st = S()
+    st = _ReplayGroupState()
     out = list(close_idle_sessions(
         (7,), iter([chunk([1, 2], ["2024-01-01 00:00:00",
                                    "2024-01-01 00:05:00"])]), st))
-    assert out == [] and st.get[2] == 2
+    assert out == [] and st.get[3] == [2]
     out = list(close_idle_sessions(
         (7,), iter([chunk([3], ["2024-01-01 00:34:00"])]), st))
     assert out == []
-    start_us, last_us, n = st.get
+    _, (start_us,), (last_us,), (n,), _ = st.get
     assert n == 3
     assert pd.Timestamp(start_us * 1000) == pd.Timestamp("2024-01-01 00:00:00")
     assert pd.Timestamp(last_us * 1000) == pd.Timestamp("2024-01-01 00:34:00")
@@ -304,4 +263,4 @@ def test_close_idle_sessions_state_continuation_branches():
         "2024-01-01 00:00:00").value // 1000
     assert frame["session_end"].iloc[0] == pd.Timestamp(
         "2024-01-01 00:34:00").value // 1000
-    assert st.get[2] == 1  # the new open session
+    assert st.get[3] == [1]  # the new open session

@@ -1,5 +1,7 @@
-"""Custom stateful operator live: state persists across availableNow runs
-and the final per-user profile equals the batch aggregate."""
+"""The custom stateful operators live (rolling z-score, event-time-
+timeout sessionizer), their transition functions driven directly, and
+the native per-user profile stream: state persists across
+availableNow runs and the output equals an independent reference."""
 
 from __future__ import annotations
 
@@ -7,8 +9,8 @@ import os
 
 from pyspark.sql import Window, functions as F
 
-from reddit_data_engineering_project_spark.streaming.stateful import (
-    run_profile_stream,
+from reddit_data_engineering_project_spark.streaming.runner import (
+    run_user_profile_stream,
 )
 from reddit_data_engineering_project_spark.tables import table
 
@@ -16,6 +18,13 @@ from conftest import SF_DIR
 
 
 def test_state_accumulates_across_runs(spark, tmp_path):
+    """Two availableNow runs over a growing source: the checkpointed
+    restart folds the new files into state, and the latest profile per
+    user equals the batch aggregate — NULL-safely, so a user whose
+    events all have a NULL ts must get a NULL ``last_ts`` (not the
+    epoch) and one whose values are all NULL a 0.0 total."""
+    import datetime
+
     src = os.path.join(str(tmp_path), "src")
     sink = os.path.join(str(tmp_path), "sink")
     ckpt = os.path.join(str(tmp_path), "ckpt")
@@ -26,15 +35,27 @@ def test_state_accumulates_across_runs(spark, tmp_path):
         "user_id",
         F.coalesce(F.col("value"), F.lit(0.0)).alias("value"),
     )
+    # a user whose every event time (and value) is NULL, and a user
+    # with one NULL event time beside a real one
+    extra = spark.createDataFrame(
+        [
+            (10**9 + 1, None, 10**6, None),
+            (10**9 + 2, None, 10**6, None),
+            (10**9 + 3, None, 10**6 + 1, 2.5),
+            (10**9 + 4, datetime.datetime(2024, 1, 1), 10**6 + 1, 1.5),
+        ],
+        "event_id long, ts timestamp, user_id long, value double",
+    )
+    ev = ev.unionByName(extra)
     half1 = ev.filter(F.col("event_id") % 2 == 0)
     half2 = ev.filter(F.col("event_id") % 2 == 1)
 
     # Run 1: first half of the stream arrives.
     half1.coalesce(1).write.mode("append").parquet(src)
-    run_profile_stream(spark, src, sink, ckpt)
+    run_user_profile_stream(spark, src, sink, ckpt)
     # Run 2: more files land; checkpointed restart folds them into state.
     half2.coalesce(1).write.mode("append").parquet(src)
-    run_profile_stream(spark, src, sink, ckpt)
+    run_user_profile_stream(spark, src, sink, ckpt)
 
     out = spark.read.option("recursiveFileLookup", True).parquet(sink)
     # Latest emitted profile per user (update mode emits one per batch).
@@ -48,17 +69,23 @@ def test_state_accumulates_across_runs(spark, tmp_path):
     )
     expected = ev.groupBy("user_id").agg(
         F.count("*").alias("n_events"),
-        F.sum("value").alias("total_value"),
+        F.sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("total_value"),
         F.max("ts").alias("last_ts"),
     )
     joined = final.alias("f").join(expected.alias("e"), "user_id")
     mismatches = joined.filter(
-        (F.col("f.n_events") != F.col("e.n_events"))
-        | (F.abs(F.col("f.total_value") - F.col("e.total_value")) > 1e-6)
-        | (F.col("f.last_ts") != F.col("e.last_ts"))
+        ~F.col("f.n_events").eqNullSafe(F.col("e.n_events"))
+        | F.coalesce(
+            F.abs(F.col("f.total_value") - F.col("e.total_value")) > 1e-6,
+            F.lit(True),
+        )
+        | ~F.col("f.last_ts").eqNullSafe(F.col("e.last_ts"))
     )
     assert final.count() == expected.count()
-    assert mismatches.count() == 0
+    assert mismatches.count() == 0, mismatches.collect()
+    null_ts_user = final.filter(F.col("user_id") == 10**6).first()
+    assert (null_ts_user.n_events, null_ts_user.total_value) == (2, 0.0)
+    assert null_ts_user.last_ts is None
 
 
 def test_streaming_zscore_matches_batch_on_ordered_arrival(spark, tmp_path):
@@ -318,7 +345,6 @@ def test_session_stream_null_ts_does_not_advance_watermark(spark, tmp_path):
 
     from reddit_data_engineering_project_spark.streaming.stateful import (
         run_session_stream,
-        run_session_stream_bucketed,
     )
 
     def drop(src, rows):
@@ -349,37 +375,33 @@ def test_session_stream_null_ts_does_not_advance_watermark(spark, tmp_path):
     ]
     import pandas as pd
 
-    for tag, runner, kwargs in (
-        ("per_user", run_session_stream, {}),
-        ("bucketed", run_session_stream_bucketed, {"n_buckets": 1}),
-    ):
-        src = os.path.join(str(tmp_path), f"src_{tag}")
-        sink = os.path.join(str(tmp_path), f"sink_{tag}")
-        ckpt = os.path.join(str(tmp_path), f"ckpt_{tag}")
-        for rows in files:
-            drop(src, rows)
-            runner(spark, src, sink, ckpt, **kwargs)
-        out = (
-            spark.read.option("recursiveFileLookup", True)
-            .parquet(sink)
-            .collect()
+    src = os.path.join(str(tmp_path), "src")
+    sink = os.path.join(str(tmp_path), "sink")
+    ckpt = os.path.join(str(tmp_path), "ckpt")
+    for rows in files:
+        drop(src, rows)
+        run_session_stream(spark, src, sink, ckpt)
+    out = (
+        spark.read.option("recursiveFileLookup", True)
+        .parquet(sink)
+        .collect()
+    )
+    got = sorted(
+        (r.user_id, r.session_start, r.session_end, r.n_events,
+         r.closed_by)
+        for r in out
+    )
+    # exactly user 1's merged 2-event session, timeout-closed; the
+    # NULL-ts row tracked nothing and user 2's 06:00 stays open
+    assert got == [
+        (
+            1,
+            pd.Timestamp("2024-01-01 00:00:00"),
+            pd.Timestamp("2024-01-01 00:10:00"),
+            2,
+            "timeout",
         )
-        got = sorted(
-            (r.user_id, r.session_start, r.session_end, r.n_events,
-             r.closed_by)
-            for r in out
-        )
-        # exactly user 1's merged 2-event session, timeout-closed; the
-        # NULL-ts row tracked nothing and user 2's 06:00 stays open
-        assert got == [
-            (
-                1,
-                pd.Timestamp("2024-01-01 00:00:00"),
-                pd.Timestamp("2024-01-01 00:10:00"),
-                2,
-                "timeout",
-            )
-        ], (tag, got)
+    ], got
 
 
 def test_wm_saturation_counter_fires_past_ns_ceiling(spark, tmp_path):
@@ -395,7 +417,6 @@ def test_wm_saturation_counter_fires_past_ns_ceiling(spark, tmp_path):
 
     from reddit_data_engineering_project_spark.streaming.stateful import (
         run_session_stream,
-        run_session_stream_bucketed,
     )
 
     def drop(src, rows):
@@ -417,10 +438,7 @@ def test_wm_saturation_counter_fires_past_ns_ceiling(spark, tmp_path):
         (3, "2500-01-01 00:00:00", 1),  # beyond 2262-04-11, inside domain
         (4, "2024-01-02 00:00:00", 2),
     ]
-    for tag, runner, kwargs in (
-        ("per_user", run_session_stream, {}),
-        ("bucketed", run_session_stream_bucketed, {"n_buckets": 1}),
-    ):
+    for tag, kwargs in (("default", {}), ("one_bucket", {"n_buckets": 1})):
         src = os.path.join(str(tmp_path), f"src_{tag}")
         sink = os.path.join(str(tmp_path), f"sink_{tag}")
         ckpt = os.path.join(str(tmp_path), f"ckpt_{tag}")
@@ -428,7 +446,7 @@ def test_wm_saturation_counter_fires_past_ns_ceiling(spark, tmp_path):
         drop(src, in_range)
         with warnings.catch_warnings(record=True) as caught:
             warnings.simplefilter("always")
-            runner(spark, src, sink, ckpt, **kwargs)
+            run_session_stream(spark, src, sink, ckpt, **kwargs)
         assert not [
             w for w in caught if "ns" in str(w.message) and "ceiling"
             in str(w.message)
@@ -437,7 +455,7 @@ def test_wm_saturation_counter_fires_past_ns_ceiling(spark, tmp_path):
         drop(src, past_ceiling)
         with warnings.catch_warnings(record=True) as caught:
             warnings.simplefilter("always")
-            runner(spark, src, sink, ckpt, **kwargs)
+            run_session_stream(spark, src, sink, ckpt, **kwargs)
         hits = [
             w for w in caught
             if issubclass(w.category, RuntimeWarning)
@@ -452,14 +470,13 @@ def test_zscore_fold_sorts_huge_extension_ids_exactly():
     fallback cast event_id to float64 for the lexsort key; float64
     spacing at 2^57 is 32, so ts-tied rows with nearby huge ids
     collided and kept ARRIVAL order instead of id order, silently
-    changing fold row identity. Both fold paths must sort ts-tied
-    extension-dtype ids in exact integer order."""
+    changing fold row identity. The fold must sort ts-tied
+    extension-dtype ids in exact integer order and emit them exactly."""
     import numpy as np
     import pandas as pd
 
     from reddit_data_engineering_project_spark.streaming.stateful import (
         score_rolling_zscore,
-        score_rolling_zscore_bucketed,
     )
     from reddit_data_engineering_project_spark.streaming.stream_queries import (
         _ReplayGroupState,
@@ -482,22 +499,17 @@ def test_zscore_fold_sorts_huge_extension_ids_exactly():
                 "value": [10.0, 20.0],
             }
         )
-        for fn, key in (
-            (score_rolling_zscore, (1,)),
-            (score_rolling_zscore_bucketed, (0,)),
-        ):
-            out = pd.concat(
-                list(fn(key, iter([pdf.copy()]), _ReplayGroupState())),
-                ignore_index=True,
-            )
-            # exact id order: base+1 (value 20.0) folds FIRST
-            assert list(out["event_id"]) == [base + 1, base + 3], fn.__name__
-            assert list(out["value_e4"]) == [200000, 100000], fn.__name__
+        (out,) = list(
+            score_rolling_zscore((0,), iter([pdf]), _ReplayGroupState())
+        )
+        # exact id order: base+1 (value 20.0) folds FIRST
+        assert list(out["event_id"]) == [base + 1, base + 3]
+        assert list(out["value_e4"]) == [200000, 100000]
 
 
 def test_bucketed_zscore_rejects_null_extension_event_id():
     """A null id in a nullable-extension event_id column must fail
-    loudly on the bucketed path (event_id is the declared primary key)
+    loudly (event_id is the declared primary key)
     — the pre-r17 float64 cast would have folded it as NaN, and the
     exact int64 view must not silently fold it as a filled zero."""
     import numpy as np
@@ -505,7 +517,7 @@ def test_bucketed_zscore_rejects_null_extension_event_id():
     import pytest as _pytest
 
     from reddit_data_engineering_project_spark.streaming.stateful import (
-        score_rolling_zscore_bucketed,
+        score_rolling_zscore,
     )
     from reddit_data_engineering_project_spark.streaming.stream_queries import (
         _ReplayGroupState,
@@ -522,61 +534,159 @@ def test_bucketed_zscore_rejects_null_extension_event_id():
     )
     with _pytest.raises(ValueError, match="primary key"):
         list(
-            score_rolling_zscore_bucketed(
-                (0,), iter([pdf]), _ReplayGroupState()
-            )
+            score_rolling_zscore((0,), iter([pdf]), _ReplayGroupState())
         )
 
 
-def test_bucketed_session_stream_matches_per_user(spark, tmp_path):
-    """The key-coarsened sessionizer (r10 verdict item 3: per-key
-    protocol cost amortized over user buckets) must be ROW-IDENTICAL to
-    the per-user operator the s09 replays verify — same sessions, same
-    closed_by labels — on a real multi-batch corpus including the NULL
-    user. n_buckets=4 forces many users per bucket."""
-    from reddit_data_engineering_project_spark.streaming.stateful import (
-        run_session_stream,
-        run_session_stream_bucketed,
-    )
-
-    ev = table(spark, SF_DIR, "events")
-    src = os.path.join(str(tmp_path), "src")
-    slice_col = F.ntile(3).over(
+def _stage_time_slices(ev, src: str, n: int = 3) -> None:
+    """Write ``ev`` to ``src`` as ``n`` sequential time-range files
+    (NULL ts first), in order — the file-drop contract the 0 s
+    watermark needs. Each row keeps its file index in a ``slice``
+    column, which the runners do not read and the references do."""
+    slice_col = F.ntile(n).over(
         Window.orderBy(F.col("ts").asc_nulls_first(), "event_id")
     )
     staged = ev.withColumn("slice", slice_col).persist()
     staged.count()
-    for i in range(1, 4):
-        staged.filter(F.col("slice") == i).drop("slice").coalesce(
-            1
-        ).write.mode("append").parquet(src)
+    for i in range(1, n + 1):
+        staged.filter(F.col("slice") == i).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
     staged.unpersist()
 
-    outs = {}
-    for tag, runner, kwargs in (
-        ("per_user", run_session_stream, {}),
-        ("bucketed", run_session_stream_bucketed, {"n_buckets": 4}),
-    ):
-        sink = os.path.join(str(tmp_path), f"sink_{tag}")
-        ckpt = os.path.join(str(tmp_path), f"ckpt_{tag}")
-        runner(spark, src, sink, ckpt, **kwargs)
-        rows = (
-            spark.read.option("recursiveFileLookup", True)
-            .parquet(sink)
-            .collect()
-        )
-        outs[tag] = sorted(
-            (r.user_id, r.session_start, r.session_end, r.n_events,
-             r.closed_by)
-            for r in rows
-        )
-    assert outs["per_user"] == outs["bucketed"]
-    assert len(outs["per_user"]) > 0
+
+def _sink_rows(spark, sink: str, *cols) -> list:
+    rows = spark.read.option("recursiveFileLookup", True).parquet(sink)
+    return sorted(
+        (tuple(r[c] for c in cols) for r in rows.collect()),
+        key=lambda t: tuple((v is None, v) for v in t),
+    )
+
+
+#: The live sessionizer's output over time-sliced files, in DuckDB: the
+#: s09 gaps-and-islands CTEs (no sample filter), plus the 0 s watermark
+#: rule. The watermark in force during file k's micro-batch is the max
+#: event time (ms) of files 1..k-1, and availableNow ends with one
+#: data-free batch under the max over all files. A session closes in
+#: the first batch after its last event where either the user has data
+#: (a later session starts: 'gap') or the watermark is past
+#: ``session_end + 30 min`` ('timeout'); so it is labelled 'timeout'
+#: iff the max event time of the files up to two before the file with
+#: the user's next event (all files, for the last session) passes that
+#: instant, and an unlabelled last session stays open.
+_SESSION_REFERENCE_SQL = """
+WITH ev AS (
+    SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, slice
+    FROM staged
+    WHERE ts IS NOT NULL
+),
+files AS (
+    SELECT slice, max(epoch_us(ts)) AS max_us FROM ev GROUP BY slice
+),
+ordered AS (
+    SELECT
+        user_id, ts, event_id, slice,
+        CASE WHEN lag(ts) OVER w IS NULL
+               OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
+             THEN 1 ELSE 0 END AS new_session
+    FROM ev
+    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+),
+tagged AS (
+    SELECT
+        user_id, ts, slice,
+        sum(new_session) OVER (
+            PARTITION BY user_id
+            ORDER BY ts, event_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+        ) AS session_seq
+    FROM ordered
+),
+sess AS (
+    SELECT
+        user_id,
+        session_seq,
+        min(ts) AS session_start,
+        max(ts) AS session_end,
+        CAST(count(*) AS BIGINT) AS n_events,
+        min(slice) AS first_slice
+    FROM tagged
+    GROUP BY user_id, session_seq
+),
+judged AS (
+    SELECT
+        *,
+        lead(first_slice) OVER (
+            PARTITION BY user_id ORDER BY session_seq
+        ) AS next_slice,
+        epoch_us(session_end) // 1000 + 30 * 60 * 1000 AS close_ms
+    FROM sess
+),
+watermarked AS (
+    SELECT
+        j.*,
+        (
+            SELECT max(max_us) FROM files f
+            WHERE f.slice <= coalesce(
+                j.next_slice - 2, (SELECT max(slice) FROM files)
+            )
+        ) // 1000 AS wm_ms
+    FROM judged j
+)
+SELECT user_id, session_start, session_end, n_events,
+       CASE WHEN wm_ms > close_ms THEN 'timeout' ELSE 'gap' END
+FROM watermarked
+WHERE next_slice IS NOT NULL OR wm_ms > close_ms
+"""
+
+
+def test_bucketed_session_stream_matches_per_user(spark, tmp_path):
+    """The sessionizer's live output over a real 3-file corpus equals
+    the per-user gaps-and-islands reference (``_SESSION_REFERENCE_SQL``,
+    independent of the transition function) row for row: same
+    sessions, same closed_by labels. n_buckets=4 forces many users per
+    bucket."""
+    import duckdb
+
+    from reddit_data_engineering_project_spark.streaming.stateful import (
+        run_session_stream,
+    )
+
+    src = os.path.join(str(tmp_path), "src")
+    sink = os.path.join(str(tmp_path), "sink")
+    _stage_time_slices(table(spark, SF_DIR, "events"), src)
+    run_session_stream(
+        spark, src, sink, os.path.join(str(tmp_path), "ckpt"), n_buckets=4
+    )
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW staged AS SELECT * FROM read_parquet('{src}/*.parquet')"
+    )
+    # the reference has no late-row rule: every file must start after
+    # the watermark (ms) the earlier files set
+    (late,) = con.execute(
+        """SELECT count(*) FROM staged s
+           WHERE epoch_us(CAST(s.ts AS TIMESTAMP)) <= (
+               SELECT max(epoch_us(CAST(p.ts AS TIMESTAMP))) // 1000 * 1000
+               FROM staged p WHERE p.slice < s.slice)"""
+    ).fetchone()
+    assert late == 0
+    expected = sorted(
+        con.execute(_SESSION_REFERENCE_SQL).fetchall(),
+        key=lambda t: tuple((v is None, v) for v in t),
+    )
+    got = _sink_rows(
+        spark, sink,
+        "user_id", "session_start", "session_end", "n_events", "closed_by",
+    )
+    assert got == expected
+    assert {r[4] for r in got} == {"gap", "timeout"}
 
 
 def test_bucketed_session_single_bucket_timeout_and_gap(spark, tmp_path):
     """All users in ONE bucket: a user who goes idle must still close by
-    TIMEOUT in the same micro-batch as per-user keying would fire it —
+    TIMEOUT in the micro-batch its own timeout fires in —
     including when the bucket HAS data for other users (the selective
     no-data-user expiry inside a data invocation) — and gap splits stay
     gap splits."""
@@ -585,7 +695,7 @@ def test_bucketed_session_single_bucket_timeout_and_gap(spark, tmp_path):
     import pandas as pd
 
     from reddit_data_engineering_project_spark.streaming.stateful import (
-        run_session_stream_bucketed,
+        run_session_stream,
     )
 
     src = os.path.join(str(tmp_path), "src")
@@ -603,7 +713,7 @@ def test_bucketed_session_single_bucket_timeout_and_gap(spark, tmp_path):
         )
         pdf.coalesce(1).write.mode("append").parquet(src)
 
-    run = lambda: run_session_stream_bucketed(  # noqa: E731
+    run = lambda: run_session_stream(  # noqa: E731
         spark, src, sink, ckpt, n_buckets=1
     )
     # File 1: user 1 burst; user 2 active.
@@ -651,18 +761,23 @@ def test_bucketed_session_single_bucket_timeout_and_gap(spark, tmp_path):
 
 
 def test_bucketed_zscore_stream_matches_per_user(spark, tmp_path):
-    """Key-coarsened z-score gate: row-identical to the per-user
-    operator the s08 replay verifies — same scores, same NULL-value
-    rows, incl. the NULL user — on a 3-batch time-ordered corpus.
+    """The z-score gate's live output over a 3-file corpus equals the
+    s08 SQL window oracle, run in DuckDB over the same staged files,
+    exactly: values are staged pre-quantized to e4 integers the way
+    s08 does, so every frame sum is exact on both sides. The live fold
+    orders each user's events by arrival file, then (ts NULLS LAST,
+    event_id), so the window does too. n_buckets=4 forces many users
+    per bucket.
 
     The corpus is salted with NULL-ts rows (legal per TIME_DOMAINS):
     the z-score fold KEEPS them — they occupy a frame slot — so their
-    position in the fold order is load-bearing, and the bucketed path
-    must place NaT LAST like the per-user sort_values does (r11
-    advice: the raw-int64 lexsort put NaT FIRST and diverged)."""
+    position in the fold order is load-bearing, and NaT must sort LAST
+    (r11 advice: the raw-int64 lexsort put NaT FIRST and diverged)."""
+    import duckdb
+
+    from reddit_data_engineering_project_spark import registry
     from reddit_data_engineering_project_spark.streaming.stateful import (
         run_zscore_stream,
-        run_zscore_stream_bucketed,
     )
 
     ev = table(spark, SF_DIR, "events")
@@ -672,59 +787,72 @@ def test_bucketed_zscore_stream_matches_per_user(spark, tmp_path):
         .withColumn("ts", F.lit(None).cast("timestamp"))
         .withColumn("event_id", F.col("event_id") + F.lit(10**9))
     )
-    ev = ev.unionByName(null_ts)
-    src = os.path.join(str(tmp_path), "src")
-    slice_col = F.ntile(3).over(
-        Window.orderBy(F.col("ts").asc_nulls_first(), "event_id")
+    ev = ev.unionByName(null_ts).withColumn(
+        "value", F.round(F.col("value") * 10000.0).cast("double")
     )
-    staged = ev.withColumn("slice", slice_col).persist()
-    staged.count()
-    for i in range(1, 4):
-        staged.filter(F.col("slice") == i).drop("slice").coalesce(
-            1
-        ).write.mode("append").parquet(src)
-    staged.unpersist()
+    src = os.path.join(str(tmp_path), "src")
+    sink = os.path.join(str(tmp_path), "sink")
+    _stage_time_slices(ev, src)
+    # quantized values sit outside the events value domain, so this
+    # source is not the declared corpus table
+    run_zscore_stream(
+        spark, src, sink, os.path.join(str(tmp_path), "ckpt"),
+        n_buckets=4, contract_table=None,
+    )
 
-    outs = {}
-    for tag, runner, kwargs in (
-        ("per_user", run_zscore_stream, {}),
-        ("bucketed", run_zscore_stream_bucketed, {"n_buckets": 4}),
+    registry.load_all_operators()
+    oracle = registry.ORACLES["s08_stateful_zscore_replay"]
+    for old, new in (
+        ("CAST(round(value * 10000.0) AS BIGINT) AS vq",
+         "CAST(value AS BIGINT) AS vq, slice"),
+        ("ORDER BY ts NULLS LAST, event_id",
+         "ORDER BY slice, ts NULLS LAST, event_id"),
     ):
-        sink = os.path.join(str(tmp_path), f"sink_{tag}")
-        ckpt = os.path.join(str(tmp_path), f"ckpt_{tag}")
-        runner(spark, src, sink, ckpt, **kwargs)
-        rows = (
-            spark.read.option("recursiveFileLookup", True)
-            .parquet(sink)
-            .collect()
+        assert oracle.count(old) == 1, old
+        oracle = oracle.replace(old, new)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{src}/*.parquet')"
+    )
+    expected = sorted(
+        con.execute(oracle).fetchall(),
+        key=lambda t: tuple((v is None, v) for v in t),
+    )
+    got = [
+        (u, e, None if v is None else v // 10000, z)
+        for u, e, v, z in _sink_rows(
+            spark, sink, "user_id", "event_id", "value_e4", "z_e4"
         )
-        outs[tag] = sorted(
-            (r.user_id, r.event_id, r.value_e4, r.z_e4) for r in rows
-        )
-    assert outs["per_user"] == outs["bucketed"]
-    assert len(outs["per_user"]) > 0
+    ]
+    assert got == expected
+    assert any(z is not None for *_, z in got)
 
 
 def test_session_streams_filter_late_rows_identically(spark, tmp_path):
     """What late arrivals ACTUALLY do on the live path (r11 advice
-    follow-up): with EventTimeTimeout, Spark drops input rows older
-    than the watermark BEFORE the stateful function — in BOTH runners —
-    so a late event can never extend a behind-deadline session through
-    these streams at all. (And an accepted row is >= wm, hence out of
-    gap of any behind-deadline session: it would start a NEW session
-    anyway.) Pinned here so the deferral logic's reachability story
-    stays honest: the clamped-timeout emulation matters when the
-    functions are driven directly (replays / harnesses with a nonzero
-    watermark), which test_bucketed_late_fold_defers_like_per_user
-    covers at the unit level."""
+    follow-up): with EventTimeTimeout, Spark drops input rows at or
+    behind the watermark BEFORE the stateful function, so a late event
+    can never extend a behind-deadline session through the stream at
+    all. (And an accepted row is > wm, hence out of gap of any
+    behind-deadline session: it would start a NEW session anyway.)
+    Pinned here so the deferral logic's reachability story stays
+    honest: the clamped-timeout emulation matters when the function is
+    driven directly (replays / harnesses with a nonzero watermark),
+    which test_bucketed_late_fold_defers_like_per_user covers at the
+    unit level. One bucket holds both users."""
     import datetime
+
+    import pandas as pd
 
     from reddit_data_engineering_project_spark.streaming.stateful import (
         run_session_stream,
-        run_session_stream_bucketed,
     )
 
-    def drop(src, rows):
+    src = os.path.join(str(tmp_path), "src")
+    sink = os.path.join(str(tmp_path), "sink")
+    ckpt = os.path.join(str(tmp_path), "ckpt")
+
+    def drop(rows):
         pdf = spark.createDataFrame(
             [
                 (e, datetime.datetime.fromisoformat(t), u, "view", 1.0)
@@ -747,66 +875,43 @@ def test_session_streams_filter_late_rows_identically(spark, tmp_path):
         [(5, "2024-01-01 06:00:00", 2)],
         [(6, "2024-01-01 07:00:00", 2)],
     ]
-    outs = {}
-    for tag, runner, kwargs in (
-        ("per_user", run_session_stream, {}),
-        ("bucketed", run_session_stream_bucketed, {"n_buckets": 1}),
-    ):
-        src = os.path.join(str(tmp_path), f"src_{tag}")
-        sink = os.path.join(str(tmp_path), f"sink_{tag}")
-        ckpt = os.path.join(str(tmp_path), f"ckpt_{tag}")
-        for rows in files:
-            drop(src, rows)
-            runner(spark, src, sink, ckpt, **kwargs)
-        out = (
-            spark.read.option("recursiveFileLookup", True)
-            .parquet(sink)
-            .collect()
-        )
-        outs[tag] = sorted(
-            (r.user_id, r.session_start, r.session_end, r.n_events,
-             r.closed_by)
-            for r in out
-        )
-    assert outs["per_user"] == outs["bucketed"]
-    import pandas as pd
+    for rows in files:
+        drop(rows)
+        run_session_stream(spark, src, sink, ckpt, n_buckets=1)
 
-    u1 = [o for o in outs["per_user"] if o[0] == 1]
-    # the late events were filtered, not folded: a 1-event session
-    assert [(o[3], o[4]) for o in u1] == [(1, "timeout")]
-    assert u1[0][1] == u1[0][2] == pd.Timestamp("2024-01-01 00:00:00")
+    t = pd.Timestamp
+    # the late events were filtered, not folded: user 1 keeps a
+    # 1-event session, closed by timeout; user 2's 01:00 and 06:00
+    # singletons gap-close on its next events, and 07:00 stays open
+    assert _sink_rows(
+        spark, sink,
+        "user_id", "session_start", "session_end", "n_events", "closed_by",
+    ) == [
+        (1, t("2024-01-01 00:00:00"), t("2024-01-01 00:00:00"), 1,
+         "timeout"),
+        (2, t("2024-01-01 01:00:00"), t("2024-01-01 01:00:00"), 1, "gap"),
+        (2, t("2024-01-01 06:00:00"), t("2024-01-01 06:00:00"), 1, "gap"),
+    ]
 
 
 def test_bucketed_late_fold_defers_like_per_user():
     """Unit-level late-arrival deferral (r11 advice): when the
-    transition functions are driven directly with a NONZERO watermark
-    (replay/harness territory — the live runners' watermark filter
+    transition function is driven directly with a NONZERO watermark
+    (replay/harness territory — the live runner's watermark filter
     makes this unreachable, see the test above), a late event that
     extends a behind-deadline session must NOT timeout-close in the
-    same invocation on the bucketed path: the per-user operator clamps
-    its timeout to wm+1 and defers, and the bucketed state now carries
-    that CLAMPED instant per user. An untouched user whose clamped
-    timeout fell behind the watermark still closes."""
+    same invocation: its close instant is clamped to wm+1 and
+    deferred, as Spark would for a key's own timeout. An untouched
+    user whose clamped timeout fell behind the watermark still
+    closes."""
     import pandas as pd
 
     from reddit_data_engineering_project_spark.streaming.stateful import (
-        _SESSION_GAP_MS,
         close_idle_sessions,
-        close_idle_sessions_bucketed,
     )
     from reddit_data_engineering_project_spark.streaming.stream_queries import (
         _ReplayGroupState,
     )
-
-    class _WmState(_ReplayGroupState):
-        __slots__ = ("wm_ms",)
-
-        def __init__(self, wm_ms):
-            super().__init__()
-            self.wm_ms = wm_ms
-
-        def getCurrentWatermarkMs(self):
-            return self.wm_ms
 
     us = lambda iso: int(pd.Timestamp(iso).value // 1000)  # noqa: E731
     ms = lambda iso: us(iso) // 1000  # noqa: E731
@@ -821,25 +926,12 @@ def test_bucketed_late_fold_defers_like_per_user():
             }
         )
 
-    # Per-user: open session (00:00, 00:00, 1); late 00:10 merges and
-    # the timeout clamps to wm+1 — no emission this invocation.
-    st = _WmState(wm)
-    st.update((us("2024-01-01 00:00:00"), us("2024-01-01 00:00:00"), 1))
-    out = list(
-        close_idle_sessions(
-            (1,), iter([batch([(3, "2024-01-01 00:10:00", 1)])]), st
-        )
-    )
-    assert out == []
-    assert st.get == (
-        us("2024-01-01 00:00:00"), us("2024-01-01 00:10:00"), 2,
-    )
-    assert st.timeout_ts == wm + 1
-
-    # Bucketed: same user 1 plus an UNTOUCHED user 2 whose clamped
-    # timeout fell behind the watermark. User 1 must merge-and-defer
-    # (not timeout-close this invocation); user 2 must close.
-    stb = _WmState(wm)
+    # User 1's open session (00:00, 00:00, 1) plus an UNTOUCHED user 2
+    # whose clamped timeout fell behind the watermark. User 1 must
+    # merge-and-defer (not timeout-close this invocation); user 2 must
+    # close.
+    stb = _ReplayGroupState()
+    stb.watermark_ms = wm
     stb.update(
         (
             [1, 2],
@@ -850,7 +942,7 @@ def test_bucketed_late_fold_defers_like_per_user():
         )
     )
     out = list(
-        close_idle_sessions_bucketed(
+        close_idle_sessions(
             (0,), iter([batch([(3, "2024-01-01 00:10:00", 1)])]), stb
         )
     )
@@ -873,7 +965,7 @@ def test_bucketed_late_fold_defers_like_per_user():
     # within-gap late event merges to n=3 — the divergence the old
     # deadline-recomputing expiry scan produced.
     out = list(
-        close_idle_sessions_bucketed(
+        close_idle_sessions(
             (0,), iter([batch([(4, "2024-01-01 00:20:00", 1)])]), stb
         )
     )
@@ -881,12 +973,10 @@ def test_bucketed_late_fold_defers_like_per_user():
     uids, starts, lasts, ns, touts = stb.get
     assert list(ns) == [3]
     # Watermark finally moves past the clamp: pure-timeout invocation
-    # closes the merged 3-event session — matching what per-user's
-    # hasTimedOut branch would emit.
-    stb2 = _WmState(wm + 2)
-    stb2._v = stb.get
-    stb2.hasTimedOut = True
-    (frame,) = list(close_idle_sessions_bucketed((0,), iter([]), stb2))
+    # closes the merged 3-event session.
+    stb.watermark_ms = wm + 2
+    stb.hasTimedOut = True
+    (frame,) = list(close_idle_sessions((0,), iter([]), stb))
     assert list(frame["n_events"]) == [3]
     assert list(frame["closed_by"]) == ["timeout"]
-    assert not stb2.exists
+    assert not stb.exists

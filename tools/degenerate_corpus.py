@@ -765,10 +765,6 @@ def write_ts_edge(src: str, out: str) -> None:
         pq.write_table(t, os.path.join(out, f"{name}.parquet"))
 
 
-if __name__ == "__main__":
-    main()
-
-
 #: The ten hostile props shapes (round 16), cycled by floored
 #: ``event_id % 10`` — every one VALID-or-guardably-invalid JSON text
 #: on both engines, aimed at where JSON stacks classically part ways:
@@ -958,3 +954,7 @@ def write_composed(src: str, out: str, label: str) -> None:
     steps = COMPOSED[label]
     for i, step in enumerate(steps):
         step(src if i == 0 else out, out)
+
+
+if __name__ == "__main__":
+    main()

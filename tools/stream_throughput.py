@@ -13,16 +13,15 @@ the JVM reaped (``jvm_child_cpu_s``: Hadoop's shell-outs such as
 thread creations (``process_creations``, from ``/proc/stat``).
 
 ``--runner session`` drives ``run_session_stream`` instead — the S9
-``applyInPandasWithState`` event-time-timeout sessionizer, the
-stateful-heavy end of the streaming surface. Its 0-second watermark
-requires the source files to arrive in event-time order (exactly the
-production file-drop contract), so the session staging writes N
-time-range slices sequentially instead of hash-repartitioning.
-``--runner session_bucketed`` drives the key-coarsened form
-(``run_session_stream_bucketed``) — identical output, per-key protocol
-cost amortized over user buckets.
+``applyInPandasWithState`` event-time-timeout sessionizer (keyed by
+user bucket), the stateful-heavy end of the streaming surface. Its
+0-second watermark requires the source files to arrive in event-time
+order (exactly the production file-drop contract), so the stateful
+staging writes N time-range slices sequentially instead of
+hash-repartitioning. ``--runner zscore`` drives the bucketed rolling
+z-score gate (``run_zscore_stream``) over the same staging.
 
-The session runners take an UNTIMED warm-up pass first (a ~200-row
+The stateful runners take an UNTIMED warm-up pass first (a ~200-row
 2-file stream into a throwaway sink/checkpoint): a fresh session's
 first stateful micro-batch pays ~3.5 s of python-worker imports and
 JVM codegen that a long-running production stream amortizes to zero,
@@ -32,8 +31,7 @@ exclude-first-touch discipline as ``bench.py``'s warm-up query.
 SCALE.md).
 
 Usage: python tools/stream_throughput.py [--sf /root/testdata/sf0.1]
-           [--files 8] [--runner tumbling|session|session_bucketed]
-           [--cold]
+           [--files 8] [--runner tumbling|session|zscore] [--cold]
 """
 
 from __future__ import annotations
@@ -88,13 +86,7 @@ def main() -> int:
     ap.add_argument("--files", type=int, default=8)
     ap.add_argument(
         "--runner",
-        choices=(
-            "tumbling",
-            "session",
-            "session_bucketed",
-            "zscore",
-            "zscore_bucketed",
-        ),
+        choices=("tumbling", "session", "zscore"),
         default="tumbling",
     )
     ap.add_argument(
@@ -119,9 +111,7 @@ def main() -> int:
 
             from reddit_data_engineering_project_spark.streaming.stateful import (  # noqa: E501
                 run_session_stream,
-                run_session_stream_bucketed,
                 run_zscore_stream,
-                run_zscore_stream_bucketed,
             )
 
             # Event-time-ordered staging: the sessionizer's 0 s
@@ -141,9 +131,7 @@ def main() -> int:
             staged.unpersist()
             runner_fn = {
                 "session": run_session_stream,
-                "session_bucketed": run_session_stream_bucketed,
                 "zscore": run_zscore_stream,
-                "zscore_bucketed": run_zscore_stream_bucketed,
             }[args.runner]
             metric = f"stream_{args.runner}_rows_per_sec"
             if not args.cold:
