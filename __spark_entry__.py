@@ -1,12 +1,13 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""The engine's entry surface: the flagship query and the registry.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` runs the flagship query; ``queries()`` and
+``oracle_sql()`` return every registered query and its DuckDB oracle.
+``tests/test_oracle_contract.py`` smoke-tests ``entry`` and compares
+every query with its oracle (row count + column names +
+order-insensitive value hash).
 
 All operators live in ``reddit_data_engineering_project_spark``; this module
-only adapts the registry to the driver's interface.
+only adapts the registry to this interface.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ registry.load_all_operators()
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
+    """Flagship query on the sf0.001 test corpus; returns at least one row.
 
     The reference's whole data path as one DataFrame chain (SURVEY §7
     step 1): clean/coerce per transform_post semantics, then top-k by
@@ -34,15 +35,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Ordered by ``registry.GRADING_PRIORITY``: the driver grades the
-    first 50 entries, so the order is an explicit, reviewed artifact
-    (see registry.py and tests/test_grading_window.py).
-    """
-    return registry.ordered_queries()
+    """One entry per implemented operator from SURVEY.md §2, in
+    registration order."""
+    return dict(registry.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL twin for each SQL-expressible query."""
-    return registry.ordered_oracles()
+    """DuckDB-runnable ANSI SQL twin for each query, in registration
+    order."""
+    return dict(registry.ORACLES)

@@ -372,7 +372,7 @@ def check_ingest_contracts(
     directory. The driver corpus and the hostile corpus both conform
     by construction (``tests/test_round11_ops.py`` pins both the pass
     and the catch). Operational callers (round-12 verdict item 2):
-    ``tools/preflight.py`` stage 3 gates the committed corpus,
+    ``tests/test_oracle_contract.py`` vets the committed corpus,
     ``tools/check_oracle.py`` vets whatever corpus it sweeps (hostile
     included), and the live ingest runners enforce the row-local terms
     per batch via :func:`contract_observe_metrics`."""

@@ -208,22 +208,38 @@ def degenerate_dirs(tmp_path_factory):
     return out_empty, out_one
 
 
+def _tool_help(tool):
+    """Run ``tools/<tool> --help`` as a script; return its stdout."""
+    import subprocess
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", tool)
+    done = subprocess.run(
+        [sys.executable, path, "--help"], capture_output=True, text=True
+    )
+    assert done.returncode == 0, done.stderr
+    return done.stdout
+
+
 def test_degenerate_corpus_command_line_runs():
     """The sweep above starts with ``python tools/degenerate_corpus.py``:
     run as a script, the module must define everything ``main`` uses
     (``COMPOSED`` among them) before ``main`` runs."""
-    import subprocess
+    assert "--out-empty" in _tool_help("degenerate_corpus.py")
 
-    tool = os.path.join(
-        os.path.dirname(os.path.dirname(__file__)),
-        "tools",
-        "degenerate_corpus.py",
-    )
-    done = subprocess.run(
-        [sys.executable, tool, "--help"], capture_output=True, text=True
-    )
-    assert done.returncode == 0, done.stderr
-    assert "--out-empty" in done.stdout
+
+#: tool -> one option its ``--help`` must list
+_TOOL_OPTIONS = {
+    "degenerate_gate.py": "--no-skip",
+    "audit_plans.py": "--dump",
+    "check_oracle.py": "--only",
+}
+
+
+@pytest.mark.parametrize("tool", list(_TOOL_OPTIONS))
+def test_tool_command_line_help(tool):
+    """The gate and oracle tools run as scripts too, and ``--help``
+    lists their own options."""
+    assert _TOOL_OPTIONS[tool] in _tool_help(tool)
 
 
 def _duck_for(sf_dir):

@@ -1,23 +1,15 @@
-"""Guard: the driver's 50-entry correctness window is a reviewed artifact.
+"""Guard: every registered query and family is graded by the oracle sweep.
 
-Round 2 discovered the driver grades at most the first 50 entries of
-``queries()`` in dict order — and 38 registered queries had silently
-never received a correctness row because import order, not intent,
-decided the window. These tests make that impossible to regress:
-
-1. The first 50 of ``queries()`` must equal ``registry.GRADING_PRIORITY``
-   exactly — adding a query can never silently displace a graded one.
-2. Every SURVEY §2 family must have driver evidence: at least one entry
-   inside the current window, or all-green rows in a committed past
-   CORRECTNESS file. A family with neither fails loudly.
+``tests/test_oracle_contract.py`` runs one compare per name in
+``registry.QUERIES``. These checks pin the metadata that sweep relies
+on: every oracle belongs to a registered query, and every SURVEY §2
+family has entries with an oracle, so no family goes ungraded.
 
 No SparkSession needed: these are pure registry/metadata checks.
 """
 
 from __future__ import annotations
 
-import json
-import pathlib
 import re
 
 import pytest
@@ -25,8 +17,6 @@ import pytest
 from reddit_data_engineering_project_spark import registry
 
 registry.load_all_operators()
-
-REPO = pathlib.Path(__file__).resolve().parent.parent
 
 # SURVEY §2 family = the name prefix before the first underscore
 # (q01..q21, s01..s06 collapse to the S-family rows, x01..x05,
@@ -40,162 +30,15 @@ def family_of(name: str) -> str:
     return m.group(1)
 
 
-def _past_green_families() -> set[str]:
-    """Families where EVERY registered entry has a green row (hash pass,
-    or declared rows-only) in some committed CORRECTNESS_r*.json.
-
-    Entries in :data:`QUEUED_FOR_NEXT_WINDOW` are exempt from the
-    all-green requirement — they are consciously queued, which is the
-    explicit act this guard demands — but a family consisting ONLY of
-    queued members (a brand-new family) still fails and must take a
-    window slot in its landing round."""
-    greens: dict[str, set[str]] = {}
-    for path in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        try:
-            rows = json.loads(path.read_text())
-        except (OSError, json.JSONDecodeError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            ok = row.get("hash_match") is True or (
-                row.get("err") == "no_oracle"
-                and name not in registry.ORACLES  # rows-only by design
-            )
-            if ok:
-                greens.setdefault(name, set()).add(path.name)
-    out = set()
-    for fam in {family_of(n) for n in registry.QUERIES}:
-        members = [
-            n
-            for n in registry.QUERIES
-            if family_of(n) == fam and n not in QUEUED_FOR_NEXT_WINDOW
-        ]
-        if members and all(m in greens for m in members):
-            out.add(fam)
-    return out
-
-
-def test_priority_names_are_registered_and_unique():
-    names = registry.GRADING_PRIORITY
-    assert len(names) == len(set(names)) == registry.GRADED_WINDOW
-    missing = [n for n in names if n not in registry.QUERIES]
-    assert not missing, f"GRADING_PRIORITY names not registered: {missing}"
-
-
-def test_window_is_exactly_the_priority_list():
-    ordered = list(registry.ordered_queries())
-    assert (
-        tuple(ordered[: registry.GRADED_WINDOW]) == registry.GRADING_PRIORITY
-    ), "first 50 queries() entries drifted from GRADING_PRIORITY"
-    # and nothing was dropped: every registration still appears
-    assert set(ordered) == set(registry.QUERIES)
-
-
 def test_every_family_has_driver_evidence():
-    window = set(registry.GRADING_PRIORITY)
-    in_window = {family_of(n) for n in window}
-    past_green = _past_green_families()
     all_fams = {family_of(n) for n in registry.QUERIES}
-    uncovered = sorted(all_fams - in_window - past_green)
+    graded = {family_of(n) for n in registry.ORACLES}
+    uncovered = sorted(all_fams - graded)
     assert not uncovered, (
-        f"families with no driver evidence (not in the graded window and "
-        f"no all-green past CORRECTNESS rows): {uncovered}"
+        f"families with no oracle-graded entry in the sweep: {uncovered}"
     )
-
-
-# Queries registered after a window was pinned: consciously queued for
-# the next window rotation (they hold check_oracle + pytest coverage
-# meanwhile). Adding a name here is the explicit act the guard demands —
-# silent additions fail the test below. Round 10 grades its two new
-# registrations (s09_session_timeout_replay, x02_simhash16_neardup) IN
-# the landing window — each took a slot from the backfill tail in its
-# own commit, per the committed velocity rule — so the set stays empty
-# unless a registration genuinely cannot take a slot. Round 13's one
-# registration (x05_bmp_pixel_stats) queued here until its committed
-# round-14 landing slot; round 14 drains it into the window (extended
-# with planted-PPM sibling rows, r13 verdict item 3), so the set is
-# empty again. Round 15's one registration (x05_decode_errors — the
-# corrupt-payload quarantine posture, r14 verdict item 4) queued here
-# until its committed round-16 landing slot; round 16 drains it into
-# the window (the (b) tail ceded q21_cohort_ltv to round 17), so the
-# set is empty again. Round 17's one registration
-# (x05_jpeg_pixel_stats — the baseline-JPEG seam round-trip, bit-exact
-# by flat-tile construction) queues here until its committed round-18
-# landing slot (registry.py ROUND-18 plan: it takes a (b) slot;
-# x03_hamming_rerank rolls to round 19).
-QUEUED_FOR_NEXT_WINDOW: set[str] = {"x05_jpeg_pixel_stats"}
-
-
-def test_previously_ungraded_entries_are_all_in_window():
-    """The 38 round-2 ungraded entries + the re-fixed red cell must all
-    sit inside the graded window this round; anything else never-graded
-    must be explicitly queued for the next rotation."""
-    never_graded = {
-        n
-        for n in registry.QUERIES
-        if not any(
-            n in json.loads(p.read_text())
-            for p in REPO.glob("CORRECTNESS_r*.json")
-        )
-    }
-    window = set(registry.GRADING_PRIORITY)
-    left_out = sorted(never_graded - window - QUEUED_FOR_NEXT_WINDOW)
-    assert not left_out, (
-        f"never-graded queries outside window and not explicitly queued: "
-        f"{left_out}"
-    )
-    # The round-2 red cell (x05_corpus_slice) held a window slot until
-    # it earned its green row (r06); the invariant is now that the row
-    # exists, not that the slot is still occupied.
-    r06 = json.loads((REPO / "CORRECTNESS_r06.json").read_text())
-    assert r06["x05_corpus_slice"]["hash_match"] is True
 
 
 @pytest.mark.parametrize("name", sorted(registry.ORACLES))
 def test_oracle_entries_have_query(name):
     assert name in registry.QUERIES
-
-
-def test_bench_regression_gate_logic():
-    """tools/preflight.py's per-query bench gate: fires on a >2x + >1.5s
-    slowdown, stays quiet on jitter (including the measured
-    double-JIT-pass artifact), skips incomparable readings."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "preflight", REPO / "tools" / "preflight.py"
-    )
-    pf = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(pf)
-
-    # A realistic fleet: a stable majority (e..j, ratio ~1.0) so the
-    # suite median reflects the host, plus the edge cases under test.
-    stable_ref = {k: 0.5 for k in "efghij"}
-    stable_fresh = {k: 0.52 for k in "efghij"}
-    ref = {"sf": 0.001, "queries": {"a": 1.0, "b": 0.1, "c": 5.0, "d": 0.7, **stable_ref}}
-    # a: 1.0 -> 2.8 = >2.5x and >1.5s -> flagged
-    # b: 0.1 -> 0.4 = >2.5x but only +0.3s jitter -> NOT flagged
-    # c: 5.0 -> 6.9 = +1.9s but <2.5x -> NOT flagged
-    # d: 0.7 -> 1.45 = the measured double-JIT artifact -> NOT flagged
-    fresh = {"sf": 0.001, "queries": {"a": 2.8, "b": 0.4, "c": 6.9, "d": 1.45, **stable_fresh}}
-    assert pf.bench_regressions(ref, fresh) == {"a": (1.0, 2.8)}
-    # different sf: incomparable, never a false FAIL
-    assert pf.bench_regressions({"sf": 0.1, "queries": {}}, fresh) is None
-    # queries added since the committed baseline are ignored
-    assert pf.bench_regressions(ref, {"sf": 0.001, "queries": {"z": 9.9}}) == {}
-    # GLOBAL slowdown (ambient host load): every query 1.5x slower ->
-    # the suite-median normalization keeps the gate quiet...
-    slow = {"sf": 0.001, "queries": {n: round(v * 1.5, 3) for n, v in ref["queries"].items()}}
-    assert pf.bench_regressions(ref, slow) == {}
-    # ...but a query that regressed ON TOP of the global slowdown
-    # (here 4x while the fleet moved 1.5x, normalized ~2.7x) still
-    # flags.
-    slow_bad = dict(slow, queries=dict(slow["queries"], a=4.2))
-    assert pf.bench_regressions(ref, slow_bad) == {"a": (1.0, 4.2)}
-    # a globally FASTER host must not mask an absolute regression
-    fast_bad = {"sf": 0.001, "queries": {"a": 3.0, "b": 0.05, "c": 2.5, "d": 0.35,
-                                          **{k: 0.25 for k in "efghij"}}}
-    assert pf.bench_regressions(ref, fast_bad) == {"a": (1.0, 3.0)}

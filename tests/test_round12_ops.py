@@ -1,83 +1,29 @@
 """Round-12 pins: the ingest contracts are OPERATIONAL (r11 verdict
 item 2 — "a guard nobody runs protects nobody").
 
-Three call sites get coverage:
+Two call sites get coverage:
 
-1. ``tools/preflight.py`` stage 3 (``ingest_contracts_check``) — the
-   committed corpus passes; a planted out-of-domain corpus raises,
-   which is exactly a preflight FAIL;
-2. the live ingest runners — the contract rides the existing scan as
+1. the live ingest runners — the contract rides the existing scan as
    ``observe()`` metrics (zero extra pass) and the run raises after
    completion when any batch carried a violating row;
-3. ``tools/check_oracle.py`` — vets whatever corpus it sweeps before
-   grading against it (exercised implicitly by every sweep; pinned
-   here via the module's in-main call site being reachable with a
-   planted dir through ``check_ingest_contracts`` directly).
+2. ``tools/check_oracle.py`` and ``tests/test_oracle_contract.py`` —
+   both vet the corpus they sweep before grading against it; the
+   pass on the committed corpus and the raise on a planted
+   out-of-domain corpus are pinned by
+   ``tests/test_round11_ops.py::test_ingest_contract_guard``.
 """
 
 from __future__ import annotations
 
 import datetime
 import importlib
-import importlib.util
 import os
-import pathlib
 
 import pytest
 
 from pyspark.sql import functions as F
 
-REPO = pathlib.Path(__file__).resolve().parent.parent
-
 from conftest import SF_DIR
-
-
-def _load_preflight():
-    spec = importlib.util.spec_from_file_location(
-        "preflight", REPO / "tools" / "preflight.py"
-    )
-    pf = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(pf)
-    return pf
-
-
-def _plant_bad_events(spark, sf, out_dir):
-    """Copy a corpus dir with one out-of-domain events.value planted."""
-    import shutil
-
-    from reddit_data_engineering_project_spark import tables
-
-    os.makedirs(out_dir)
-    for t in tables.TABLE_NAMES:
-        if t != "events":
-            shutil.copy(f"{sf}/{t}.parquet", f"{out_dir}/{t}.parquet")
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    ev.withColumn(
-        "value",
-        F.when(F.col("event_id") == 1, F.lit(1e9)).otherwise(
-            F.col("value")
-        ),
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{out_dir}/events.parquet"
-    )
-
-
-def test_preflight_ingest_contract_stage(spark, tmp_path):
-    """The preflight stage passes on the committed corpus and raises —
-    i.e. the stage FAILs — on a planted out-of-domain corpus."""
-    pf = _load_preflight()
-    detail = pf.ingest_contracts_check(SF_DIR)
-    assert detail.startswith("9 tables conform")
-
-    bad = str(tmp_path / "bad")
-    _plant_bad_events(spark, SF_DIR, bad)
-    with pytest.raises(ValueError, match="in_domain"):
-        pf.ingest_contracts_check(bad)
-    # and the stage wrapper renders that as a FAIL, not a crash
-    name, ok, msg = pf.stage(
-        "ingest-contracts", lambda: pf.ingest_contracts_check(bad)
-    )
-    assert not ok and "ValueError" in msg
 
 
 #: Past TIME_DOMAINS["events"]'s 2999-12-31 ceiling, yet a legal

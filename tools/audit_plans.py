@@ -240,48 +240,10 @@ def unbounded_global_windows(plan: str) -> list[str]:
     return flags
 
 
-def plan_shape(plan: str) -> list[str]:
-    """Normalized plan shape of a formatted explain string: node
-    structure with expression ids, codegen stars, and node numbers
-    stripped — stable across harmless recompiles, changed by any
-    plan-shape regression (lost broadcast, new Exchange, join-strategy
-    flip). Covers the MAIN tree and every SUBQUERY tree (blocks
-    separated by ``--`` markers), so a shape change inside a scalar
-    subquery or DPP filter branch is caught too."""
-    out: list[str] = []
-    for block in _tree_blocks(plan):
-        if out:
-            out.append("--")
-        out.extend(
-            " " * (3 * depth) + name for depth, name, _ in block
-        )
-    return out
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
     ap.add_argument("--dump", default=None)
-    ap.add_argument(
-        "--snapshot",
-        default=None,
-        metavar="PATH",
-        help=(
-            "write every entry's normalized plan shape to PATH (the "
-            "blessed reference; commit the diff to document a shape "
-            "change)"
-        ),
-    )
-    ap.add_argument(
-        "--check-snapshot",
-        default=None,
-        metavar="PATH",
-        help=(
-            "diff every entry's plan shape against the blessed PATH; "
-            "exit 1 on any undocumented drift (changed / added / "
-            "removed entries)"
-        ),
-    )
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
@@ -305,13 +267,11 @@ def main() -> int:
 
     dump = open(args.dump, "w") if args.dump else None
     problems: list[str] = []
-    shapes: dict[str, list[str]] = {}
     for name in sorted(queries):
         df = queries[name](spark, args.sf)
         plan = spark._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        shapes[name] = plan_shape(plan)
         if dump:
             dump.write(f"{'=' * 70}\n{name}\n{plan}\n")
         n_exchange = len(re.findall(r"\bExchange\b", plan))
@@ -335,15 +295,10 @@ def main() -> int:
                 flags.append(f"WIDE_SCAN({ncols}cols)")
         for w in unbounded_global_windows(plan):
             flags.append(f"UNBOUNDED_GLOBAL_WINDOW[{w}]")
-        if name in oracles:
-            scanned = {
-                t for t in TABLE_NAMES if f"/{t}.parquet" in plan
-            }
-            undeclared = sorted(scanned - oracle_tables(oracles[name]))
-            if undeclared:
-                flags.append(
-                    "UNDECLARED_TABLE_DEP(" + ",".join(undeclared) + ")"
-                )
+        scanned = {t for t in TABLE_NAMES if f"/{t}.parquet" in plan}
+        undeclared = sorted(scanned - oracle_tables(oracles[name]))
+        if undeclared:
+            flags.append("UNDECLARED_TABLE_DEP(" + ",".join(undeclared) + ")")
         status = ",".join(flags) if flags else "ok"
         print(f"{name:38s} exchanges={n_exchange:2d}  {status}")
         if flags:
@@ -351,56 +306,9 @@ def main() -> int:
     if dump:
         dump.close()
 
-    import json
-
-    if args.snapshot:
-        with open(args.snapshot, "w") as fh:
-            json.dump(
-                {
-                    "_note": (
-                        "blessed per-entry physical plan shapes at "
-                        f"sf={args.sf}; regenerate ONLY via "
-                        "tools/audit_plans.py --snapshot and commit the "
-                        "diff to document the plan change"
-                    ),
-                    "shapes": shapes,
-                },
-                fh,
-                indent=1,
-                sort_keys=True,
-            )
-        print(f"snapshot: wrote {len(shapes)} plan shapes to {args.snapshot}")
-
-    drifts: list[str] = []
-    if args.check_snapshot:
-        with open(args.check_snapshot) as fh:
-            blessed = json.load(fh)["shapes"]
-        for name in sorted(set(blessed) | set(shapes)):
-            if name not in shapes:
-                drifts.append(f"{name}: entry REMOVED since snapshot")
-            elif name not in blessed:
-                drifts.append(f"{name}: entry ADDED since snapshot (re-bless)")
-            elif blessed[name] != shapes[name]:
-                old, new = blessed[name], shapes[name]
-                delta = next(
-                    (
-                        f"line {i}: {o!r} -> {n!r}"
-                        for i, (o, n) in enumerate(zip(old, new))
-                        if o != n
-                    ),
-                    f"depth {len(old)} -> {len(new)} nodes",
-                )
-                drifts.append(f"{name}: plan shape drift ({delta})")
-        for d in drifts:
-            print(f"DRIFT {d}")
-        print(
-            f"snapshot check: {len(shapes)} plans vs "
-            f"{len(blessed)} blessed, {len(drifts)} drifts"
-        )
-
     print(f"\n{len(problems)} flagged" + (": " + "; ".join(problems) if problems else ""))
     spark.stop()
-    return 1 if (problems or drifts) else 0
+    return 1 if problems else 0
 
 
 if __name__ == "__main__":

@@ -1,20 +1,22 @@
-"""Local mimic of the driver's correctness gate.
+"""The oracle contract: every registered query against its DuckDB oracle.
 
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB over the same parquet tables, then compares:
+Runs every registered query on Spark and its oracle SQL on DuckDB over
+the same parquet tables, then compares:
   - row count
   - sorted column names
   - order-insensitive value hash (columns sorted by name, rows sorted,
-    floats rounded to 9 significant-ish decimals before hashing)
+    every value rendered by :func:`norm_value`, floats at full
+    ``repr`` precision)
 
 Usage:
     python tools/check_oracle.py [--sf /root/testdata/sf0.01] [--only name1,name2]
 
-The sweep body is importable as :func:`run_checks` so callers that
-sweep MANY corpora (``tools/degenerate_gate.py``) can share one
-SparkSession across sweeps — the JVM/codegen warm-up dominates the
-per-corpus floor, so one shared session cuts an 11-corpus gate from
-~29 min to a fraction (r13 verdict item 4).
+The per-entry comparison is :func:`_check_entry`; Tier-1 runs it for
+every entry at sf0.001 (``tests/test_oracle_contract.py``). The sweep
+body is importable as :func:`run_checks` so callers that sweep MANY
+corpora (``tools/degenerate_gate.py``) can share one SparkSession
+across sweeps — the JVM/codegen warm-up dominates the per-corpus
+floor.
 """
 
 from __future__ import annotations
@@ -61,13 +63,17 @@ def norm_value(v):
     return str(v)
 
 
-def table_hash(rows: list[tuple], colnames: list[str]) -> str:
+def _norm_lines(rows: list[tuple], colnames: list[str]) -> list[str]:
+    """Rows rendered with columns sorted by name, then sorted."""
     order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    lines = sorted(
+    return sorted(
         "\x1f".join(norm_value(row[i]) for i in order) for row in rows
     )
+
+
+def table_hash(rows: list[tuple], colnames: list[str]) -> str:
     h = hashlib.sha256()
-    for line in lines:
+    for line in _norm_lines(rows, colnames):
         h.update(line.encode())
         h.update(b"\x1e")
     return h.hexdigest()
@@ -89,6 +95,53 @@ def oracle_tables(sql: str) -> set[str]:
     return {t for t in TABLE_NAMES if re.search(rf"\b{t}\b", sql)}
 
 
+def _oracle_db(sf: str):
+    """A fresh DuckDB connection with one view per corpus table at ``sf``."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
+        )
+    return con
+
+
+def _check_entry(spark, con, name: str, sf: str, verbose: bool = False):
+    """Run entry ``name`` on Spark and its oracle on ``con``; returns
+    ``(n_spark_rows, problems)``, where an empty ``problems`` list means
+    the row count, the sorted column names and the value hash all match.
+    Errors on either engine propagate to the caller."""
+    from reddit_data_engineering_project_spark import registry
+
+    # Cold-cache isolation between queries: persisted intermediates
+    # from earlier entries (LSH dedup family) otherwise accumulate in
+    # the shared session and slow later queries.
+    spark.catalog.clearCache()
+    sdf = registry.QUERIES[name](spark, sf)
+    scols = sdf.columns
+    srows = [tuple(r) for r in sdf.collect()]
+    res = con.execute(registry.ORACLES[name])
+    ocols = [d[0] for d in res.description]
+    orows = res.fetchall()
+
+    problems = []
+    if len(srows) != len(orows):
+        problems.append(f"rowcount spark={len(srows)} duck={len(orows)}")
+    if sorted(scols) != sorted(ocols):
+        problems.append(f"cols spark={sorted(scols)} duck={sorted(ocols)}")
+    if not problems:
+        sh = table_hash(srows, list(scols))
+        oh = table_hash(orows, list(ocols))
+        if sh != oh:
+            problems.append("value-hash mismatch")
+            if verbose:
+                pairs = zip(_norm_lines(srows, scols), _norm_lines(orows, ocols))
+                for a, b in [p for p in pairs if p[0] != p[1]][:5]:
+                    print(f"  spark: {a}\n  duck : {b}")
+    return len(srows), problems
+
+
 def run_checks(
     spark,
     sf: str,
@@ -96,29 +149,26 @@ def run_checks(
     verbose: bool = False,
     skip_contracts: bool = False,
     mutated_tables: set[str] | None = None,
-) -> tuple[int, int, int, list[str]]:
-    """One full sweep of ``queries()`` vs ``oracle_sql()`` over the
-    parquet corpus at ``sf``; returns ``(ok, fail, rows_only,
-    failing_names)``. The caller owns the SparkSession lifecycle; a
-    fresh DuckDB connection is opened (and closed) per sweep so oracle
-    state never leaks between corpora.
+) -> tuple[int, int, list[str]]:
+    """One sweep of every registered query vs its oracle over the
+    parquet corpus at ``sf``; returns ``(ok, fail, failing_names)``.
+    The caller owns the SparkSession lifecycle; a fresh DuckDB
+    connection is opened (and closed) per sweep so oracle state never
+    leaks between corpora.
 
     ``mutated_tables`` (degenerate-gate mode): the corpus at ``sf``
     differs from the standing baseline corpus ONLY in these tables.
     Entries whose oracle references none of them read byte-identical
     inputs to a corpus they are already green on (the standing full
-    sf0.001/sf0.01 sweeps), so their result is deterministically
-    unchanged and they are SKIPPED — the sweep then costs ∝ the
-    entries the hostile axis can actually affect. Soundness rests on
-    oracle-declared tables ⊇ Spark-read tables, which
-    ``tools/audit_plans.py`` enforces per entry
-    (UNDECLARED_TABLE_DEP); entries without an oracle never skip."""
-    import duckdb
+    sf0.001 sweep in ``tests/test_oracle_contract.py``), so their
+    result is deterministically unchanged and they are SKIPPED — the
+    sweep then costs ∝ the entries the hostile axis can actually
+    affect. Soundness rests on oracle-declared tables ⊇ Spark-read
+    tables, which ``tools/audit_plans.py`` enforces per entry
+    (UNDECLARED_TABLE_DEP)."""
+    from reddit_data_engineering_project_spark import registry
 
-    import __spark_entry__ as entrymod
-
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+    registry.load_all_operators()
 
     # Vet the corpus being swept BEFORE grading against it: the declared
     # ingest contracts (null/dup primary keys, value/time domains) are
@@ -132,95 +182,27 @@ def run_checks(
     if not skip_contracts:
         check_ingest_contracts(spark, sf)
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
-        )
-
-    n_pass = n_fail = n_rows_only = n_skip = 0
+    con = _oracle_db(sf)
+    n_pass = n_fail = n_skip = 0
     failures: list[str] = []
     try:
-        for name, fn in sorted(queries.items()):
+        for name in sorted(registry.QUERIES):
             if only and name not in only:
                 continue
-            if (
-                mutated_tables is not None
-                and name in oracles
-                and not (oracle_tables(oracles[name]) & mutated_tables)
+            if mutated_tables is not None and not (
+                oracle_tables(registry.ORACLES[name]) & mutated_tables
             ):
                 n_skip += 1
                 continue
             t0 = time.time()
-            # Cold-cache isolation between queries: persisted
-            # intermediates from earlier entries (LSH dedup family)
-            # otherwise accumulate in the shared session and slow later
-            # queries.
-            spark.catalog.clearCache()
             try:
-                sdf = fn(spark, sf)
-                scols = sdf.columns
-                srows = [tuple(r) for r in sdf.collect()]
+                n_rows, problems = _check_entry(spark, con, name, sf, verbose)
             except Exception:
-                print(f"FAIL  {name}: spark error")
+                print(f"FAIL  {name}: error")
                 traceback.print_exc()
                 n_fail += 1
                 failures.append(name)
                 continue
-            if name not in oracles:
-                print(
-                    f"ROWS  {name}: {len(srows)} rows (no oracle) "
-                    f"[{time.time()-t0:.1f}s]"
-                )
-                n_rows_only += 1
-                continue
-            try:
-                res = con.execute(oracles[name])
-                ocols = [d[0] for d in res.description]
-                orows = res.fetchall()
-            except Exception:
-                print(f"FAIL  {name}: duckdb error")
-                traceback.print_exc()
-                n_fail += 1
-                failures.append(name)
-                continue
-
-            problems = []
-            if len(srows) != len(orows):
-                problems.append(
-                    f"rowcount spark={len(srows)} duck={len(orows)}"
-                )
-            if sorted(scols) != sorted(ocols):
-                problems.append(
-                    f"cols spark={sorted(scols)} duck={sorted(ocols)}"
-                )
-            if not problems:
-                sh = table_hash(srows, list(scols))
-                oh = table_hash(orows, list(ocols))
-                if sh != oh:
-                    problems.append("value-hash mismatch")
-                    if verbose:
-                        order_s = sorted(
-                            range(len(scols)), key=lambda i: scols[i]
-                        )
-                        order_o = sorted(
-                            range(len(ocols)), key=lambda i: ocols[i]
-                        )
-                        s_lines = sorted(
-                            "\x1f".join(norm_value(r[i]) for i in order_s)
-                            for r in srows
-                        )
-                        o_lines = sorted(
-                            "\x1f".join(norm_value(r[i]) for i in order_o)
-                            for r in orows
-                        )
-                        shown = 0
-                        for a, b in zip(s_lines, o_lines):
-                            if a != b and shown < 5:
-                                print(f"  spark: {a}\n  duck : {b}")
-                                shown += 1
             if problems:
                 print(
                     f"FAIL  {name}: {'; '.join(problems)} "
@@ -229,7 +211,7 @@ def run_checks(
                 n_fail += 1
                 failures.append(name)
             else:
-                print(f"OK    {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
+                print(f"OK    {name}: {n_rows} rows [{time.time()-t0:.1f}s]")
                 n_pass += 1
     finally:
         con.close()
@@ -240,10 +222,10 @@ def run_checks(
             f"corpus: oracle touches none of {sorted(mutated_tables)})"
         )
     print(
-        f"\n{n_pass} ok, {n_fail} fail, {n_rows_only} rows-only"
+        f"\n{n_pass} ok, {n_fail} fail"
         + (f"; failing: {','.join(failures)}" if failures else "")
     )
-    return n_pass, n_fail, n_rows_only, failures
+    return n_pass, n_fail, failures
 
 
 def main() -> int:
@@ -266,7 +248,7 @@ def main() -> int:
 
     spark = get_spark(app_name="check_oracle")
     only = set(args.only.split(",")) if args.only else None
-    _, n_fail, _, _ = run_checks(
+    _, n_fail, _ = run_checks(
         spark,
         args.sf,
         only=only,

@@ -40,8 +40,7 @@ grows the expected ok side automatically without touching this file —
 the gate's contract is "nothing NEW breaks on a degenerate corpus and
 nothing documented silently heals", not a frozen total.
 
-Wired into the round-end protocol as ``python tools/preflight.py
---degenerate``; also runnable directly:
+Run it as:
 
     python tools/degenerate_gate.py [--src /root/testdata/sf0.001]
 
@@ -385,7 +384,7 @@ MUTATED_TABLES: dict[str, frozenset[str] | None] = {
 }
 
 _SUMMARY = re.compile(
-    r"^(\d+) ok, (\d+) fail, (\d+) rows-only(?:; failing: (.*))?$"
+    r"^(\d+) ok, (\d+) fail(?:; failing: (.*))?$"
 )
 
 
@@ -441,9 +440,9 @@ def verify_mutations(src: str, dirs: dict[str, str]) -> None:
         )
 
 
-def run_sweep(sf_dir: str) -> tuple[int, int, int, frozenset[str], str]:
+def run_sweep(sf_dir: str) -> tuple[int, int, frozenset[str], str]:
     """One full-registry check_oracle sweep; returns (ok, fail,
-    rows_only, fail_set, raw_tail)."""
+    fail_set, raw_tail)."""
     out = subprocess.run(
         [sys.executable, "tools/check_oracle.py", "--sf", sf_dir],
         cwd=REPO,
@@ -456,7 +455,7 @@ def run_sweep(sf_dir: str) -> tuple[int, int, int, frozenset[str], str]:
         m = _SUMMARY.match(line.strip())
         if m:
             fails = frozenset(
-                f.strip() for f in (m.group(4) or "").split(",") if f.strip()
+                f.strip() for f in (m.group(3) or "").split(",") if f.strip()
             )
             n_fail = int(m.group(2))
             # the summary line is necessary but not sufficient: a sweep
@@ -473,7 +472,7 @@ def run_sweep(sf_dir: str) -> tuple[int, int, int, frozenset[str], str]:
                     f" tail:\n{tail}\nstderr tail:\n"
                     f"{chr(10).join(out.stderr.splitlines()[-5:])}"
                 )
-            return int(m.group(1)), n_fail, int(m.group(3)), fails, tail
+            return int(m.group(1)), n_fail, fails, tail
     raise RuntimeError(
         f"check_oracle printed no summary for {sf_dir}; tail:\n{tail}\n"
         f"stderr tail:\n{chr(10).join(out.stderr.splitlines()[-5:])}"
@@ -482,7 +481,7 @@ def run_sweep(sf_dir: str) -> tuple[int, int, int, frozenset[str], str]:
 
 def run_sweep_inproc(
     spark, sf_dir: str, mutated: frozenset[str] | None = None
-) -> tuple[int, int, int, frozenset[str], str]:
+) -> tuple[int, int, frozenset[str], str]:
     """One full-registry sweep through the SHARED SparkSession — the
     consolidated default (the JVM/codegen warm-up is paid once for the
     whole gate instead of per corpus). Per-entry output is buffered;
@@ -495,12 +494,12 @@ def run_sweep_inproc(
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        ok, fail, rows_only, failing = co.run_checks(
+        ok, fail, failing = co.run_checks(
             spark, sf_dir, mutated_tables=set(mutated) if mutated else None
         )
     lines = buf.getvalue().strip().splitlines()
     kept = [l for l in lines if l.startswith("FAIL")][-10:] + lines[-2:]
-    return ok, fail, rows_only, frozenset(failing), "\n".join(kept)
+    return ok, fail, frozenset(failing), "\n".join(kept)
 
 
 def main() -> int:
@@ -627,16 +626,16 @@ def main() -> int:
                 mutated = (
                     None if args.no_skip else MUTATED_TABLES[label]
                 )
-                ok, fail, rows_only, fail_set, tail = run_sweep_inproc(
+                ok, fail, fail_set, tail = run_sweep_inproc(
                     shared_spark, sf_dir, mutated
                 )
             else:
-                ok, fail, rows_only, fail_set, tail = run_sweep(sf_dir)
+                ok, fail, fail_set, tail = run_sweep(sf_dir)
             expected = EXPECTED_FAILS[label]
-            verdict = "PASS" if fail_set == expected and rows_only == 0 else "FAIL"
+            verdict = "PASS" if fail_set == expected else "FAIL"
             print(
-                f"{verdict}  {label}: {ok} ok / {fail} fail / "
-                f"{rows_only} rows-only [{time.time()-t0:.0f}s]"
+                f"{verdict}  {label}: {ok} ok / {fail} fail "
+                f"[{time.time()-t0:.0f}s]"
             )
             if fail_set != expected:
                 unexpected = sorted(fail_set - expected)
@@ -649,9 +648,6 @@ def main() -> int:
                         f"      documented divergence silently healed "
                         f"(re-document before blessing): {healed}"
                     )
-                failures.append(label)
-            elif rows_only:
-                print("      rows-only entries appeared in a degenerate sweep")
                 failures.append(label)
     finally:
         if shared_spark is not None:
