@@ -18,7 +18,7 @@ events stream runs — expressed as single-scan Spark plans:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..functions.numeric import dround
 from ..registry import register
@@ -225,81 +225,198 @@ def q21_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Market-basket geometry: only pairs co-purchased in >= 2 orders are
-#: reported (the support floor that keeps the rule set, not the pair
-#: explosion, as the output).
+# --- The co-purchase graph ---------------------------------------------
+#
+# Eight entries read one graph. Its nodes are parts; an edge joins two
+# parts bought together in at least ``_BASKET_MIN_PAIR_ORDERS`` orders
+# (the support floor). It comes in two shapes: the HALF list, one
+# ``src < dst`` row per edge (:func:`_copurchase_half_edges`, the
+# oracle's ``half``), and the MIRRORED list, each edge in both
+# directions (:func:`_copurchase_edges`, the oracle's ``edges``).
+# Spark enumerates the pairs from sorted per-order baskets
+# (:func:`_basket_pairs`); the oracle spells the self-join
+# (:data:`_COPURCHASE_SQL`). Entries that guard against hubs cap node
+# degree at the p95 of the degree HISTOGRAM (:func:`_degree_cap`,
+# :data:`_DEGREE_CAP_SQL`): the cumulative window runs over distinct
+# degree values (≪ nodes, so its single-partition stage stays small at
+# any scale), the threshold ``cum * 100 >= n * PCT`` stays in exact
+# integer math on both engines, and the 1-row cap joins back as a
+# broadcast. Every output is an exact integer or an e-scaled BIGINT,
+# so the hash compare is structural.
+
+#: The support floor: only pairs co-purchased in >= 2 orders are edges
+#: (it keeps the rule set, not the pair explosion, as the output).
 _BASKET_MIN_PAIR_ORDERS = 2
 
-#: reach2 hub discipline: middle nodes above this degree percentile are
-#: excluded from the 2-hop expansion (integer percent so the threshold
-#: comparison ``cum * 100 >= n * PCT`` stays in exact integer math on
-#: both engines — no float percentile paths to diverge).
-_REACH2_DEGREE_CAP_PCT = 95
+#: Hub cap: nodes above this degree percentile stop being reach2 middles
+#: and capped Adamic-Adar wedge centers (integer percent, see above).
+_DEGREE_CAP_PCT = 95
 
-
-@register(
-    "q21_copurchase_lift",
-    oracle=f"""
-    WITH li AS (
+#: The graph in oracle SQL, composed after ``WITH`` like
+#: ``dedup._OVERLAP_SQL``: ``li`` (distinct order lines), ``half`` (with
+#: each pair's ``pair_orders``) and ``edges``.
+_COPURCHASE_SQL = f"""li AS (
         SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
     ),
-    n AS (SELECT count(DISTINCT l_orderkey) AS n_orders FROM li),
-    freq AS (
-        SELECT l_partkey, count(*) AS part_orders FROM li GROUP BY 1
-    ),
-    pairs AS (
-        SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
+    half AS (
+        SELECT a.l_partkey AS src, b.l_partkey AS dst,
                count(*) AS pair_orders
         FROM li a JOIN li b
           ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
         GROUP BY 1, 2
         HAVING count(*) >= {_BASKET_MIN_PAIR_ORDERS}
+    ),
+    edges AS (
+        SELECT src, dst FROM half
+        UNION ALL
+        SELECT dst AS src, src AS dst FROM half
+    )"""
+
+#: The p95 cap in oracle SQL: reads a ``deg`` relation with a ``deg``
+#: column and yields the 1-row ``cap``.
+_DEGREE_CAP_SQL = f"""hist AS (
+        SELECT deg, CAST(count(*) AS BIGINT) AS cnt FROM deg GROUP BY 1
+    ),
+    cum AS (
+        SELECT
+            deg,
+            CAST(sum(cnt) OVER (ORDER BY deg) AS BIGINT) AS cum,
+            CAST(sum(cnt) OVER () AS BIGINT) AS n
+        FROM hist
+    ),
+    cap AS (
+        SELECT min(deg) AS cap FROM cum
+        WHERE cum * 100 >= n * {_DEGREE_CAP_PCT}
+    )"""
+
+
+def _order_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct ``(l_orderkey, l_partkey)`` lines: the graph's input."""
+    return (
+        table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .dropDuplicates(["l_orderkey", "l_partkey"])
+    )
+
+
+def _basket_pairs(li: DataFrame) -> DataFrame:
+    """``(src, dst, pair_orders)``: every part pair (``src < dst``) that
+    shares at least ``_BASKET_MIN_PAIR_ORDERS`` orders in LI.
+
+    Not a self-join on ``l_orderkey``, which would shuffle the fact
+    table twice: ONE shuffle builds each order's sorted basket, then two
+    chained generators emit its C(k,2) pairs — ``posexplode`` picks each
+    src with its index, ``explode`` over the tail slice yields each dst.
+    Both run in codegen; the earlier nested ``transform`` × ``flatten``
+    form ran its lambdas interpreted (round-16 finding) and measured
+    2.53 s against 1.61 s for the edge list alone at sf0.1. Fan-out is
+    bounded by basket size (~4 lines/order here, order width in any
+    retail schema)."""
+    baskets = li.groupBy("l_orderkey").agg(
+        F.sort_array(F.collect_list("l_partkey")).alias("parts")
+    )
+    srcs = baskets.select(
+        F.col("parts"), F.posexplode(F.col("parts")).alias("i", "src")
+    )
+    return (
+        srcs.select(
+            "src",
+            F.explode(
+                F.slice(
+                    F.col("parts"),
+                    F.col("i") + 2,
+                    F.greatest(F.size("parts") - F.col("i") - 1, F.lit(0)),
+                )
+            ).alias("dst"),
+        )
+        .groupBy("src", "dst")
+        .agg(F.count("*").alias("pair_orders"))
+        .filter(F.col("pair_orders") >= _BASKET_MIN_PAIR_ORDERS)
+    )
+
+
+def _copurchase_half_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The half list ``(src, dst)``, UNPERSISTED.
+
+    Deliberately lazy (r18 measured): persisting here serves only the
+    2-consumer mirror union, and an interleaved A/B showed it REGRESSES
+    the light consumers locally (powerlaw 2.46→3.24 s, lift 1.96→2.44 s
+    at sf0.1) — on an idle 32-core box the two duplicate evaluations run
+    as CONCURRENT stages for free, while the cache serializes
+    materialize-then-read and adds the columnar cache-write cost.
+    Entries whose consumption is heavier (3+ reads: kcore's peel chain,
+    reach2's four branches, triangle's orientation) persist at THEIR
+    level, where the A/B showed real wins. At 100 TB the duplication is
+    no longer free (cores are busy) and the per-entry persists bound the
+    basket DAG to ≤2 evaluations per query."""
+    return _basket_pairs(_order_parts(spark, sf_dir)).select("src", "dst")
+
+
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The mirrored list ``(src, dst)``. The half list is lazy, so the
+    union evaluates the basket DAG twice; consumers that read the edges
+    more often persist at their own level."""
+    pairs = _copurchase_half_edges(spark, sf_dir)
+    return pairs.union(
+        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
+def _degree_cap(deg: DataFrame) -> DataFrame:
+    """The 1-row ``cap``: the smallest degree at or above the
+    ``_DEGREE_CAP_PCT`` percentile of DEG's ``deg`` column, read from
+    the degree histogram."""
+    hist = deg.groupBy("deg").agg(F.count("*").cast("bigint").alias("cnt"))
+    w_cum = Window.orderBy("deg").rangeBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    cum = hist.select(
+        "deg",
+        F.sum("cnt").over(w_cum).cast("bigint").alias("cum"),
+        F.sum("cnt").over(
+            Window.orderBy(F.lit(1)).rangeBetween(
+                Window.unboundedPreceding, Window.unboundedFollowing
+            )
+        ).cast("bigint").alias("n"),
+    )
+    return cum.filter(
+        F.col("cum") * 100 >= F.col("n") * _DEGREE_CAP_PCT
+    ).agg(F.min("deg").alias("cap"))
+
+
+@register(
+    "q21_copurchase_lift",
+    oracle=f"""
+    WITH {_COPURCHASE_SQL},
+    n AS (SELECT count(DISTINCT l_orderkey) AS n_orders FROM li),
+    freq AS (
+        SELECT l_partkey, count(*) AS part_orders FROM li GROUP BY 1
     )
     SELECT
-        p.part_a,
-        p.part_b,
+        p.src AS part_a,
+        p.dst AS part_b,
         CAST(p.pair_orders AS BIGINT) AS pair_orders,
         CAST(round(
             CAST(p.pair_orders * n.n_orders AS DOUBLE)
             / (fa.part_orders * fb.part_orders) * 10000.0) AS BIGINT)
             AS lift_e4
-    FROM pairs p, n
-    JOIN freq fa ON p.part_a = fa.l_partkey
-    JOIN freq fb ON p.part_b = fb.l_partkey
+    FROM half p, n
+    JOIN freq fa ON p.src = fa.l_partkey
+    JOIN freq fb ON p.dst = fb.l_partkey
     """,
     tags=("analytics", "Q21", "basket"),
 )
 def q21_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q21f: market-basket co-purchase pairs with lift (association rules).
 
-    The "customers who bought X also bought Y" workhorse: count, for
-    every unordered part pair, the orders containing both, keep pairs
-    at or above the support floor, and score each with lift =
+    The "customers who bought X also bought Y" workhorse: every edge of
+    the half list with its order count, scored with lift =
     P(A,B) / (P(A)·P(B)) — scaled to a BIGINT from one exact-integer
-    product per side so the two engines cannot drift.
-
-    Scale shape — the reason this is NOT written as a self-join: Spark
-    builds per-order part baskets with ONE shuffle (groupBy order),
-    emits C(k,2) pairs per basket via chained generators (posexplode
-    picks each left part with its index, explode over the tail slice
-    yields each right part — all codegen; the earlier
-    ``transform`` × ``flatten`` comprehension ran its lambdas
-    INTERPRETED, the round-16 HOF finding, and measured ~1.6× slower;
-    fanout bounded by basket size, ~4 lines/order here and bounded by
-    order width in any retail schema), then aggregates pairs. A
-    self-join on l_orderkey
-    shuffles the fact table twice and materializes the same pairs
-    through join machinery; the basket form halves the fact-side
-    exchanges and keeps the quadratic term capped per order. The
-    per-part frequency table is dimension-sized → broadcast; the 1-row
-    order count broadcasts likewise. The oracle spells the equivalent
-    self-join, which DuckDB handles fine at oracle scale.
+    product per side so the two engines cannot drift. The per-part
+    frequency table is dimension-sized → broadcast; the 1-row order
+    count broadcasts likewise.
     """
-    li = (
-        table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .dropDuplicates(["l_orderkey", "l_partkey"])
-    )
+    li = _order_parts(spark, sf_dir)
     # Left as three independent aggregates over the lazy fact projection
     # (r18 measured): both sharing variants — persist the baskets and
     # derive n/freq from them, or persist li for all three consumers —
@@ -310,42 +427,22 @@ def q21_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form is the right one — revisit if this entry ever tops a profile.
     n = li.agg(F.countDistinct("l_orderkey").alias("n_orders"))
     freq = li.groupBy("l_partkey").agg(F.count("*").alias("part_orders"))
-    baskets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_list("l_partkey")).alias("parts")
-    )
-    srcs = baskets.select(
-        F.col("parts"), F.posexplode(F.col("parts")).alias("i", "part_a")
-    )
-    pairs = (
-        srcs.select(
-            "part_a",
-            F.explode(
-                F.slice(
-                    F.col("parts"),
-                    F.col("i") + 2,
-                    F.greatest(F.size("parts") - F.col("i") - 1, F.lit(0)),
-                )
-            ).alias("part_b"),
-        )
-        .groupBy("part_a", "part_b")
-        .agg(F.count("*").alias("pair_orders"))
-        .filter(F.col("pair_orders") >= _BASKET_MIN_PAIR_ORDERS)
-    )
     fa = freq.select(
-        F.col("l_partkey").alias("part_a"),
+        F.col("l_partkey").alias("src"),
         F.col("part_orders").alias("orders_a"),
     )
     fb = freq.select(
-        F.col("l_partkey").alias("part_b"),
+        F.col("l_partkey").alias("dst"),
         F.col("part_orders").alias("orders_b"),
     )
     return (
-        pairs.join(F.broadcast(fa), "part_a")
-        .join(F.broadcast(fb), "part_b")
+        _basket_pairs(li)
+        .join(F.broadcast(fa), "src")
+        .join(F.broadcast(fb), "dst")
         .crossJoin(F.broadcast(n))
         .select(
-            "part_a",
-            "part_b",
+            F.col("src").alias("part_a"),
+            F.col("dst").alias("part_b"),
             F.col("pair_orders").cast("bigint").alias("pair_orders"),
             F.round(
                 (F.col("pair_orders") * F.col("n_orders")).cast("double")
@@ -367,127 +464,32 @@ _PR_BASE_E6 = 150_000  # (1 - 0.85) * 1e6
 _PR_INIT_E6 = 1_000_000
 
 
-def _copurchase_half_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected co-purchase half-edge list (one ``src < dst`` row per
-    pair, support >= the basket floor) — the basket-comprehension pair
-    generation from :func:`q21_copurchase_lift` (one shuffle, no fact
-    self-join), UNPERSISTED.
-
-    Deliberately lazy (r18 measured): persisting here serves only the
-    2-consumer mirror union, and an interleaved A/B showed it REGRESSES
-    the light consumers locally (powerlaw 2.46→3.24 s, lift 1.96→2.44 s
-    at sf0.1) — on an idle 32-core box the two duplicate evaluations run
-    as CONCURRENT stages for free, while the cache serializes
-    materialize-then-read and adds the columnar cache-write cost.
-    Entries whose consumption is heavier (3+ reads: kcore's peel chain,
-    reach2's four branches, triangle's orientation) persist at THEIR
-    level, where the A/B showed real wins. At 100 TB the duplication is
-    no longer free (cores are busy) and the per-entry persists bound the
-    basket DAG to ≤2 evaluations per query."""
-    li = (
-        table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .dropDuplicates(["l_orderkey", "l_partkey"])
-    )
-    baskets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_list("l_partkey")).alias("parts")
-    )
-    # Pair enumeration via two chained generators (r17 opt): posexplode
-    # picks each src with its index, a second explode over the tail
-    # slice yields each dst — all codegen; the earlier nested
-    # transform×flatten HOF ran its lambdas interpreted (round-16
-    # finding). Identical pair multiset, same single shuffle, measured
-    # 2.53 s → 1.61 s for the edge list alone at sf0.1.
-    srcs = baskets.select(
-        F.col("parts"), F.posexplode(F.col("parts")).alias("i", "src")
-    )
-    return (
-        srcs.select(
-            "src",
-            F.explode(
-                F.slice(
-                    F.col("parts"),
-                    F.col("i") + 2,
-                    F.greatest(F.size("parts") - F.col("i") - 1, F.lit(0)),
-                )
-            ).alias("dst"),
-        )
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("pair_orders"))
-        .filter(F.col("pair_orders") >= _BASKET_MIN_PAIR_ORDERS)
-        .select("src", "dst")
-    )
-
-
-def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric co-purchase edge list (support >= the basket floor).
-
-    Reuses the basket-comprehension pair generation from
-    :func:`q21_copurchase_lift` (one shuffle, no fact self-join), then
-    mirrors each undirected pair into both directions. The half list from
-    :func:`_copurchase_half_edges` is lazy (deliberately unpersisted), so
-    the mirror union evaluates the basket DAG twice; consumers that read
-    the edges more often persist at their own level.
-    """
-    pairs = _copurchase_half_edges(spark, sf_dir)
-    return pairs.union(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-
-
 @register(
     "q21_part_pagerank",
     oracle=f"""
-    WITH li AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
-    half AS (
-        SELECT a.l_partkey AS src, b.l_partkey AS dst
-        FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING count(*) >= {_BASKET_MIN_PAIR_ORDERS}
-    ),
-    edges AS (
-        SELECT src, dst FROM half
-        UNION ALL
-        SELECT dst AS src, src AS dst FROM half
-    ),
+    WITH {_COPURCHASE_SQL},
     deg AS (
         SELECT src AS node, count(*) AS degree FROM edges GROUP BY 1
     ),
-    r0 AS (SELECT node, degree, {_PR_INIT_E6}::BIGINT AS rank_e6 FROM deg),
-    r1 AS (
+    r0 AS (SELECT node, degree, {_PR_INIT_E6}::BIGINT AS rank_e6 FROM deg)"""
+    + "".join(
+        f""",
+    r{i + 1} AS (
         SELECT d.node, d.degree,
                {_PR_BASE_E6} + ({_PR_DAMP_NUM} * sum(r.rank_e6 // r.degree))
                    // 100 AS rank_e6
         FROM edges e
-        JOIN r0 r ON e.src = r.node
+        JOIN r{i} r ON e.src = r.node
         JOIN deg d ON e.dst = d.node
         GROUP BY 1, 2
-    ),
-    r2 AS (
-        SELECT d.node, d.degree,
-               {_PR_BASE_E6} + ({_PR_DAMP_NUM} * sum(r.rank_e6 // r.degree))
-                   // 100 AS rank_e6
-        FROM edges e
-        JOIN r1 r ON e.src = r.node
-        JOIN deg d ON e.dst = d.node
-        GROUP BY 1, 2
-    ),
-    r3 AS (
-        SELECT d.node, d.degree,
-               {_PR_BASE_E6} + ({_PR_DAMP_NUM} * sum(r.rank_e6 // r.degree))
-                   // 100 AS rank_e6
-        FROM edges e
-        JOIN r2 r ON e.src = r.node
-        JOIN deg d ON e.dst = d.node
-        GROUP BY 1, 2
+    )"""
+        for i in range(_PR_ITERS)
     )
+    + f"""
     SELECT node AS part,
            CAST(degree AS BIGINT) AS degree,
            CAST(rank_e6 AS BIGINT) AS rank_e6
-    FROM r3
+    FROM r{_PR_ITERS}
     """,
     tags=("analytics", "Q21", "graph", "iterative"),
 )
@@ -495,13 +497,14 @@ def q21_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q21g: PageRank centrality over the co-purchase graph (iterative).
 
     The second iterative-algorithm demo beside dedup's label
-    propagation: 3 fixed power iterations of damped PageRank over the
-    symmetric co-purchase edge list. All arithmetic is e6-scaled BIGINT
-    with floor division — per-edge contribution ``rank div degree``,
-    exact integer sum, then ``150000 + (85 * sum) div 100`` — so Spark
-    and the oracle produce bit-identical ranks with zero float
-    accumulation (the standard double-precision PageRank cannot
-    cross-check this way because parallel sum order varies).
+    propagation: ``_PR_ITERS`` fixed power iterations of damped PageRank
+    over the mirrored edge list, unrolled the same way in the oracle.
+    All arithmetic is e6-scaled BIGINT with floor division — per-edge
+    contribution ``rank div degree``, exact integer sum, then
+    ``150000 + (85 * sum) div 100`` — so Spark and the oracle produce
+    bit-identical ranks with zero float accumulation (the standard
+    double-precision PageRank cannot cross-check this way because
+    parallel sum order varies).
 
     Scale shape: each iteration is edges ⋈ ranks (equi-join on the
     node key) + one aggregate by destination — both shuffles land on
@@ -735,38 +738,11 @@ def q21_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q21_copurchase_reach2",
     oracle=f"""
-    WITH li AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
-    half AS (
-        SELECT a.l_partkey AS src, b.l_partkey AS dst
-        FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING count(*) >= {_BASKET_MIN_PAIR_ORDERS}
-    ),
-    edges AS (
-        SELECT src, dst FROM half
-        UNION ALL
-        SELECT dst AS src, src AS dst FROM half
-    ),
+    WITH {_COPURCHASE_SQL},
     deg AS (
         SELECT src AS node, count(*) AS deg FROM edges GROUP BY 1
     ),
-    hist AS (
-        SELECT deg, CAST(count(*) AS BIGINT) AS cnt FROM deg GROUP BY 1
-    ),
-    cum AS (
-        SELECT
-            deg,
-            CAST(sum(cnt) OVER (ORDER BY deg) AS BIGINT) AS cum,
-            CAST(sum(cnt) OVER () AS BIGINT) AS n
-        FROM hist
-    ),
-    cap AS (
-        SELECT min(deg) AS cap FROM cum
-        WHERE cum * 100 >= n * {_REACH2_DEGREE_CAP_PCT}
-    ),
+    {_DEGREE_CAP_SQL},
     mid AS (
         SELECT node FROM deg, cap WHERE deg.deg <= cap.cap
     ),
@@ -801,22 +777,13 @@ def q21_copurchase_reach2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactly-k-hop expansion is one self-join of the edge list per hop;
     the closure is the distinct union of hop-1 and hop-2 frontiers.
-    Everything is exact integer keys — no float anywhere — so the hash
-    comparison is structural.
 
     Scale shape: 2-hop frontiers explode through HUBS, not edges — the
     join fan-out is Σ degree(middle)², so one super-node middle can
-    dominate the whole stage at 100×. The standard lever (same skew
-    discipline as the salted-join battery) is degree-capping the middle
-    node, and it is implemented, not just named: middles above the p95
-    degree percentile (``_REACH2_DEGREE_CAP_PCT``) are excluded from
-    the hop join (they still appear as hop-1 endpoints). The cap is
-    computed in pure integer arithmetic over the DEGREE HISTOGRAM —
-    the global cumulative window runs over distinct degree values
-    (≤ max-degree rows, ≪ nodes), never over the node table, so the
-    single-partition window stage is bounded at any scale; the 1-row
-    cap joins back via broadcast and the middle filter is a left-semi
-    equi-join on the same node-id key the hop join shuffles on.
+    dominate the whole stage at 100×. Middles above the p95 degree cap
+    are therefore excluded from the hop join (they still appear as
+    hop-1 endpoints); the middle filter is a left-semi equi-join on the
+    same node-id key the hop join shuffles on.
     """
     return reach2_over(_copurchase_edges(spark, sf_dir))
 
@@ -837,24 +804,8 @@ def reach2_over(edges: DataFrame) -> DataFrame:
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("deg")
     ).persist()
-    hist = deg.groupBy("deg").agg(F.count("*").cast("bigint").alias("cnt"))
-    w_cum = Window.orderBy("deg").rangeBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = hist.select(
-        "deg",
-        F.sum("cnt").over(w_cum).cast("bigint").alias("cum"),
-        F.sum("cnt").over(
-            Window.orderBy(F.lit(1)).rangeBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).cast("bigint").alias("n"),
-    )
-    cap = cum.filter(
-        F.col("cum") * 100 >= F.col("n") * _REACH2_DEGREE_CAP_PCT
-    ).agg(F.min("deg").alias("cap"))
     mid = (
-        deg.join(F.broadcast(cap))
+        deg.join(F.broadcast(_degree_cap(deg)))
         .filter(F.col("deg") <= F.col("cap"))
         .select("node")
     )
@@ -876,16 +827,8 @@ def reach2_over(edges: DataFrame) -> DataFrame:
 @register(
     "q21_triangle_count",
     oracle=f"""
-    WITH li AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
-    und AS (
-        SELECT a.l_partkey AS u, b.l_partkey AS v
-        FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING count(*) >= {_BASKET_MIN_PAIR_ORDERS}
-    ),
+    WITH {_COPURCHASE_SQL},
+    und AS (SELECT src AS u, dst AS v FROM half),
     deg AS (
         SELECT node, CAST(count(*) AS BIGINT) AS deg
         FROM (SELECT u AS node FROM und UNION ALL SELECT v FROM und)
@@ -2102,21 +2045,7 @@ def q21_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q21_degree_powerlaw",
     oracle=f"""
-    WITH li AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
-    half AS (
-        SELECT a.l_partkey AS src, b.l_partkey AS dst
-        FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING count(*) >= {_BASKET_MIN_PAIR_ORDERS}
-    ),
-    edges AS (
-        SELECT src, dst FROM half
-        UNION ALL
-        SELECT dst AS src, src AS dst FROM half
-    ),
+    WITH {_COPURCHASE_SQL},
     deg AS (
         SELECT src AS node, CAST(count(*) AS BIGINT) AS d
         FROM edges GROUP BY 1
@@ -2211,21 +2140,8 @@ def _kcore_oracle() -> str:
     round count stays a single constant)."""
     parts = [
         f"""
-    WITH li AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
-    und AS (
-        SELECT a.l_partkey AS u, b.l_partkey AS v
-        FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING count(*) >= {_BASKET_MIN_PAIR_ORDERS}
-    ),
-    e0 AS (
-        SELECT u AS src, v AS dst FROM und
-        UNION ALL
-        SELECT v AS src, u AS dst FROM und
-    )"""
+    WITH {_COPURCHASE_SQL},
+    e0 AS (SELECT src, dst FROM edges)"""
     ]
     for r in range(_KCORE_ROUNDS):
         parts.append(
@@ -2294,7 +2210,9 @@ def q21_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(_KCORE_ROUNDS):
         # keep is consumed by BOTH semi-joins (src side + dst side);
         # persisting it (r18) computes the round's degree aggregate
-        # once instead of once per broadcast build.
+        # once instead of once per broadcast build. Nothing unpersists
+        # it: like each round's edges, every round's keep stays cached
+        # until the caller's clearCache.
         keep = (
             edges.groupBy("src")
             .agg(F.count("*").alias("deg"))
@@ -2313,25 +2231,77 @@ def q21_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Adamic-Adar geometry: report the top-N predicted (non-)edges.
 _AA_TOP_N = 50
 
+#: The Adamic-Adar tail in oracle SQL: score the ``wedges`` relation
+#: ``(part_a, part_b, term_e6)``, drop pairs that are already edges,
+#: rank the rest and keep the top ``_AA_TOP_N``.
+_AA_TOP_SQL = f"""scored AS (
+        SELECT part_a, part_b,
+               CAST(count(*) AS BIGINT) AS common_neighbors,
+               CAST(sum(term_e6) AS BIGINT) AS aa_score_e6
+        FROM wedges
+        GROUP BY 1, 2
+    ),
+    nonedge AS (
+        SELECT * FROM scored s
+        WHERE NOT EXISTS (
+            SELECT 1 FROM edges e
+            WHERE e.src = s.part_a AND e.dst = s.part_b
+        )
+    )
+    SELECT CAST(rank AS BIGINT) AS rank,
+           part_a, part_b, common_neighbors, aa_score_e6
+    FROM (
+        SELECT part_a, part_b, common_neighbors, aa_score_e6,
+               row_number() OVER (
+                   ORDER BY aa_score_e6 DESC, part_a ASC, part_b ASC
+               ) AS rank
+        FROM nonedge
+    )
+    WHERE rank <= {_AA_TOP_N}"""
+
+
+def _aa_term_e6(deg: Column) -> Column:
+    """A wedge center's Adamic-Adar weight, round(1e6 / ln(DEG)) as a
+    BIGINT: the one transcendental, quantized ONCE so pair scores are
+    exact BIGINT sums that both engines add identically in any order
+    (the ln-once-then-integer-fold rule of x04_lm_quality_score)."""
+    return (
+        F.round(F.lit(1_000_000.0) / F.log(deg))
+        .cast("bigint")
+        .alias("term_e6")
+    )
+
+
+def _aa_top(wedges: DataFrame, edges: DataFrame) -> DataFrame:
+    """Score WEDGES ``(part_a, part_b, term_e6)`` per pair, drop the
+    pairs already in EDGES (left-anti), and rank the top
+    ``_AA_TOP_N`` by score then ids: a distributed
+    TakeOrderedAndProject (never a global sort), then ``row_number``
+    over its N rows."""
+    scored = wedges.groupBy("part_a", "part_b").agg(
+        F.count("*").cast("bigint").alias("common_neighbors"),
+        F.sum("term_e6").cast("bigint").alias("aa_score_e6"),
+    )
+    nonedge = scored.join(
+        edges,
+        (scored.part_a == edges.src) & (scored.part_b == edges.dst),
+        "left_anti",
+    )
+    order = (
+        F.col("aa_score_e6").desc(),
+        F.col("part_a").asc(),
+        F.col("part_b").asc(),
+    )
+    top = nonedge.orderBy(*order).limit(_AA_TOP_N)
+    return top.withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("bigint")
+    ).select("rank", "part_a", "part_b", "common_neighbors", "aa_score_e6")
+
 
 @register(
     "q21_adamic_adar",
     oracle=f"""
-    WITH li AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
-    half AS (
-        SELECT a.l_partkey AS src, b.l_partkey AS dst
-        FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING count(*) >= {{min_pair}}
-    ),
-    edges AS (
-        SELECT src, dst FROM half
-        UNION ALL
-        SELECT dst AS src, src AS dst FROM half
-    ),
+    WITH {_COPURCHASE_SQL},
     term AS (
         -- deg >= 2: a deg-1 node can never be a wedge center, and at
         -- deg=1 ln(deg)=0 diverges cross-engine (Spark round(Inf) ->
@@ -2342,35 +2312,14 @@ _AA_TOP_N = 50
         FROM edges GROUP BY 1
         HAVING count(*) >= 2
     ),
-    scored AS (
-        SELECT a.dst AS part_a, b.dst AS part_b,
-               CAST(count(*) AS BIGINT) AS common_neighbors,
-               CAST(sum(t.term_e6) AS BIGINT) AS aa_score_e6
+    wedges AS (
+        SELECT a.dst AS part_a, b.dst AS part_b, t.term_e6
         FROM edges a
         JOIN edges b ON a.src = b.src AND a.dst < b.dst
         JOIN term t ON t.v = a.src
-        GROUP BY 1, 2
     ),
-    nonedge AS (
-        SELECT * FROM scored s
-        WHERE NOT EXISTS (
-            SELECT 1 FROM edges e
-            WHERE e.src = s.part_a AND e.dst = s.part_b
-        )
-    )
-    SELECT CAST(rank AS BIGINT) AS rank,
-           part_a, part_b, common_neighbors, aa_score_e6
-    FROM (
-        SELECT part_a, part_b, common_neighbors, aa_score_e6,
-               row_number() OVER (
-                   ORDER BY aa_score_e6 DESC, part_a ASC, part_b ASC
-               ) AS rank
-        FROM nonedge
-    )
-    WHERE rank <= {{top_n}}
-    """.replace("{min_pair}", str(_BASKET_MIN_PAIR_ORDERS)).replace(
-        "{top_n}", str(_AA_TOP_N)
-    ),
+    {_AA_TOP_SQL}
+    """,
     tags=("analytics", "graph", "link-prediction"),
 )
 def q21_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2379,22 +2328,13 @@ def q21_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     NON-edges by their common neighborhood, down-weighting hub
     neighbors by 1/ln(deg) — "which parts will be co-purchased next".
 
-    Exact-integer discipline for the one transcendental: each center's
-    contribution is quantized ONCE as term_e6 = round(1e6/ln(deg))
-    (deg ≥ 2 for any wedge center — it touches both endpoints — so ln
-    is never 0), and pair scores are exact BIGINT sums of those terms —
-    both engines add identical integers in any order. The same
-    ln-once-then-integer-fold rule as x04_lm_quality_score.
-
     Scale shape: one wedge join (edges ⋈ edges on the center vertex =
-    ONE shuffle on v), one (part_a, part_b) aggregation, one left-anti
-    against the existing edge list, then a distributed
-    TakeOrderedAndProject for the top-50 (``_AA_TOP_N``; never a global
-    sort). Wedge fan-out is Σ deg(v)² — on a skewed graph the hub
-    centers dominate, which is why the basket floor prunes singleton
-    pairs first and production would cap or salt hub degrees (the
-    reach2 precedent); the unfiltered exact form is the semantics the
-    oracle checks here.
+    ONE shuffle on v), one (part_a, part_b) aggregation, then the
+    shared top-N tail (:func:`_aa_top`). Wedge fan-out is Σ deg(v)² —
+    on a skewed graph the hub centers dominate, which is why the basket
+    floor prunes singleton pairs first; ``q21_adamic_adar_capped`` is
+    the hub-capped form, and this unfiltered exact form is the
+    semantics the oracle checks here.
     """
     edges = _copurchase_edges(spark, sf_dir).persist()
     term = (
@@ -2405,85 +2345,23 @@ def q21_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         # divergence trap (Spark round(Inf)->Long.MaxValue vs DuckDB
         # NULL) if this relation is ever reused.
         .filter(F.col("deg") >= 2)
-        .select(
-            "v",
-            F.round(F.lit(1_000_000.0) / F.log(F.col("deg")))
-            .cast("bigint")
-            .alias("term_e6"),
-        )
+        .select("v", _aa_term_e6(F.col("deg")))
     )
     a = edges.select(F.col("src").alias("v"), F.col("dst").alias("part_a"))
     b = edges.select(F.col("src").alias("v"), F.col("dst").alias("part_b"))
     wedges = a.join(b, "v").filter(F.col("part_a") < F.col("part_b"))
-    scored = (
-        wedges.join(term, "v")
-        .groupBy("part_a", "part_b")
-        .agg(
-            F.count("*").cast("bigint").alias("common_neighbors"),
-            F.sum("term_e6").cast("bigint").alias("aa_score_e6"),
-        )
-    )
-    nonedge = scored.join(
-        edges,
-        (scored.part_a == edges.src) & (scored.part_b == edges.dst),
-        "left_anti",
-    )
-    top = nonedge.orderBy(
-        F.col("aa_score_e6").desc(),
-        F.col("part_a").asc(),
-        F.col("part_b").asc(),
-    ).limit(_AA_TOP_N)
-    w = Window.orderBy(
-        F.col("aa_score_e6").desc(),
-        F.col("part_a").asc(),
-        F.col("part_b").asc(),
-    )
-    return top.withColumn(
-        "rank", F.row_number().over(w).cast("bigint")
-    ).select("rank", "part_a", "part_b", "common_neighbors", "aa_score_e6")
-
-
-#: Wedge-center degree cap percentile for the capped Adamic-Adar —
-#: same p95 discipline as the reach2 middle cap.
-_AA_CAP_PCT = 95
+    return _aa_top(wedges.join(term, "v"), edges)
 
 
 @register(
     "q21_adamic_adar_capped",
     oracle=f"""
-    WITH li AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
-    half AS (
-        SELECT a.l_partkey AS src, b.l_partkey AS dst
-        FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-        HAVING count(*) >= {{min_pair}}
-    ),
-    edges AS (
-        SELECT src, dst FROM half
-        UNION ALL
-        SELECT dst AS src, src AS dst FROM half
-    ),
+    WITH {_COPURCHASE_SQL},
     deg AS (
         SELECT src AS v, CAST(count(*) AS BIGINT) AS deg
         FROM edges GROUP BY 1
     ),
-    hist AS (
-        SELECT deg, CAST(count(*) AS BIGINT) AS cnt FROM deg GROUP BY 1
-    ),
-    cum AS (
-        SELECT
-            deg,
-            CAST(sum(cnt) OVER (ORDER BY deg) AS BIGINT) AS cum,
-            CAST(sum(cnt) OVER () AS BIGINT) AS n
-        FROM hist
-    ),
-    cap AS (
-        SELECT min(deg) AS cap FROM cum
-        WHERE cum * 100 >= n * {{cap_pct}}
-    ),
+    {_DEGREE_CAP_SQL},
     term AS (
         -- capped centers only: deg in [2, p95-cap]. deg >= 2 keeps the
         -- ln(1)=0 divergence out (see q21_adamic_adar); deg <= cap is
@@ -2492,41 +2370,20 @@ _AA_CAP_PCT = 95
         FROM deg, cap
         WHERE deg >= 2 AND deg <= cap.cap
     ),
-    scored AS (
-        SELECT a.dst AS part_a, b.dst AS part_b,
-               CAST(count(*) AS BIGINT) AS common_neighbors,
-               CAST(sum(t.term_e6) AS BIGINT) AS aa_score_e6
+    wedges AS (
+        SELECT a.dst AS part_a, b.dst AS part_b, t.term_e6
         FROM edges a
         JOIN term t ON t.v = a.src
         JOIN edges b ON a.src = b.src AND a.dst < b.dst
-        GROUP BY 1, 2
     ),
-    nonedge AS (
-        SELECT * FROM scored s
-        WHERE NOT EXISTS (
-            SELECT 1 FROM edges e
-            WHERE e.src = s.part_a AND e.dst = s.part_b
-        )
-    )
-    SELECT CAST(rank AS BIGINT) AS rank,
-           part_a, part_b, common_neighbors, aa_score_e6
-    FROM (
-        SELECT part_a, part_b, common_neighbors, aa_score_e6,
-               row_number() OVER (
-                   ORDER BY aa_score_e6 DESC, part_a ASC, part_b ASC
-               ) AS rank
-        FROM nonedge
-    )
-    WHERE rank <= {{top_n}}
-    """.replace("{min_pair}", str(_BASKET_MIN_PAIR_ORDERS))
-    .replace("{cap_pct}", str(_AA_CAP_PCT))
-    .replace("{top_n}", str(_AA_TOP_N)),
+    {_AA_TOP_SQL}
+    """,
     tags=("analytics", "graph", "link-prediction", "skew"),
 )
 def q21_adamic_adar_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q21: Adamic-Adar with the hub-cap made PHYSICAL (r08 verdict
-    item 4) — wedge centers above the p95 degree percentile are
-    excluded from the self-join, so the Σ deg(v)² fan-out is bounded by
+    item 4) — wedge centers above the p95 degree cap are excluded from
+    the self-join, so the Σ deg(v)² fan-out is bounded by
     cap²·|centers| instead of being dominated by a handful of hubs.
     This is the declared semantics of the entry (capped AA, the form a
     100 TB deployment runs), not an approximation the oracle forgives:
@@ -2534,47 +2391,21 @@ def q21_adamic_adar_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical wedge set. The exact form stays graded as
     ``q21_adamic_adar``.
 
-    Mechanics, all shared with the reach2 precedent: the cap comes from
-    the degree HISTOGRAM in pure integer arithmetic (the global
-    cumulative window runs over distinct-degree rows, ≪ nodes), joins
-    back as a broadcast 1-row relation, and — the capped form's extra
-    win — the 1/ln(deg) term relation, already restricted to capped
-    centers, is inner-joined to the a-side BEFORE the wedge self-join,
-    so the cap prunes the join INPUT rather than its output (and the
-    exact form's third join disappears: term rides the wedge build).
-    Hub parts still appear as wedge ENDPOINTS via their capped
-    neighbors; they just stop being O(deg²) centers — the standard
-    capped-AA trade (Σ capped-deg² work for a provably-bounded stage).
+    The 1/ln(deg) term relation, already restricted to capped centers,
+    is inner-joined to the a-side BEFORE the wedge self-join, so the
+    cap prunes the join INPUT rather than its output. Hub parts still
+    appear as wedge ENDPOINTS via their capped neighbors; they just
+    stop being O(deg²) centers — the standard capped-AA trade (Σ
+    capped-deg² work for a provably-bounded stage).
     """
     edges = _copurchase_edges(spark, sf_dir).persist()
     deg = edges.groupBy(F.col("src").alias("v")).agg(
         F.count("*").alias("deg")
     )
-    hist = deg.groupBy("deg").agg(F.count("*").cast("bigint").alias("cnt"))
-    w_cum = Window.orderBy("deg").rangeBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = hist.select(
-        "deg",
-        F.sum("cnt").over(w_cum).cast("bigint").alias("cum"),
-        F.sum("cnt").over(
-            Window.orderBy(F.lit(1)).rangeBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).cast("bigint").alias("n"),
-    )
-    cap = cum.filter(
-        F.col("cum") * 100 >= F.col("n") * _AA_CAP_PCT
-    ).agg(F.min("deg").alias("cap"))
     term = (
-        deg.join(F.broadcast(cap))
+        deg.join(F.broadcast(_degree_cap(deg)))
         .filter((F.col("deg") >= 2) & (F.col("deg") <= F.col("cap")))
-        .select(
-            "v",
-            F.round(F.lit(1_000_000.0) / F.log(F.col("deg")))
-            .cast("bigint")
-            .alias("term_e6"),
-        )
+        .select("v", _aa_term_e6(F.col("deg")))
     )
     a = edges.select(F.col("src").alias("v"), F.col("dst").alias("part_a"))
     b = edges.select(F.col("src").alias("v"), F.col("dst").alias("part_b"))
@@ -2584,25 +2415,4 @@ def q21_adamic_adar_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(b, "v")
         .filter(F.col("part_a") < F.col("part_b"))
     )
-    scored = wedges.groupBy("part_a", "part_b").agg(
-        F.count("*").cast("bigint").alias("common_neighbors"),
-        F.sum("term_e6").cast("bigint").alias("aa_score_e6"),
-    )
-    nonedge = scored.join(
-        edges,
-        (scored.part_a == edges.src) & (scored.part_b == edges.dst),
-        "left_anti",
-    )
-    top = nonedge.orderBy(
-        F.col("aa_score_e6").desc(),
-        F.col("part_a").asc(),
-        F.col("part_b").asc(),
-    ).limit(_AA_TOP_N)
-    w = Window.orderBy(
-        F.col("aa_score_e6").desc(),
-        F.col("part_a").asc(),
-        F.col("part_b").asc(),
-    )
-    return top.withColumn(
-        "rank", F.row_number().over(w).cast("bigint")
-    ).select("rank", "part_a", "part_b", "common_neighbors", "aa_score_e6")
+    return _aa_top(wedges, edges)

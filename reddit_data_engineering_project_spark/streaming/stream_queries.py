@@ -695,10 +695,10 @@ def _s09_sample(ev: DataFrame) -> DataFrame:
     return ev.filter(F.col("user_id").isNull() | (bucket == 0))
 
 
-@register(
-    "s09_session_gap_replay",
-    oracle="""
-    WITH ordered AS (
+#: The S9 oracles' shared gaps-and-islands sessionization of the sampled
+#: events: ``ordered`` (lag-boundary flag), ``tagged`` (running sum) and
+#: ``sess`` (per-session bounds and count), composed after ``WITH``.
+_S09_SESSIONS_SQL = f"""ordered AS (
         SELECT
             user_id,
             CAST(ts AS TIMESTAMP) AS ts,
@@ -712,7 +712,7 @@ def _s09_sample(ev: DataFrame) -> DataFrame:
                       > INTERVAL 30 MINUTE
                  THEN 1 ELSE 0 END AS new_session
         FROM events
-        WHERE ts IS NOT NULL AND {S09_SAMPLE}
+        WHERE ts IS NOT NULL AND {_S09_SAMPLE_SQL}
         WINDOW w AS (
             PARTITION BY user_id
             ORDER BY CAST(ts AS TIMESTAMP), event_id
@@ -737,7 +737,33 @@ def _s09_sample(ev: DataFrame) -> DataFrame:
             CAST(count(*) AS BIGINT) AS n_events
         FROM tagged
         GROUP BY user_id, session_seq
+    )"""
+
+
+def _s09_replay(spark: SparkSession, sf_dir: str, fold) -> DataFrame:
+    """Run the per-user replay FOLD over the sampled, dated events: one
+    pruned scan, one user_id exchange into Arrow-batched
+    ``applyInPandas``, session bounds cast back to timestamps."""
+    from .stateful import (
+        SESSION_OUT_SCHEMA,
+        cast_session_bounds,
+        ts_us_expr,
     )
+
+    ev = _s09_sample(
+        table(spark, sf_dir, "events")
+        .filter(F.col("ts").isNotNull())
+        .select("user_id", "event_id", ts_us_expr())
+    )
+    return cast_session_bounds(
+        ev.groupBy("user_id").applyInPandas(fold, schema=SESSION_OUT_SCHEMA)
+    )
+
+
+@register(
+    "s09_session_gap_replay",
+    oracle=f"""
+    WITH {_S09_SESSIONS_SQL}
     SELECT user_id, session_start, session_end, n_events,
            'gap' AS closed_by
     FROM sess
@@ -745,7 +771,7 @@ def _s09_sample(ev: DataFrame) -> DataFrame:
     -- timeout can close it); the gap-closed subset excludes it —
     -- s09_session_timeout_replay grades exactly that complement
     QUALIFY session_seq < max(session_seq) OVER (PARTITION BY user_id)
-    """.replace("{S09_SAMPLE}", _S09_SAMPLE_SQL),
+    """,
     tags=("streaming", "S9", "stateful", "sessionize"),
 )
 def s09_session_gap_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -783,22 +809,7 @@ def s09_session_gap_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(1) state per user under ``applyInPandasWithState``, keyed by user
     bucket).
     """
-    from .stateful import (
-        SESSION_OUT_SCHEMA,
-        cast_session_bounds,
-        ts_us_expr,
-    )
-
-    ev = _s09_sample(
-        table(spark, sf_dir, "events")
-        .filter(F.col("ts").isNotNull())
-        .select("user_id", "event_id", ts_us_expr())
-    )
-    return cast_session_bounds(
-        ev.groupBy("user_id").applyInPandas(
-            _replay_sessions_user, schema=SESSION_OUT_SCHEMA
-        )
-    )
+    return _s09_replay(spark, sf_dir, _replay_sessions_user)
 
 
 def _replay_sessions_user_timeout(pdf):
@@ -836,51 +847,15 @@ def _replay_sessions_user_timeout(pdf):
 
 @register(
     "s09_session_timeout_replay",
-    oracle="""
-    WITH ordered AS (
-        SELECT
-            user_id,
-            CAST(ts AS TIMESTAMP) AS ts,
-            event_id,
-            CASE WHEN lag(CAST(ts AS TIMESTAMP)) OVER w IS NULL
-                   OR CAST(ts AS TIMESTAMP)
-                      - lag(CAST(ts AS TIMESTAMP)) OVER w
-                      > INTERVAL 30 MINUTE
-                 THEN 1 ELSE 0 END AS new_session
-        FROM events
-        WHERE ts IS NOT NULL AND {S09_SAMPLE}
-        WINDOW w AS (
-            PARTITION BY user_id
-            ORDER BY CAST(ts AS TIMESTAMP), event_id
-        )
-    ),
-    tagged AS (
-        SELECT
-            user_id, ts,
-            sum(new_session) OVER (
-                PARTITION BY user_id
-                ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-            ) AS session_seq
-        FROM ordered
-    ),
-    sess AS (
-        SELECT
-            user_id,
-            session_seq,
-            min(ts) AS session_start,
-            max(ts) AS session_end,
-            CAST(count(*) AS BIGINT) AS n_events
-        FROM tagged
-        GROUP BY user_id, session_seq
-    )
+    oracle=f"""
+    WITH {_S09_SESSIONS_SQL}
     SELECT user_id, session_start, session_end, n_events,
            'timeout' AS closed_by
     FROM sess
     -- exactly the complement of s09_session_gap_replay's QUALIFY:
     -- each user's LAST session, which only a watermark timeout closes
     QUALIFY session_seq = max(session_seq) OVER (PARTITION BY user_id)
-    """.replace("{S09_SAMPLE}", _S09_SAMPLE_SQL),
+    """,
     tags=("streaming", "S9", "stateful", "sessionize", "timeout"),
 )
 def s09_session_timeout_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -909,19 +884,4 @@ def s09_session_timeout_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 1-in-8 user sample, same scale shape (one pruned scan, one
     user_id exchange into Arrow batches).
     """
-    from .stateful import (
-        SESSION_OUT_SCHEMA,
-        cast_session_bounds,
-        ts_us_expr,
-    )
-
-    ev = _s09_sample(
-        table(spark, sf_dir, "events")
-        .filter(F.col("ts").isNotNull())
-        .select("user_id", "event_id", ts_us_expr())
-    )
-    return cast_session_bounds(
-        ev.groupBy("user_id").applyInPandas(
-            _replay_sessions_user_timeout, schema=SESSION_OUT_SCHEMA
-        )
-    )
+    return _s09_replay(spark, sf_dir, _replay_sessions_user_timeout)

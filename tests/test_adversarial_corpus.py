@@ -21,7 +21,6 @@ import importlib
 import os
 import sys
 
-import duckdb
 import pytest
 
 from reddit_data_engineering_project_spark import registry
@@ -29,6 +28,7 @@ from reddit_data_engineering_project_spark import registry
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
 )
+from check_oracle import _check_entry, _oracle_db  # noqa: E402
 
 registry.load_all_operators()
 
@@ -116,12 +116,6 @@ SWEEP_FINDINGS = [
     "x00_adversarial_audit",
 ]
 
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
-
-
 @pytest.fixture(scope="module")
 def adv_sf(tmp_path_factory):
     out = str(tmp_path_factory.mktemp("advcorpus"))
@@ -137,29 +131,15 @@ def adv_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def adv_duck(adv_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(adv_sf, f"{t}.parquet").replace("'", "''")
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-        )
+    con = _oracle_db(adv_sf)
     yield con
     con.close()
 
 
 @pytest.mark.parametrize("name", SWEEP_FINDINGS)
 def test_sweep_finding_stays_green(spark, adv_sf, adv_duck, name):
-    from check_oracle import table_hash
-
-    sdf = registry.QUERIES[name](spark, adv_sf)
-    srows = [tuple(r) for r in sdf.collect()]
-    scols = sdf.columns
-    res = adv_duck.execute(registry.ORACLES[name])
-    drows = res.fetchall()
-    dcols = [d[0] for d in res.description]
-    assert sorted(scols) == sorted(dcols), (scols, dcols)
-    assert len(srows) == len(drows), (len(srows), len(drows))
-    assert table_hash(srows, scols) == table_hash(drows, dcols)
+    _, problems = _check_entry(spark, adv_duck, name, adv_sf)
+    assert not problems, f"{name}: {'; '.join(problems)}"
 
 
 # ---------------------------------------------------------------------------
@@ -242,36 +222,19 @@ def test_tool_command_line_help(tool):
     assert _TOOL_OPTIONS[tool] in _tool_help(tool)
 
 
-def _duck_for(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet").replace("'", "''")
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-        )
-    return con
-
-
 @pytest.mark.parametrize("name", DEGENERATE_FIXED_CRASHES)
 def test_degenerate_empty_sink_roundtrips_run(spark, degenerate_dirs, name):
     """The no-data-day class: partitioned write of ZERO rows, read back
     with the declared schema, aggregate — runs and hash-matches the
     oracle (both sides empty)."""
-    from check_oracle import table_hash
-
     out_empty, _ = degenerate_dirs
-    sdf = registry.QUERIES[name](spark, out_empty)
-    srows = [tuple(r) for r in sdf.collect()]
-    con = _duck_for(out_empty)
+    con = _oracle_db(out_empty)
     try:
-        res = con.execute(registry.ORACLES[name])
-        drows = res.fetchall()
-        dcols = [d[0] for d in res.description]
+        n_rows, problems = _check_entry(spark, con, name, out_empty)
     finally:
         con.close()
-    assert sorted(sdf.columns) == sorted(dcols)
-    assert len(srows) == len(drows) == 0
-    assert table_hash(srows, sdf.columns) == table_hash(drows, dcols)
+    assert not problems, f"{name}: {'; '.join(problems)}"
+    assert n_rows == 0
 
 
 def test_degenerate_rollup_divergence_is_exactly_documented(
@@ -285,7 +248,7 @@ def test_degenerate_rollup_divergence_is_exactly_documented(
         (out_empty, ("q09_cube", "q09_rollup")),
         (out_one, ("q09_rollup",)),
     ):
-        con = _duck_for(sf_dir)
+        con = _oracle_db(sf_dir)
         try:
             for name in names:
                 srows = registry.QUERIES[name](spark, sf_dir).collect()
@@ -298,7 +261,7 @@ def test_degenerate_rollup_divergence_is_exactly_documented(
     # input MATCHES (the divergence needs an EMPTY aggregate input)
     _, out_one = degenerate_dirs
     srows = registry.QUERIES["q09_cube"](spark, out_one).collect()
-    con = _duck_for(out_one)
+    con = _oracle_db(out_one)
     try:
         drows = con.execute(registry.ORACLES["q09_cube"]).fetchall()
     finally:

@@ -17,7 +17,7 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
 
-from check_oracle import _check_entry, _oracle_db  # noqa: E402
+from check_oracle import TABLE_NAMES, _check_entry, _oracle_db  # noqa: E402
 from conftest import SF_DIR  # noqa: E402
 
 from reddit_data_engineering_project_spark import registry  # noqa: E402
@@ -52,3 +52,18 @@ def test_entry_smoke(spark):
 def test_oracle_contract(spark, oracle_db, name):
     _, problems = _check_entry(spark, oracle_db, name, SF_DIR)
     assert not problems, f"{name}: {'; '.join(problems)}"
+
+
+def test_oracle_db_reads_a_corpus_path_with_a_quote(tmp_path):
+    """A ``'`` in the corpus directory name is escaped in the view SQL,
+    not a syntax error."""
+    corpus = tmp_path / "o'brien corpus"
+    corpus.mkdir()
+    for t in TABLE_NAMES:
+        (corpus / f"{t}.parquet").symlink_to(os.path.join(SF_DIR, f"{t}.parquet"))
+    con = _oracle_db(str(corpus))
+    try:
+        n = con.execute("SELECT count(*) FROM region").fetchone()[0]
+    finally:
+        con.close()
+    assert n == 5

@@ -437,23 +437,16 @@ def test_null_text_corpus_runs_payload_and_udf_paths(spark, tmp_path):
     import os
     import sys
 
-    import duckdb
-
     sys.path.insert(
         0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
     )
     import degenerate_corpus as deg
-    from check_oracle import table_hash
+    from check_oracle import _check_entry, _oracle_db
 
     out = str(tmp_path / "null_text")
     deg.write_null_column("/root/testdata/sf0.001", out, "text", "documents")
 
-    con = duckdb.connect()
-    for t in deg.TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{out}/{t}.parquet')"
-        )
+    con = _oracle_db(out)
     try:
         for name in (
             "q17_array_funcs",
@@ -463,15 +456,8 @@ def test_null_text_corpus_runs_payload_and_udf_paths(spark, tmp_path):
             "x05_frame_sample",
             "x05_payload_resize",
         ):
-            sdf = registry.QUERIES[name](spark, out)
-            srows = [tuple(r) for r in sdf.collect()]
-            res = con.execute(registry.ORACLES[name])
-            drows = res.fetchall()
-            dcols = [d[0] for d in res.description]
-            assert sorted(sdf.columns) == sorted(dcols), name
-            assert table_hash(srows, list(sdf.columns)) == table_hash(
-                drows, dcols
-            ), name
+            _, problems = _check_entry(spark, con, name, out)
+            assert not problems, f"{name}: {'; '.join(problems)}"
         # the size(NULL) law itself, directly
         from pyspark.sql import functions as F
 

@@ -19,8 +19,6 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
-
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
@@ -75,7 +73,7 @@ def test_null_key_corpora_hash_match_representative_entries(
     and NULL o_custkey makes the star join's fact rows matchless on
     both engines (q10_star_report)."""
     import degenerate_corpus as deg
-    from check_oracle import table_hash
+    from check_oracle import _check_entry, _oracle_db
 
     specs = [
         ("lang", "documents", "x04_language_id"),
@@ -85,24 +83,14 @@ def test_null_key_corpora_hash_match_representative_entries(
     for col, tbl, entry in specs:
         out = str(tmp_path / f"null_{col}")
         deg.write_null_column(SF_DIR, out, col, tbl)
-        con = duckdb.connect()
+        con = _oracle_db(out)
         try:
-            for t in deg.TABLES:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{out}/{t}.parquet')"
-                )
-            sdf = registry.QUERIES[entry](spark, out)
-            srows = [tuple(r) for r in sdf.collect()]
-            res = con.execute(registry.ORACLES[entry])
-            drows = res.fetchall()
-            dcols = [d[0] for d in res.description]
-            assert sorted(sdf.columns) == sorted(dcols), entry
-            assert table_hash(srows, list(sdf.columns)) == table_hash(
-                drows, dcols
-            ), f"{entry} diverged on all-NULL {tbl}.{col}"
+            _, problems = _check_entry(spark, con, entry, out)
         finally:
             con.close()
+        assert not problems, (
+            f"{entry} diverged on all-NULL {tbl}.{col}: {'; '.join(problems)}"
+        )
 
 
 def test_concat_ws_null_array_law():
@@ -154,36 +142,27 @@ def test_null_embedding_exclusion_semantics(spark, tmp_path):
     and x03_pairwise_label_centroids diverged outright (0 Spark groups
     vs NULL oracle centroids) before the exclusion landed."""
     import degenerate_corpus as deg
-    from check_oracle import table_hash
+    from check_oracle import _check_entry, _oracle_db
 
     out = str(tmp_path / "emb_half")
     deg.write_partial_null(
         SF_DIR, out, "embedding", "embeddings",
         "vec_id", 2,
     )
-    con = duckdb.connect()
+    con = _oracle_db(out)
     try:
-        for t in deg.TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{out}/{t}.parquet')"
-            )
         for entry in (
             "x03_cosine_topk_bruteforce",
             "x03_pairwise_label_centroids",
             "x03_kmeans_step",
             "x02_semantic_dedup",
         ):
-            sdf = registry.QUERIES[entry](spark, out)
-            srows = [tuple(r) for r in sdf.collect()]
-            assert srows, f"{entry}: embedded rows must still score"
-            res = con.execute(registry.ORACLES[entry])
-            drows = res.fetchall()
-            dcols = [d[0] for d in res.description]
-            assert sorted(sdf.columns) == sorted(dcols), entry
-            assert table_hash(srows, list(sdf.columns)) == table_hash(
-                drows, dcols
-            ), f"{entry} diverged on half-NULL embeddings"
+            n_rows, problems = _check_entry(spark, con, entry, out)
+            assert n_rows, f"{entry}: embedded rows must still score"
+            assert not problems, (
+                f"{entry} diverged on half-NULL embeddings: "
+                f"{'; '.join(problems)}"
+            )
     finally:
         con.close()
 

@@ -244,27 +244,19 @@ def test_negated_key_corpus_keeps_x00_total(tmp_path):
     total over negative event_ids (the floored-mod/floored-div
     discipline) — pinned by a direct Spark-vs-DuckDB hash on a negated
     corpus, the shape that caught the 372-row session drift."""
-    import duckdb
-
     import degenerate_corpus as deg
-    from check_oracle import table_hash
+    from check_oracle import _check_entry, _oracle_db
     from reddit_data_engineering_project_spark import registry
     from reddit_data_engineering_project_spark.session import get_spark
 
     registry.load_all_operators()
     out = str(tmp_path / "neg_events")
     deg.write_negate_column(SF_DIR, out, "event_id", "events")
-    spark = get_spark()
-    sdf = registry.QUERIES["x00_adversarial_audit"](spark, out)
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    for t in deg.TABLES:
-        con.execute(
-            f"create view {t} as select * from "
-            f"read_parquet('{out}/{t}.parquet')"
+    con = _oracle_db(out)
+    try:
+        _, problems = _check_entry(
+            get_spark(), con, "x00_adversarial_audit", out
         )
-    cur = con.execute(registry.ORACLES["x00_adversarial_audit"])
-    cols = [d[0] for d in cur.description]
-    drows = cur.fetchall()
-    assert len(srows) == len(drows)
-    assert table_hash(srows, sdf.columns) == table_hash(drows, cols)
+    finally:
+        con.close()
+    assert not problems, "; ".join(problems)

@@ -133,32 +133,22 @@ def test_case_over_bucket_null_on_out_of_range():
 
 
 def _spark_vs_oracle(tmp_corpus: str, name: str):
-    import duckdb
     import sys, os
     sys.path.insert(
         0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
     )
-    import degenerate_corpus as deg
-    from check_oracle import table_hash
+    from check_oracle import _check_entry, _oracle_db
     from reddit_data_engineering_project_spark import registry
     from reddit_data_engineering_project_spark.session import get_spark
 
     registry.load_all_operators()
-    spark = get_spark()
-    sdf = registry.QUERIES[name](spark, tmp_corpus)
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    for t in deg.TABLES:
-        con.execute(
-            f"create view {t} as select * from "
-            f"read_parquet('{tmp_corpus}/{t}.parquet')"
-        )
-    cur = con.execute(registry.ORACLES[name])
-    cols = [d[0] for d in cur.description]
-    drows = cur.fetchall()
-    assert len(srows) == len(drows), f"{name}: row counts diverge"
-    assert table_hash(srows, sdf.columns) == table_hash(drows, cols), (
-        f"{name}: value hash diverges on the hostile corpus"
+    con = _oracle_db(tmp_corpus)
+    try:
+        _, problems = _check_entry(get_spark(), con, name, tmp_corpus)
+    finally:
+        con.close()
+    assert not problems, (
+        f"{name}: diverges on the hostile corpus: {'; '.join(problems)}"
     )
 
 

@@ -13,7 +13,6 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 from pyspark.errors import SparkRuntimeException
 
@@ -26,7 +25,7 @@ from reddit_data_engineering_project_spark.operators.dedup import (
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
 )
-from check_oracle import TABLE_NAMES, table_hash  # noqa: E402
+from check_oracle import _check_entry, _oracle_db  # noqa: E402
 
 registry.load_all_operators()
 
@@ -48,11 +47,7 @@ OVERLAP_ENTRIES = (
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF01}/{t}.parquet')"
-        )
+    con = _oracle_db(SF01)
     yield con
     con.close()
 
@@ -60,18 +55,11 @@ def duck():
 @pytest.mark.parametrize("name", OVERLAP_ENTRIES)
 def test_overlap_entry_matches_oracle(spark, duck, name):
     try:
-        sdf = registry.QUERIES[name](spark, SF01)
-        scols = sdf.columns
-        srows = [tuple(r) for r in sdf.collect()]
+        n_rows, problems = _check_entry(spark, duck, name, SF01)
     finally:
         spark.catalog.clearCache()
-    res = duck.execute(registry.ORACLES[name])
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-    assert srows, f"{name}: empty result proves nothing on sf0.01"
-    assert len(srows) == len(drows)
-    assert sorted(scols) == sorted(dcols)
-    assert table_hash(srows, scols) == table_hash(drows, dcols)
+    assert n_rows, f"{name}: empty result proves nothing on sf0.01"
+    assert not problems, f"{name}: {'; '.join(problems)}"
 
 
 def test_simhash_lane_overflow_rejects_document(spark):

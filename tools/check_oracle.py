@@ -96,14 +96,14 @@ def oracle_tables(sql: str) -> set[str]:
 
 
 def _oracle_db(sf: str):
-    """A fresh DuckDB connection with one view per corpus table at ``sf``."""
+    """A fresh DuckDB connection with one view per corpus table at ``sf``
+    (a ``'`` in the path is escaped as ``''`` inside the SQL literal)."""
     import duckdb
 
     con = duckdb.connect()
     for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
-        )
+        path = os.path.join(sf, f"{t}.parquet").replace("'", "''")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
 
 
