@@ -945,18 +945,13 @@ def x02_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The step that makes pairwise dedup actionable: a training pipeline
     keeps one canonical doc per duplicate CLUSTER, and pairs alone
     under-delete chains (a~b, b~c with a≁c must still collapse to one
-    survivor). Connected components via iterative min-label propagation
-    over the verified-pair edge set: every doc starts as its own label;
-    each round every doc takes the min label among itself and its
-    neighbors; fixpoint = per-component min doc_id, the deterministic
-    canonical survivor.
+    survivor). Connected components over the verified-pair edge set,
+    each labelled by its min doc_id, the deterministic canonical
+    survivor.
 
     Scale shape: the edge set is the LSH-verified pair list — orders of
-    magnitude smaller than the corpus — so every iteration shuffles
-    O(edges), never O(docs); rounds = component diameter, and near-dup
-    components are short chains in practice. Labels are localCheckpointed
-    per round (lineage stays flat); the convergence test moves ONE scalar
-    to the driver per round — control plane, not a data collect. The
+    magnitude smaller than the corpus — so it is collected once and
+    labelled on the driver (:func:`propagate_min_labels`). The
     oracle computes the same components with a recursive CTE, so even
     this iterative operator is hash-checked end-to-end.
     """
@@ -974,115 +969,51 @@ def x02_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def propagate_min_labels(pairs: DataFrame) -> DataFrame:
-    """Connected components of a (doc_a, doc_b) pair set → (doc, label).
+    """Connected components of a (doc_a, doc_b) pair set → (doc, label),
+    label = the minimum doc id of the doc's component (shared by the
+    cluster-assignment and keep-best entries).
 
-    Iterative min-label propagation (shared by the cluster-assignment
-    and keep-best entries): every doc starts as its own label; each
-    round every doc takes the min label among itself and its neighbors;
-    fixpoint = per-component min doc_id.
+    One action collects the pairs as Arrow and the components are
+    labelled on the driver; the labels come back as a local relation
+    built from a ``pyarrow.Table``, typed like the pair ids. Verified
+    near-dup pairs are few by construction (100-150 in perfbench's
+    corpora, 256 at sf0.1), and any distributed algorithm pays at least
+    one Spark job per round, each re-reading the pairs: a distributed
+    min-label loop costs perfbench's ``neardup_components`` op 38 jobs,
+    the collect 20. Measured on 4 cores with a 2 GB driver JVM, the
+    collect beat that loop at every size from 1k to 1M edges (100k:
+    1.3 s vs 5.6 s wall; 1M: 7.1 s vs 24 s) and labelled 4M edges in
+    6.3 s with the driver's Python process ~550 MB above its starting
+    size (sweep in CHANGES.md). A pair set whose Arrow batches exceed
+    ``spark.driver.maxResultSize`` fails the collect loudly.
 
-    Fixpoint detection: per-doc labels are monotonically non-increasing
-    (min over a growing neighborhood), so the total label sum strictly
-    decreases every round until convergence. Comparing one scalar sum
-    per round replaces a join-based diff — one cheap agg over the
-    just-checkpointed labels instead of a join + count job (measured
-    ~2× on the whole query at sf0.1, round 6). The sum runs in
-    ``decimal(38,0)``, not long: this helper is generic over any id
-    space, and a 64-bit-id caller's long sum could wrap and alias two
-    different label states as "converged" (silently split components);
-    38 digits hold billions of 2^63-scale labels exactly.
-
-    Round count: the first 3 rounds are plain neighbor-min — real
-    near-dup components are short chains and converge inside them at
-    zero extra cost (measured: adding the jump join unconditionally
-    cost +40% at sf0.1 for nothing). If a fixpoint has NOT landed by
-    then, the component has a long chain and every later round appends
-    pointer jumping (``label <- label(label)``, the path-halving step):
-    propagation distance then roughly doubles per round, so a
-    diameter-d chain converges in O(log d) rounds instead of O(d) — on
-    a 100 TB corpus where one pathological quote-chain can be
-    thousands of hops, that is ~12 Spark jobs instead of thousands.
-    The jump is one self-join keyed on the label (O(docs-in-edges),
-    bounded by 2·edges); monotonicity survives because labels[x] <= x
-    for every x, hence label(label) <= label, so the sum test's strict
-    decrease argument is unchanged.
+    Labelling: ids are ranked (``np.unique``) so rank order is id
+    order; every round hooks the larger of each edge's two roots under
+    the smaller and then pointer-jumps until every tree is a star. A
+    root's label only ever decreases, and only ever to an id of its own
+    component, so when every edge joins equal roots each component is
+    one star whose root is its minimum id. Null ids fail loudly in
+    ``to_numpy`` (zero-copy conversion of an array with nulls).
     """
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(
-            pairs.select(
-                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-            )
-        )
-        .persist()
-    )
-    # Lazy seed checkpoint (r18): the seed-sum aggregate below is the
-    # action that materializes it — same single-job fusion the round
-    # loop already uses (one job saved per query; verdict item 5: the
-    # per-round convergence check was ALREADY fused into the round's
-    # checkpoint materialization, so observe() has nothing left to fuse
-    # — each round is one action, and the fixpoint decision needs the
-    # sum on the driver before the next round can be planned).
-    labels = (
-        edges.select(F.col("src").alias("doc"))
-        .dropDuplicates()
-        .withColumn("label", F.col("doc"))
-        .localCheckpoint(eager=False)
-    )
-    _dsum = F.sum(F.col("label").cast("decimal(38,0)"))
-    prev_sum = labels.agg(_dsum).first()[0]
-    # 3 plain rounds, then 20 doubling rounds: covers any diameter
-    # below ~2^20 — loud-fail beyond that means a broken edge artifact,
-    # not a real corpus.
-    for round_no in range(23):
-        nbr = edges.join(labels, edges.src == labels.doc).select(
-            F.col("dst").alias("doc"), "label"
-        )
-        stepped = (
-            labels.unionByName(nbr)
-            .groupBy("doc")
-            .agg(F.min("label").alias("label"))
-        )
-        if round_no >= 3:
-            # Pointer jumping (path halving): label <- label(label).
-            # Every label value is itself a doc in `stepped` (labels
-            # are mins over doc ids that all appear as keys), so the
-            # self-join is total; coalesce only guards the theoretical
-            # miss.
-            jump = stepped.select(
-                F.col("doc").alias("jdoc"), F.col("label").alias("jlabel")
-            )
-            stepped = stepped.join(
-                jump, stepped.label == F.col("jdoc"), "left"
-            ).select(
-                "doc",
-                F.coalesce("jlabel", "label").alias("label"),
-            )
-        # Lazy checkpoint: the convergence aggregate below is the action
-        # that materializes it, so each round costs ONE job (materialize
-        # + agg fused) instead of two (eager checkpoint, then agg).
-        # (r17 note: batching the convergence test to every second round
-        # was tried and MEASURED WORSE — 4.6 s → 11.9 s on
-        # x02_dedup_clusters at sf0.1 — because a two-round stride only
-        # detects a fixpoint once an entire stride is quiescent, which
-        # pushes short-diameter corpora 2-3 extra rounds into the
-        # pointer-jump regime. Per-round detection stands.)
-        new_labels = stepped.localCheckpoint(eager=False)
-        new_sum = new_labels.agg(_dsum).first()[0]
-        labels = new_labels
-        if new_sum == prev_sum:
+    import numpy as np
+    import pyarrow as pa
+
+    edges = pairs.select("doc_a", "doc_b").toArrow()
+    a = edges.column("doc_a").combine_chunks().to_numpy()
+    b = edges.column("doc_b").combine_chunks().to_numpy()
+    ids, ranks = np.unique(np.concatenate([a, b]), return_inverse=True)
+    src, dst = ranks[: len(a)], ranks[len(a) :]
+    root = np.arange(len(ids))
+    while True:
+        ra, rb = root[src], root[dst]
+        if np.array_equal(ra, rb):
             break
-        prev_sum = new_sum
-    else:
-        # Exhausting the iteration budget without a fixpoint would
-        # silently split components — fail loudly instead: 2^20-scale
-        # effective diameter is not a plausible duplicate chain.
-        raise RuntimeError(
-            "label propagation did not converge within 3 plain + 20 "
-            "doubling rounds"
-        )
-    edges.unpersist()
-    return labels
+        np.minimum.at(root, np.maximum(ra, rb), np.minimum(ra, rb))
+        while not np.array_equal(jumped := root[root], root):
+            root = jumped
+    return pairs.sparkSession.createDataFrame(
+        pa.table({"doc": ids, "label": ids[root]})
+    )
 
 
 @register(
@@ -1266,7 +1197,8 @@ def x02_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     by min doc_id for determinism.
 
     Scale shape: components come from the shared label-propagation
-    helper (O(edges) per round); the scoring join touches only clustered
+    helper (one collect of the verified pairs and a driver pass over
+    them); the scoring join touches only clustered
     docs (a small minority of the corpus by construction) and the
     survivor pick is one window over |clustered docs| keyed by cluster.
     """

@@ -786,10 +786,10 @@ def x03_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "x03_pq_topk",
-    oracle="""
-    WITH g AS (
+#: DuckDB twin of :func:`_global_icode`: the leading CTEs ``g`` (the
+#: one global scale) and ``enc(vec_id, icode)`` of both PQ oracles,
+#: composed by f-string like ``dedup._OVERLAP_SQL``.
+_ICODE_SQL = """g AS (
         SELECT greatest(
                    max(list_max(list_transform(
                        CAST(embedding AS DOUBLE[]), x -> abs(x)))),
@@ -804,7 +804,121 @@ def x03_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                              AS BIGINT)) AS icode
         FROM embeddings CROSS JOIN g
         WHERE embedding IS NOT NULL
-    ),
+    )"""
+
+
+def _subspace_l2_sql(vec: str) -> str:
+    """DuckDB twin of one :func:`_subspace_dists` entry: the squared L2
+    of ``vec``'s j-th 8-dim subvector to the same slice of ``ct``."""
+    return (
+        "CAST(list_sum(list_transform(generate_series((j - 1) * 8 + 1, j * 8), "
+        f"i -> ({vec}[i] - ct[i]) * ({vec}[i] - ct[i]))) AS BIGINT)"
+    )
+
+
+def _pq_codes_sql(vec: str, cents: str) -> str:
+    """DuckDB twin of :func:`_pq_codes` (``list_position`` of the
+    minimum = first minimum = lowest centroid id)."""
+    d = f"list_transform({cents}, ct -> {_subspace_l2_sql(vec)})"
+    return (
+        "list_transform(generate_series(1, 8), "
+        f"j -> list_position({d}, list_min({d})))"
+    )
+
+
+def _l2sq(a: Column, b: Column) -> Column:
+    """Squared L2 distance of two integer arrays, summed as a long."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+
+
+def _global_icode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(vec_id, icode)``: every embedding quantized to integers on ONE
+    global scale g = max |component| (``floor(x/g·127 + 0.5)``); all PQ
+    math after it is exact integer arithmetic."""
+    emb = embedded(spark, sf_dir).select(
+        "vec_id", _vec_double("embedding").alias("e")
+    )
+    g_row = emb.agg(
+        F.greatest(
+            F.max(F.array_max(F.transform("e", lambda x: F.abs(x)))),
+            F.lit(1e-12),
+        ).alias("g")
+    )
+    return emb.crossJoin(F.broadcast(g_row)).select(
+        "vec_id",
+        F.transform(
+            "e", lambda x: F.floor(x / F.col("g") * 127.0 + 0.5).cast("long")
+        ).alias("icode"),
+    )
+
+
+def _first_codebook(df: DataFrame, vec: str, n: int, name: str) -> DataFrame:
+    """1-row codebook ``name``: the ``vec`` arrays of the rows with
+    ``vec_id < n``, in vec_id order (a seeded codebook; k-means
+    refinement would change its contents, not the plan)."""
+    return df.filter(F.col("vec_id") < n).agg(
+        F.transform(
+            F.sort_array(F.collect_list(F.struct("vec_id", vec))),
+            lambda s: s[vec],
+        ).alias(name)
+    )
+
+
+def _subspace_dists(vec: Column, cents: str) -> Column:
+    """8 x |cents| nested array: for each 8-dim subspace j of ``vec``
+    (1-based), the squared L2 to the same slice of every codebook entry
+    in column ``cents``."""
+    return F.transform(
+        F.sequence(F.lit(1), F.lit(8)),
+        lambda j: F.transform(
+            F.col(cents),
+            lambda ct: _l2sq(
+                F.slice(vec, (j - F.lit(1)) * 8 + 1, F.lit(8)),
+                F.slice(ct, (j - F.lit(1)) * 8 + 1, F.lit(8)),
+            ),
+        ),
+    )
+
+
+def _pq_codes(vec: Column, cents: str) -> Column:
+    """The 8 PQ codes of ``vec``: per subspace the 1-based position of
+    the nearest entry of ``cents`` (first minimum = lowest id)."""
+    # Two chained transforms so each 16-centroid distance array is
+    # computed ONCE per subspace (argmin = position of min over the
+    # same materialized array) — a single transform that passed the
+    # dists expression to both array_position and array_min would
+    # evaluate the 16x8 L2 work twice per subspace per row.
+    return F.transform(
+        _subspace_dists(vec, cents),
+        lambda d: F.array_position(d, F.array_min(d)),
+    )
+
+
+def _adc_dist() -> Column:
+    """ADC distance of a (query, coded vector) row: 8 lookups into the
+    query's table ``dt`` (stride ``n_cents``) at the row's ``codes``."""
+    return F.aggregate(
+        F.sequence(F.lit(1), F.lit(8)),
+        F.lit(0).cast("long"),
+        lambda acc, j: acc
+        + F.element_at(
+            F.col("dt"),
+            (
+                (j - F.lit(1)) * F.col("n_cents")
+                + F.element_at(F.col("codes"), j.cast("int"))
+            ).cast("int"),
+        ),
+    ).alias("adc_dist")
+
+
+@register(
+    "x03_pq_topk",
+    oracle=f"""
+    WITH {_ICODE_SQL},
     cb AS (
         SELECT list(icode ORDER BY vec_id) AS cents
         FROM enc WHERE vec_id < 16
@@ -813,20 +927,7 @@ def x03_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT
             e.vec_id,
             e.icode,
-            list_transform(generate_series(1, 8), j -> list_position(
-                list_transform(
-                    cb.cents,
-                    ct -> CAST(list_sum(list_transform(
-                        generate_series((j - 1) * 8 + 1, j * 8),
-                        i -> (e.icode[i] - ct[i]) * (e.icode[i] - ct[i])))
-                        AS BIGINT)),
-                list_min(list_transform(
-                    cb.cents,
-                    ct -> CAST(list_sum(list_transform(
-                        generate_series((j - 1) * 8 + 1, j * 8),
-                        i -> (e.icode[i] - ct[i]) * (e.icode[i] - ct[i])))
-                        AS BIGINT)))
-            )) AS codes
+            {_pq_codes_sql("e.icode", "cb.cents")} AS codes
         FROM enc e CROSS JOIN cb
     ),
     recon AS (
@@ -891,70 +992,23 @@ def x03_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-dim L2 — measured 4.5× on a 10× corpus (11.5 s → 2.6 s,
     SCALE.md §7).
     """
-    emb = embedded(spark, sf_dir).select(
-        "vec_id", _vec_double("embedding").alias("e")
-    )
-    g_row = emb.agg(
-        F.greatest(
-            F.max(F.array_max(F.transform("e", lambda x: F.abs(x)))),
-            F.lit(1e-12),
-        ).alias("g")
-    )
-    enc = emb.crossJoin(F.broadcast(g_row)).select(
-        "vec_id",
-        F.transform(
-            "e", lambda x: F.floor(x / F.col("g") * 127.0 + 0.5).cast("long")
-        ).alias("icode"),
-    )
-    cb = (
-        enc.filter(F.col("vec_id") < 16)
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("vec_id", "icode"))),
-                lambda s: s.icode,
-            ).alias("cents")
-        )
-    )
-
-    def _l2sq(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
-    def _subspace_dists(j):
-        # distances of this row's j-th subvector to all 16 centroids
-        return F.transform(
-            F.col("cents"),
-            lambda ct: _l2sq(
-                F.slice(F.col("icode"), (j - F.lit(1)) * 8 + 1, F.lit(8)),
-                F.slice(ct, (j - F.lit(1)) * 8 + 1, F.lit(8)),
-            ),
-        )
-
-    # Two chained transforms so each 16-centroid distance array is
-    # computed ONCE per subspace (argmin = position of min over the
-    # same materialized array) — a single transform that passed the
-    # dists expression to both array_position and array_min would
-    # evaluate the 16x8 L2 work twice per subspace per row.
+    enc = _global_icode(spark, sf_dir)
+    cb = _first_codebook(enc, "icode", 16, "cents")
     coded = enc.crossJoin(F.broadcast(cb)).select(
         "vec_id",
         "icode",
-        F.transform(
-            F.transform(F.sequence(F.lit(1), F.lit(8)), _subspace_dists),
-            lambda d: F.array_position(d, F.array_min(d)),
-        ).alias("codes"),
+        _pq_codes(F.col("icode"), "cents").alias("codes"),
         F.col("cents"),
     )
     # ADC distance tables: per query, precompute the 8x16 grid of
     # subspace-to-centroid distances ONCE (flat array, index
     # (j-1)*16 + c), so scoring a (query, db) pair is 8 table lookups
-    # + adds instead of a 64-dim L2 recomputation — the classic
-    # IVF-PQ search layout, an ~8x scoring win at |queries|x|corpus|
-    # fan-out. Equality with the reconstruction formulation is exact:
-    # L2 over the concatenated reconstruction = sum of per-subspace
-    # L2s to the chosen centroids (all integer math).
+    # + adds (:func:`_adc_dist`) instead of a 64-dim L2
+    # recomputation — the classic IVF-PQ search layout, an ~8x scoring
+    # win at |queries|x|corpus| fan-out. Equality with the
+    # reconstruction formulation is exact: L2 over the concatenated
+    # reconstruction = sum of per-subspace L2s to the chosen centroids
+    # (all integer math).
     q = (
         enc.filter(F.col("vec_id") < 5)
         .crossJoin(F.broadcast(cb))
@@ -963,40 +1017,12 @@ def x03_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             # table stride = |codebook| (16 on a full corpus, smaller on
             # tiny ones — the codebook is "first ≤16 vectors")
             F.size(F.col("cents")).alias("n_cents"),
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(8)),
-                    lambda j: F.transform(
-                        F.col("cents"),
-                        lambda ct: _l2sq(
-                            F.slice(
-                                F.col("icode"), (j - F.lit(1)) * 8 + 1, F.lit(8)
-                            ),
-                            F.slice(ct, (j - F.lit(1)) * 8 + 1, F.lit(8)),
-                        ),
-                    ),
-                )
-            ).alias("dt"),
+            F.flatten(_subspace_dists(F.col("icode"), "cents")).alias("dt"),
         )
     )
     scored = coded.join(
         F.broadcast(q), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.aggregate(
-            F.sequence(F.lit(1), F.lit(8)),
-            F.lit(0).cast("long"),
-            lambda acc, j: acc
-            + F.element_at(
-                F.col("dt"),
-                (
-                    (j - F.lit(1)) * F.col("n_cents")
-                    + F.element_at(F.col("codes"), j.cast("int"))
-                ).cast("int"),
-            ),
-        ).alias("adc_dist"),
-    )
+    ).select("query_id", F.col("vec_id").alias("neighbor_id"), _adc_dist())
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist").asc(), F.col("neighbor_id").asc()
     )
@@ -1310,22 +1336,7 @@ _IVFPQ_NPROBE = 2
 @register(
     "x03_ivfpq_topk",
     oracle=f"""
-    WITH g AS (
-        SELECT greatest(
-                   max(list_max(list_transform(
-                       CAST(embedding AS DOUBLE[]), x -> abs(x)))),
-                   1e-12) AS g
-        FROM embeddings WHERE embedding IS NOT NULL
-    ),
-    enc AS (
-        SELECT vec_id,
-               list_transform(
-                   CAST(embedding AS DOUBLE[]),
-                   x -> CAST(floor(x / g.g * 127.0 + 0.5)
-                             AS BIGINT)) AS icode
-        FROM embeddings CROSS JOIN g
-        WHERE embedding IS NOT NULL
-    ),
+    WITH {_ICODE_SQL},
     cc AS (
         SELECT list(icode ORDER BY vec_id) AS ccents
         FROM enc WHERE vec_id < {_IVFPQ_COARSE_K}
@@ -1363,20 +1374,7 @@ _IVFPQ_NPROBE = 2
         SELECT
             r.vec_id,
             r.cid,
-            list_transform(generate_series(1, 8), j -> list_position(
-                list_transform(
-                    rcb.rcents,
-                    ct -> CAST(list_sum(list_transform(
-                        generate_series((j - 1) * 8 + 1, j * 8),
-                        i -> (r.rvec[i] - ct[i]) * (r.rvec[i] - ct[i])))
-                        AS BIGINT)),
-                list_min(list_transform(
-                    rcb.rcents,
-                    ct -> CAST(list_sum(list_transform(
-                        generate_series((j - 1) * 8 + 1, j * 8),
-                        i -> (r.rvec[i] - ct[i]) * (r.rvec[i] - ct[i])))
-                        AS BIGINT)))
-            )) AS codes
+            {_pq_codes_sql("r.rvec", "rcb.rcents")} AS codes
         FROM res r CROSS JOIN rcb
     ),
     probes AS (
@@ -1417,11 +1415,7 @@ _IVFPQ_NPROBE = 2
             flatten(list_transform(
                 generate_series(1, 8),
                 j -> list_transform(
-                    rcb.rcents,
-                    ct -> CAST(list_sum(list_transform(
-                        generate_series((j - 1) * 8 + 1, j * 8),
-                        i -> (q.qrvec[i] - ct[i]) * (q.qrvec[i] - ct[i])))
-                        AS BIGINT))
+                    rcb.rcents, ct -> {_subspace_l2_sql("q.qrvec")})
             )) AS dt
         FROM qres q CROSS JOIN rcb
     ),
@@ -1476,43 +1470,12 @@ def x03_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     full distances. The per-query rank hashes by query_id at
     |queries| x |probed-lists| x list-size rows.
     """
-    emb = embedded(spark, sf_dir).select(
-        "vec_id", _vec_double("embedding").alias("e")
-    )
-    g_row = emb.agg(
-        F.greatest(
-            F.max(F.array_max(F.transform("e", lambda x: F.abs(x)))),
-            F.lit(1e-12),
-        ).alias("g")
-    )
-    enc = emb.crossJoin(F.broadcast(g_row)).select(
-        "vec_id",
-        F.transform(
-            "e", lambda x: F.floor(x / F.col("g") * 127.0 + 0.5).cast("long")
-        ).alias("icode"),
-    )
+    enc = _global_icode(spark, sf_dir)
     # Persist the 1-row coarse codebook (r17 opt): the corpus
     # assignment AND the query probing both crossJoin against it, and
     # without the cache its encode + collect aggregate executes twice.
     # Same cache lifecycle as the dedup family's intermediates.
-    cc = (
-        enc.filter(F.col("vec_id") < _IVFPQ_COARSE_K)
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("vec_id", "icode"))),
-                lambda s: s.icode,
-            ).alias("ccents")
-        )
-        .persist()
-    )
-
-    def _l2sq(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
+    cc = _first_codebook(enc, "icode", _IVFPQ_COARSE_K, "ccents").persist()
     # Coarse assignment: argmin over the broadcast centroid list, the
     # materialize-once two-transform trick from X3f.
     cdists = F.transform(
@@ -1539,35 +1502,9 @@ def x03_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x, y: x - y,
         ).alias("rvec"),
     ).persist()
-    rcb = (
-        res.filter(F.col("vec_id") < 16)
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("vec_id", "rvec"))),
-                lambda s: s.rvec,
-            ).alias("rcents")
-        )
-    )
-
-    def _sub_dists(vec_col, j):
-        return F.transform(
-            F.col("rcents"),
-            lambda ct: _l2sq(
-                F.slice(vec_col, (j - F.lit(1)) * 8 + 1, F.lit(8)),
-                F.slice(ct, (j - F.lit(1)) * 8 + 1, F.lit(8)),
-            ),
-        )
-
+    rcb = _first_codebook(res, "rvec", 16, "rcents")
     coded = res.crossJoin(F.broadcast(rcb)).select(
-        "vec_id",
-        "cid",
-        F.transform(
-            F.transform(
-                F.sequence(F.lit(1), F.lit(8)),
-                lambda j: _sub_dists(F.col("rvec"), j),
-            ),
-            lambda d: F.array_position(d, F.array_min(d)),
-        ).alias("codes"),
+        "vec_id", "cid", _pq_codes(F.col("rvec"), "rcents").alias("codes")
     )
     # Probes: per query, the nProbe nearest coarse lists by the same
     # integer distance + lowest-cid tie break (array_sort of (d, cid)
@@ -1613,31 +1550,11 @@ def x03_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         "cid",
         F.size("rcents").alias("n_cents"),
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(1), F.lit(8)),
-                lambda j: _sub_dists(F.col("qrvec"), j),
-            )
-        ).alias("dt"),
+        F.flatten(_subspace_dists(F.col("qrvec"), "rcents")).alias("dt"),
     )
     scored = coded.join(F.broadcast(qdt), "cid").filter(
         F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.aggregate(
-            F.sequence(F.lit(1), F.lit(8)),
-            F.lit(0).cast("long"),
-            lambda acc, j: acc
-            + F.element_at(
-                F.col("dt"),
-                (
-                    (j - F.lit(1)) * F.col("n_cents")
-                    + F.element_at(F.col("codes"), j.cast("int"))
-                ).cast("int"),
-            ),
-        ).alias("adc_dist"),
-    )
+    ).select("query_id", F.col("vec_id").alias("neighbor_id"), _adc_dist())
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist").asc(), F.col("neighbor_id").asc()
     )

@@ -237,6 +237,26 @@ def test_degenerate_empty_sink_roundtrips_run(spark, degenerate_dirs, name):
     assert n_rows == 0
 
 
+@pytest.mark.parametrize("corpus", [0, 1], ids=["empty", "one"])
+@pytest.mark.parametrize(
+    "name",
+    ["x02_minhash_lsh_neardup", "x02_dedup_clusters", "x02_dedup_keep_best"],
+)
+def test_degenerate_neardup_components_match_oracle(
+    spark, degenerate_dirs, corpus, name
+):
+    """Zero verified pairs: the near-dup pair query and both component
+    entries (labels from the driver path) match DuckDB with no rows."""
+    sf_dir = degenerate_dirs[corpus]
+    con = _oracle_db(sf_dir)
+    try:
+        n_rows, problems = _check_entry(spark, con, name, sf_dir)
+    finally:
+        con.close()
+    assert not problems, f"{name}: {'; '.join(problems)}"
+    assert n_rows == 0
+
+
 def test_degenerate_rollup_divergence_is_exactly_documented(
     spark, degenerate_dirs
 ):
