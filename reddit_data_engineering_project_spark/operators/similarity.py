@@ -1,24 +1,34 @@
-"""Vector similarity search (north star X3).
+"""Vector similarity search (north star X3) over the ``embeddings`` corpus.
 
-Top-k cosine neighbors over the ``embeddings`` corpus (64-dim float
-vectors), in the two forms a 100 TB pipeline needs:
+Every entry reads only the embedded rows (:func:`embedded`) as float64
+vectors, cast from float32 storage, with dot products summed in
+sequential order on both engines, so Spark and DuckDB compute
+bit-identical scores. The oracles read the same vectors from the CTE
+``_V_SQL`` (the two PQ entries from ``_ICODE_SQL``), and every oracle
+cosine is :func:`_cos_sql`.
 
-- ``x03_cosine_topk_bruteforce`` — the exact baseline: a small query set
-  broadcast against the full corpus, dot products in whole-stage codegen
-  (``zip_with`` + ``aggregate`` higher-order functions — no Python, no
-  UDF), per-query top-k via window rank. Exact, and the right plan
-  whenever |queries| is small: broadcast means the corpus is scanned
-  once, never shuffled.
-- ``x03_ann_lsh_bucketed`` — the approximate scale path: random
-  hyperplane LSH (SimHash). Each vector gets a B-bit bucket signature
-  (sign of dot with B seeded planes); candidates are corpus vectors in
-  the SAME bucket or any bucket at Hamming distance 1 (multi-probe), so
-  the join is equi on bucket id — |corpus|·(B+1) small rows shuffle, not
-  |queries|×|corpus| pairs.
+Ten entries are top-k searches or are built on one. They share one
+contract, written once per engine:
 
-All math in float64 on both engines (cast from float32 storage) with
-sequential summation order, so Spark and DuckDB produce bit-identical
-cosines and the top-k sets agree exactly.
+- the query set is the vectors with ``vec_id < _N_QUERIES``, with
+  ``vec_id`` renamed ``query_id`` (:func:`_query_set`, :func:`_q_sql`);
+- a query never scores itself: each candidate join keeps
+  ``vec_id <> query_id``;
+- each query's hits are ranked by the entry's score, ties broken by
+  ``neighbor_id`` ascending, and the first ``_TOP_K`` are kept with
+  their 1-based ``rank`` (:func:`_top_k`, :func:`_top_k_sql`);
+- recall@k of a search is counted per query against the exact
+  brute-force top-k: ``n_hits`` true neighbors found, ``k`` and
+  ``recall_e6 = round(n_hits * 1e6 / k)`` (:func:`_recall_at_k`,
+  :func:`_recall_sql`).
+
+Each entry brings its own candidate stage and score: all pairs (exact
+cosine, SQ8 and PQ codes, k-NN, packed sign bits), SimHash buckets,
+IVF lists and IVF-PQ lists. Three of them output the exact cosine
+(:func:`_cosine_top_k`). The range search reads the same query set but
+keeps every neighbor above a radius instead of a rank. The other four
+entries are the label centroids, one k-means step and two embedding
+near-dup (X2) entries.
 """
 
 from __future__ import annotations
@@ -27,7 +37,7 @@ import random
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from ..functions.numeric import dround
+from ..functions.numeric import dround, dround_sql
 from ..registry import register
 from ..tables import ensure_min_parallelism, table
 
@@ -39,9 +49,14 @@ _PLANES: list[list[float]] = [
     [_rng.gauss(0.0, 1.0) for _ in range(64)] for _ in range(_B_PLANES)
 ]
 
-#: Number of query vectors (lowest vec_ids) and neighbors per query.
+#: Query-set bound (queries are the vectors with vec_id < _N_QUERIES)
+#: and neighbors kept per query.
 _N_QUERIES = 5
 _TOP_K = 10
+
+#: IVF probe width: the coarse lists each query probes in x03_ivf_topk
+#: and x03_ivfpq_topk.
+_NPROBE = 2
 
 
 def embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,69 +104,161 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
-@register(
-    "x03_cosine_topk_bruteforce",
-    oracle="""
-    WITH v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        WHERE embedding IS NOT NULL
-    ),
-    q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 5),
-    scored AS (
-        SELECT
-            q.query_id,
-            v.vec_id AS neighbor_id,
-            list_dot_product(q.qe, v.e)
-                / (sqrt(list_dot_product(q.qe, q.qe))
-                   * sqrt(list_dot_product(v.e, v.e))) AS cos
-        FROM q JOIN v ON v.vec_id <> q.query_id
+def _query_set(df: DataFrame, *cols: Column | str) -> DataFrame:
+    """The query rows of ``df`` (``vec_id < _N_QUERIES``): ``vec_id`` as
+    ``query_id``, then ``cols``."""
+    return df.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), *cols
     )
-    SELECT query_id, neighbor_id, rank,
-           round(cos * 1000000.0) / 1000000.0 + 0.0 AS cosine_sim
-    FROM (
-        SELECT query_id, neighbor_id, cos,
-               row_number() OVER (
-                   PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC
-               ) AS rank
+
+
+def _top_k(scored: DataFrame, order: Column, k: int = _TOP_K) -> DataFrame:
+    """The rows of ``scored`` ranked ``rank <= k`` within their
+    ``query_id`` by ``order``, ties to the lower ``neighbor_id``."""
+    w = Window.partitionBy("query_id").orderBy(
+        order, F.col("neighbor_id").asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _cosine_top_k(pairs: DataFrame) -> DataFrame:
+    """Exact-cosine top-k of candidate ``pairs`` (``query_id``, ``qe``,
+    ``vec_id``, ``e``), the score emitted as ``cosine_sim`` at 6
+    decimals."""
+    scored = pairs.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        cosine(F.col("qe"), F.col("e")).alias("cos"),
+    )
+    return _top_k(scored, F.col("cos").desc()).select(
+        "query_id",
+        "neighbor_id",
+        "rank",
+        dround(F.col("cos"), 6).alias("cosine_sim"),
+    )
+
+
+def _recall_at_k(
+    spark: SparkSession, sf_dir: str, found: DataFrame
+) -> DataFrame:
+    """recall@k per query of ``found`` (``query_id``, ``neighbor_id``)
+    against the exact top-k of :func:`x03_cosine_topk_bruteforce`."""
+    exact = x03_cosine_topk_bruteforce(spark, sf_dir).select(
+        "query_id", "neighbor_id"
+    )
+    found = found.select("query_id", F.col("neighbor_id").alias("found_id"))
+    hits = exact.join(
+        found,
+        (exact["query_id"] == found["query_id"])
+        & (exact["neighbor_id"] == found["found_id"]),
+        "left",
+    ).select(exact["query_id"].alias("qid"), "found_id")
+    return hits.groupBy(F.col("qid").alias("query_id")).agg(
+        F.count("found_id").cast("bigint").alias("n_hits"),
+        F.lit(_TOP_K).cast("bigint").alias("k"),
+        F.round(F.count("found_id") * 1000000.0 / _TOP_K)
+        .cast("bigint")
+        .alias("recall_e6"),
+    )
+
+
+#: DuckDB twin of :func:`embedded` + :func:`_vec_double`: the vectors
+#: CTE ``v`` every oracle reads.
+_V_SQL = """v AS (
+        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
+        FROM embeddings WHERE embedding IS NOT NULL
+    )"""
+
+
+def _q_sql(src: str, cols: str) -> str:
+    """DuckDB twin of :func:`_query_set`: the CTE ``q`` over ``src``."""
+    return (
+        f"q AS (SELECT vec_id AS query_id, {cols} FROM {src} "
+        f"WHERE vec_id < {_N_QUERIES})"
+    )
+
+
+def _cos_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`cosine` over two DOUBLE[] expressions."""
+    return (
+        f"list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
+        f" * sqrt(list_dot_product({b}, {b})))"
+    )
+
+
+def _top_k_sql(order: str, cols: str, k: int = _TOP_K) -> str:
+    """DuckDB twin of :func:`_top_k` over the CTE ``scored``: ``cols``
+    of its rows ranked ``rank <= k``."""
+    return f"""
+    SELECT {cols} FROM (
+        SELECT *, row_number() OVER (
+            PARTITION BY query_id ORDER BY {order}, neighbor_id ASC
+        ) AS rank
         FROM scored
     )
-    WHERE rank <= 10
-    """,
+    WHERE rank <= {k}"""
+
+
+def _cosine_top_k_sql(pairs: str) -> str:
+    """DuckDB twin of :func:`_cosine_top_k`: the CTE ``scored`` over the
+    FROM clause ``pairs`` (``query_id``, ``qe``, ``vec_id``, ``e``) and
+    its top-k."""
+    return f"""scored AS (
+        SELECT query_id, vec_id AS neighbor_id,
+               {_cos_sql("qe", "e")} AS cos
+        FROM {pairs}
+    )
+    {_top_k_sql("cos DESC", "query_id, neighbor_id, rank, "
+                f"{dround_sql('cos', 6)} AS cosine_sim")}"""
+
+
+def _recall_sql(found: str) -> str:
+    """DuckDB twin of :func:`_recall_at_k` for the top-k query
+    ``found``."""
+    return f"""
+    WITH exact AS ({_BRUTEFORCE_SQL}),
+    found AS ({found})
+    SELECT
+        e.query_id,
+        CAST(count(f.neighbor_id) AS BIGINT) AS n_hits,
+        CAST({_TOP_K} AS BIGINT) AS k,
+        CAST(round(count(f.neighbor_id) * 1000000.0 / {_TOP_K}) AS BIGINT)
+            AS recall_e6
+    FROM exact e
+    LEFT JOIN found f
+      ON f.query_id = e.query_id AND f.neighbor_id = e.neighbor_id
+    GROUP BY e.query_id
+    """
+
+
+_BRUTEFORCE_SQL = f"""
+    WITH {_V_SQL},
+    {_q_sql("v", "e AS qe")},
+    {_cosine_top_k_sql("q JOIN v ON vec_id <> query_id")}
+    """
+
+
+@register(
+    "x03_cosine_topk_bruteforce",
+    oracle=_BRUTEFORCE_SQL,
     tags=("similarity", "X3"),
 )
 def x03_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3a: exact top-k cosine neighbors, query set broadcast over corpus.
 
     The corpus side never shuffles: queries broadcast, dot products run
-    inside codegen, and the per-query window ranks |corpus| rows hashed
-    by query_id. At 1000 executors this reads the corpus once, full stop.
+    inside codegen (``zip_with`` + ``aggregate``, no Python), and the
+    per-query window ranks |corpus| rows hashed by query_id. At 1000
+    executors this reads the corpus once, full stop.
     """
     emb = embedded(spark, sf_dir).select(
         "vec_id", _vec_double("embedding").alias("e")
     )
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    scored = (
+    q = _query_set(emb, F.col("e").alias("qe"))
+    return _cosine_top_k(
         emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine(F.col("qe"), F.col("e")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            dround(F.col("cos"), 6).alias("cosine_sim"),
-        )
     )
 
 
@@ -183,58 +290,37 @@ _PROBE_LIST_SQL = "[bucket, " + ", ".join(
 ) + "]"
 
 
-@register(
-    "x03_ann_lsh_bucketed",
-    oracle=f"""
-    WITH v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        WHERE embedding IS NOT NULL
-    ),
+_LSH_SQL = f"""
+    WITH {_V_SQL},
     b AS (SELECT vec_id, e, {_BUCKET_SQL} AS bucket FROM v),
-    q AS (
-        SELECT vec_id AS query_id, e AS qe, bucket
-        FROM b WHERE vec_id < 5
-    ),
+    {_q_sql("b", "e AS qe, bucket")},
     probes AS (
         SELECT query_id, qe, unnest({_PROBE_LIST_SQL}) AS bucket FROM q
     ),
-    scored AS (
-        SELECT
-            p.query_id,
-            c.vec_id AS neighbor_id,
-            list_dot_product(p.qe, c.e)
-                / (sqrt(list_dot_product(p.qe, p.qe))
-                   * sqrt(list_dot_product(c.e, c.e))) AS cos
-        FROM probes p JOIN b c USING (bucket)
-        WHERE c.vec_id <> p.query_id
-    )
-    SELECT query_id, neighbor_id, rank,
-           round(cos * 1000000.0) / 1000000.0 + 0.0 AS cosine_sim
-    FROM (
-        SELECT query_id, neighbor_id, cos,
-               row_number() OVER (
-                   PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC
-               ) AS rank
-        FROM scored
-    )
-    WHERE rank <= 10
-    """,
+    {_cosine_top_k_sql(
+        "probes JOIN b USING (bucket) WHERE vec_id <> query_id")}
+    """
+
+
+@register(
+    "x03_ann_lsh_bucketed",
+    oracle=_LSH_SQL,
     tags=("similarity", "X3", "lsh"),
 )
 def x03_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3b: approximate neighbors via random-hyperplane (SimHash) buckets.
 
-    Multi-probe: each corpus vector is indexed under its own bucket; each
-    query probes its bucket plus all B single-bit-flip neighbors, so the
-    candidate join stays equi (bucket = bucket) — the shape that scales.
+    Each vector gets a B-bit bucket signature (sign of its dot with B
+    seeded planes). Multi-probe: each corpus vector is indexed under its
+    own bucket; each query probes its bucket plus all B single-bit-flip
+    neighbors, so the candidate join stays equi (bucket = bucket) —
+    |corpus|·(B+1) small rows, not |queries|×|corpus| pairs.
 
-    Oracle-checked (upgraded from rows-only): recall is probabilistic
-    with respect to the TRUE neighbors, but the computation itself is
-    deterministic — the seeded planes are embedded in the oracle as
-    float literals, both engines run the same float64 sign test (a
-    bucket-bit flip would need |dot| < ~1e-13, vanishing for Gaussian
-    planes against unit-scale data), and candidate scoring reuses the
-    bit-identical dot-product form the brute-force twin already pins.
+    Recall is probabilistic with respect to the TRUE neighbors, but the
+    computation itself is deterministic: the seeded planes are embedded
+    in the oracle as float literals, and both engines run the same
+    float64 sign test (a bucket-bit flip would need |dot| < ~1e-13,
+    vanishing for Gaussian planes against unit-scale data).
     """
     emb = embedded(spark, sf_dir).select(
         "vec_id", _vec_double("embedding").alias("e")
@@ -242,10 +328,9 @@ def x03_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed = emb.select(
         "vec_id", "e", _bucket_bits(F.col("e")).alias("bucket")
     )
-    queries = indexed.filter(F.col("vec_id") < _N_QUERIES)
     # Multi-probe bucket list: own bucket + B Hamming-1 flips.
-    probes = queries.select(
-        F.col("vec_id").alias("query_id"),
+    probes = _query_set(
+        indexed,
         F.col("e").alias("qe"),
         F.explode(
             F.array(
@@ -257,35 +342,17 @@ def x03_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bucket"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        indexed.join(F.broadcast(probes), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine(F.col("qe"), F.col("e")).alias("cos"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            dround(F.col("cos"), 6).alias("cosine_sim"),
+    return _cosine_top_k(
+        indexed.join(F.broadcast(probes), "bucket").filter(
+            F.col("vec_id") != F.col("query_id")
         )
     )
 
 
 @register(
     "x03_ivf_topk",
-    oracle="""
-    WITH v AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
-        FROM embeddings WHERE embedding IS NOT NULL
-    ),
+    oracle=f"""
+    WITH {_V_SQL},
     dims AS (
         SELECT label, gs.i AS dim, e[gs.i + 1] AS val
         FROM v CROSS JOIN LATERAL (SELECT unnest(range(0, 64)) AS i) gs
@@ -298,53 +365,25 @@ def x03_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT label AS centroid_id, list(m ORDER BY dim) AS c
         FROM cent_dims GROUP BY label
     ),
-    assigned AS (
-        SELECT vec_id, e, centroid_id
-        FROM (
-            SELECT v.vec_id, v.e, ct.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_dot_product(ct.c, ct.c)
-                                - 2 * list_dot_product(v.e, ct.c) ASC,
-                                ct.centroid_id ASC
-                   ) AS rn
-            FROM v CROSS JOIN centroids ct
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT vec_id AS query_id, e AS qe, centroid_id
-        FROM (
-            SELECT v.vec_id, v.e, ct.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_dot_product(ct.c, ct.c)
-                                - 2 * list_dot_product(v.e, ct.c) ASC,
-                                ct.centroid_id ASC
-                   ) AS rn
-            FROM v CROSS JOIN centroids ct
-            WHERE v.vec_id < 5
-        ) WHERE rn <= 2
-    ),
-    scored AS (
-        SELECT
-            p.query_id,
-            a.vec_id AS neighbor_id,
-            list_dot_product(p.qe, a.e)
-                / (sqrt(list_dot_product(p.qe, p.qe))
-                   * sqrt(list_dot_product(a.e, a.e))) AS cos
-        FROM assigned a JOIN probes p USING (centroid_id)
-        WHERE a.vec_id <> p.query_id
-    )
-    SELECT query_id, neighbor_id, rank,
-           round(cos * 1000000.0) / 1000000.0 + 0.0 AS cosine_sim
-    FROM (
-        SELECT query_id, neighbor_id, cos,
+    nearest AS (
+        SELECT v.vec_id, v.e, ct.centroid_id,
                row_number() OVER (
-                   PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC
-               ) AS rank
-        FROM scored
-    )
-    WHERE rank <= 10
+                   PARTITION BY v.vec_id
+                   ORDER BY list_dot_product(ct.c, ct.c)
+                            - 2 * list_dot_product(v.e, ct.c) ASC,
+                            ct.centroid_id ASC
+               ) AS rn
+        FROM v CROSS JOIN centroids ct
+    ),
+    assigned AS (SELECT vec_id, e, centroid_id FROM nearest WHERE rn = 1),
+    {_q_sql("v", "e AS qe")},
+    probes AS (
+        SELECT q.query_id, q.qe, n.centroid_id
+        FROM q JOIN nearest n ON n.vec_id = q.query_id
+        WHERE n.rn <= {_NPROBE}
+    ),
+    {_cosine_top_k_sql(
+        "assigned JOIN probes USING (centroid_id) WHERE vec_id <> query_id")}
     """,
     tags=("similarity", "X3", "ivf"),
 )
@@ -353,11 +392,11 @@ def x03_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The inverted-file index pattern end-to-end: build coarse centroids,
     assign every corpus vector to its nearest centroid, then answer each
-    query by probing only the lists of its nProbe = 2 nearest centroids.
-    The candidate join is equi on centroid id, so the work per query is
-    |corpus| · nProbe / n_centroids instead of |corpus|.
+    query by probing only the lists of its ``_NPROBE`` (2) nearest
+    centroids. The candidate join is equi on centroid id, so the work
+    per query is |corpus| · nProbe / n_centroids instead of |corpus|.
 
-    Oracle-checked (upgraded from rows-only) via two determinism moves:
+    Cross-engine exactness rests on two determinism moves:
 
     * centroids are per-label element-wise MEDIANS (a k-medians coarse
       quantizer), not means — exact ``percentile`` is sort-based, so it
@@ -368,7 +407,7 @@ def x03_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       do NOT hand-derive ``lower + (higher−lower)·frac`` in a future
       oracle — the two algebraic forms differ in the last ulp on ~22%
       of random doubles). A distributed mean's summation order varies
-      run to run, which is why the old form was rows-only;
+      run to run, so a mean would not hash-match;
     * nearest-centroid ranking uses ``dot(c,c) − 2·dot(e,c)`` — the
       same ``list_dot_product``/sequential-fold form the brute-force
       twin already pins bit-identically — instead of a ``(x−y)²`` fold
@@ -381,7 +420,6 @@ def x03_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuinely clustered data. The operator demonstrates the plumbing and
     its cost model, not a recall guarantee the data cannot support.
     """
-    n_probe = 2
     emb = embedded(spark, sf_dir).select(
         "vec_id", "label", _vec_double("embedding").alias("e")
     )
@@ -432,10 +470,8 @@ def x03_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Queries probe their nProbe nearest centroid lists.
     probes = (
-        emb.filter(F.col("vec_id") < _N_QUERIES)
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            F.col("vec_id").alias("query_id"),
+        _query_set(
+            emb.crossJoin(F.broadcast(centroids)),
             F.col("e").alias("qe"),
             "centroid_id",
             dist.alias("d2"),
@@ -448,38 +484,20 @@ def x03_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ),
         )
-        .filter(F.col("rn") <= n_probe)
+        .filter(F.col("rn") <= _NPROBE)
         .select("query_id", "qe", "centroid_id")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        assigned.join(F.broadcast(probes), "centroid_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine(F.col("qe"), F.col("e")).alias("cos"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            dround(F.col("cos"), 6).alias("cosine_sim"),
+    return _cosine_top_k(
+        assigned.join(F.broadcast(probes), "centroid_id").filter(
+            F.col("vec_id") != F.col("query_id")
         )
     )
 
 
 @register(
     "x02_embedding_neardup",
-    oracle="""
-    WITH v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        WHERE embedding IS NOT NULL
-    ),
+    oracle=f"""
+    WITH {_V_SQL},
     corpus AS (
         SELECT vec_id, e FROM v
         UNION ALL
@@ -491,17 +509,15 @@ def x03_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT vec_id, e FROM corpus
         WHERE list_dot_product(e, e) > 0
     ),
-    b AS (SELECT vec_id, e, {BUCKET_SQL} AS bucket FROM nz),
+    b AS (SELECT vec_id, e, {_BUCKET_SQL} AS bucket FROM nz),
     pairs AS (
         SELECT l.vec_id AS vec_a, r.vec_id AS vec_b,
-               list_dot_product(l.e, r.e)
-                   / (sqrt(list_dot_product(l.e, l.e))
-                      * sqrt(list_dot_product(r.e, r.e))) AS cos
+               {_cos_sql("l.e", "r.e")} AS cos
         FROM b l JOIN b r
           ON l.bucket = r.bucket AND l.vec_id < r.vec_id
     )
     SELECT vec_a, vec_b FROM pairs WHERE cos >= 0.999
-    """.replace("{BUCKET_SQL}", _BUCKET_SQL),
+    """,
     tags=("dedup", "X2", "embedding"),
 )
 def x02_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -564,11 +580,8 @@ def x02_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x03_pairwise_label_centroids",
-    oracle="""
-    WITH v AS (
-        SELECT label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        WHERE embedding IS NOT NULL
-    ),
+    oracle=f"""
+    WITH {_V_SQL},
     dims AS (
         SELECT label, gs.i AS dim,
                CAST(round(e[gs.i + 1] * 1000000.0) AS HUGEINT) AS vq
@@ -673,11 +686,8 @@ def x03_pairwise_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x03_sq8_topk",
-    oracle="""
-    WITH v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        WHERE embedding IS NOT NULL
-    ),
+    oracle=f"""
+    WITH {_V_SQL},
     enc AS (
         SELECT vec_id,
                greatest(list_max(list_transform(e, x -> abs(x))), 1e-12)
@@ -690,10 +700,7 @@ def x03_pairwise_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
                ) AS code
         FROM v
     ),
-    q AS (
-        SELECT vec_id AS query_id, s AS qs, code AS qc
-        FROM enc WHERE vec_id < 5
-    ),
+    {_q_sql("enc", "s AS qs, code AS qc")},
     scored AS (
         SELECT
             q.query_id,
@@ -701,16 +708,8 @@ def x03_pairwise_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             list_dot_product(q.qc, c.code) * q.qs * c.s / 16129.0 AS approx
         FROM q JOIN enc c ON c.vec_id <> q.query_id
     )
-    SELECT query_id, neighbor_id, rank,
-           round(approx * 1000000.0) / 1000000.0 + 0.0 AS approx_dot
-    FROM (
-        SELECT query_id, neighbor_id, approx,
-               row_number() OVER (
-                   PARTITION BY query_id ORDER BY approx DESC, neighbor_id ASC
-               ) AS rank
-        FROM scored
-    )
-    WHERE rank <= 10
+    {_top_k_sql("approx DESC", "query_id, neighbor_id, rank, "
+                f"{dround_sql('approx', 6)} AS approx_dot")}
     """,
     tags=("similarity", "X3", "quantization"),
 )
@@ -730,10 +729,9 @@ def x03_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines apply one unambiguous rounding rule to identical IEEE
     inputs.
 
-    Scale shape: identical to the brute-force baseline — queries
-    broadcast, corpus scanned once, never shuffled; per-query window
-    ranks hashed by query_id. The win is constant-factor: 4× less
-    memory traffic and integer multiply-adds in codegen.
+    Scale shape: identical to the brute-force baseline (X3a). The win
+    is constant-factor: 4× less memory traffic and integer multiply-adds
+    in codegen.
     """
     emb = embedded(spark, sf_dir).select(
         "vec_id", _vec_double("embedding").alias("e")
@@ -748,11 +746,7 @@ def x03_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "e", lambda x: F.floor(x / s * 127.0 + 0.5).cast("long")
         ).alias("code"),
     )
-    q = enc.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("s").alias("qs"),
-        F.col("code").alias("qc"),
-    )
+    q = _query_set(enc, F.col("s").alias("qs"), F.col("code").alias("qc"))
     idot = F.aggregate(
         F.zip_with(F.col("qc"), F.col("code"), lambda x, y: x * y),
         F.lit(0).cast("long"),
@@ -771,18 +765,11 @@ def x03_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("approx"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            dround(F.col("approx"), 6).alias("approx_dot"),
-        )
+    return _top_k(scored, F.col("approx").desc()).select(
+        "query_id",
+        "neighbor_id",
+        "rank",
+        dround(F.col("approx"), 6).alias("approx_dot"),
     )
 
 
@@ -939,10 +926,7 @@ def _adc_dist() -> Column:
             )) AS rvec
         FROM coded c CROSS JOIN cb
     ),
-    q AS (
-        SELECT vec_id AS query_id, icode AS qcode
-        FROM enc WHERE vec_id < 5
-    ),
+    {_q_sql("enc", "icode AS qcode")},
     scored AS (
         SELECT
             q.query_id,
@@ -953,14 +937,7 @@ def _adc_dist() -> Column:
                 AS BIGINT) AS adc_dist
         FROM q JOIN recon r ON r.vec_id <> q.query_id
     )
-    SELECT query_id, neighbor_id, rank, adc_dist FROM (
-        SELECT query_id, neighbor_id, adc_dist,
-               row_number() OVER (
-                   PARTITION BY query_id
-                   ORDER BY adc_dist ASC, neighbor_id ASC) AS rank
-        FROM scored
-    )
-    WHERE rank <= 10
+    {_top_k_sql("adc_dist ASC", "query_id, neighbor_id, rank, adc_dist")}
     """,
     tags=("similarity", "X3", "quantization"),
 )
@@ -985,8 +962,8 @@ def x03_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: encoding is one broadcast of the codebook row into a
     codegen ``transform`` over the corpus scan — no shuffle; search
-    broadcasts the 5 queries along the corpus exactly like X3a/X3e; the
-    per-query window ranks hash by query_id. Scoring uses ADC distance
+    broadcasts the queries along the corpus exactly like X3a/X3e.
+    Scoring uses ADC distance
     tables: each query precomputes its 8×16 subspace-to-centroid grid
     once, so a (query, db) pair costs 8 lookups + adds instead of a
     64-dim L2 — measured 4.5× on a 10× corpus (11.5 s → 2.6 s,
@@ -1009,27 +986,18 @@ def x03_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reconstruction formulation is exact: L2 over the concatenated
     # reconstruction = sum of per-subspace L2s to the chosen centroids
     # (all integer math).
-    q = (
-        enc.filter(F.col("vec_id") < 5)
-        .crossJoin(F.broadcast(cb))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            # table stride = |codebook| (16 on a full corpus, smaller on
-            # tiny ones — the codebook is "first ≤16 vectors")
-            F.size(F.col("cents")).alias("n_cents"),
-            F.flatten(_subspace_dists(F.col("icode"), "cents")).alias("dt"),
-        )
+    q = _query_set(
+        enc.crossJoin(F.broadcast(cb)),
+        # table stride = |codebook| (16 on a full corpus, smaller on
+        # tiny ones — the codebook is "first ≤16 vectors")
+        F.size(F.col("cents")).alias("n_cents"),
+        F.flatten(_subspace_dists(F.col("icode"), "cents")).alias("dt"),
     )
     scored = coded.join(
         F.broadcast(q), F.col("vec_id") != F.col("query_id")
     ).select("query_id", F.col("vec_id").alias("neighbor_id"), _adc_dist())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "neighbor_id", "rank", "adc_dist")
+    return _top_k(scored, F.col("adc_dist").asc()).select(
+        "query_id", "neighbor_id", "rank", "adc_dist"
     )
 
 
@@ -1041,10 +1009,7 @@ _KMEANS_K = 8
 @register(
     "x03_kmeans_step",
     oracle=f"""
-    WITH v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        WHERE embedding IS NOT NULL
-    ),
+    WITH {_V_SQL},
     c AS (
         SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < {_KMEANS_K}
     ),
@@ -1154,35 +1119,18 @@ def x03_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "x03_knn_classify",
     oracle=f"""
-    WITH v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e, label
-        FROM embeddings WHERE embedding IS NOT NULL
-    ),
-    q AS (
-        SELECT vec_id AS query_id, e AS qe, label AS true_label
-        FROM v WHERE vec_id < {_N_QUERIES}
-    ),
+    WITH {_V_SQL},
+    {_q_sql("v", "e AS qe, label AS true_label")},
     scored AS (
         SELECT
             q.query_id,
             q.true_label,
             v.vec_id AS neighbor_id,
             v.label,
-            list_dot_product(q.qe, v.e)
-                / (sqrt(list_dot_product(q.qe, q.qe))
-                   * sqrt(list_dot_product(v.e, v.e))) AS cos
+            {_cos_sql("q.qe", "v.e")} AS cos
         FROM q JOIN v ON v.vec_id <> q.query_id
     ),
-    topk AS (
-        SELECT query_id, true_label, label
-        FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC
-            ) AS rk
-            FROM scored
-        )
-        WHERE rk <= {_TOP_K}
-    ),
+    topk AS ({_top_k_sql("cos DESC", "query_id, true_label, label")}),
     votes AS (
         SELECT query_id, true_label, label, count(*) AS n_votes
         FROM topk GROUP BY 1, 2, 3
@@ -1205,16 +1153,14 @@ def x03_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3h: k-NN majority-vote classification over the embedding corpus.
 
     The serving-side use of similarity search: predict a query vector's
-    label from its {k} nearest neighbors' labels — weak-label
-    propagation, eval-set auto-labeling, and embedding-quality probes
-    all run exactly this. Built directly on the brute-force top-k plan
-    (broadcast queries, codegen cosine, per-query rank), then a
-    votes-per-label aggregate and a deterministic argmax (votes desc,
-    label asc). Emits the true label beside the prediction so an
-    accuracy roll-up is one aggregate away.
+    label from the labels of its ``_TOP_K`` (10) nearest neighbors —
+    weak-label propagation, eval-set auto-labeling, and
+    embedding-quality probes all run exactly this. Built directly on the
+    brute-force top-k plan (X3a), then a votes-per-label aggregate and a
+    deterministic argmax (votes desc, label asc). Emits the true label
+    beside the prediction so an accuracy roll-up is one aggregate away.
 
-    Scale shape: identical corpus-side cost to x03_cosine_topk (the
-    corpus never shuffles; queries broadcast); the vote and argmax
+    Scale shape: identical corpus-side cost to X3a; the vote and argmax
     stages run on |queries|·k rows — nothing. The ANN variants
     (LSH/IVF/PQ) slot in as the top-k stage unchanged when |queries|
     grows past broadcast size.
@@ -1222,10 +1168,8 @@ def x03_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = embedded(spark, sf_dir).select(
         "vec_id", _vec_double("embedding").alias("e"), "label"
     )
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("label").alias("true_label"),
+    q = _query_set(
+        emb, F.col("e").alias("qe"), F.col("label").alias("true_label")
     )
     scored = emb.join(
         F.broadcast(q), F.col("vec_id") != F.col("query_id")
@@ -1236,15 +1180,10 @@ def x03_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         cosine(F.col("qe"), F.col("e")).alias("cos"),
     )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    topk = (
-        scored.withColumn("rk", F.row_number().over(w_rank))
-        .filter(F.col("rk") <= _TOP_K)
-    )
-    votes = topk.groupBy("query_id", "true_label", "label").agg(
-        F.count("*").alias("n_votes")
+    votes = (
+        _top_k(scored, F.col("cos").desc())
+        .groupBy("query_id", "true_label", "label")
+        .agg(F.count("*").alias("n_votes"))
     )
     w_vote = Window.partitionBy("query_id").orderBy(
         F.col("n_votes").desc(), F.col("label").asc()
@@ -1261,28 +1200,9 @@ def x03_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# x03_ann_recall_report composes the two oracles registered above into
-# one CTE pair, so the report's oracle stays mechanically in sync with
-# the operators it audits.
-from ..registry import ORACLES as _ORACLES  # noqa: E402
-
-
 @register(
     "x03_ann_recall_report",
-    oracle=f"""
-    WITH exact AS ({_ORACLES["x03_cosine_topk_bruteforce"]}),
-    ann AS ({_ORACLES["x03_ann_lsh_bucketed"]})
-    SELECT
-        e.query_id,
-        CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
-        CAST({_TOP_K} AS BIGINT) AS k,
-        CAST(round(count(a.neighbor_id) * 1000000.0 / {_TOP_K}) AS BIGINT)
-            AS recall_e6
-    FROM exact e
-    LEFT JOIN ann a
-      ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-    """,
+    oracle=_recall_sql(_LSH_SQL),
     tags=("similarity", "X3", "evaluation"),
 )
 def x03_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1294,8 +1214,8 @@ def x03_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     as an operator so the eval runs in-engine, on the same corpus, with
     the same seeded planes — not as an offline notebook that drifts
     from production parameters. Both inputs are this module's
-    registered operators; the oracle COMPOSES their registered oracle
-    texts, so the audit can never silently diverge from what it audits.
+    registered operators, and the oracle composes their oracle texts,
+    so the audit cannot diverge from what it audits.
 
     Reading it: recall_e6 = 1e6 means the bucketed search found the
     full true top-k for that query; sustained low recall is the trigger
@@ -1303,34 +1223,15 @@ def x03_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator).
 
     Scale shape: both sides are |queries|·k rows at any corpus size —
-    the join and the rollup are free; total cost is the two searches
-    (each already audited: corpus scanned, never shuffled for scoring).
+    the join and the rollup are free; total cost is the two searches.
     """
-    exact = x03_cosine_topk_bruteforce(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    ann = x03_ann_lsh_bucketed(spark, sf_dir).select(
-        "query_id", F.col("neighbor_id").alias("ann_neighbor_id")
-    )
-    hits = exact.join(
-        ann,
-        (exact["query_id"] == ann["query_id"])
-        & (exact["neighbor_id"] == ann["ann_neighbor_id"]),
-        "left",
-    ).select(exact["query_id"].alias("qid"), "ann_neighbor_id")
-    return hits.groupBy(F.col("qid").alias("query_id")).agg(
-        F.count("ann_neighbor_id").cast("bigint").alias("n_hits"),
-        F.lit(_TOP_K).cast("bigint").alias("k"),
-        F.round(F.count("ann_neighbor_id") * 1000000.0 / _TOP_K)
-        .cast("bigint")
-        .alias("recall_e6"),
-    )
+    return _recall_at_k(spark, sf_dir, x03_ann_lsh_bucketed(spark, sf_dir))
 
 
-#: IVF-PQ geometry: 8 seeded coarse lists, 2 probed per query; the PQ
-#: residual codebook reuses x03_pq_topk's 16-entry / 8-subspace shape.
+#: IVF-PQ geometry: 8 seeded coarse lists (``_NPROBE`` probed per
+#: query); the PQ residual codebook reuses x03_pq_topk's 16-entry /
+#: 8-subspace shape.
 _IVFPQ_COARSE_K = 8
-_IVFPQ_NPROBE = 2
 
 
 @register(
@@ -1377,25 +1278,25 @@ _IVFPQ_NPROBE = 2
             {_pq_codes_sql("r.rvec", "rcb.rcents")} AS codes
         FROM res r CROSS JOIN rcb
     ),
+    {_q_sql("enc", "icode")},
     probes AS (
         SELECT query_id, cid FROM (
             SELECT
-                e.vec_id AS query_id,
+                q.query_id,
                 gs.i AS cid,
                 row_number() OVER (
-                    PARTITION BY e.vec_id
+                    PARTITION BY q.query_id
                     ORDER BY CAST(list_sum(list_transform(
                                  generate_series(1, 64),
-                                 k -> (e.icode[k] - (cc.ccents[gs.i])[k])
-                                      * (e.icode[k] - (cc.ccents[gs.i])[k])))
+                                 k -> (q.icode[k] - (cc.ccents[gs.i])[k])
+                                      * (q.icode[k] - (cc.ccents[gs.i])[k])))
                              AS BIGINT) ASC, gs.i ASC
                 ) AS rn
-            FROM enc e CROSS JOIN cc
+            FROM q CROSS JOIN cc
             CROSS JOIN LATERAL (
                 SELECT unnest(generate_series(1, len(cc.ccents))) AS i
             ) gs
-            WHERE e.vec_id < {_N_QUERIES}
-        ) WHERE rn <= {_IVFPQ_NPROBE}
+        ) WHERE rn <= {_NPROBE}
     ),
     qres AS (
         SELECT
@@ -1430,14 +1331,7 @@ _IVFPQ_NPROBE = 2
         FROM coded c JOIN qdt q ON c.cid = q.cid
         WHERE c.vec_id <> q.query_id
     )
-    SELECT query_id, neighbor_id, rank, adc_dist FROM (
-        SELECT query_id, neighbor_id, adc_dist,
-               row_number() OVER (
-                   PARTITION BY query_id
-                   ORDER BY adc_dist ASC, neighbor_id ASC) AS rank
-        FROM scored
-    )
-    WHERE rank <= {_TOP_K}
+    {_top_k_sql("adc_dist ASC", "query_id, neighbor_id, rank, adc_dist")}
     """,
     tags=("similarity", "X3", "ivf", "quantization"),
 )
@@ -1449,13 +1343,13 @@ def x03_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization of the RESIDUAL vector (X3f, relative to the coarse
     centroid — residuals are smaller and quantize tighter than raw
     vectors) bounds what each scored vector COSTS (4-bit codes + one
-    shared codebook). Search probes the nProbe = 2 nearest coarse
+    shared codebook). Search probes the ``_NPROBE`` (2) nearest coarse
     lists and runs ADC with per-(query, probe) distance tables over
     residual codes.
 
     Exactness discipline (X3e/X3f extended): after the one global
     scale quantization, EVERYTHING is integer — coarse centroids are
-    the first {_IVFPQ_COARSE_K} icodes (seeded, like the PQ codebook),
+    the first 8 icodes (``_IVFPQ_COARSE_K``; seeded, like the PQ codebook),
     assignment/probe argmins tie-break on lowest centroid id, residuals
     are integer subtractions, the shared residual codebook is the first
     16 residual vectors, and ADC sums stay < 2^31 (|qres - rcent| <=
@@ -1467,8 +1361,7 @@ def x03_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables (|queries| x nProbe rows, each carrying one 8x16 integer
     grid) broadcast into an equi-join on the list id, so each query
     pays |corpus| x nProbe / K lookups-and-adds instead of |corpus|
-    full distances. The per-query rank hashes by query_id at
-    |queries| x |probed-lists| x list-size rows.
+    full distances.
     """
     enc = _global_icode(spark, sf_dir)
     # Persist the 1-row coarse codebook (r17 opt): the corpus
@@ -1510,10 +1403,8 @@ def x03_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer distance + lowest-cid tie break (array_sort of (d, cid)
     # structs sorts lexicographically — exactly ORDER BY d, cid).
     probes = (
-        enc.filter(F.col("vec_id") < _N_QUERIES)
-        .crossJoin(F.broadcast(cc))
-        .select(
-            F.col("vec_id").alias("query_id"),
+        _query_set(
+            enc.crossJoin(F.broadcast(cc)),
             "icode",
             "ccents",
             F.slice(
@@ -1527,7 +1418,7 @@ def x03_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 ),
                 1,
-                _IVFPQ_NPROBE,
+                _NPROBE,
             ).alias("top_probes"),
         )
         .select(
@@ -1555,13 +1446,8 @@ def x03_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = coded.join(F.broadcast(qdt), "cid").filter(
         F.col("vec_id") != F.col("query_id")
     ).select("query_id", F.col("vec_id").alias("neighbor_id"), _adc_dist())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "neighbor_id", "rank", "adc_dist")
+    return _top_k(scored, F.col("adc_dist").asc()).select(
+        "query_id", "neighbor_id", "rank", "adc_dist"
     )
 
 
@@ -1579,28 +1465,25 @@ _SEMDEDUP_COS = 0.999
 @register(
     "x02_semantic_dedup",
     oracle=f"""
-    WITH base AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        WHERE embedding IS NOT NULL
-    ),
-    v AS (
-        SELECT vec_id, e FROM base
+    WITH {_V_SQL},
+    corpus AS (
+        SELECT vec_id, e FROM v
         UNION ALL
         SELECT vec_id + 100000 AS vec_id,
                list_transform(e, x -> x * 1.01) AS e
-        FROM base
+        FROM v
     ),
     c AS (
-        SELECT list(e ORDER BY vec_id) AS cents FROM base
+        SELECT list(e ORDER BY vec_id) AS cents FROM v
         WHERE vec_id < {_SEMDEDUP_K}
     ),
     dists AS (
-        SELECT v.vec_id, v.e,
+        SELECT a.vec_id, a.e,
                list_transform(
                    c.cents,
                    ct -> list_dot_product(ct, ct)
-                         - 2.0 * list_dot_product(v.e, ct)) AS ds
-        FROM v CROSS JOIN c
+                         - 2.0 * list_dot_product(a.e, ct)) AS ds
+        FROM corpus a CROSS JOIN c
     ),
     assigned AS (
         SELECT vec_id, e,
@@ -1612,9 +1495,7 @@ _SEMDEDUP_COS = 0.999
                r.vec_id AS removed
         FROM assigned l JOIN assigned r
           ON l.cid = r.cid AND l.vec_id < r.vec_id
-        WHERE list_dot_product(l.e, r.e)
-              / (sqrt(list_dot_product(l.e, l.e))
-                 * sqrt(list_dot_product(r.e, r.e))) >= {_SEMDEDUP_COS}
+        WHERE {_cos_sql("l.e", "r.e")} >= {_SEMDEDUP_COS}
     )
     SELECT
         removed AS removed_vec_id,
@@ -1784,24 +1665,18 @@ def _pack_sql(lo_dim: int) -> str:
 
 
 def _hamming_sql(k: int) -> str:
-    """DuckDB spelling of packed-sign-bit Hamming top-``k`` — shared by
-    the registered x03_hamming_topk oracle (k = top-k) and the rerank
-    audit's candidate CTE (k = R), so the two can never diverge."""
+    """DuckDB twin of :func:`_hamming_candidates` (packed-sign-bit
+    Hamming top-``k``): the x03_hamming_topk oracle at k = top-k and the
+    rerank audit's candidate stage at k = R."""
     return f"""
-    WITH v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        WHERE embedding IS NOT NULL
-    ),
+    WITH {_V_SQL},
     packed AS (
         SELECT vec_id,
                {_pack_sql(1)} AS w0,
                {_pack_sql(33)} AS w1
         FROM v
     ),
-    q AS (
-        SELECT vec_id AS query_id, w0 AS q0, w1 AS q1
-        FROM packed WHERE vec_id < {_N_QUERIES}
-    ),
+    {_q_sql("packed", "w0 AS q0, w1 AS q1")},
     scored AS (
         SELECT
             q.query_id,
@@ -1810,16 +1685,7 @@ def _hamming_sql(k: int) -> str:
                  + bit_count(xor(q.q1, c.w1)) AS BIGINT) AS hamming
         FROM q JOIN packed c ON c.vec_id <> q.query_id
     )
-    SELECT query_id, neighbor_id, rank, hamming
-    FROM (
-        SELECT query_id, neighbor_id, hamming,
-               row_number() OVER (
-                   PARTITION BY query_id
-                   ORDER BY hamming ASC, neighbor_id ASC
-               ) AS rank
-        FROM scored
-    )
-    WHERE rank <= {k}
+    {_top_k_sql("hamming ASC", "query_id, neighbor_id, rank, hamming", k)}
     """
 
 
@@ -1829,7 +1695,7 @@ def _hamming_sql(k: int) -> str:
     tags=("similarity", "X3", "binary"),
 )
 def x03_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3g: 1-bit binarized embeddings + Hamming top-k — the cheapest
+    """X3k: 1-bit binarized embeddings + Hamming top-k — the cheapest
     rung of the ANN ladder (below SQ8's 8-bit and PQ's 4-bit codes).
 
     Sign binarization packs each 64-dim float vector into TWO BIGINT
@@ -1843,14 +1709,12 @@ def x03_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full output with no rounding discipline needed.
 
     Scale shape: packing rides the corpus scan in codegen (``aggregate``
-    over a 32-int spine per word — no explode); queries broadcast; the
-    corpus is scanned once and never shuffles for scoring (same contract
-    as the brute-force twin); the per-query window ranks |corpus| rows
-    hashed by query_id. At 10⁹ vectors the packed corpus is 16 GB —
-    memory-resident per executor fleet, where the float corpus is 256 GB
-    of scan per query batch. Deployment reranks the Hamming top-R with
-    exact cosine; the recall audit for that composition is
-    x03_ann_recall_report's pattern.
+    over a 32-int spine per word — no explode); queries broadcast and
+    the corpus is scanned once, never shuffled for scoring (as X3a). At
+    10⁹ vectors the packed corpus is 16 GB — memory-resident per
+    executor fleet, where the float corpus is 256 GB of scan per query
+    batch. Deployment reranks the Hamming top-R with exact cosine:
+    x03_hamming_rerank (X3l).
     """
     return _hamming_candidates(spark, sf_dir, _TOP_K)
 
@@ -1868,11 +1732,7 @@ def _hamming_candidates(
         _pack_sign_bits(F.col("e"), 1).alias("w0"),
         _pack_sign_bits(F.col("e"), 33).alias("w1"),
     )
-    q = packed.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("w0").alias("q0"),
-        F.col("w1").alias("q1"),
-    )
+    q = _query_set(packed, F.col("w0").alias("q0"), F.col("w1").alias("q1"))
     scored = packed.join(
         F.broadcast(q), F.col("vec_id") != F.col("query_id")
     ).select(
@@ -1885,13 +1745,8 @@ def _hamming_candidates(
         .cast("long")
         .alias("hamming"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "hamming")
+    return _top_k(scored, F.col("hamming").asc(), k).select(
+        "query_id", "neighbor_id", "rank", "hamming"
     )
 
 
@@ -1902,56 +1757,32 @@ _HAM_RERANK_R = 50
 
 @register(
     "x03_hamming_rerank",
-    oracle=f"""
-    WITH cand AS ({_hamming_sql(_HAM_RERANK_R)}),
-    vv AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        WHERE embedding IS NOT NULL
-    ),
-    rerank AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT c.query_id, c.neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY c.query_id
-                       ORDER BY
-                           list_dot_product(qv.e, nv.e)
-                           / (sqrt(list_dot_product(qv.e, qv.e))
-                              * sqrt(list_dot_product(nv.e, nv.e))) DESC,
-                           c.neighbor_id ASC
-                   ) AS rank
-            FROM cand c
-            JOIN vv qv ON qv.vec_id = c.query_id
-            JOIN vv nv ON nv.vec_id = c.neighbor_id
-        ) WHERE rank <= {_TOP_K}
-    ),
-    exact AS ({{BRUTE}})
-    SELECT
-        e.query_id,
-        CAST(count(r.neighbor_id) AS BIGINT) AS n_hits,
-        CAST({_TOP_K} AS BIGINT) AS k,
-        CAST(round(count(r.neighbor_id) * 1000000.0 / {_TOP_K})
-             AS BIGINT) AS recall_e6
-    FROM exact e
-    LEFT JOIN rerank r
-      ON r.query_id = e.query_id AND r.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-    """.replace("{BRUTE}", _ORACLES["x03_cosine_topk_bruteforce"]),
+    oracle=_recall_sql(f"""
+    WITH {_V_SQL},
+    cand AS ({_hamming_sql(_HAM_RERANK_R)}),
+    scored AS (
+        SELECT c.query_id, c.neighbor_id, {_cos_sql("qv.e", "nv.e")} AS cos
+        FROM cand c
+        JOIN v qv ON qv.vec_id = c.query_id
+        JOIN v nv ON nv.vec_id = c.neighbor_id
+    )
+    {_top_k_sql("cos DESC", "query_id, neighbor_id")}
+    """),
     tags=("similarity", "X3", "binary", "evaluation"),
 )
 def x03_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3h: the complete binary-first retrieval layout, audited —
+    """X3l: the complete binary-first retrieval layout, audited —
     Hamming top-50 (``_HAM_RERANK_R``) candidate pass (16-byte
     signatures, integer XOR+POPCOUNT) → exact-cosine rerank to top-k →
-    recall@k (k = ``_TOP_K``) against the brute-force truth, per query.
+    recall@k against the brute-force truth, per query.
 
     This is the deployment composition x03_hamming_topk's docstring
     names: at 10⁹ vectors the packed first pass touches 16 GB, and the
     float corpus is only consulted for R candidates per query. The
-    entry emits the AUDIT (the recall_report pattern): sustained
-    recall below target is the trigger to raise R — the one knob. The
-    oracle composes the SHARED ``_hamming_sql`` text (same function
-    the top-k entry registers, at R) plus the registered brute-force
-    oracle, so neither stage can drift from what it audits.
+    entry emits the AUDIT (the X3i pattern): sustained recall below
+    target is the trigger to raise R — the one knob. The candidate
+    stage is the top-k entry's own code at R on both engines
+    (:func:`_hamming_candidates`, :func:`_hamming_sql`).
 
     Scale shape: the candidate set is |queries|·R rows at ANY corpus
     size — it broadcasts (with the query vectors) into ONE pass over
@@ -1964,10 +1795,7 @@ def x03_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = embedded(spark, sf_dir).select(
         "vec_id", _vec_double("embedding").alias("e")
     )
-    qv = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    c2 = cand.join(qv, "query_id")
+    c2 = cand.join(_query_set(emb, F.col("e").alias("qe")), "query_id")
     nv = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ne")
     )
@@ -1976,30 +1804,8 @@ def x03_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         cosine(F.col("qe"), F.col("ne")).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    rerank = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", F.col("neighbor_id").alias("rr_neighbor_id"))
-    )
-    exact = x03_cosine_topk_bruteforce(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    hits = exact.join(
-        F.broadcast(rerank),
-        (exact["query_id"] == rerank["query_id"])
-        & (exact["neighbor_id"] == rerank["rr_neighbor_id"]),
-        "left",
-    ).select(exact["query_id"].alias("qid"), "rr_neighbor_id")
-    return hits.groupBy(F.col("qid").alias("query_id")).agg(
-        F.count("rr_neighbor_id").cast("bigint").alias("n_hits"),
-        F.lit(_TOP_K).cast("bigint").alias("k"),
-        F.round(F.count("rr_neighbor_id") * 1000000.0 / _TOP_K)
-        .cast("bigint")
-        .alias("recall_e6"),
-    )
+    rerank = _top_k(scored, F.col("cos").desc())
+    return _recall_at_k(spark, sf_dir, F.broadcast(rerank))
 
 
 #: Range-search radius: e6-quantized cosine threshold (≈ the 99th
@@ -2010,20 +1816,14 @@ _RANGE_T_E6 = 300_000
 @register(
     "x03_range_search",
     oracle=f"""
-    WITH v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        WHERE embedding IS NOT NULL
-    ),
-    q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 5),
+    WITH {_V_SQL},
+    {_q_sql("v", "e AS qe")},
     scored AS (
         SELECT
             q.query_id,
             v.vec_id AS neighbor_id,
-            CAST(round(
-                list_dot_product(q.qe, v.e)
-                / (sqrt(list_dot_product(q.qe, q.qe))
-                   * sqrt(list_dot_product(v.e, v.e))) * 1000000.0
-            ) AS BIGINT) AS cos_e6
+            CAST(round({_cos_sql("q.qe", "v.e")} * 1000000.0) AS BIGINT)
+                AS cos_e6
         FROM q JOIN v ON v.vec_id <> q.query_id
     )
     SELECT query_id, neighbor_id,
@@ -2034,7 +1834,7 @@ _RANGE_T_E6 = 300_000
     tags=("similarity", "X3", "range-search"),
 )
 def x03_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3: cosine RANGE search — all neighbors within a similarity
+    """X3m: cosine RANGE search — all neighbors within a similarity
     radius, the set-semantics dual of top-k (what dedup thresholds,
     recall-guaranteed retrieval, and density estimation actually want:
     "everything ≥ 0.30", not "the best 10 whatever they are").
@@ -2056,9 +1856,7 @@ def x03_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = embedded(spark, sf_dir).select(
         "vec_id", _vec_double("embedding").alias("e")
     )
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
+    q = _query_set(emb, F.col("e").alias("qe"))
     scored = emb.join(
         F.broadcast(q), F.col("vec_id") != F.col("query_id")
     ).select(
