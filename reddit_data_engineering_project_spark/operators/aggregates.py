@@ -1015,8 +1015,8 @@ def q07_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t-digest/KLL, whose float centroids could never hash-match
     across engines).
 
-    A {_HQ_BINS}-bin equi-width integer histogram over price cents:
-    bin width is floor(range/{_HQ_BINS})+1, so the max lands in the
+    A 256-bin equi-width integer histogram over price cents:
+    bin width is floor(range/256)+1, so the max lands in the
     last bin by construction and every boundary is exact integer
     arithmetic. For each target percentile the entry emits the rank it
     must bracket (ceil(pct·N/100) in pure integer math), the first bin
@@ -1027,10 +1027,10 @@ def q07_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-select). No float exists anywhere in the operator.
 
     Scale shape — the same merge law as the CMS twin: the histogram's
-    partial-agg state is ≤ {_HQ_BINS} cells per task at ANY data size
+    partial-agg state is ≤ 256 cells per task at ANY data size
     (histogram-of-union = cell-wise sum), so the exchange moves bins,
     not values; the cumulative window and the 5-row percentile probe
-    run over the ≤{_HQ_BINS}-row histogram (the calendar-bounded-window
+    run over the ≤256-row histogram (the calendar-bounded-window
     discipline); the bounds row broadcasts into the binning scan. Two
     fact passes total (bounds, then binning) — the streaming variant
     fixes the domain a priori and takes one.

@@ -18,6 +18,30 @@ notes per op in the docstrings: the only shuffle in the family is the
 per-(doc, bigram) aggregate in repetition metrics, keyed on a
 high-cardinality composite, so nothing hotspots at 100 TB.
 
+The curation contract, written once per engine (Spark helper / oracle
+SQL fragment, composed into the oracles by f-string; the token rule,
+type-token ratio and bigrams come from ``text_analysis``):
+
+- the split hash multiplies ``doc_id`` by ``_SPLIT_MULT`` modulo
+  ``_SPLIT_PRIME`` (:func:`_split_hash`, :func:`_split_hash_sql`); its
+  last two digits are the split bucket (:func:`split_bucket`,
+  :func:`_split_bucket_sql`), labelled 80/10/10 train/val/test
+  (:func:`_split_label`, :func:`_split_sql`);
+- the PII stage plants one contact line per doc (:func:`_planted`,
+  ``_PLANTED_SQL``) and redacts emails, then phones, then IPs
+  (:func:`_redact`, :func:`_redact_sql`);
+- the repetition gate keeps docs whose duplicate-token fraction
+  (1 - type-token ratio) is at most ``_REP_MAX``;
+- windows start every ``stride`` tokens below the token count
+  (:func:`_starts`, :func:`_starts_sql`): chunks of ``_CHUNK_SIZE`` at
+  ``_CHUNK_STRIDE``, boilerplate blocks of ``_BP_BLOCK``;
+- the chained stages are :func:`curate` in Spark and ``_CURATED_SQL``
+  in the oracles of ``pipeline_curation_full`` and
+  ``q18_export_training_shards``;
+- a BPE census counts adjacent character pairs inside tokens
+  (:func:`_census`, :func:`_pairs_sql`) and ranks them by count, ties
+  to the lower pair (:func:`_top_pairs`, :func:`_pair_rank_sql`).
+
 Reference parity: the reference (ManojGowda27/Reddit_Data_Engineering_project)
 has no curation layer — these extend the engine per the north-star X4
 charter in SURVEY §2.3.
@@ -28,12 +52,21 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..functions.numeric import dround
 from ..registry import register
 from ..tables import ensure_min_parallelism, table
-from .text_analysis import nsize, tokens
+from .text_analysis import (
+    _BIGRAMS_SQL,
+    _TTR_SQL,
+    _bigram,
+    _bigram_zip,
+    _toks_sql,
+    _ttr,
+    nsize,
+    tokens,
+)
 
 #: Hash-split constants: Knuth multiplicative hash under a Mersenne-ish
 #: prime. Pure 64-bit-safe integer arithmetic so Spark and any oracle
@@ -46,21 +79,28 @@ _SPLIT_MULT = 2_654_435_761
 _CHUNK_SIZE = 64
 _CHUNK_STRIDE = 48
 
+#: Repetition gate: the largest duplicate-token fraction a doc may have.
+_REP_MAX = 0.62
+
+
+def _split_hash(col: Column) -> Column:
+    """The multiplicative split hash of ``col`` (a doc_id)."""
+    return ((col % _SPLIT_PRIME) * _SPLIT_MULT) % _SPLIT_PRIME
+
 
 def split_bucket(col):
     """Knuth multiplicative hash bucket 0-99 for the train/val/test split.
 
     THE split definition — every Spark-side consumer (dataset split,
     curation pipeline, leakage audit) must use this helper so a ratio or
-    hash change can never leave one copy stale. The oracle-SQL spellings
-    embed the same constants from _SPLIT_PRIME/_SPLIT_MULT.
+    hash change can never leave one copy stale. Every oracle spelling is
+    :func:`_split_bucket_sql`, which embeds _SPLIT_PRIME/_SPLIT_MULT.
     """
-    return ((col % _SPLIT_PRIME) * _SPLIT_MULT) % _SPLIT_PRIME % 100
+    return _split_hash(col) % 100
 
 
-def split_of(col):
-    """80/10/10 train/val/test label for :func:`split_bucket`."""
-    bucket = split_bucket(col)
+def _split_label(bucket: Column) -> Column:
+    """80/10/10 train/val/test label of a :func:`split_bucket` value."""
     return (
         F.when(bucket < 80, "train")
         .when(bucket < 90, "val")
@@ -68,20 +108,50 @@ def split_of(col):
     )
 
 
+def split_of(col):
+    """80/10/10 train/val/test label for :func:`split_bucket`."""
+    return _split_label(split_bucket(col))
+
+
+def _split_hash_sql(col: str) -> str:
+    """DuckDB twin of :func:`_split_hash`."""
+    return f"(({col} % {_SPLIT_PRIME}) * {_SPLIT_MULT}) % {_SPLIT_PRIME}"
+
+
+def _split_bucket_sql(col: str) -> str:
+    """DuckDB twin of :func:`split_bucket`."""
+    return f"{_split_hash_sql(col)} % 100"
+
+
+def _split_sql(bucket: str) -> str:
+    """DuckDB twin of :func:`_split_label`."""
+    return (
+        f"CASE WHEN {bucket} < 80 THEN 'train' "
+        f"WHEN {bucket} < 90 THEN 'val' ELSE 'test' END"
+    )
+
+
+def _starts(n: Column, stride: int) -> Column:
+    """Window starts 0, stride, 2·stride, ... below ``n`` tokens."""
+    return F.filter(
+        F.sequence(F.lit(0), n + stride, F.lit(stride)), lambda st: st < n
+    )
+
+
+def _starts_sql(n: str, stride: int) -> str:
+    """DuckDB twin of :func:`_starts`."""
+    return f"list_filter(range(0, {n} + {stride}, {stride}), st -> st < {n})"
+
+
 @register(
     "x04_repetition_metrics",
-    oracle="""
-    WITH t AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS toks
-        FROM documents
-    ),
+    oracle=f"""
+    WITH t AS (SELECT doc_id, {_toks_sql('text')} AS toks FROM documents),
     s AS (
         SELECT doc_id,
                len(toks) AS n_tokens,
                len(list_distinct(toks)) AS n_distinct,
-               list_transform(range(1, len(toks)),
-                              i -> toks[i] || ' ' || toks[i + 1]) AS bigrams
+               {_BIGRAMS_SQL} AS bigrams
         FROM t
         WHERE len(toks) >= 2
     ),
@@ -115,21 +185,17 @@ def x04_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram instances whose bigram occurs more than once (the
     "duplicate n-gram fraction" from the Gopher/MassiveText filters).
 
-    Scale shape: one narrow projection builds the bigram array in
-    codegen, one explode, one aggregate keyed on (doc_id, bigram) — a
-    high-cardinality composite key that cannot hotspot — then a per-doc
-    re-aggregate that reuses the same hash partitioning on doc_id, so
-    AQE coalesces rather than reshuffles. Token stats (n_tokens,
+    Scale shape: one narrow projection builds the bigram pairs in
+    codegen (``text_analysis._bigram_zip``), one explode, one aggregate
+    keyed on (doc_id, bigram) — a high-cardinality composite key that
+    cannot hotspot — then a per-doc re-aggregate that reuses the same
+    hash partitioning on doc_id, so AQE coalesces rather than
+    reshuffles. Token stats (n_tokens,
     n_distinct) ride through both group-bys as grouping constants,
     avoiding a self-join back to the corpus.
     """
     docs = table(spark, sf_dir, "documents")
-    sz = F.size("toks")
-    # Bigrams as arrays_zip of the two shifted slices, concatenated AFTER
-    # the explode: every expression stays inside whole-stage codegen. The
-    # equivalent transform(sequence(...), i -> concat(toks[i], ...)) lambda
-    # runs interpreted and measured 2.4x slower on this stage.
-    # Filter BEFORE the slice projection: slice(toks, 1, size-1) with an
+    # Filter BEFORE the pair projection: slice(toks, 1, size-1) with an
     # empty token list asks for length -1 and ABORTS the job (adversarial
     # -sweep finding — a whitespace-only document kills the stage; the
     # committed fixtures have no empty docs). A where in the same select
@@ -139,12 +205,9 @@ def x04_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.size("toks") >= 2)
         .select(
             "doc_id",
-            sz.alias("n_tokens"),
+            F.size("toks").alias("n_tokens"),
             F.size(F.array_distinct("toks")).alias("n_distinct"),
-            F.arrays_zip(
-                F.slice("toks", 1, F.greatest(sz - 1, F.lit(0))),
-                F.slice(F.col("toks"), 2, F.greatest(sz - 1, F.lit(0))),
-            ).alias("bz"),
+            _bigram_zip().alias("bz"),
         )
     )
     counted = (
@@ -154,12 +217,7 @@ def x04_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_distinct",
             F.explode("bz").alias("p"),
         )
-        .select(
-            "doc_id",
-            "n_tokens",
-            "n_distinct",
-            F.concat_ws(" ", "p.0", "p.1").alias("bg"),
-        )
+        .select("doc_id", "n_tokens", "n_distinct", _bigram().alias("bg"))
         .groupBy("doc_id", "n_tokens", "n_distinct", "bg")
         .agg(F.count("*").alias("cnt"))
     )
@@ -189,31 +247,80 @@ _EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _PHONE_RE = r"\b555-[0-9]{4}\b"
 _IP_RE = r"\b10\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 
+#: (count column, pattern, replacement) in redaction order.
+_PII = (
+    ("n_emails", _EMAIL_RE, "<EMAIL>"),
+    ("n_phones", _PHONE_RE, "<PHONE>"),
+    ("n_ips", _IP_RE, "<IP>"),
+)
+
+
+def _planted() -> Column:
+    """``text`` plus the deterministic contact line of (source, doc_id):
+    one email, one phone number and one IP per doc."""
+    return F.concat(
+        F.col("text"),
+        F.lit(" contact "),
+        F.col("source"),
+        F.col("doc_id").cast("string"),
+        F.lit("@example.com phone 555-01"),
+        F.lpad((F.col("doc_id") % 100).cast("string"), 2, "0"),
+        F.lit(" ip 10.0."),
+        (F.col("doc_id") % 256).cast("string"),
+        F.lit(".1"),
+    )
+
+
+def _redact(text: Column) -> Column:
+    """``text`` with emails, then phones, then IPs replaced by tags."""
+    for _, pattern, tag in _PII:
+        text = F.regexp_replace(text, pattern, tag)
+    return text
+
+
+_PLANTED_SQL = """text || ' contact ' || source || doc_id::VARCHAR
+               || '@example.com phone 555-01'
+               || lpad((doc_id % 100)::VARCHAR, 2, '0')
+               || ' ip 10.0.' || (doc_id % 256)::VARCHAR || '.1'"""
+
+
+_PII_COUNTS_SQL = ",\n        ".join(
+    f"len(regexp_extract_all(text, '{pattern}')) AS {name}"
+    for name, pattern, _ in _PII
+)
+
+
+def _redact_sql(text: str) -> str:
+    """DuckDB twin of :func:`_redact`."""
+    for _, pattern, tag in _PII:
+        text = f"regexp_replace({text}, '{pattern}', '{tag}', 'g')"
+    return text
+
+
+#: DuckDB twin of :func:`curate` up to its last projection: the CTE
+#: ``curated`` (doc_id, rep_frac, split, toks) of the docs that pass the
+#: repetition gate, with ``toks`` the tokens of the redacted text.
+_CURATED_SQL = f"""rep AS (
+        SELECT doc_id, source, text, 1.0 - {_TTR_SQL} AS rep_frac
+        FROM (SELECT *, {_toks_sql('text')} AS toks FROM documents)
+    ),
+    curated AS (
+        SELECT doc_id, rep_frac,
+               {_split_sql(_split_bucket_sql('doc_id'))} AS split,
+               {_toks_sql(_redact_sql(_PLANTED_SQL))} AS toks
+        FROM rep
+        WHERE rep_frac <= {_REP_MAX}
+    )"""
+
 
 @register(
     "x04_pii_scrub",
     oracle=f"""
-    WITH aug AS (
-        SELECT doc_id,
-               text || ' contact ' || source || doc_id::VARCHAR
-                    || '@example.com phone 555-01'
-                    || lpad((doc_id % 100)::VARCHAR, 2, '0')
-                    || ' ip 10.0.' || (doc_id % 256)::VARCHAR || '.1'
-                   AS text
-        FROM documents
-    )
+    WITH aug AS (SELECT doc_id, {_PLANTED_SQL} AS text FROM documents)
     SELECT
         doc_id,
-        len(regexp_extract_all(text, '{_EMAIL_RE}')) AS n_emails,
-        len(regexp_extract_all(text, '{_PHONE_RE}')) AS n_phones,
-        len(regexp_extract_all(text, '{_IP_RE}')) AS n_ips,
-        md5(
-            regexp_replace(
-                regexp_replace(
-                    regexp_replace(text, '{_EMAIL_RE}', '<EMAIL>', 'g'),
-                    '{_PHONE_RE}', '<PHONE>', 'g'),
-                '{_IP_RE}', '<IP>', 'g')
-        ) AS redacted_md5
+        {_PII_COUNTS_SQL},
+        md5({_redact_sql('text')}) AS redacted_md5
     FROM aug
     """,
     tags=("text", "X4", "pii"),
@@ -222,9 +329,10 @@ def x04_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4: PII detection + redaction (emails, phone numbers, IPv4).
 
     The synthetic corpus carries no organic PII, so the op first appends
-    a DETERMINISTIC contact line derived from (source, doc_id) — giving
-    every doc exactly one planted email/phone/IP — then runs the real
-    detection/redaction pipeline over the combined text. The oracle
+    a DETERMINISTIC contact line derived from (source, doc_id)
+    (:func:`_planted`) — giving every doc exactly one planted
+    email/phone/IP — then runs the real detection/redaction pipeline
+    over the combined text. The oracle
     plants the identical line and hashes the identical redaction, so the
     gate checks the full regex machinery end-to-end (counts AND the
     md5 of the redacted text), not just the plumbing.
@@ -232,47 +340,22 @@ def x04_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: pure per-row codegen — three ``regexp_replace`` passes
     and three extract-counts, no shuffle at all. Patterns are
     lookaround-free so they mean the same thing under Java regex and
-    RE2. Redaction order (email → phone → IP) is fixed; replacements
-    cannot create new matches for later patterns.
+    RE2. Redaction order (email → phone → IP, :func:`_redact`) is fixed;
+    replacements cannot create new matches for later patterns.
     """
     docs = table(spark, sf_dir, "documents")
-    aug = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact "),
-            F.col("source"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com phone 555-01"),
-            F.lpad((F.col("doc_id") % 100).cast("string"), 2, "0"),
-            F.lit(" ip 10.0."),
-            (F.col("doc_id") % 256).cast("string"),
-            F.lit(".1"),
-        ).alias("text"),
-    )
-    redacted = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("text"), _EMAIL_RE, "<EMAIL>"),
-            _PHONE_RE,
-            "<PHONE>",
-        ),
-        _IP_RE,
-        "<IP>",
-    )
+    aug = docs.select("doc_id", _planted().alias("text"))
     # NB: patterns go through the Python API (F.lit), never F.expr — a SQL
     # string literal would eat the \b word boundaries as escape sequences.
     return aug.select(
         "doc_id",
-        nsize(
-            F.regexp_extract_all(F.col("text"), F.lit(_EMAIL_RE), F.lit(0))
-        ).alias("n_emails"),
-        nsize(
-            F.regexp_extract_all(F.col("text"), F.lit(_PHONE_RE), F.lit(0))
-        ).alias("n_phones"),
-        nsize(
-            F.regexp_extract_all(F.col("text"), F.lit(_IP_RE), F.lit(0))
-        ).alias("n_ips"),
-        F.md5(redacted).alias("redacted_md5"),
+        *[
+            nsize(
+                F.regexp_extract_all(F.col("text"), F.lit(pattern), F.lit(0))
+            ).alias(name)
+            for name, pattern, _ in _PII
+        ],
+        F.md5(_redact(F.col("text"))).alias("redacted_md5"),
     )
 
 
@@ -280,15 +363,10 @@ def x04_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x04_dataset_split",
     oracle=f"""
     WITH h AS (
-        SELECT doc_id, lang,
-               ((doc_id % {_SPLIT_PRIME}) * {_SPLIT_MULT})
-                   % {_SPLIT_PRIME} % 100 AS bucket
+        SELECT doc_id, lang, {_split_bucket_sql('doc_id')} AS bucket
         FROM documents
     )
-    SELECT doc_id, lang, bucket,
-           CASE WHEN bucket < 80 THEN 'train'
-                WHEN bucket < 90 THEN 'val'
-                ELSE 'test' END AS split
+    SELECT doc_id, lang, bucket, {_split_sql('bucket')} AS split
     FROM h
     """,
     tags=("text", "X4", "split"),
@@ -296,24 +374,21 @@ def x04_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x04_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4: deterministic hash-based train/val/test split assignment.
 
-    Knuth multiplicative hash of ``doc_id`` under a prime modulus →
-    bucket 0-99 → 80/10/10 split. Pure integer arithmetic (no engine
-    hash function, no RNG, no seed state), so the assignment is
-    reproducible across engines, runs, and partitionings — the property
-    a training pipeline needs so that re-runs never leak val docs into
-    train. The product stays below 2^63 for any doc_id under ~1e13, so
-    there is no overflow wrap to disagree on.
+    Emits each doc's split bucket and label (the module docstring's
+    split contract). Pure integer arithmetic (no engine hash function,
+    no RNG, no seed state), so the assignment is reproducible across
+    engines, runs, and partitionings — the property a training pipeline
+    needs so that re-runs never leak val docs into train.
 
     Scale shape: a narrow stateless projection — no shuffle; the split
     column is a pushdown-able predicate for downstream
     ``WHERE split = 'train'`` scans.
     """
     docs = table(spark, sf_dir, "documents")
-    bucket = split_bucket(F.col("doc_id"))
     return docs.select(
         "doc_id",
         "lang",
-        bucket.alias("bucket"),
+        split_bucket(F.col("doc_id")).alias("bucket"),
         split_of(F.col("doc_id")).alias("split"),
     )
 
@@ -321,16 +396,10 @@ def x04_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "x04_chunking",
     oracle=f"""
-    WITH t AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS toks
-        FROM documents
-    ),
+    WITH t AS (SELECT doc_id, {_toks_sql('text')} AS toks FROM documents),
     s AS (
         SELECT doc_id, toks, len(toks) AS n_tokens,
-               unnest(list_filter(
-                   range(0, len(toks) + {_CHUNK_STRIDE}, {_CHUNK_STRIDE}),
-                   st -> st < len(toks))) AS start
+               unnest({_starts_sql('len(toks)', _CHUNK_STRIDE)}) AS start
         FROM t
     )
     SELECT
@@ -349,15 +418,17 @@ def x04_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x04_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4: overlapping token chunking (context windows for training).
 
-    Windows each doc into 64-token chunks at stride 48 (25% overlap), the standard long-doc → model-context
-    preprocessing step. Emits per-chunk geometry plus an md5 of the
-    chunk's reassembled text so the gate verifies the actual token
-    content of every chunk, not just the arithmetic.
+    Windows each doc into ``_CHUNK_SIZE``-token chunks every
+    ``_CHUNK_STRIDE`` tokens (64 and 48: 25% overlap), the standard
+    long-doc → model-context preprocessing step. Emits per-chunk
+    geometry plus an md5 of the chunk's reassembled text so the gate
+    verifies the actual token content of every chunk, not just the
+    arithmetic.
 
-    Scale shape: chunk starts come from ``sequence`` + ``filter`` inside
-    codegen, one explode, then per-row ``slice``/``concat_ws``/``md5`` —
-    no shuffle, and output size is a bounded multiple of input
-    (ceil(n_tokens / stride) rows per doc).
+    Scale shape: chunk starts come from ``sequence`` + ``filter``
+    (:func:`_starts`) inside codegen, one explode, then per-row
+    ``slice``/``concat_ws``/``md5`` — no shuffle, and output size is a
+    bounded multiple of input (ceil(n_tokens / stride) rows per doc).
     """
     docs = table(spark, sf_dir, "documents")
     base = docs.select(
@@ -368,19 +439,11 @@ def x04_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
         "toks",
         F.size("toks").alias("n_tokens"),
     )
-    starts = F.filter(
-        F.sequence(
-            F.lit(0),
-            F.col("n_tokens") + _CHUNK_STRIDE,
-            F.lit(_CHUNK_STRIDE),
-        ),
-        lambda st: st < F.col("n_tokens"),
-    )
     exploded = base.select(
         "doc_id",
         "toks",
         "n_tokens",
-        F.explode(starts).alias("start"),
+        F.explode(_starts(F.col("n_tokens"), _CHUNK_STRIDE)).alias("start"),
     )
     chunk_len = F.least(
         F.lit(_CHUNK_SIZE), F.col("n_tokens") - F.col("start")
@@ -403,51 +466,17 @@ def x04_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pipeline_curation_full",
     oracle=f"""
-    WITH rep AS (
-        SELECT doc_id, source, text,
-               1.0 - len(list_distinct(list_filter(string_split(text, ' '),
-                                                   x -> x <> '')))::DOUBLE
-                   / len(list_filter(string_split(text, ' '),
-                                     x -> x <> '')) AS rep_frac
-        FROM documents
-    ),
-    kept AS (SELECT * FROM rep WHERE rep_frac <= 0.62),
-    aug AS (
-        SELECT doc_id, rep_frac,
-               regexp_replace(
-                   regexp_replace(
-                       regexp_replace(
-                           text || ' contact ' || source || doc_id::VARCHAR
-                               || '@example.com phone 555-01'
-                               || lpad((doc_id % 100)::VARCHAR, 2, '0')
-                               || ' ip 10.0.' || (doc_id % 256)::VARCHAR
-                               || '.1',
-                           '{_EMAIL_RE}', '<EMAIL>', 'g'),
-                       '{_PHONE_RE}', '<PHONE>', 'g'),
-                   '{_IP_RE}', '<IP>', 'g') AS red
-        FROM kept
-    ),
-    toks2 AS (
-        SELECT doc_id, rep_frac,
-               ((doc_id % {_SPLIT_PRIME}) * {_SPLIT_MULT})
-                   % {_SPLIT_PRIME} % 100 AS bucket,
-               list_filter(string_split(red, ' '), x -> x <> '') AS toks
-        FROM aug
-    )
+    WITH {_CURATED_SQL}
     SELECT
         doc_id,
-        CASE WHEN bucket < 80 THEN 'train'
-             WHEN bucket < 90 THEN 'val'
-             ELSE 'test' END AS split,
+        split,
         round(rep_frac * 10000.0) / 10000.0 AS rep_frac,
         len(toks) AS n_tokens,
-        len(list_filter(range(0, len(toks) + {_CHUNK_STRIDE},
-                              {_CHUNK_STRIDE}),
-                        st -> st < len(toks))) AS n_chunks,
+        len({_starts_sql('len(toks)', _CHUNK_STRIDE)}) AS n_chunks,
         md5(array_to_string(
             list_slice(toks, 1, least({_CHUNK_SIZE}, len(toks))), ' '))
             AS first_chunk_md5
-    FROM toks2
+    FROM curated
     """,
     tags=("pipeline", "X4", "curation", "composition"),
 )
@@ -458,13 +487,14 @@ def pipeline_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     which covers quality gate → exact dedup → packing): this one chains
     the curation stages, as ONE DataFrame plan the optimizer sees whole:
 
-    1. repetition gate — drop docs with duplicate-token fraction > 0.62
-       (the Gopher-style repetition filter; keeps ~69% of this corpus);
+    1. repetition gate — drop docs with duplicate-token fraction above
+       ``_REP_MAX`` (the Gopher-style repetition filter; keeps ~69% of
+       this corpus);
     2. PII scrub — plant the deterministic contact line, then redact
        emails/phones/IPs (same regexes as ``x04_pii_scrub``);
     3. split assignment — the multiplicative-hash 80/10/10 bucket of
        ``x04_dataset_split``;
-    4. chunking — 64/48 window geometry of ``x04_chunking`` over the
+    4. chunking — the window geometry of ``x04_chunking`` over the
        REDACTED token stream; ``first_chunk_md5`` pins the actual
        post-redaction chunk content, so stage order is observable
        (redact-then-chunk ≠ chunk-then-redact).
@@ -487,66 +517,27 @@ def curate(docs: DataFrame) -> DataFrame:
     ``tests/test_stream_curation.py`` (stream output ≡ batch output).
     """
     toks1 = tokens(F.col("text"))
-    # nsize (not size): legacy size(NULL) = -1 made rep_frac 0.0 for a
-    # NULL doc, sneaking contentless rows through the gate; NULL rep_frac
-    # fails the predicate on both engines, so NULL docs are curated OUT.
+    # nsize (not size, inside _ttr): legacy size(NULL) = -1 made
+    # rep_frac 0.0 for a NULL doc, sneaking contentless rows through the
+    # gate; NULL rep_frac fails the predicate on both engines, so NULL
+    # docs are curated OUT.
     rep = docs.select(
-        "doc_id",
-        "source",
-        "text",
-        (
-            1.0
-            - nsize(F.array_distinct(toks1)).cast("double")
-            / nsize(toks1)
-        ).alias("rep_frac"),
-    ).where(F.col("rep_frac") <= 0.62)
-    aug = rep.select(
-        "doc_id",
-        "rep_frac",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact "),
-            F.col("source"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com phone 555-01"),
-            F.lpad((F.col("doc_id") % 100).cast("string"), 2, "0"),
-            F.lit(" ip 10.0."),
-            (F.col("doc_id") % 256).cast("string"),
-            F.lit(".1"),
-        ).alias("full_text"),
-    )
-    red = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("full_text"), _EMAIL_RE, "<EMAIL>"),
-            _PHONE_RE,
-            "<PHONE>",
-        ),
-        _IP_RE,
-        "<IP>",
-    )
-    bucket = split_bucket(F.col("doc_id"))
+        "doc_id", "source", "text", (1.0 - _ttr(toks1)).alias("rep_frac")
+    ).where(F.col("rep_frac") <= _REP_MAX)
+    aug = rep.select("doc_id", "rep_frac", _planted().alias("full_text"))
     staged = aug.select(
         "doc_id",
         "rep_frac",
-        bucket.alias("bucket"),
-        tokens(red).alias("toks"),
+        split_bucket(F.col("doc_id")).alias("bucket"),
+        tokens(_redact(F.col("full_text"))).alias("toks"),
     )
     n_toks = F.size("toks")
-    starts = F.filter(
-        F.sequence(
-            F.lit(0), n_toks + _CHUNK_STRIDE, F.lit(_CHUNK_STRIDE)
-        ),
-        lambda st: st < n_toks,
-    )
     return staged.select(
         "doc_id",
-        F.when(F.col("bucket") < 80, "train")
-        .when(F.col("bucket") < 90, "val")
-        .otherwise("test")
-        .alias("split"),
+        _split_label(F.col("bucket")).alias("split"),
         dround(F.col("rep_frac"), 4).alias("rep_frac"),
         n_toks.alias("n_tokens"),
-        F.size(starts).alias("n_chunks"),
+        F.size(_starts(n_toks, _CHUNK_STRIDE)).alias("n_chunks"),
         # concat_ws flattens a NULL array to '' (md5('') =
         # d41d8cd9...), while the oracle's array_to_string(NULL) is
         # NULL — gate on the array so a row whose augmented text is
@@ -577,11 +568,7 @@ _UNK_ID = _VOCAB_SIZE
 @register(
     "x04_tokenize_to_ids",
     oracle=f"""
-    WITH t AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS toks
-        FROM documents
-    ),
+    WITH t AS (SELECT doc_id, {_toks_sql('text')} AS toks FROM documents),
     tokc AS (
         SELECT unnest(toks) AS token FROM t
     ),
@@ -706,9 +693,8 @@ _MIX_KEEP = 0.5
     ),
     acc AS (
         SELECT d.source,
-               ((((d.doc_id % {_SPLIT_PRIME}) * {_SPLIT_MULT})
-                   % {_SPLIT_PRIME} % {_SPLIT_PRIME}) * {_MIX_MULT})
-                   % {_SPLIT_PRIME} % 1000000 AS h,
+               (({_split_hash_sql('d.doc_id')} % {_SPLIT_PRIME})
+                * {_MIX_MULT}) % {_SPLIT_PRIME} % 1000000 AS h,
                r.rate
         FROM documents d JOIN r ON d.source = r.source
     )
@@ -758,7 +744,7 @@ def x04_mixing_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_docs"),
         ).alias("rate"),
     )
-    h1 = ((F.col("doc_id") % _SPLIT_PRIME) * _SPLIT_MULT) % _SPLIT_PRIME
+    h1 = _split_hash(F.col("doc_id"))
     h = ((h1 % _SPLIT_PRIME) * _MIX_MULT) % _SPLIT_PRIME % 1_000_000
     acc = docs.select("doc_id", "source", h.alias("h")).join(
         F.broadcast(rates), "source"
@@ -775,47 +761,13 @@ def x04_mixing_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q18_export_training_shards",
     oracle=f"""
-    WITH rep AS (
-        SELECT doc_id, source, text,
-               1.0 - len(list_distinct(list_filter(string_split(text, ' '),
-                                                   x -> x <> '')))::DOUBLE
-                   / len(list_filter(string_split(text, ' '),
-                                     x -> x <> '')) AS rep_frac
-        FROM documents
-    ),
-    kept AS (SELECT * FROM rep WHERE rep_frac <= 0.62),
-    aug AS (
-        SELECT doc_id,
-               regexp_replace(
-                   regexp_replace(
-                       regexp_replace(
-                           text || ' contact ' || source || doc_id::VARCHAR
-                               || '@example.com phone 555-01'
-                               || lpad((doc_id % 100)::VARCHAR, 2, '0')
-                               || ' ip 10.0.' || (doc_id % 256)::VARCHAR
-                               || '.1',
-                           '{_EMAIL_RE}', '<EMAIL>', 'g'),
-                       '{_PHONE_RE}', '<PHONE>', 'g'),
-                   '{_IP_RE}', '<IP>', 'g') AS red,
-               ((doc_id % {_SPLIT_PRIME}) * {_SPLIT_MULT})
-                   % {_SPLIT_PRIME} % 100 AS bucket
-        FROM kept
-    ),
-    rows_out AS (
-        SELECT doc_id,
-               CASE WHEN bucket < 80 THEN 'train'
-                    WHEN bucket < 90 THEN 'val'
-                    ELSE 'test' END AS split,
-               len(list_filter(string_split(red, ' '), x -> x <> ''))
-                   AS n_tokens
-        FROM aug
-    )
+    WITH {_CURATED_SQL}
     SELECT split,
            count(*) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+           CAST(sum(len(toks)) AS BIGINT) AS total_tokens,
            min(doc_id) AS min_doc_id,
            max(doc_id) AS max_doc_id
-    FROM rows_out
+    FROM curated
     GROUP BY split
     """,
     tags=("sinks", "Q18", "X4", "export"),
@@ -1051,9 +1003,7 @@ _BP_MIN_DOCS = 2
     "x04_boilerplate_removal",
     oracle=f"""
     WITH t AS (
-        SELECT doc_id, source,
-               list_filter(string_split(text, ' '), x -> x <> '') AS toks
-        FROM documents
+        SELECT doc_id, source, {_toks_sql('text')} AS toks FROM documents
     ),
     b AS (
         SELECT doc_id, source,
@@ -1063,9 +1013,7 @@ _BP_MIN_DOCS = 2
                               least(start + {_BP_BLOCK}, len(toks))),
                    ' ') AS block_text
         FROM t CROSS JOIN LATERAL (
-            SELECT unnest(list_filter(
-                range(0, len(toks) + {_BP_BLOCK}, {_BP_BLOCK}),
-                st -> st < len(toks))) AS start
+            SELECT unnest({_starts_sql('len(toks)', _BP_BLOCK)}) AS start
         ) gs
     ),
     boiler AS (
@@ -1127,18 +1075,12 @@ def boilerplate_removal_over(docs: DataFrame) -> DataFrame:
     DataFrame — the composable body of :func:`x04_boilerplate_removal`
     (refactored round 15 for the scale harness; plan and output on the
     graded corpus are unchanged)."""
-    toks = tokens(F.col("text"))
-    n_tok = F.size("toks")
-    starts = F.filter(
-        F.sequence(F.lit(0), n_tok + _BP_BLOCK, F.lit(_BP_BLOCK)),
-        lambda st: st < n_tok,
-    )
     blocks = (
-        docs.select("doc_id", "source", toks.alias("toks"))
+        docs.select("doc_id", "source", tokens(F.col("text")).alias("toks"))
         .select(
             "doc_id",
             "source",
-            F.explode(starts).alias("start"),
+            F.explode(_starts(F.size("toks"), _BP_BLOCK)).alias("start"),
             F.col("toks"),
         )
         .select(
@@ -1197,9 +1139,7 @@ _SHUF_SHARDS = 8
     "x04_global_shuffle",
     oracle=f"""
     WITH h AS (
-        SELECT doc_id,
-               ((doc_id % {_SPLIT_PRIME}) * {_SPLIT_MULT})
-                   % {_SPLIT_PRIME} AS order_hash
+        SELECT doc_id, {_split_hash_sql('doc_id')} AS order_hash
         FROM documents
     )
     SELECT doc_id,
@@ -1218,8 +1158,8 @@ def x04_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     Training wants examples in an order uncorrelated with ingest order,
     reproducible across re-runs and cluster sizes. A bijective
     multiplicative hash of ``doc_id`` under the split prime gives every
-    doc a unique pseudo-random rank with zero RNG/seed state (same
-    family as :func:`split_bucket`); docs are dealt into shards by hash
+    doc a unique pseudo-random rank with zero RNG/seed state (the split
+    hash, :func:`_split_hash`); docs are dealt into shards by hash
     and given a dense in-shard position — (shard, position) IS the
     training read order.
 
@@ -1232,9 +1172,7 @@ def x04_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard count scales to O(total/shard-budget)).
     """
     docs = table(spark, sf_dir, "documents")
-    order_hash = (
-        (F.col("doc_id") % _SPLIT_PRIME) * _SPLIT_MULT
-    ) % _SPLIT_PRIME
+    order_hash = _split_hash(F.col("doc_id"))
     h = docs.select(
         "doc_id",
         order_hash.alias("order_hash"),
@@ -1249,29 +1187,63 @@ def x04_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "x04_bpe_pair_stats",
-    oracle="""
-    WITH toks AS (
-        SELECT unnest(list_filter(string_split(text, ' '), x -> x <> ''))
-               AS t
-        FROM documents
-    ),
-    pairs AS (
-        SELECT unnest(list_transform(
+def _census(toks: DataFrame, *keys: str) -> DataFrame:
+    """Adjacent-pair census ``(*keys, pair, n)`` of the ``t`` token
+    column of ``toks``, grouped by the string columns ``keys`` too: one
+    Arrow pass per task (:func:`_pair_census_partials`), then one merge
+    aggregate."""
+    schema = ", ".join([f"{k} string" for k in keys] + ["pair string, pn long"])
+    partials = toks.filter(F.length("t") >= 2).mapInPandas(
+        _pair_census_partials, schema=schema
+    )
+    return partials.groupBy(*keys, "pair").agg(F.sum("pn").alias("n"))
+
+
+def _pair_order() -> tuple[Column, Column]:
+    """Census order: count descending, ties to the lower pair."""
+    return F.col("n").desc(), F.col("pair").asc()
+
+
+def _top_pairs(counted: DataFrame, k: int, *keys: str) -> DataFrame:
+    """The first ``k`` census rows with their 1-based ``rank``: top-k FIRST
+    via TakeOrderedAndProject (per-partition heads, no global sort), so
+    the global row_number window runs over ``k`` rows, never the pair
+    space (bounded by |alphabet|², but that is 100k+ for unicode)."""
+    top = counted.orderBy(*_pair_order()).limit(k)
+    w = Window.orderBy(*_pair_order())
+    return top.withColumn("rank", F.row_number().over(w)).select(
+        *keys, "pair", "n", "rank"
+    )
+
+
+def _pairs_sql(src: str) -> str:
+    """DuckDB twin of :func:`_census` before its count: one ``pair`` row
+    per adjacent character pair of the tokens ``t`` of ``src``."""
+    return f"""SELECT unnest(list_transform(
                    generate_series(1, length(t) - 1),
                    i -> substring(t, CAST(i AS INT), 2))) AS pair
-        FROM toks
-        WHERE length(t) >= 2
-    )
-    SELECT pair, n, rank FROM (
+        FROM {src}
+        WHERE length(t) >= 2"""
+
+
+def _pair_rank_sql(src: str, k: int) -> str:
+    """DuckDB twin of :func:`_top_pairs` over the pairs of ``src``."""
+    return f"""SELECT pair, n, rank FROM (
         SELECT pair,
                count(*) AS n,
                row_number() OVER (ORDER BY count(*) DESC, pair ASC) AS rank
-        FROM pairs
+        FROM {src}
         GROUP BY pair
     )
-    WHERE rank <= 100
+    WHERE rank <= {k}"""
+
+
+@register(
+    "x04_bpe_pair_stats",
+    oracle=f"""
+    WITH toks AS (SELECT unnest({_toks_sql('text')}) AS t FROM documents),
+    pairs AS ({_pairs_sql('toks')})
+    {_pair_rank_sql('pairs', 100)}
     """,
     tags=("curation", "X4", "bpe"),
 )
@@ -1299,21 +1271,9 @@ def x04_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Widen before the explode: the round-robin then moves ~doc-count
     # rows, not ~token-count rows, and the explode itself parallelizes.
     toks = ensure_min_parallelism(docs).select(
-        F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("t")
-    ).filter(F.length("t") >= 2)
-    pairs = toks.mapInPandas(
-        _pair_census_partials, schema="pair string, pn long"
+        F.explode(tokens(F.col("text"))).alias("t")
     )
-    counted = pairs.groupBy("pair").agg(F.sum("pn").alias("n"))
-    # Top-100 FIRST via TakeOrderedAndProject (per-partition heads, no
-    # global sort), then rank only the surviving 100 rows — the global
-    # row_number window runs over 100 rows, never the full pair space
-    # (bounded by |alphabet|² but that's 100k+ for unicode corpora).
-    top = counted.orderBy(F.col("n").desc(), F.col("pair").asc()).limit(100)
-    w = Window.orderBy(F.col("n").desc(), F.col("pair").asc())
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        "pair", "n", "rank"
-    )
+    return _top_pairs(_census(toks), 100)
 
 
 #: Flush threshold for the per-task pair-census accumulator (module level
@@ -1584,50 +1544,17 @@ def x04_source_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x04_bpe_merge_apply",
-    oracle="""
-    WITH toks AS (
-        SELECT unnest(list_filter(string_split(text, ' '), x -> x <> ''))
-               AS t
-        FROM documents
-    ),
-    pairs AS (
-        SELECT unnest(list_transform(
-                   generate_series(1, length(t) - 1),
-                   i -> substring(t, CAST(i AS INT), 2))) AS pair
-        FROM toks
-        WHERE length(t) >= 2
-    ),
-    top1 AS (
-        SELECT pair AS merged_pair
-        FROM pairs
-        GROUP BY pair
-        ORDER BY count(*) DESC, pair ASC
-        LIMIT 1
-    ),
+    oracle=f"""
+    WITH toks AS (SELECT unnest({_toks_sql('text')}) AS t FROM documents),
+    pairs AS ({_pairs_sql('toks')}),
+    top1 AS (SELECT pair AS merged_pair FROM ({_pair_rank_sql('pairs', 1)})),
     merged AS (
         SELECT replace(t, (SELECT merged_pair FROM top1), chr(1)) AS t
         FROM toks
     ),
-    pairs2 AS (
-        SELECT unnest(list_transform(
-                   generate_series(1, length(t) - 1),
-                   i -> substring(t, CAST(i AS INT), 2))) AS pair
-        FROM merged
-        WHERE length(t) >= 2
-    )
-    SELECT
-        (SELECT merged_pair FROM top1) AS merged_pair,
-        pair,
-        n,
-        rank
-    FROM (
-        SELECT pair,
-               count(*) AS n,
-               row_number() OVER (ORDER BY count(*) DESC, pair ASC) AS rank
-        FROM pairs2
-        GROUP BY pair
-    )
-    WHERE rank <= 20
+    pairs2 AS ({_pairs_sql('merged')})
+    SELECT (SELECT merged_pair FROM top1) AS merged_pair, *
+    FROM ({_pair_rank_sql('pairs2', 20)})
     """,
     tags=("curation", "X4", "bpe"),
 )
@@ -1662,21 +1589,13 @@ def x04_bpe_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts would execute the broadcast at plan time — see
     # ensure_min_parallelism).
     toks = ensure_min_parallelism(docs).select(
-        F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("t")
+        F.explode(tokens(F.col("text"))).alias("t")
     )
-
-    # Both censuses run as ONE Arrow pass each (``_pair_census_partials``
-    # — r17 opt, same rationale and measurement as x04_bpe_pair_stats;
-    # the merge rewrite itself stays a codegen ``replace`` projection).
-    def census(tok_df: DataFrame) -> DataFrame:
-        partials = tok_df.filter(F.length("t") >= 2).mapInPandas(
-            _pair_census_partials, schema="pair string, pn long"
-        )
-        return partials.groupBy("pair").agg(F.sum("pn").alias("n"))
-
+    # Both censuses run as ONE Arrow pass each (:func:`_census`); the
+    # merge rewrite itself stays a codegen ``replace`` projection.
     top1 = (
-        census(toks)
-        .orderBy(F.col("n").desc(), F.col("pair").asc())
+        _census(toks)
+        .orderBy(*_pair_order())
         .limit(1)
         .select(F.col("pair").alias("merged_pair"))
     )
@@ -1684,15 +1603,4 @@ def x04_bpe_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.replace(F.col("t"), F.col("merged_pair"), F.lit("\x01")).alias("t"),
         "merged_pair",
     )
-    counted_partials = merged.filter(F.length("t") >= 2).mapInPandas(
-        _pair_census_partials,
-        schema="merged_pair string, pair string, pn long",
-    )
-    counted = counted_partials.groupBy("merged_pair", "pair").agg(
-        F.sum("pn").alias("n")
-    )
-    top = counted.orderBy(F.col("n").desc(), F.col("pair").asc()).limit(20)
-    w = Window.orderBy(F.col("n").desc(), F.col("pair").asc())
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        "merged_pair", "pair", "n", "rank"
-    )
+    return _top_pairs(_census(merged, "merged_pair"), 20, "merged_pair")

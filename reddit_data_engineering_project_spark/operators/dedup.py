@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.numeric import dround
 from ..registry import register
 from ..tables import ensure_min_parallelism, table
+from .curation import _split_bucket_sql, _split_sql, split_of
 
 #: MinHash parameters: K hashes, banded B bands × R rows (K = B*R).
 #: Universal-hash coefficients drawn once from a fixed seed so every run
@@ -1104,16 +1105,8 @@ def x02_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     labeled AS (
         SELECT doc_a, doc_b,
-               CASE WHEN ((doc_a % 1000000007) * 2654435761)
-                         % 1000000007 % 100 < 80 THEN 'train'
-                    WHEN ((doc_a % 1000000007) * 2654435761)
-                         % 1000000007 % 100 < 90 THEN 'val'
-                    ELSE 'test' END AS split_a,
-               CASE WHEN ((doc_b % 1000000007) * 2654435761)
-                         % 1000000007 % 100 < 80 THEN 'train'
-                    WHEN ((doc_b % 1000000007) * 2654435761)
-                         % 1000000007 % 100 < 90 THEN 'val'
-                    ELSE 'test' END AS split_b
+               {_split_sql(_split_bucket_sql('doc_a'))} AS split_a,
+               {_split_sql(_split_bucket_sql('doc_b'))} AS split_b
         FROM verified
     )
     SELECT doc_a, doc_b, split_a, split_b
@@ -1141,8 +1134,6 @@ def pipeline_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline it reuses. At 100 TB the pair set is the already-amortized
     dedup artifact; the audit itself is a free scan over it.
     """
-    from .curation import split_of
-
     pairs = minhash_verified_pairs(spark, sf_dir)
     labeled = pairs.select(
         "doc_a",

@@ -148,9 +148,10 @@ def _recall_at_k(
     exact = x03_cosine_topk_bruteforce(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
+    # |queries|·k rows a side: broadcast the found side, no shuffle join.
     found = found.select("query_id", F.col("neighbor_id").alias("found_id"))
     hits = exact.join(
-        found,
+        F.broadcast(found),
         (exact["query_id"] == found["query_id"])
         & (exact["neighbor_id"] == found["found_id"]),
         "left",

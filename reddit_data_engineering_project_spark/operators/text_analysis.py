@@ -1,11 +1,41 @@
 """Text-analysis operators (north star X4).
 
 The training-data quality layer over ``documents``: per-doc statistics,
-term frequency, heuristic language ID, and rolling-hash fingerprints.
-Everything is built-in-function Spark (split/explode/aggregate/
-higher-order functions) — zero Python on the data path, so each query is
-one or two shuffles over JVM codegen, flat per-row cost at any corpus
-size.
+term frequency, heuristic language ID, rolling-hash fingerprints,
+sampling and packing. Everything is built-in-function Spark
+(split/explode/aggregate/higher-order functions) — zero Python on the
+data path, so each query is one or two shuffles over JVM codegen, flat
+per-row cost at any corpus size.
+
+The text contract, written once per engine (Spark helper / oracle SQL
+fragment, composed into the oracles by f-string):
+
+- a document's tokens are its ``text`` split on single spaces with the
+  empty strings dropped (:func:`tokens`, :func:`_toks_sql`); NULL text
+  has NULL tokens;
+- the quality features are the type-token ratio (:func:`_ttr`,
+  ``_TTR_SQL``) and the share of tokens in ``_EN_STOP``
+  (:func:`_stop_ratio`, ``_STOP_RATIO_SQL``); a document is kept when
+  it has at least ``_MIN_TOKENS`` tokens, ``_MIN_CHARS`` characters and
+  a ratio of at least ``_MIN_TTR`` (:func:`_keep`, ``_KEEP_SQL``);
+- a token's hash rolls its character codes from 0, one step being
+  ``acc·_FP_BASE + v`` mod ``_FP_MOD`` (:func:`_char_hash`,
+  :func:`_char_hash_sql`), and a fingerprint rolls the token hashes the
+  same way;
+- a hash sample reads the first hex digits of ``md5(doc_id)`` as an
+  integer (:func:`_md5_int`, :func:`_md5_int_sql`);
+- a document's bigrams are its adjacent token pairs joined by a space
+  (:func:`_bigram_zip` + :func:`_bigram`, ``_BIGRAMS_SQL``);
+- packing cuts each ``doc_id % _PACK_SHARDS`` shard, in ``doc_id``
+  order, into ``_PACK_BUDGET``-token bins (:func:`_pack`,
+  :func:`_pack_sql`).
+
+Two entries keep their own spelling because a shared one would change
+their plan: ``x04_ngram_vocab`` builds bigrams with ``zip_with`` and
+``x04_decontamination`` shingles the unfiltered split of
+``dedup.shingles``. ``pipeline_training_prep`` measures tokens with
+``size`` (-1 for NULL text, which its gate drops) instead of
+:func:`nsize`.
 
 Language-ID heuristic: tiny public stopword lists per language (the
 classic n-gram/stopword-profile approach scaled down to the corpus's
@@ -32,13 +62,28 @@ _PROFILES: dict[str, list[str]] = {
 #: English stopwords used for the quality-score ratio.
 _EN_STOP = ["the", "a", "and", "of", "to", "in", "is", "that", "it", "for"]
 
+#: Rolling-hash base and modulus (products stay below 2^62).
 _FP_MOD = 1_000_000_007
 _FP_BASE = 131
+
+#: The quality gate of x04_quality_filter and pipeline_training_prep.
+_MIN_TOKENS = 20
+_MIN_CHARS = 100
+_MIN_TTR = 0.3
+
+#: Packing geometry: token budget per bin, and shards packed apart.
+_PACK_BUDGET = 2048
+_PACK_SHARDS = 16
 
 
 def tokens(col: Column) -> Column:
     """Whitespace tokenization with empties dropped."""
     return F.filter(F.split(col, " "), lambda t: t != "")
+
+
+def _toks_sql(col: str) -> str:
+    """DuckDB twin of :func:`tokens`."""
+    return f"list_filter(string_split({col}, ' '), x -> x <> '')"
 
 
 def nsize(arr: Column) -> Column:
@@ -50,12 +95,151 @@ def nsize(arr: Column) -> Column:
     return F.nullif(F.size(arr), F.lit(-1))
 
 
+def _profile_score_sql(words: list[str]) -> str:
+    """DuckDB twin of :func:`_profile_score` over the ``toks`` column."""
+    listed = ",".join(f"'{w}'" for w in words)
+    return f"len(list_filter(toks, x -> list_contains([{listed}], x)))"
+
+
+def _ttr(toks: Column) -> Column:
+    """Type-token ratio: distinct tokens over tokens (NULL for NULL text)."""
+    return nsize(F.array_distinct(toks)).cast("double") / nsize(toks)
+
+
+def _stop_ratio(toks: Column) -> Column:
+    """Share of the tokens that are in ``_EN_STOP``."""
+    stop = F.array(*[F.lit(w) for w in _EN_STOP])
+    return (
+        nsize(F.filter(toks, lambda t: F.array_contains(stop, t))).cast("double")
+        / nsize(toks)
+    )
+
+
+def _keep() -> Column:
+    """The quality gate over ``n_tokens``, ``n_chars`` and ``ttr``."""
+    return (
+        (F.col("n_tokens") >= _MIN_TOKENS)
+        & (F.col("n_chars") >= _MIN_CHARS)
+        & (F.col("ttr") >= _MIN_TTR)
+    )
+
+
+_TTR_SQL = "len(list_distinct(toks))::DOUBLE / len(toks)"
+_STOP_RATIO_SQL = f"{_profile_score_sql(_EN_STOP)}::DOUBLE / len(toks)"
+_KEEP_SQL = (
+    f"n_tokens >= {_MIN_TOKENS} AND n_chars >= {_MIN_CHARS} "
+    f"AND ttr >= {_MIN_TTR}"
+)
+
+
+def _roll(acc: Column, v: Column) -> Column:
+    """One step of the rolling hash."""
+    return (acc * _FP_BASE + v) % _FP_MOD
+
+
+def _char_hash(tok: Column) -> Column:
+    """Rolling hash of a token's character codes."""
+    return F.aggregate(
+        F.transform(F.split(tok, ""), lambda c: F.ascii(c).cast("long")),
+        F.lit(0).cast("long"),
+        _roll,
+    )
+
+
+_ROLL_SQL = f"(acc, v) -> (acc * {_FP_BASE} + v) % {_FP_MOD}"
+
+
+def _char_hash_sql(tok: str) -> str:
+    """DuckDB twin of :func:`_char_hash`."""
+    return f"""list_reduce(
+            list_prepend(
+                CAST(0 AS BIGINT),
+                list_transform(string_split_regex({tok}, ''),
+                               c -> CAST(ascii(c) AS BIGINT))
+            ),
+            {_ROLL_SQL}
+        )"""
+
+
+def _md5_int(n_hex: int) -> Column:
+    """The first ``n_hex`` hex digits of ``md5(doc_id)`` as a BIGINT."""
+    return F.conv(
+        F.substring(F.md5(F.col("doc_id").cast("string")), 1, n_hex), 16, 10
+    ).cast("long")
+
+
+def _md5_int_sql(n_hex: int) -> str:
+    """DuckDB twin of :func:`_md5_int`."""
+    return f"('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, {n_hex}))::BIGINT"
+
+
+def _bigram_zip() -> Column:
+    """Adjacent-token pairs of the array column ``toks``: arrays_zip of
+    its two shifted slices, which stays in whole-stage codegen (a
+    ``transform(sequence(...))`` lambda runs interpreted and measured
+    2.4x slower). ``slice`` with length -1 aborts the job, so callers
+    keep rows with at least two tokens before this projection."""
+    sz1 = F.greatest(F.size("toks") - 1, F.lit(0))
+    return F.arrays_zip(F.slice("toks", 1, sz1), F.slice(F.col("toks"), 2, sz1))
+
+
+def _bigram() -> Column:
+    """The bigram text of the exploded :func:`_bigram_zip` pair ``p``."""
+    return F.concat_ws(" ", F.col("p.0"), F.col("p.1"))
+
+
+_BIGRAMS_SQL = (
+    "list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1])"
+)
+
+
+def _pack(df: DataFrame, n_tokens: Column) -> DataFrame:
+    """Per-shard concat-and-chunk packing of ``df``'s ``doc_id`` rows of
+    ``n_tokens`` tokens: ``(doc_id, shard, n_tokens, bin_id,
+    bin_offset)``, where a doc starts at the running token sum of the
+    docs before it in its shard."""
+    staged = df.select(
+        "doc_id",
+        (F.col("doc_id") % _PACK_SHARDS).alias("shard"),
+        n_tokens.alias("n_tokens"),
+    )
+    w = (
+        Window.partitionBy("shard")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    start = (F.sum("n_tokens").over(w) - F.col("n_tokens")).alias("start_tok")
+    return staged.select("doc_id", "shard", "n_tokens", start).select(
+        "doc_id",
+        "shard",
+        "n_tokens",
+        F.floor(F.col("start_tok") / _PACK_BUDGET).alias("bin_id"),
+        (F.col("start_tok") % _PACK_BUDGET).alias("bin_offset"),
+    )
+
+
+def _pack_sql(src: str) -> str:
+    """DuckDB twin of :func:`_pack` over ``src``'s ``doc_id``,
+    ``n_tokens``: a CTE ``w`` and the final SELECT."""
+    return f"""w AS (
+        SELECT doc_id, doc_id % {_PACK_SHARDS} AS shard, n_tokens,
+               sum(n_tokens) OVER (
+                   PARTITION BY doc_id % {_PACK_SHARDS} ORDER BY doc_id
+                   ROWS UNBOUNDED PRECEDING
+               ) - n_tokens AS start_tok
+        FROM {src}
+    )
+    SELECT doc_id, shard, n_tokens,
+           CAST(floor(start_tok / {_PACK_BUDGET}.0) AS BIGINT) AS bin_id,
+           CAST(start_tok % {_PACK_BUDGET} AS BIGINT) AS bin_offset
+    FROM w"""
+
+
 @register(
     "x04_doc_stats",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-        SELECT doc_id, lang, n_chars,
-               list_filter(string_split(text, ' '), x -> x <> '') AS toks
+        SELECT doc_id, lang, n_chars, {_toks_sql('text')} AS toks
         FROM documents
     )
     SELECT
@@ -67,13 +251,8 @@ def nsize(arr: Column) -> Column:
         round(
             list_sum(list_transform(toks, x -> length(x)))::DOUBLE
             / len(toks) * 10000.0) / 10000.0 AS avg_token_len,
-        round(
-            len(list_distinct(toks))::DOUBLE / len(toks) * 10000.0
-        ) / 10000.0 AS type_token_ratio,
-        round(
-            len(list_filter(toks, x -> list_contains(
-                ['the','a','and','of','to','in','is','that','it','for'], x
-            )))::DOUBLE / len(toks) * 10000.0) / 10000.0 AS stopword_ratio
+        round({_TTR_SQL} * 10000.0) / 10000.0 AS type_token_ratio,
+        round({_STOP_RATIO_SQL} * 10000.0) / 10000.0 AS stopword_ratio
     FROM t
     """,
     tags=("text", "X4"),
@@ -88,7 +267,6 @@ def x04_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
-    stop_arr = F.array(*[F.lit(w) for w in _EN_STOP])
     n_toks = nsize(toks)
     return docs.select(
         "doc_id",
@@ -105,29 +283,31 @@ def x04_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             / n_toks,
             4,
         ).alias("avg_token_len"),
-        dround(
-            nsize(F.array_distinct(toks)).cast("double") / n_toks, 4
-        ).alias("type_token_ratio"),
-        dround(
-            nsize(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
-            .cast("double")
-            / n_toks,
-            4,
-        ).alias("stopword_ratio"),
+        dround(_ttr(toks), 4).alias("type_token_ratio"),
+        dround(_stop_ratio(toks), 4).alias("stopword_ratio"),
     )
+
+
+def _term_counts(docs: DataFrame) -> DataFrame:
+    """``(doc_id, token, tf)``: each token's count in each doc."""
+    tok = docs.select(
+        "doc_id", F.explode(tokens(F.col("text"))).alias("token")
+    )
+    return tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
+
+
+#: DuckDB twin of :func:`_term_counts` over the English docs: CTE ``tf``.
+_TF_SQL = f"""tok AS (
+        SELECT doc_id, unnest({_toks_sql('text')}) AS token
+        FROM documents WHERE lang = 'en'
+    ),
+    tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2)"""
 
 
 @register(
     "x04_term_frequency",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        FROM documents WHERE lang = 'en'
-    ),
-    tf AS (
-        SELECT doc_id, token, count(*) AS tf
-        FROM tok WHERE token <> '' GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_TF_SQL},
     doc_len AS (SELECT doc_id, sum(tf) AS n FROM tf GROUP BY 1),
     df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1)
     SELECT
@@ -155,11 +335,7 @@ def x04_term_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw tokens, and the plan is join-free.
     """
     docs = table(spark, sf_dir, "documents").filter(F.col("lang") == "en")
-    tok = docs.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("token")
-    )
-    tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
-    from pyspark.sql import Window
+    tf = _term_counts(docs)
 
     w_doc = Window.partitionBy("doc_id")
     w_tok = Window.partitionBy("token")
@@ -177,15 +353,8 @@ def x04_term_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x04_tfidf",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        FROM documents WHERE lang = 'en'
-    ),
-    tf AS (
-        SELECT doc_id, token, count(*) AS tf
-        FROM tok WHERE token <> '' GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_TF_SQL},
     n_docs AS (SELECT count(DISTINCT doc_id) AS n FROM tf),
     df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1)
     SELECT
@@ -216,11 +385,7 @@ def x04_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges at any scale.
     """
     docs = table(spark, sf_dir, "documents").filter(F.col("lang") == "en")
-    tok = docs.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("token")
-    )
-    tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
-    from pyspark.sql import Window
+    tf = _term_counts(docs)
 
     w_tok = Window.partitionBy("token")
     tf_df = tf.withColumn("df", F.count("*").over(w_tok))
@@ -251,48 +416,38 @@ def _profile_score(toks: Column, words: list[str]) -> Column:
 
 @register(
     "x04_language_id",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-        SELECT doc_id, lang,
-               list_filter(string_split(text, ' '), x -> x <> '') AS toks,
-               text
+        SELECT doc_id, lang, {_toks_sql('text')} AS toks, text
         FROM documents
     ),
     scored AS (
         SELECT
-            doc_id, lang, toks,
+            doc_id, lang,
             text IS NULL AS no_text,
-            (regexp_extract(text, '[\\x{4e00}-\\x{9fff}]') <> '') AS has_cjk,
-            len(list_filter(toks, x -> list_contains(
-                ['the','a','and','of','to','in','is','that'], x))) AS s_en,
-            len(list_filter(toks, x -> list_contains(
-                ['el','la','de','que','y','en','un','es'], x))) AS s_es,
-            len(list_filter(toks, x -> list_contains(
-                ['der','die','das','und','in','von','zu','mit'], x))) AS s_de,
-            len(list_filter(toks, x -> list_contains(
-                ['le','la','de','et','un','en','que','pour'], x))) AS s_fr
+            (regexp_extract(text, '[\\x{{4e00}}-\\x{{9fff}}]') <> '')
+                AS has_cjk,
+            {_profile_score_sql(_PROFILES['en'])} AS s_en,
+            {_profile_score_sql(_PROFILES['es'])} AS s_es,
+            {_profile_score_sql(_PROFILES['de'])} AS s_de,
+            {_profile_score_sql(_PROFILES['fr'])} AS s_fr
         FROM t
+    ),
+    guessed AS (
+        SELECT doc_id, lang,
+               CASE
+                   WHEN no_text THEN NULL
+                   WHEN has_cjk THEN 'zh'
+                   WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr
+                       THEN 'en'
+                   WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
+                   WHEN s_de >= s_fr THEN 'de'
+                   ELSE 'fr'
+               END AS guessed_lang
+        FROM scored
     )
-    SELECT
-        doc_id,
-        lang,
-        CASE
-            WHEN no_text THEN NULL
-            WHEN has_cjk THEN 'zh'
-            WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-            WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-            WHEN s_de >= s_fr THEN 'de'
-            ELSE 'fr'
-        END AS guessed_lang,
-        (CASE
-            WHEN no_text THEN NULL
-            WHEN has_cjk THEN 'zh'
-            WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-            WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-            WHEN s_de >= s_fr THEN 'de'
-            ELSE 'fr'
-        END = lang) AS guess_correct
-    FROM scored
+    SELECT doc_id, lang, guessed_lang, (guessed_lang = lang) AS guess_correct
+    FROM guessed
     """,
     tags=("text", "X4", "langid"),
 )
@@ -306,7 +461,7 @@ def x04_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Regex-dialect note (adversarial-sweep finding): Java regex takes
     the CJK block as ``[\\u4e00-\\u9fff]`` but DuckDB's RE2 does NOT
-    support ``\\uXXXX`` — it needs ``[\\x{{4e00}}-\\x{{9fff}}]``; the
+    support ``\\uXXXX`` — it needs ``[\\x{4e00}-\\x{9fff}]``; the
     old oracle spelling silently never matched, which the fixtures
     (whose "zh" docs are ASCII word salads) could not reveal — only
     a corpus with REAL CJK text fires the branch on both engines.
@@ -353,20 +508,17 @@ def x04_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x04_quality_filter",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-        SELECT doc_id, lang, n_chars,
-               list_filter(string_split(text, ' '), x -> x <> '') AS toks
+        SELECT doc_id, lang, n_chars, {_toks_sql('text')} AS toks
         FROM documents
     ),
     feat AS (
         SELECT
             doc_id, lang, n_chars,
             len(toks) AS n_tokens,
-            len(list_distinct(toks))::DOUBLE / len(toks) AS ttr,
-            len(list_filter(toks, x -> list_contains(
-                ['the','a','and','of','to','in','is','that','it','for'], x
-            )))::DOUBLE / len(toks) AS stop_ratio
+            {_TTR_SQL} AS ttr,
+            {_STOP_RATIO_SQL} AS stop_ratio
         FROM t
     )
     SELECT
@@ -377,9 +529,7 @@ def x04_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
             + least(stop_ratio / 0.08, 1.0) * 0.3
             + ttr * 0.3
         ) * 10000.0) / 10000.0 AS quality_score,
-        (n_tokens >= 20
-         AND n_chars >= 100
-         AND ttr >= 0.3) AS keep
+        ({_KEEP_SQL}) AS keep
     FROM feat
     """,
     tags=("text", "X4", "quality"),
@@ -396,19 +546,13 @@ def x04_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
-    n_toks = nsize(toks)
-    stop_arr = F.array(*[F.lit(w) for w in _EN_STOP])
     feat = docs.select(
         "doc_id",
         "lang",
         "n_chars",
-        n_toks.alias("n_tokens"),
-        (nsize(F.array_distinct(toks)).cast("double") / n_toks).alias("ttr"),
-        (
-            nsize(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
-            .cast("double")
-            / n_toks
-        ).alias("stop_ratio"),
+        nsize(toks).alias("n_tokens"),
+        _ttr(toks).alias("ttr"),
+        _stop_ratio(toks).alias("stop_ratio"),
     )
     score = (
         F.least(F.col("n_tokens") / 50.0, F.lit(1.0)) * 0.4
@@ -419,11 +563,7 @@ def x04_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         dround(score, 4).alias("quality_score"),
-        (
-            (F.col("n_tokens") >= 20)
-            & (F.col("n_chars") >= 100)
-            & (F.col("ttr") >= 0.3)
-        ).alias("keep"),
+        _keep().alias("keep"),
     )
 
 
@@ -485,13 +625,12 @@ def x04_quality_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x04_token_count",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT doc_id, lang,
                len(regexp_extract_all(text, '[a-zA-Z0-9]+|[^a-zA-Z0-9\\s]'))
                    AS n_wordish,
-               len(list_filter(string_split(text, ' '), x -> x <> ''))
-                   AS n_whitespace,
+               len({_toks_sql('text')}) AS n_whitespace,
                length(text) AS n_chars
         FROM documents
     )
@@ -536,11 +675,9 @@ def x04_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x04_fingerprint",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS toks
-        FROM documents
+        SELECT doc_id, {_toks_sql('text')} AS toks FROM documents
     )
     SELECT
         doc_id,
@@ -548,19 +685,9 @@ def x04_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         list_reduce(
             list_prepend(
                 CAST(0 AS BIGINT),
-                list_transform(
-                    toks,
-                    tok -> list_reduce(
-                        list_prepend(
-                            CAST(0 AS BIGINT),
-                            list_transform(string_split_regex(tok, ''),
-                                           c -> CAST(ascii(c) AS BIGINT))
-                        ),
-                        (acc, v) -> (acc * 131 + v) % 1000000007
-                    )
-                )
+                list_transform(toks, tok -> {_char_hash_sql('tok')})
             ),
-            (acc, v) -> (acc * 131 + v) % 1000000007
+            {_ROLL_SQL}
         ) END AS fingerprint,
         len(toks) AS n_tokens
     FROM t
@@ -571,26 +698,15 @@ def x04_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4d: polynomial rolling-hash document fingerprint.
 
     Two-level rolling hash (chars → token hash → doc hash), all modular
-    arithmetic in int64 (base 131, mod 1e9+7 — products stay < 2^62).
+    arithmetic in int64 (the rolling hash of the module docstring).
     Order-sensitive by construction: a fingerprint equality IS a
     same-token-stream statement, unlike the set-based MinHash. Pure
     higher-order functions on both engines.
     """
     docs = table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
-
-    def roll(acc: Column, v: Column) -> Column:
-        return (acc * _FP_BASE + v) % _FP_MOD
-
-    tok_hash = F.transform(
-        toks,
-        lambda tok: F.aggregate(
-            F.transform(F.split(tok, ""), lambda c: F.ascii(c).cast("long")),
-            F.lit(0).cast("long"),
-            roll,
-        ),
-    )
-    doc_hash = F.aggregate(tok_hash, F.lit(0).cast("long"), roll)
+    tok_hash = F.transform(toks, _char_hash)
+    doc_hash = F.aggregate(tok_hash, F.lit(0).cast("long"), _roll)
     return docs.select(
         "doc_id",
         doc_hash.alias("fingerprint"),
@@ -600,10 +716,10 @@ def x04_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x04_hash_sample",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, lang, source, n_chars
     FROM documents
-    WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 20 = 0
+    WHERE {_md5_int_sql(8)} % 20 = 0
     """,
     tags=("sampling", "X4"),
 )
@@ -622,21 +738,19 @@ def x04_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the same lake.
     """
     docs = table(spark, sf_dir, "documents")
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("long") % 20
-    return docs.filter(bucket == 0).select("doc_id", "lang", "source", "n_chars")
+    return docs.filter(_md5_int(8) % 20 == 0).select(
+        "doc_id", "lang", "source", "n_chars"
+    )
 
 
 @register(
     "x04_stratified_sample",
-    oracle="""
+    oracle=f"""
     WITH rated AS (
         SELECT doc_id, lang, source, n_chars,
                CASE lang WHEN 'en' THEN 2 WHEN 'de' THEN 5
                          WHEN 'es' THEN 5 ELSE 10 END AS keep_1_in,
-               ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-                   AS h
+               {_md5_int_sql(8)} AS h
         FROM documents
     )
     SELECT doc_id, lang, source, n_chars
@@ -662,37 +776,19 @@ def x04_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("lang").isin("de", "es"), 5)
         .otherwise(10)
     )
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
-    return docs.filter(h % keep_1_in == 0).select(
+    return docs.filter(_md5_int(8) % keep_1_in == 0).select(
         "doc_id", "lang", "source", "n_chars"
     )
 
 
 @register(
     "x04_sequence_packing",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT doc_id,
-               doc_id % 16 AS shard,
-               coalesce(len(list_filter(string_split(text, ' '),
-                                        x -> x <> '')), 0)
-                   AS n_tokens
+        SELECT doc_id, coalesce(len({_toks_sql('text')}), 0) AS n_tokens
         FROM documents
     ),
-    w AS (
-        SELECT *,
-               sum(n_tokens) OVER (
-                   PARTITION BY shard ORDER BY doc_id
-                   ROWS UNBOUNDED PRECEDING
-               ) - n_tokens AS start_tok
-        FROM toks
-    )
-    SELECT doc_id, shard, n_tokens,
-           CAST(floor(start_tok / 2048.0) AS BIGINT) AS bin_id,
-           CAST(start_tok % 2048 AS BIGINT) AS bin_offset
-    FROM w
+    {_pack_sql('toks')}
     """,
     tags=("text", "X4", "packing"),
 )
@@ -701,61 +797,28 @@ def x04_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The pretraining data-prep step after dedup/filtering: documents are
     concatenated in a deterministic order and cut into fixed
-    token-budget bins (2048 here), so each doc gets (bin_id,
-    bin_offset) — docs straddling a boundary spill into the next bin,
-    which is exactly concat-and-chunk training semantics.
+    token-budget bins, so each doc gets (bin_id, bin_offset) — docs
+    straddling a boundary spill into the next bin, which is exactly
+    concat-and-chunk training semantics.
 
-    Scale shape: packing is per-SHARD (doc_id % 16), not global — a
+    Scale shape: packing is per-SHARD (:func:`_pack`), not global — a
     single global running sum would serialize the corpus through one
     partition, while per-shard windows are one hash shuffle and
     embarrassingly parallel, which is how a distributed packer actually
     shards work. Shard count scales with the cluster; the window sort is
     per-shard and spills gracefully.
     """
-    budget = 2048
     docs = table(spark, sf_dir, "documents")
-    shard = (F.col("doc_id") % 16).alias("shard")
     # NULL text packs zero tokens (the doc still occupies its slot in
     # the deterministic doc_id order, shifting nothing).
-    base = docs.select(
-        "doc_id",
-        shard,
-        F.coalesce(nsize(tokens(F.col("text"))), F.lit(0)).alias("n_tokens"),
-    )
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    start = (F.sum("n_tokens").over(w) - F.col("n_tokens")).alias(
-        "start_tok"
-    )
-    packed = base.select("doc_id", "shard", "n_tokens", start)
-    return packed.select(
-        "doc_id",
-        "shard",
-        "n_tokens",
-        F.floor(F.col("start_tok") / budget).alias("bin_id"),
-        (F.col("start_tok") % budget).alias("bin_offset"),
-    )
+    return _pack(docs, F.coalesce(nsize(tokens(F.col("text"))), F.lit(0)))
 
 
 @register(
     "x04_ngram_vocab",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-    ),
-    grams AS (
-        SELECT w[gs.i] || ' ' || w[gs.i + 1] AS bigram
-        FROM toks CROSS JOIN LATERAL (
-            SELECT unnest(range(1, len(w))) AS i
-        ) gs
-    )
+    oracle=f"""
+    WITH t AS (SELECT {_toks_sql('text')} AS toks FROM documents),
+    grams AS (SELECT unnest({_BIGRAMS_SQL}) AS bigram FROM t)
     SELECT bigram, count(*) AS n
     FROM grams
     GROUP BY bigram
@@ -836,38 +899,23 @@ def x04_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipeline_training_prep",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-        SELECT doc_id, text, n_chars,
-               list_filter(string_split(text, ' '), x -> x <> '') AS toks
+        SELECT doc_id, text, n_chars, {_toks_sql('text')} AS toks
         FROM documents
     ),
     feat AS (
         SELECT doc_id, text, n_chars,
                len(toks) AS n_tokens,
-               len(list_distinct(toks))::DOUBLE / len(toks) AS ttr
+               {_TTR_SQL} AS ttr
         FROM t
     ),
-    kept AS (
-        SELECT * FROM feat
-        WHERE n_tokens >= 20 AND n_chars >= 100 AND ttr >= 0.3
-    ),
+    kept AS (SELECT * FROM feat WHERE {_KEEP_SQL}),
     dedup AS (
         SELECT min(doc_id) AS doc_id, min(n_tokens) AS n_tokens
         FROM kept GROUP BY text
     ),
-    w AS (
-        SELECT doc_id, doc_id % 16 AS shard, n_tokens,
-               sum(n_tokens) OVER (
-                   PARTITION BY doc_id % 16 ORDER BY doc_id
-                   ROWS UNBOUNDED PRECEDING
-               ) - n_tokens AS start_tok
-        FROM dedup
-    )
-    SELECT doc_id, shard, n_tokens,
-           CAST(floor(start_tok / 2048.0) AS BIGINT) AS bin_id,
-           CAST(start_tok % 2048 AS BIGINT) AS bin_offset
-    FROM w
+    {_pack_sql('dedup')}
     """,
     tags=("pipeline", "X4", "training-prep", "composition"),
 )
@@ -878,13 +926,13 @@ def pipeline_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame chain the optimizer sees whole:
 
     1. quality gate — the ``x04_quality_filter`` hard criteria
-       (n_tokens ≥ 20, n_chars ≥ 100, type-token ratio ≥ 0.3), a narrow
-       codegen projection + filter over the scan;
+       (:func:`_keep`), a narrow codegen projection + filter over the
+       scan;
     2. exact content dedup — groupBy ``sha2(text)``, survivor = min
        doc_id (one shuffle of 32-byte hashes + counts, never text);
     3. sequence packing — ``x04_sequence_packing``'s per-shard
-       concat-and-chunk bins over the surviving docs (one window
-       shuffle by shard).
+       concat-and-chunk bins (:func:`_pack`) over the surviving docs
+       (one window shuffle by shard).
 
     Two shuffles end to end, both over reduced streams; each stage's
     semantics are individually oracle-pinned by their standalone
@@ -909,11 +957,7 @@ def pipeline_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ttr"
         ),
     )
-    kept = feat.filter(
-        (F.col("n_tokens") >= 20)
-        & (F.col("n_chars") >= 100)
-        & (F.col("ttr") >= 0.3)
-    )
+    kept = feat.filter(_keep())
     dedup = (
         kept.groupBy(F.sha2(F.col("text"), 256).alias("__h"))
         .agg(
@@ -922,29 +966,7 @@ def pipeline_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("__h")
     )
-    from pyspark.sql import Window
-
-    budget = 2048
-    shard = (F.col("doc_id") % 16).alias("shard")
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    staged = dedup.select("doc_id", shard, "n_tokens")
-    start = (F.sum("n_tokens").over(w) - F.col("n_tokens")).alias(
-        "start_tok"
-    )
-    return (
-        staged.select("doc_id", "shard", "n_tokens", start)
-        .select(
-            "doc_id",
-            "shard",
-            "n_tokens",
-            F.floor(F.col("start_tok") / budget).alias("bin_id"),
-            (F.col("start_tok") % budget).alias("bin_offset"),
-        )
-    )
+    return _pack(dedup, F.col("n_tokens"))
 
 
 @register(
@@ -1021,26 +1043,15 @@ _BM25_TERMS = ("spark", "join", "window")
 @register(
     "x04_bm25_scores",
     oracle=f"""
-    WITH tok AS (
-        SELECT doc_id,
-               len(list_filter(string_split(text, ' '), x -> x <> ''))
-                   AS dl,
-               unnest(list_filter(string_split(text, ' '), x -> x <> ''))
-                   AS token
-        FROM documents
-    ),
+    WITH t AS (SELECT doc_id, {_toks_sql('text')} AS toks FROM documents),
+    tok AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS token FROM t),
     tf AS (
         SELECT doc_id, dl, token, count(*) AS tf
         FROM tok
-        WHERE token IN ('spark', 'join', 'window')
+        WHERE token IN {_BM25_TERMS}
         GROUP BY 1, 2, 3
     ),
-    stats AS (
-        SELECT count(*) AS n,
-               sum(len(list_filter(string_split(text, ' '),
-                                   x -> x <> ''))) AS sum_dl
-        FROM documents
-    ),
+    stats AS (SELECT count(*) AS n, sum(len(toks)) AS sum_dl FROM t),
     df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
     scored AS (
         SELECT
@@ -1142,17 +1153,10 @@ def bm25_scores_over(docs: DataFrame) -> DataFrame:
 
 @register(
     "x04_lm_quality_score",
-    oracle="""
-    WITH t AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS toks
-        FROM documents
-    ),
+    oracle=f"""
+    WITH t AS (SELECT doc_id, {_toks_sql('text')} AS toks FROM documents),
     bg AS (
-        SELECT doc_id,
-               unnest(list_transform(range(1, len(toks)),
-                                     i -> toks[i] || ' ' || toks[i + 1]))
-                   AS bigram
+        SELECT doc_id, unnest({_BIGRAMS_SQL}) AS bigram
         FROM t
         WHERE len(toks) >= 2
     ),
@@ -1217,25 +1221,11 @@ def x04_lm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select("doc_id", toks.alias("toks")).filter(
         F.size("toks") >= 2
     )
-    # Bigrams via arrays_zip of the two shifted slices (r17 opt — the
-    # x04_repetition_metrics idiom, measured 2.4× over the HOF there):
-    # both slices and the explode run in codegen, where the previous
-    # transform(sequence) comprehension evaluated its lambda INTERPRETED
-    # per bigram (the round-16 HOF finding). A posexplode+element_at
-    # form was tried first and measured SLOWER than the HOF: the
-    # generator re-materializes the whole token array per output row.
-    # Identical bigram multiset (size >= 2 rows only; concat_ws skips
-    # NULLs the same way in both spellings).
-    sz1 = F.greatest(F.size("toks") - 1, F.lit(0))
-    bg = t.select(
-        "doc_id",
-        F.explode(
-            F.arrays_zip(
-                F.slice("toks", 1, sz1), F.slice(F.col("toks"), 2, sz1)
-            )
-        ).alias("p"),
-    ).select(
-        "doc_id", F.concat_ws(" ", F.col("p.0"), F.col("p.1")).alias("bigram")
+    # A posexplode+element_at bigram form was tried first and measured
+    # SLOWER than the HOF: the generator re-materializes the whole token
+    # array per output row.
+    bg = t.select("doc_id", F.explode(_bigram_zip()).alias("p")).select(
+        "doc_id", _bigram().alias("bigram")
     )
     doc_bg = bg.groupBy("doc_id", "bigram").agg(F.count("*").alias("n_occ"))
     c12 = bg.groupBy("bigram").agg(F.count("*").alias("c12"))
@@ -1279,13 +1269,12 @@ def x04_lm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x04_readability",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT
             doc_id,
             lang,
-            greatest(len(list_filter(string_split(text, ' '),
-                                     x -> x <> '')), 1) AS n_words,
+            greatest(len({_toks_sql('text')}), 1) AS n_words,
             greatest(len(regexp_split_to_array(text, '[.!?]+')) - 1, 1)
                 AS n_sentences,
             greatest(len(regexp_split_to_array(text, '[aeiouyAEIOUY]+')) - 1,
@@ -1376,21 +1365,10 @@ _FH_DIMS = 64
     "x04_feature_hashing",
     oracle=f"""
     WITH t AS (
-        SELECT doc_id,
-               unnest(list_filter(string_split(text, ' '), x -> x <> ''))
-                   AS tok
-        FROM documents
+        SELECT doc_id, unnest({_toks_sql('text')}) AS tok FROM documents
     ),
     hashed AS (
-        SELECT doc_id,
-               list_reduce(
-                   list_prepend(
-                       CAST(0 AS BIGINT),
-                       list_transform(string_split_regex(tok, ''),
-                                      c -> CAST(ascii(c) AS BIGINT))
-                   ),
-                   (acc, v) -> (acc * {_FP_BASE} + v) % {_FP_MOD}
-               ) % {_FH_DIMS} AS dim
+        SELECT doc_id, {_char_hash_sql('tok')} % {_FH_DIMS} AS dim
         FROM t
     )
     SELECT doc_id, CAST(dim AS BIGINT) AS dim,
@@ -1405,7 +1383,7 @@ def x04_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The bridge from the text world to the vector world without a learned
     embedding or a vocabulary table: each token hashes straight to one
-    of {_FH_DIMS} dimensions (same rolling char hash as the fingerprint
+    of 64 dimensions (same rolling char hash as the fingerprint
     op, then a modulus), and the document's sparse bag-of-words vector
     is the per-(doc, dim) term-frequency — emitted long-form, the
     storage shape sparse-vector tooling consumes. Collisions are the
@@ -1422,16 +1400,9 @@ def x04_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     tok = F.explode(tokens(F.col("text"))).alias("tok")
     t = docs.select("doc_id", tok)
-
-    def roll(acc: Column, v: Column) -> Column:
-        return (acc * _FP_BASE + v) % _FP_MOD
-
-    tok_hash = F.aggregate(
-        F.transform(F.split(F.col("tok"), ""), lambda c: F.ascii(c).cast("long")),
-        F.lit(0).cast("long"),
-        roll,
+    hashed = t.select(
+        "doc_id", (_char_hash(F.col("tok")) % _FH_DIMS).alias("dim")
     )
-    hashed = t.select("doc_id", (tok_hash % _FH_DIMS).alias("dim"))
     return hashed.groupBy("doc_id", F.col("dim").cast("bigint").alias("dim")).agg(
         F.count("*").cast("bigint").alias("tf")
     )
@@ -1449,9 +1420,7 @@ _WS_DENOM = 281474976710657.0
     WITH pri AS (
         SELECT doc_id, source, n_chars,
                CAST(round(
-                   ln((CAST(concat('0x',
-                           substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))
-                        AS BIGINT) + 1) / {_WS_DENOM!r})
+                   ln(({_md5_int_sql(12)} + 1) / {_WS_DENOM!r})
                    / greatest(n_chars, 1) * 1000000.0) AS BIGINT)
                    AS key_e6
         FROM documents
@@ -1471,7 +1440,7 @@ _WS_DENOM = 281474976710657.0
 def x04_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4: weighted sampling WITHOUT replacement (Efraimidis–Spirakis
     A-ES) — the curation primitive rate/cap sampling can't express:
-    pick {_WS_N} docs with inclusion probability proportional to a
+    pick 100 docs with inclusion probability proportional to a
     per-doc weight (here ``n_chars``, i.e. a token-budget-proportional
     draw; swap in a quality score unchanged).
 
@@ -1487,17 +1456,14 @@ def x04_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     of an e6 unit here, 10 orders below the rounding step).
 
     Scale shape: priority is a narrow map-side projection riding the
-    scan (md5 + one ln per row, no shuffle); the top-{_WS_N} runs as
+    scan (md5 + one ln per row, no shuffle); the top-100 runs as
     distributed TakeOrderedAndProject (never a global sort — the
-    q04_topk contract); the rank window orders only the {_WS_N}
+    q04_topk contract); the rank window orders only the 100
     surviving rows. Merge-compatibility means the same plan shape
     holds per-partition at any fleet size.
     """
     docs = table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12), 16, 10
-    ).cast("long")
-    u = (h + F.lit(1)) / F.lit(_WS_DENOM)
+    u = (_md5_int(12) + F.lit(1)) / F.lit(_WS_DENOM)
     key_e6 = (
         F.round(
             F.log(u)

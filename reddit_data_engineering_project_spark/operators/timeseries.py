@@ -559,9 +559,9 @@ def q22_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The classic sequential change-point detector: has this user's spend
     drifted above the target level? Its textbook form is a recurrence
-    (``C_t = max(0, C_{{t-1}} + dev_t)``) that no window function
+    (``C_t = max(0, C_{t-1} + dev_t)``) that no window function
     expresses — but it has the exact closed form
-    ``C_t = S_t − min(0, min_{{i≤t}} S_i)`` over the running deviation
+    ``C_t = S_t − min(0, min_{i≤t} S_i)`` over the running deviation
     sum ``S``, which IS two stacked window passes: a running cumsum,
     then a running minimum of that cumsum in the same event order.
     This is the same recurrence-to-prefix-form rewrite that makes

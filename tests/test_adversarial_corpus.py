@@ -265,6 +265,15 @@ DEGENERATE_ZERO_ROWS = {
 }
 
 
+#: Every entry of ``operators/text_analysis.py`` and
+#: ``operators/curation.py`` (the X4 text contract), plus the split
+#: leakage audit, which composes the curation split.
+TEXT_ENTRIES = sorted(
+    n for n, fn in registry.QUERIES.items()
+    if fn.__module__.endswith(("operators.text_analysis", "operators.curation"))
+) + ["pipeline_split_leakage_audit"]
+
+
 @pytest.mark.parametrize("corpus", [0, 1], ids=["empty", "one"])
 @pytest.mark.parametrize(
     "name",
@@ -273,16 +282,20 @@ DEGENERATE_ZERO_ROWS = {
         "x02_dedup_clusters",
         "x02_dedup_keep_best",
         *SIMILARITY_ENTRIES,
+        *TEXT_ENTRIES,
     ],
 )
 def test_degenerate_neardup_components_match_oracle(
     spark, degenerate_dirs, corpus, name
 ):
     """Inputs with no pair and no neighbor: the near-dup pair query, both
-    component entries (labels from the driver path) and all fifteen
-    vector entries (the shared query set, rank tail and recall roll-up)
-    match DuckDB on the empty and one-row corpora."""
+    component entries (labels from the driver path), all fifteen vector
+    entries (the shared query set, rank tail and recall roll-up) and the
+    37 text entries (the shared token rule, quality gate, hashes,
+    bigrams, packing tail, curation stages and BPE census) match DuckDB
+    on the empty and one-row corpora."""
     assert len(SIMILARITY_ENTRIES) == 15
+    assert len(TEXT_ENTRIES) == 37
     sf_dir = degenerate_dirs[corpus]
     con = _oracle_db(sf_dir)
     try:

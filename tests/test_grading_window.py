@@ -42,3 +42,17 @@ def test_every_family_has_driver_evidence():
 @pytest.mark.parametrize("name", sorted(registry.ORACLES))
 def test_oracle_entries_have_query(name):
     assert name in registry.QUERIES
+
+
+#: A ``{_NAME}`` (or ``{_NAME!r}``) placeholder, or a doubled brace: text
+#: that renders only in an f-string, and docstrings are not f-strings.
+_PLACEHOLDER_RE = re.compile(r"\{_[A-Z][A-Z0-9_]*(![rsa])?\}|\{\{|\}\}")
+
+
+def test_docstrings_render_no_placeholders():
+    leaked = {}
+    for name, fn in registry.QUERIES.items():
+        m = _PLACEHOLDER_RE.search(fn.__doc__ or "")
+        if m:
+            leaked[name] = m.group(0)
+    assert not leaked, leaked

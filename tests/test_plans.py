@@ -154,6 +154,16 @@ def test_ivf_centroids_broadcast_both_probe_joins(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_recall_join_broadcasts_found_side(spark):
+    """recall@k joins two |queries|·k-row sides: the found side rides in
+    as a broadcast, so neither side is shuffled and sorted for a
+    sort-merge join (x03_hamming_rerank shares the roll-up)."""
+    for name in ("x03_ann_recall_report", "x03_hamming_rerank"):
+        plan = _plan(spark, name)
+        assert "SortMergeJoin" not in plan, name
+        assert "BroadcastHashJoin LeftOuter" in plan, name
+
+
 def test_split_leakage_audit_adds_no_join_for_split(spark):
     # Split membership is integer arithmetic on doc_id: the audit's plan
     # must contain exactly the LSH pipeline's joins (shingle self-join +
