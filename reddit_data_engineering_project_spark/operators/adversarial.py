@@ -101,7 +101,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..registry import register
-from ..tables import table
+from ..tables import _SESSION_GAP_MIN, table
 from .similarity import _dot, _vec_double
 
 #: Planted wire strings, one hostile JSON class per event_id % 8 bucket.
@@ -140,7 +140,7 @@ _DUP_SCHEMA = "struct<k: bigint>"
 #: apart, and the second element of each pair sits `step` after the
 #: first — exactly gap (touch → Spark MERGES), gap+1µs (split),
 #: gap-1µs (merge), or 0µs (coincident).
-_GAP_US = 1_800_000_000
+_GAP_US = _SESSION_GAP_MIN * 60_000_000
 _SESS_BASE_US = 1_704_067_200_000_000
 _SESS_STEPS = (_GAP_US, _GAP_US + 1, _GAP_US - 1, 0)
 
@@ -608,7 +608,8 @@ def x00_adversarial_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sess_probe = (
         sess_src.groupBy(
-            "skey", F.session_window("ts3", "30 minutes").alias("sw")
+            "skey",
+            F.session_window("ts3", f"{_SESSION_GAP_MIN} minutes").alias("sw"),
         )
         .agg(
             F.min("event_id").alias("id"),

@@ -784,18 +784,12 @@ def q18_export_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     cycle breaks the hash. Partition pruning on ``split`` is what makes
     ``WHERE split = 'train'`` a directory-level skip at 100 TB.
     """
-    import os
-    import tempfile
-
-    from .sinks import write_partitioned_parquet
+    from .sinks import _scratch_dir, write_partitioned_parquet
 
     curated = curate(table(spark, sf_dir, "documents")).select(
         "doc_id", "split", "n_tokens"
     )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"reddit_data_engineering_project_spark_training_shards_{os.getpid()}",
-    )
+    out = _scratch_dir("training_shards")
     write_partitioned_parquet(curated, out, "split")
     # Explicit schema-on-read: a fully-filtered curation (empty corpus,
     # or every doc failing the gates) writes no footers — inference

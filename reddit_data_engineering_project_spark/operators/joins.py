@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..functions.numeric import dround
 from ..registry import register
-from ..tables import register_views, table
+from ..tables import _user_order, register_views, table
 
 
 @register(
@@ -394,11 +394,7 @@ def q11_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").isin("click", "purchase")
     )
     is_click = F.col("event_type") == "click"
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = _user_order(Window.unboundedPreceding)
     enriched = ev.select(
         "event_id",
         "user_id",
@@ -641,11 +637,7 @@ def q11_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").isin("click", "purchase")
     )
     is_click = F.col("event_type") == "click"
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = _user_order(Window.unboundedPreceding)
     enriched = ev.select(
         "event_id",
         "user_id",

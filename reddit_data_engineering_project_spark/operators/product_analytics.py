@@ -22,7 +22,22 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..functions.numeric import dround
 from ..registry import register
-from ..tables import table
+from ..tables import (
+    _NEW_SESSION_SQL,
+    _SESSION_SEQ_SQL,
+    _new_session,
+    _session_seq,
+    _user_order,
+    _user_order_sql,
+    table,
+)
+from .timeseries import (
+    _EWMA_COLS,
+    _EWMA_E2_SQL,
+    _EWMA_LAGS_SQL,
+    _ewma_e2,
+    _ewma_lags,
+)
 
 
 @register(
@@ -119,22 +134,32 @@ def q21_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _transitions(ev: DataFrame) -> DataFrame:
+    """``(prev_type, next_type, n)``: counts of each user's consecutive
+    event-type pairs in contract order (twin of ``_TRANSITIONS_SQL``)."""
+    return (
+        ev.withColumn("prev_type", F.lag("event_type").over(_user_order()))
+        .filter(F.col("prev_type").isNotNull())
+        .groupBy("prev_type", F.col("event_type").alias("next_type"))
+        .agg(F.count("*").alias("n"))
+    )
+
+
+_TRANSITIONS_SQL = f"""transitions AS (
+        SELECT prev_type, event_type AS next_type, count(*) AS n
+        FROM (
+            SELECT event_type,
+                   lag(event_type) OVER ({_user_order_sql()}) AS prev_type
+            FROM events
+        )
+        WHERE prev_type IS NOT NULL
+        GROUP BY 1, 2
+    )"""
+
+
 @register(
     "q21_event_transitions",
-    oracle="""
-    WITH ordered AS (
-        SELECT user_id, event_type,
-               lag(event_type) OVER (
-                   PARTITION BY user_id
-                   ORDER BY CAST(ts AS TIMESTAMP) NULLS FIRST, event_id
-               ) AS prev_type
-        FROM events
-    )
-    SELECT prev_type, event_type AS next_type, count(*) AS n
-    FROM ordered
-    WHERE prev_type IS NOT NULL
-    GROUP BY 1, 2
-    """,
+    oracle=f"WITH {_TRANSITIONS_SQL} SELECT * FROM transitions",
     tags=("analytics", "transitions", "R17", "Q13"),
 )
 def q21_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,16 +170,7 @@ def q21_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     is unique, so the order (and therefore every lag pair) is fully
     deterministic — then a tiny (|event types|²) aggregate.
     """
-    from pyspark.sql import Window
-
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        ev.withColumn("prev_type", F.lag("event_type").over(w))
-        .filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", F.col("event_type").alias("next_type"))
-        .agg(F.count("*").alias("n"))
-    )
+    return _transitions(table(spark, sf_dir, "events"))
 
 
 @register(
@@ -562,35 +578,20 @@ def q21_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q21_sessionize_gap",
-    oracle="""
+    oracle=f"""
     WITH ordered AS (
         SELECT
             user_id,
             CAST(ts AS TIMESTAMP) AS ts,
             event_id,
             value,
-            CASE WHEN CAST(ts AS TIMESTAMP)
-                      - lag(CAST(ts AS TIMESTAMP)) OVER (
-                            PARTITION BY user_id
-                            ORDER BY CAST(ts AS TIMESTAMP) NULLS FIRST,
-                                     event_id)
-                      > INTERVAL 30 MINUTE
-                 OR lag(event_id) OVER (
-                            PARTITION BY user_id
-                            ORDER BY CAST(ts AS TIMESTAMP) NULLS FIRST,
-                                     event_id)
-                      IS NULL
-                 THEN 1 ELSE 0 END AS new_session
+            {_NEW_SESSION_SQL} AS new_session
         FROM events
     ),
     tagged AS (
         SELECT
             user_id, ts, event_id, value,
-            sum(new_session) OVER (
-                PARTITION BY user_id
-                ORDER BY ts NULLS FIRST, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-            ) AS session_seq
+            {_SESSION_SEQ_SQL} AS session_seq
         FROM ordered
     )
     SELECT
@@ -606,44 +607,27 @@ def q21_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "sessionize", "R17"),
 )
 def q21_sessionize_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands sessionization: a 30-minute inactivity gap starts
-    a new session; emit per-session start/size/duration/value rollups.
+    """Gaps-and-islands sessionization: an inactivity gap over
+    ``_SESSION_GAP_MIN`` minutes starts a new session (the contract's
+    ``_new_session``); emit per-session start/size/duration/value
+    rollups.
 
     The batch counterpart of ``s03_session_window`` (streaming session
     windows), expressed as the classic two-window cascade: a boundary
     flag from ``lag``, then a running ``sum`` of boundaries as the
     session ordinal — both windows AND the final group-by share the one
     ``user_id`` hash partitioning, so the whole query is a single
-    exchange followed by two per-partition sorts and a partial-agg.
+    exchange followed by one per-partition sort (both windows take the
+    same contract order) and a partial-agg.
     Duration is an epoch-second diff (both engines count whole-second
     boundaries, so µs-precision inputs agree); the value rollup is a
     scaled BIGINT per the registry's cross-engine float discipline.
     """
-    from pyspark.sql import Window
-
     ev = table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "value"
     )
-    order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # µs-exact gap: the oracle compares full-precision intervals, so a
-    # second-truncated diff would misclassify gaps in (1800 s, 1801 s).
-    gap = F.unix_micros(F.col("ts")) - F.lag(F.unix_micros(F.col("ts"))).over(
-        order
-    )
-    # First-row detection via lag(event_id) — NOT gap.isNull(): a NULL
-    # ts makes gap NULL for that row AND its successor, which would
-    # flag both; the oracle's interval compare flags neither. event_id
-    # is non-null, so its lag is NULL exactly on the partition's first
-    # row — the same predicate the oracle spells.
-    first_row = F.lag("event_id").over(order).isNull()
-    tagged = ev.withColumn(
-        "new_session",
-        F.when(first_row | (gap > 30 * 60 * 1_000_000), 1).otherwise(0),
-    ).withColumn(
-        "session_seq",
-        F.sum("new_session")
-        .over(order.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("bigint"),
+    tagged = ev.withColumn("new_session", _new_session()).withColumn(
+        "session_seq", _session_seq().cast("bigint")
     )
     return tagged.groupBy("user_id", "session_seq").agg(
         F.min("ts").alias("session_start"),
@@ -1178,21 +1162,8 @@ def q21_spend_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q21_next_event_prediction",
-    oracle="""
-    WITH ordered AS (
-        SELECT user_id, event_type,
-               lag(event_type) OVER (
-                   PARTITION BY user_id
-                   ORDER BY CAST(ts AS TIMESTAMP) NULLS FIRST, event_id
-               ) AS prev_type
-        FROM events
-    ),
-    transitions AS (
-        SELECT prev_type, event_type AS next_type, count(*) AS n
-        FROM ordered
-        WHERE prev_type IS NOT NULL
-        GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_TRANSITIONS_SQL},
     totals AS (
         SELECT prev_type, sum(n) AS n_total FROM transitions GROUP BY 1
     )
@@ -1226,14 +1197,7 @@ def q21_next_event_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitions op); everything after runs on ≤ |types|² rows — the
     totals join and the argmax rank are dimension-sized.
     """
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    transitions = (
-        ev.withColumn("prev_type", F.lag("event_type").over(w))
-        .filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", F.col("event_type").alias("next_type"))
-        .agg(F.count("*").alias("n"))
-    )
+    transitions = _transitions(table(spark, sf_dir, "events"))
     totals = transitions.groupBy("prev_type").agg(
         F.sum("n").alias("n_total")
     )
@@ -1257,7 +1221,7 @@ def q21_next_event_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipeline_feature_store",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
         SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
                CAST(round(coalesce(value, 0.0) * 100.0) AS BIGINT) AS cents
@@ -1306,30 +1270,16 @@ def q21_next_event_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM m
     ),
     latest AS (
-        SELECT user_id, cents, c1, c2, c3
+        SELECT * EXCLUDE (rn)
         FROM (
-            SELECT user_id, cents,
-                   lag(cents, 1) OVER w AS c1,
-                   lag(cents, 2) OVER w AS c2,
-                   lag(cents, 3) OVER w AS c3,
-                   row_number() OVER w2 AS rn
+            SELECT user_id, cents, {_EWMA_LAGS_SQL},
+                   row_number() OVER (PARTITION BY user_id
+                                      ORDER BY ts DESC, event_id DESC) AS rn
             FROM ev WHERE event_type = 'purchase'
-            WINDOW w AS (PARTITION BY user_id
-                          ORDER BY ts NULLS FIRST, event_id),
-                   w2 AS (PARTITION BY user_id
-                          ORDER BY ts DESC, event_id DESC)
         ) WHERE rn = 1
     ),
     smoothed AS (
-        SELECT user_id,
-               CAST(round(
-                   CAST(8 * cents + 4 * coalesce(c1, 0)
-                        + 2 * coalesce(c2, 0) + coalesce(c3, 0) AS DOUBLE)
-                   * 100.0
-                   / (8 + CASE WHEN c1 IS NULL THEN 0 ELSE 4 END
-                        + CASE WHEN c2 IS NULL THEN 0 ELSE 2 END
-                        + CASE WHEN c3 IS NULL THEN 0 ELSE 1 END)
-               ) AS BIGINT) AS latest_ewma_cents_e2
+        SELECT user_id, {_EWMA_E2_SQL} AS latest_ewma_cents_e2
         FROM latest
     )
     SELECT b.user_id, b.n_events, b.n_purchases, b.total_cents,
@@ -1431,36 +1381,21 @@ def pipeline_feature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(num.cast("double") * 10000.0 / den).cast("bigint"),
         ).alias("slope_e4"),
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    w2 = Window.partitionBy("user_id").orderBy(
+    newest = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )
     latest = (
         purchases.select(
             "user_id",
             "cents",
-            F.lag("cents", 1).over(w).alias("c1"),
-            F.lag("cents", 2).over(w).alias("c2"),
-            F.lag("cents", 3).over(w).alias("c3"),
-            F.row_number().over(w2).alias("rn"),
+            *[c.alias(n) for c, n in zip(_ewma_lags(), _EWMA_COLS[1:])],
+            F.row_number().over(newest).alias("rn"),
         )
         .filter(F.col("rn") == 1)
     )
-    weights = (8, 4, 2, 1)
-    lag_cols = [F.col("cents"), F.col("c1"), F.col("c2"), F.col("c3")]
-    s_num = sum(
-        (wt * F.coalesce(c, F.lit(0)) for wt, c in zip(weights, lag_cols)),
-        F.lit(0),
-    )
-    s_den = sum(
-        (F.when(c.isNull(), 0).otherwise(wt) for wt, c in zip(weights, lag_cols)),
-        F.lit(0),
-    )
     smoothed = latest.select(
         "user_id",
-        F.round(s_num.cast("double") * 100.0 / s_den)
-        .cast("bigint")
-        .alias("latest_ewma_cents_e2"),
+        _ewma_e2([F.col(c) for c in _EWMA_COLS]).alias("latest_ewma_cents_e2"),
     )
     return (
         base.drop("dmin")
@@ -1574,7 +1509,7 @@ def q21_ab_lift_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q21_attribution_last_touch",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
         SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
                CAST(round(coalesce(value, 0.0) * 100.0) AS BIGINT) AS cents,
@@ -1584,11 +1519,9 @@ def q21_ab_lift_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     attributed AS (
         SELECT event_id, event_type, cents,
-               last_value(touch IGNORE NULLS) OVER (
-                   PARTITION BY user_id
-                   ORDER BY ts NULLS FIRST, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-               ) AS attributed_touch
+               last_value(touch IGNORE NULLS) OVER ({_user_order_sql(
+                   "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
+               )}) AS attributed_touch
         FROM ev
     )
     SELECT
@@ -1633,13 +1566,11 @@ def q21_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type") != "purchase", F.col("event_type")
         ).alias("touch"),
     )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     attributed = ev.withColumn(
-        "attributed_touch", F.last("touch", ignorenulls=True).over(w)
+        "attributed_touch",
+        F.last("touch", ignorenulls=True).over(
+            _user_order(Window.unboundedPreceding, -1)
+        ),
     )
     return (
         attributed.filter(F.col("event_type") == "purchase")

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.numeric import dround
 from ..registry import register
 from ..tables import table
+from .sinks import _scratch_dir
 
 
 @register(
@@ -58,9 +59,6 @@ def q01_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked against the parquet original, so the CSV
     serialization itself is under the gate.
     """
-    import os as _os
-    import tempfile as _tempfile
-
     from pyspark.sql.types import (
         IntegerType,
         StringType,
@@ -69,10 +67,7 @@ def q01_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = table(spark, sf_dir, "nation")
-    path = _os.path.join(
-        _tempfile.gettempdir(),
-        f"reddit_data_engineering_project_spark_csv_scan_{_os.getpid()}",
-    )
+    path = _scratch_dir("csv_scan")
     src.write.mode("overwrite").option("header", True).csv(path)
     schema = StructType(
         [
@@ -107,9 +102,6 @@ def q01_json_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     round trip bit-exactly (Spark writes shortest-round-trip decimal),
     which the oracle hash against the parquet original proves.
     """
-    import os as _os
-    import tempfile as _tempfile
-
     from pyspark.sql.types import (
         DoubleType,
         IntegerType,
@@ -120,10 +112,7 @@ def q01_json_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = table(spark, sf_dir, "customer")
-    path = _os.path.join(
-        _tempfile.gettempdir(),
-        f"reddit_data_engineering_project_spark_json_scan_{_os.getpid()}",
-    )
+    path = _scratch_dir("json_scan")
     src.write.mode("overwrite").json(path)
     schema = StructType(
         [
@@ -159,14 +148,8 @@ def q01_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked against the parquet original, putting the ORC
     round-trip itself (including double bit-exactness) under the gate.
     """
-    import os as _os
-    import tempfile as _tempfile
-
     src = table(spark, sf_dir, "supplier")
-    path = _os.path.join(
-        _tempfile.gettempdir(),
-        f"reddit_data_engineering_project_spark_orc_scan_{_os.getpid()}",
-    )
+    path = _scratch_dir("orc_scan")
     src.write.mode("overwrite").orc(path)
     return spark.read.orc(path).select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
@@ -191,9 +174,6 @@ def q01_xml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet original proves the angle-bracket round trip preserves
     longs, ints, and doubles exactly.
     """
-    import os as _os
-    import tempfile as _tempfile
-
     from pyspark.sql.types import (
         DoubleType,
         IntegerType,
@@ -204,10 +184,7 @@ def q01_xml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = table(spark, sf_dir, "part")
-    path = _os.path.join(
-        _tempfile.gettempdir(),
-        f"reddit_data_engineering_project_spark_xml_scan_{_os.getpid()}",
-    )
+    path = _scratch_dir("xml_scan")
     (
         src.write.mode("overwrite")
         .option("rowTag", "part")

@@ -24,7 +24,9 @@ partitions × tasks tiny files).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -32,6 +34,24 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.numeric import dround
 from ..registry import register
 from ..tables import table
+
+
+_SCRATCH_DIRS: set[str] = set()
+
+
+def _scratch_dir(tag: str) -> str:
+    """This process's scratch directory for a write-then-read entry,
+    removed when the process exits. The entries return frames that read
+    it lazily, so it cannot go any earlier; per-process, so concurrent
+    runs never overwrite each other mid-read."""
+    path = os.path.join(
+        tempfile.gettempdir(),
+        f"reddit_data_engineering_project_spark_{tag}_{os.getpid()}",
+    )
+    if path not in _SCRATCH_DIRS:
+        _SCRATCH_DIRS.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def write_csv_header(df: DataFrame, path: str) -> None:
@@ -85,7 +105,6 @@ def compact_partition(
     bytes, never the table.
     """
     import math
-    import shutil
 
     tmp = path.rstrip("/") + "__compacting"
     old = path.rstrip("/") + "__old"
@@ -139,12 +158,7 @@ def q18_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("value"), F.lit(0.0)).alias("value"),
         F.to_date(F.date_trunc("day", F.col("ts"))).alias("ds"),
     )
-    # Per-process-unique target: a fixed /tmp path would let two
-    # concurrent gate/bench runs overwrite each other mid-read.
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"reddit_data_engineering_project_spark_sink_roundtrip_{os.getpid()}",
-    )
+    out = _scratch_dir("sink_roundtrip")
     write_partitioned_parquet(ev, out, "ds")
     # Read back with the WRITER's schema, not inference: a zero-row
     # partitioned write leaves no parquet footers (only _SUCCESS), so
@@ -237,8 +251,6 @@ def vacuum_snapshots(root: str) -> list[str]:
     ``snap-*`` directories are reclaimable. Never touches the referenced
     snapshot or the pointer itself. Returns the deleted paths.
     """
-    import shutil
-
     with open(os.path.join(root, "_CURRENT")) as fh:
         current = os.path.basename(fh.read().strip())
     deleted = []
@@ -291,13 +303,8 @@ def q18_snapshot_publish_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"reddit_data_engineering_project_spark_snapshots_{os.getpid()}",
-    )
+    root = _scratch_dir("snapshots")
     if os.path.exists(root):
-        import shutil
-
         shutil.rmtree(root)
     os.makedirs(root)
     publish_snapshot(od.filter(F.col("o_orderkey") % 2 == 0), root)
@@ -351,13 +358,8 @@ def q18_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data-path read stays a plain pruned parquet scan per file.
     """
     od = table(spark, sf_dir, "orders")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"reddit_data_engineering_project_spark_evolution_{os.getpid()}",
-    )
+    out = _scratch_dir("evolution")
     if os.path.exists(out):
-        import shutil
-
         shutil.rmtree(out)
     legacy = od.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_orderpriority"
@@ -427,10 +429,7 @@ def q18_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("value"), F.lit(0.0)).alias("value"),
         F.to_date(F.date_trunc("day", F.col("ts"))).alias("ds"),
     )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"reddit_data_engineering_project_spark_part_prune_{os.getpid()}",
-    )
+    out = _scratch_dir("part_prune")
     write_partitioned_parquet(ev, out, "ds")
     # Explicit schema-on-read (see q18_sink_roundtrip): a zero-row
     # write has no footers to infer from, and the declared schema is

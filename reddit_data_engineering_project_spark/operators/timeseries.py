@@ -1,31 +1,122 @@
 """Time-series operators over the events stream (Q22 family).
 
-Regular-grid resampling (gap-fill) and rolling-window anomaly scoring —
-the two batch time-series shapes a telemetry/training-data pipeline
-needs that the plain window battery (Q13) does not cover:
+Two shared shapes carry all ten entries, each written once per engine:
 
-* ``q22_timeseries_gapfill`` densifies an irregular event stream onto an
-  hourly grid so downstream models see explicit zeros, not silent holes;
-* ``q22_rolling_zscore`` scores each observation against its trailing
-  window — the standard streaming-friendly outlier gate.
+* the per-user event order (``tables``' event-order contract: ``ts``
+  NULLs first, then ``event_id``), over which the rolling z-score
+  (``q22_rolling_zscore``, ``pipeline_events_monitor``), the Hampel
+  filter, the EWMA and the CUSUM score each event against its trailing
+  frame — ``_rolling_z`` / ``_FRAME_STATS_SQL`` + ``_Z_E4_SQL`` for the
+  z-score, ``_mid2`` / ``_mid2_sql`` for the Hampel medians and
+  ``_ewma_e2`` / ``_EWMA_E2_SQL`` for the EWMA;
+* the dense hourly grid, over which gap-fill and LOCF fill silent
+  (hour, type) cells (``_hourly_grid`` / ``_GRID_SQL``), and the hourly
+  count series the correlogram and the decomposition read
+  (``_hourly_count_series`` / ``_SERIES_SQL``); the seasonal-naive
+  forecast joins the observed grid to itself ``_SEASONAL_LAG_HOURS``
+  back.
 
 Scale notes:
-- Gap-fill's only data-sized exchange is the pre-aggregation to the
-  (hour, type) grid; the spine (``sequence`` + ``explode`` over the
-  min/max bound row × the distinct-type dim) is O(hours × types) rows —
-  thousands, not billions — and joins the aggregated grid, never raw
-  events. Both spine inputs are broadcast.
-- The rolling score shares one ``user_id`` hash partitioning for its
-  frame; sums/sums-of-squares are running aggregates, so the frame never
-  rescans (Spark keeps a sliding accumulator per partition).
+- Every per-user entry is one ``user_id`` hash exchange and one
+  (ts, event_id) sort that all its windows share; bounded ROWS frames
+  are sliding accumulators, so no frame rescans.
+- The grid entries' only event-sized exchange is the hourly
+  pre-aggregation; the spine is O(hours × types) rows, broadcast.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..registry import register
-from ..tables import table
+from ..tables import (
+    _FRAME,
+    _FRAME_SQL,
+    _NEW_SESSION_SQL,
+    _RUNNING_SQL,
+    _SESSION_SEQ_SQL,
+    _VAR_FLOOR,
+    _new_session,
+    _session_seq,
+    _user_order,
+    _user_order_sql,
+    table,
+)
+
+#: The corpus's first and last hour, ``bounds(h0, h1)``.
+_BOUNDS_SQL = """bounds AS (
+        SELECT
+            date_trunc('hour', min(CAST(ts AS TIMESTAMP))) AS h0,
+            date_trunc('hour', max(CAST(ts AS TIMESTAMP))) AS h1
+        FROM events
+    )"""
+
+#: Grid CTEs of the two gap-handling oracles (``bounds``, ``spine`` of
+#: hours, ``types``; twin of :func:`_hourly_grid`), composed after
+#: ``WITH`` like ``_SERIES_SQL``.
+_GRID_SQL = f"""{_BOUNDS_SQL},
+    spine AS (
+        SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
+        FROM bounds
+    ),
+    types AS (SELECT DISTINCT event_type FROM events)"""
+
+#: The hourly count series ``series(t, x)`` of the correlogram and the
+#: decomposition oracles (twin of :func:`_hourly_count_series`).
+_SERIES_SQL = f"""{_BOUNDS_SQL},
+    spine AS (
+        SELECT CAST(unnest(generate_series(
+            0, date_diff('hour', h0, h1))) AS BIGINT) AS t
+        FROM bounds
+    ),
+    hourly AS (
+        SELECT
+            CAST(date_diff('hour',
+                (SELECT h0 FROM bounds),
+                date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT) AS t,
+            CAST(count(*) AS BIGINT) AS x
+        FROM events
+        GROUP BY 1
+    ),
+    series AS (
+        SELECT s.t, COALESCE(h.x, CAST(0 AS BIGINT)) AS x
+        FROM spine s LEFT JOIN hourly h USING (t)
+    )"""
+
+#: Frame count, sum and sum of squares of ``value`` over the trailing
+#: frame; :data:`_Z_E4_SQL` reads them as ``n``, ``s``, ``ss``.
+_FRAME_STATS_SQL = ",\n            ".join(
+    f"{agg} OVER ({_user_order_sql(_FRAME_SQL)}) AS {name}"
+    for agg, name in (
+        ("count(value)", "n"),
+        ("sum(value)", "s"),
+        ("sum(value * value)", "ss"),
+    )
+)
+
+#: The e4 z-score of ``value`` in its frame, NULL under the variance
+#: floor (twin of :func:`_rolling_z`).
+_Z_E4_SQL = f"""CASE WHEN n > 1 AND (ss - s * s / n) / (n - 1) > {_VAR_FLOOR}
+             THEN CAST(round(
+                    (value - s / n)
+                    / sqrt((ss - s * s / n) / (n - 1)) * 10000.0)
+                  AS BIGINT)
+        END"""
+
+
+def _rolling_z() -> tuple[Column, Column]:
+    """``(scoreable, z_e4)`` of ``value`` against its user's trailing
+    frame: the sum/sum-of-squares variance, spelled as in
+    :data:`_Z_E4_SQL`, must clear the floor; ``z_e4`` is the e4 BIGINT
+    score, meaningful only where ``scoreable``."""
+    w = _user_order(1 - _FRAME)
+    v = F.col("value")
+    n = F.count("value").over(w)
+    s = F.sum("value").over(w)
+    ss = F.sum(v * v).over(w)
+    var = (ss - s * s / n) / (n - 1)
+    z = (v - s / n) / F.sqrt(var)
+    return (n > 1) & (var > _VAR_FLOOR), F.round(z * 10000.0).cast("bigint")
 
 
 def _hourly_grid(ev: DataFrame) -> DataFrame:
@@ -51,18 +142,8 @@ def _hourly_grid(ev: DataFrame) -> DataFrame:
 
 @register(
     "q22_timeseries_gapfill",
-    oracle="""
-    WITH bounds AS (
-        SELECT
-            date_trunc('hour', min(CAST(ts AS TIMESTAMP))) AS h0,
-            date_trunc('hour', max(CAST(ts AS TIMESTAMP))) AS h1
-        FROM events
-    ),
-    spine AS (
-        SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
-        FROM bounds
-    ),
-    types AS (SELECT DISTINCT event_type FROM events),
+    oracle=f"""
+    WITH {_GRID_SQL},
     hourly AS (
         SELECT
             date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour,
@@ -117,34 +198,22 @@ def q22_timeseries_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q22_rolling_zscore",
-    oracle="""
+    oracle=f"""
     WITH framed AS (
         SELECT
             user_id,
             event_id,
             CAST(ts AS TIMESTAMP) AS ts,
             value,
-            count(value) OVER w AS n,
-            sum(value) OVER w AS s,
-            sum(value * value) OVER w AS ss
+            {_FRAME_STATS_SQL}
         FROM events
-        WINDOW w AS (
-            PARTITION BY user_id
-            ORDER BY CAST(ts AS TIMESTAMP) NULLS FIRST, event_id
-            ROWS BETWEEN 7 PRECEDING AND CURRENT ROW
-        )
     )
     SELECT
         user_id,
         event_id,
         ts,
         CAST(round(value * 10000.0) AS BIGINT) AS value_e4,
-        CASE WHEN n > 1 AND (ss - s * s / n) / (n - 1) > 1e-12
-             THEN CAST(round(
-                    (value - s / n)
-                    / sqrt((ss - s * s / n) / (n - 1)) * 10000.0)
-                  AS BIGINT)
-        END AS z_e4
+        {_Z_E4_SQL} AS z_e4
     FROM framed
     """,
     tags=("timeseries", "Q22", "anomaly"),
@@ -153,12 +222,12 @@ def q22_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-window z-score per observation — the rolling anomaly gate.
 
     Each event's value is scored against the mean/std of its trailing
-    8-observation frame (inclusive) within the same user. Variance comes
-    from the explicit sum/sum-of-squares identity — spelled IDENTICALLY
-    in the oracle so both engines run the same float arithmetic on the
-    same deterministically-ordered frame (ties broken by event_id); the
-    score is a scaled BIGINT per the registry float discipline, and a
-    near-zero variance floor (1e-12) keeps the constant-frame case NULL
+    ``_FRAME``-observation frame (inclusive) within the same user.
+    Variance comes from the explicit sum/sum-of-squares identity
+    (:func:`_rolling_z`, twin of ``_Z_E4_SQL``), so both engines run the
+    same float arithmetic on the same contract-ordered frame; the score
+    is a scaled BIGINT per the registry float discipline, and the
+    variance floor (``_VAR_FLOOR``) keeps the constant-frame case NULL
     on both sides instead of dividing rounding dust.
 
     Scale shape: one hash exchange on user_id, one per-partition sort;
@@ -166,43 +235,23 @@ def q22_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     and memory per partition is O(frame), not O(user history). This is
     the batch twin of the streaming profile's online stats.
     """
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-7, Window.currentRow)
-    )
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "value"
     )
-    n = F.count("value").over(w)
-    s = F.sum("value").over(w)
-    ss = F.sum(F.col("value") * F.col("value")).over(w)
-    var = (ss - s * s / n) / (n - 1)
-    z = (F.col("value") - s / n) / F.sqrt(var)
+    scoreable, z_e4 = _rolling_z()
     return ev.select(
         "user_id",
         "event_id",
         "ts",
         F.round(F.col("value") * 10000.0).cast("bigint").alias("value_e4"),
-        F.when((n > 1) & (var > 1e-12), F.round(z * 10000.0).cast("bigint"))
-        .alias("z_e4"),
+        F.when(scoreable, z_e4).alias("z_e4"),
     )
 
 
 @register(
     "q22_locf_fill",
-    oracle="""
-    WITH bounds AS (
-        SELECT
-            date_trunc('hour', min(CAST(ts AS TIMESTAMP))) AS h0,
-            date_trunc('hour', max(CAST(ts AS TIMESTAMP))) AS h1
-        FROM events
-    ),
-    spine AS (
-        SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
-        FROM bounds
-    ),
-    types AS (SELECT DISTINCT event_type FROM events),
+    oracle=f"""
+    WITH {_GRID_SQL},
     hourly AS (
         SELECT
             date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour,
@@ -278,41 +327,22 @@ def q22_locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipeline_events_monitor",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
         SELECT
             user_id,
             event_id,
             CAST(ts AS TIMESTAMP) AS ts,
             value,
-            count(value) OVER wf AS n,
-            sum(value) OVER wf AS s,
-            sum(value * value) OVER wf AS ss,
-            CASE WHEN CAST(ts AS TIMESTAMP)
-                      - lag(CAST(ts AS TIMESTAMP)) OVER wo
-                      > INTERVAL 30 MINUTE
-                 OR lag(event_id) OVER wo IS NULL
-                 THEN 1 ELSE 0 END AS new_session
+            {_FRAME_STATS_SQL},
+            {_NEW_SESSION_SQL} AS new_session
         FROM events
-        WINDOW
-            wo AS (PARTITION BY user_id
-                   ORDER BY CAST(ts AS TIMESTAMP) NULLS FIRST, event_id),
-            wf AS (PARTITION BY user_id
-                   ORDER BY CAST(ts AS TIMESTAMP) NULLS FIRST, event_id
-                   ROWS BETWEEN 7 PRECEDING AND CURRENT ROW)
     ),
     flagged AS (
         SELECT
             user_id, event_id, ts,
-            sum(new_session) OVER (
-                PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-            ) AS session_seq,
-            CASE WHEN n > 1 AND (ss - s * s / n) / (n - 1) > 1e-12
-                 AND abs(CAST(round(
-                        (value - s / n)
-                        / sqrt((ss - s * s / n) / (n - 1)) * 10000.0)
-                     AS BIGINT)) > 20000
+            {_SESSION_SEQ_SQL} AS session_seq,
+            CASE WHEN abs({_Z_E4_SQL}) > 20000
                  THEN 1 ELSE 0 END AS is_anomaly
         FROM scored
     ),
@@ -344,7 +374,7 @@ def pipeline_events_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     The third composed pipeline (companion to the training-prep and
     curation chains): the operational side of the engine. The point the
     composition pins: all three event-order windows (the lag boundary
-    flag, the running session ordinal, the 8-row anomaly frame) declare
+    flag, the running session ordinal, the trailing anomaly frame) declare
     the SAME (user_id | ts, event_id) ordering, so Catalyst plans ONE
     hash exchange and ONE sort for the entire event-sized stretch of the
     plan — per-event monitoring at 100 TB costs exactly one shuffle, and
@@ -357,34 +387,16 @@ def pipeline_events_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "value"
     )
-    order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    frame = order.rowsBetween(-7, Window.currentRow)
-    running = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    n = F.count("value").over(frame)
-    s = F.sum("value").over(frame)
-    ss = F.sum(F.col("value") * F.col("value")).over(frame)
-    var = (ss - s * s / n) / (n - 1)
-    z_e4 = F.round(
-        (F.col("value") - s / n) / F.sqrt(var) * 10000.0
-    ).cast("bigint")
-    gap = F.unix_micros(F.col("ts")) - F.lag(F.unix_micros(F.col("ts"))).over(
-        order
-    )
-    first_row = F.lag("event_id").over(order).isNull()
+    scoreable, z_e4 = _rolling_z()
     flagged = ev.select(
         "user_id",
         "event_id",
         "ts",
-        F.when(first_row | (gap > 30 * 60 * 1_000_000), 1)
-        .otherwise(0)
-        .alias("new_session"),
-        F.when(
-            (n > 1) & (var > 1e-12) & (F.abs(z_e4) > 20000), 1
-        )
+        _new_session().alias("new_session"),
+        F.when(scoreable & (F.abs(z_e4) > 20000), 1)
         .otherwise(0)
         .alias("is_anomaly"),
-    ).withColumn("session_seq", F.sum("new_session").over(running))
+    ).withColumn("session_seq", _session_seq())
     sessions = flagged.groupBy("user_id", "session_seq").agg(
         F.to_date(F.date_trunc("day", F.min("ts"))).alias("day"),
         F.count("*").alias("n_events"),
@@ -406,6 +418,53 @@ def pipeline_events_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: exact integer math in both engines.
 _EWMA_WEIGHTS = (8, 4, 2, 1)
 
+#: The EWMA's lagged ``cents`` as ``c1``.. (lag 0 is ``cents`` itself),
+#: and the smoothed value over ``cents``, ``c1``.. in e2 cents: weights
+#: of the non-NULL values only, NULL when every value is NULL (twin of
+#: :func:`_ewma_e2`).
+_EWMA_COLS = ["cents"] + [f"c{i}" for i in range(1, len(_EWMA_WEIGHTS))]
+_EWMA_LAGS_SQL = ",\n".join(
+    f"lag(cents, {i}) OVER ({_user_order_sql()}) AS {c}"
+    for i, c in enumerate(_EWMA_COLS[1:], 1)
+)
+_EWMA_NUM_SQL = " + ".join(
+    f"{wt} * coalesce({c}, 0)" for wt, c in zip(_EWMA_WEIGHTS, _EWMA_COLS)
+)
+_EWMA_DEN_SQL = " + ".join(
+    f"CASE WHEN {c} IS NULL THEN 0 ELSE {wt} END"
+    for wt, c in zip(_EWMA_WEIGHTS, _EWMA_COLS)
+)
+_EWMA_E2_SQL = f"""CASE WHEN {_EWMA_DEN_SQL} > 0 THEN CAST(round(
+            CAST({_EWMA_NUM_SQL} AS DOUBLE) * 100.0 / ({_EWMA_DEN_SQL})
+        ) AS BIGINT) END"""
+
+
+def _ewma_lags() -> list[Column]:
+    """``cents`` at lags 1.. in contract order (twin of ``_EWMA_LAGS_SQL``)."""
+    return [
+        F.lag("cents", i).over(_user_order()) for i in range(1, len(_EWMA_WEIGHTS))
+    ]
+
+
+def _ewma_e2(lags: list[Column]) -> Column:
+    """The smoothed e2 cents of ``lags`` (lag 0 first): an exact integer
+    numerator over the weights of the non-NULL values, NULL when every
+    value is NULL (an unguarded 0/0 is ANSI-conf-dependent)."""
+    num = sum(
+        (wt * F.coalesce(c, F.lit(0)) for wt, c in zip(_EWMA_WEIGHTS, lags)),
+        F.lit(0),
+    )
+    den = sum(
+        (
+            F.when(c.isNull(), 0).otherwise(wt)
+            for wt, c in zip(_EWMA_WEIGHTS, lags)
+        ),
+        F.lit(0),
+    )
+    return F.when(
+        den > 0, F.round(num.cast("double") * 100.0 / den).cast("bigint")
+    )
+
 
 @register(
     "q22_ewma_window",
@@ -420,36 +479,14 @@ _EWMA_WEIGHTS = (8, 4, 2, 1)
         WHERE event_type = 'purchase'
     ),
     lagged AS (
-        SELECT
-            event_id,
-            user_id,
-            cents,
-            lag(cents, 1) OVER w AS c1,
-            lag(cents, 2) OVER w AS c2,
-            lag(cents, 3) OVER w AS c3
+        SELECT event_id, user_id, cents, {_EWMA_LAGS_SQL}
         FROM ev
-        WINDOW w AS (
-            PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id
-        )
     )
     SELECT
         event_id,
         user_id,
         cents,
-        CASE WHEN cents IS NOT NULL OR c1 IS NOT NULL
-                  OR c2 IS NOT NULL OR c3 IS NOT NULL THEN
-        CAST(round(
-            CAST({_EWMA_WEIGHTS[0]} * coalesce(cents, 0)
-                 + {_EWMA_WEIGHTS[1]} * coalesce(c1, 0)
-                 + {_EWMA_WEIGHTS[2]} * coalesce(c2, 0)
-                 + {_EWMA_WEIGHTS[3]} * coalesce(c3, 0) AS DOUBLE)
-            * 100.0
-            / (CASE WHEN cents IS NULL THEN 0
-                    ELSE {_EWMA_WEIGHTS[0]} END
-               + CASE WHEN c1 IS NULL THEN 0 ELSE {_EWMA_WEIGHTS[1]} END
-               + CASE WHEN c2 IS NULL THEN 0 ELSE {_EWMA_WEIGHTS[2]} END
-               + CASE WHEN c3 IS NULL THEN 0 ELSE {_EWMA_WEIGHTS[3]} END)
-        ) AS BIGINT) END AS ewma_cents_e2
+        {_EWMA_E2_SQL} AS ewma_cents_e2
     FROM lagged
     """,
     tags=("timeseries", "Q22", "smoothing"),
@@ -489,32 +526,9 @@ def q22_ewma_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100.0).cast("bigint").alias("cents"),
         )
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    lags = [F.col("cents")] + [
-        F.lag("cents", i).over(w) for i in range(1, len(_EWMA_WEIGHTS))
-    ]
-    num = sum(
-        (wt * F.coalesce(c, F.lit(0)) for wt, c in zip(_EWMA_WEIGHTS, lags)),
-        F.lit(0),
-    )
-    den = sum(
-        (
-            F.when(c.isNull(), 0).otherwise(wt)
-            for wt, c in zip(_EWMA_WEIGHTS, lags)
-        ),
-        F.lit(0),
-    )
+    lags = [F.col("cents"), *_ewma_lags()]
     return ev.select(
-        "event_id",
-        "user_id",
-        "cents",
-        # den = 0 iff current AND all lags are NULL (possible once the
-        # stream carries NULL values) — emit NULL explicitly; an
-        # unguarded 0/0 is ANSI-conf-dependent (error vs NaN).
-        F.when(
-            den > 0,
-            F.round(num.cast("double") * 100.0 / den).cast("bigint"),
-        ).alias("ewma_cents_e2"),
+        "event_id", "user_id", "cents", _ewma_e2(lags).alias("ewma_cents_e2")
     )
 
 
@@ -538,19 +552,13 @@ _CUSUM_TARGET_CENTS = 5000
         SELECT event_id, user_id, ts,
                CAST(sum(dev) OVER w AS BIGINT) AS cum_dev
         FROM p
-        WINDOW w AS (
-            PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-        )
+        WINDOW w AS ({_user_order_sql(_RUNNING_SQL)})
     )
     SELECT event_id, user_id, cum_dev,
-           CAST(cum_dev - least(min(cum_dev) OVER w2, 0) AS BIGINT)
+           CAST(cum_dev - least(min(cum_dev) OVER w, 0) AS BIGINT)
                AS cusum_pos
     FROM s
-    WINDOW w2 AS (
-        PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id
-        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-    )
+    WINDOW w AS ({_user_order_sql(_RUNNING_SQL)})
     """,
     tags=("timeseries", "Q22", "drift"),
 )
@@ -591,27 +599,18 @@ def q22_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dev"),
         )
     )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = _user_order(Window.unboundedPreceding)
     s = p.select(
         "event_id",
         "user_id",
         "ts",
         F.sum("dev").over(w).cast("bigint").alias("cum_dev"),
     )
-    w2 = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     return s.select(
         "event_id",
         "user_id",
         "cum_dev",
-        (F.col("cum_dev") - F.least(F.min("cum_dev").over(w2), F.lit(0)))
+        (F.col("cum_dev") - F.least(F.min("cum_dev").over(w), F.lit(0)))
         .cast("bigint")
         .alias("cusum_pos"),
     )
@@ -661,15 +660,16 @@ def q22_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q22f: seasonal-naive forecast baseline + its backtest error.
 
     Every forecasting effort needs the bar to clear: predict each
-    (hour, type) cell with the SAME HOUR YESTERDAY (lag 24 on the
-    hourly grid) and score that baseline's MAE over the history. A
-    model that can't beat seasonal-naive isn't a model; this operator
-    makes the bar a one-call, in-engine number instead of notebook
-    folklore. (Backtest caveat encoded in the WHERE: the first day
-    scores nothing — no fabricated zero-forecasts.)
+    (hour, type) cell with the SAME HOUR YESTERDAY (lag
+    ``_SEASONAL_LAG_HOURS`` on the hourly grid) and score that
+    baseline's MAE over the history. A model that can't beat
+    seasonal-naive isn't a model; this operator makes the bar a
+    one-call, in-engine number instead of notebook folklore. (Backtest
+    caveat encoded in the WHERE: the first day scores nothing — no
+    fabricated zero-forecasts.)
 
     NOTE the forecast lookup is CALENDAR-anchored — a grid self-join on
-    (type, hour − 24h) — not a rows-based ``lag(24)``, which silently
+    (type, hour − lag) — not a rows-based ``lag(24)``, which silently
     drifts off "yesterday" wherever the observed grid has holes. The
     join runs on the AGGREGATED hourly grid (grid-sized, thousands of
     rows), never raw events — the same collapse-first discipline as the
@@ -697,7 +697,9 @@ def q22_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     prev = grid.select(
         F.col("event_type").alias("p_type"),
-        (F.col("hour") + F.expr("INTERVAL 24 HOURS")).alias("p_hour"),
+        (
+            F.col("hour") + F.expr(f"INTERVAL {_SEASONAL_LAG_HOURS} HOURS")
+        ).alias("p_hour"),
         F.col("cents").alias("forecast_cents"),
     )
     shifted = grid.join(
@@ -713,9 +715,29 @@ def q22_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _mid2(s: str, n: Column) -> Column:
+    """Twice the median of the sorted array column ``s`` of size ``n``:
+    the middle element doubled, or the middle pair summed (an exact
+    integer either way); NULL when ``s`` is empty."""
+    half = (n / 2).cast("int")
+    return (
+        F.when(n == 0, F.lit(None).cast("bigint"))
+        .when(n % 2 == 1, F.lit(2) * F.element_at(s, ((n + 1) / 2).cast("int")))
+        .otherwise(F.element_at(s, half) + F.element_at(s, half + 1))
+    )
+
+
+def _mid2_sql(s: str, n: str) -> str:
+    """SQL twin of :func:`_mid2` over list ``s`` of length ``n``."""
+    return f"""CASE WHEN {n} = 0 THEN NULL
+                    WHEN {n} % 2 = 1 THEN 2 * {s}[({n} + 1) // 2]
+                    ELSE {s}[{n} // 2] + {s}[{n} // 2 + 1]
+               END"""
+
+
 @register(
     "q22_hampel_mad",
-    oracle="""
+    oracle=f"""
     WITH q AS (
         SELECT
             user_id,
@@ -729,18 +751,10 @@ def q22_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
                list_sort(list_filter(list(vq) OVER w,
                                      x -> x IS NOT NULL)) AS s
         FROM q
-        WINDOW w AS (
-            PARTITION BY user_id
-            ORDER BY ts NULLS FIRST, event_id
-            ROWS BETWEEN 7 PRECEDING AND CURRENT ROW
-        )
+        WINDOW w AS ({_user_order_sql(_FRAME_SQL)})
     ),
     med AS (
-        SELECT *, len(s) AS n,
-               CASE WHEN len(s) = 0 THEN NULL
-                    WHEN len(s) % 2 = 1 THEN 2 * s[(len(s) + 1) // 2]
-                    ELSE s[len(s) // 2] + s[len(s) // 2 + 1]
-               END AS med2
+        SELECT *, len(s) AS n, {_mid2_sql("s", "len(s)")} AS med2
         FROM framed
     ),
     dev AS (
@@ -749,11 +763,7 @@ def q22_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM med
     ),
     mad AS (
-        SELECT *,
-               CASE WHEN n = 0 THEN NULL
-                    WHEN n % 2 = 1 THEN 2 * d[(n + 1) // 2]
-                    ELSE d[n // 2] + d[n // 2 + 1]
-               END AS mad4
+        SELECT *, {_mid2_sql("d", "n")} AS mad4
         FROM dev
     )
     SELECT
@@ -778,7 +788,7 @@ def q22_hampel_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mean/std anomaly gates self-destruct on the anomalies they hunt (a
     spike inflates the std that judges it, masking neighbors); the
     Hampel filter scores each value against the MEDIAN of its trailing
-    8-row frame and flags |v - med| > 3·1.4826·MAD — breakdown point
+    ``_FRAME``-row frame and flags |v - med| > 3·1.4826·MAD — breakdown point
     50% instead of 0%. All in exact integers: values e4-quantized,
     medians carried ×2 (a half-integer mid-pair becomes the integer
     sum), MAD carried ×4, and the flag compare cross-multiplied to
@@ -787,17 +797,17 @@ def q22_hampel_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     with no rounding discipline needed. NULL values occupy frame slots
     but are excluded from the order statistics (the q22/s08 ROWS-frame
     convention); the flag needs ≥3 observations and MAD > 0 (a
-    constant frame has no robust scale — NULL, the 1e-12-floor
-    analog). Frame order is (ts NULLS FIRST, event_id) on BOTH
+    constant frame has no robust scale — NULL, the variance-floor
+    analog). Frame order is the event-order contract on BOTH
     engines — Spark's ``Window.orderBy`` ascending default — unlike
     the s08 replay twin, whose oracle mirrors pandas' NULLS-LAST sort;
     the two entries document the two orderings their engines impose.
 
     Scale shape: ONE user_id hash exchange + sort (identical to the
     z-score twin — in a fused deployment both gates share it); the
-    8-element frame list is collected, sorted, and indexed entirely
-    inside whole-stage codegen — order statistics over a BOUNDED frame
-    need no second shuffle and no UDF, and per-row cost is O(8 log 8)
+    frame list is collected, sorted, and indexed entirely inside
+    whole-stage codegen — order statistics over a BOUNDED frame need no
+    second shuffle and no UDF, and per-row cost is O(frame log frame)
     regardless of corpus size.
     """
     ev = table(spark, sf_dir, "events").select(
@@ -806,34 +816,17 @@ def q22_hampel_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.round(F.col("value") * 10000.0).cast("bigint").alias("vq"),
     )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-7, Window.currentRow)
-    )
     framed = ev.select(
         "user_id",
         "event_id",
         "vq",
-        F.sort_array(F.collect_list("vq").over(w)).alias("s"),
+        F.sort_array(F.collect_list("vq").over(_user_order(1 - _FRAME))).alias(
+            "s"
+        ),
     )
     n = F.size("s")
     med = framed.select(
-        "user_id",
-        "event_id",
-        "vq",
-        "s",
-        n.alias("n"),
-        F.when(n == 0, F.lit(None).cast("bigint"))
-        .when(
-            n % 2 == 1,
-            F.lit(2) * F.element_at("s", ((n + 1) / 2).cast("int")),
-        )
-        .otherwise(
-            F.element_at("s", (n / 2).cast("int"))
-            + F.element_at("s", (n / 2).cast("int") + 1)
-        )
-        .alias("med2"),
+        "user_id", "event_id", "vq", "s", n.alias("n"), _mid2("s", n).alias("med2")
     )
     dev = med.select(
         "user_id",
@@ -847,21 +840,7 @@ def q22_hampel_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nn = F.col("n")
     mad = dev.select(
-        "user_id",
-        "event_id",
-        "vq",
-        "n",
-        "med2",
-        F.when(nn == 0, F.lit(None).cast("bigint"))
-        .when(
-            nn % 2 == 1,
-            F.lit(2) * F.element_at("d", ((nn + 1) / 2).cast("int")),
-        )
-        .otherwise(
-            F.element_at("d", (nn / 2).cast("int"))
-            + F.element_at("d", (nn / 2).cast("int") + 1)
-        )
-        .alias("mad4"),
+        "user_id", "event_id", "vq", "n", "med2", _mid2("d", nn).alias("mad4")
     )
     return mad.select(
         "user_id",
@@ -893,7 +872,7 @@ def _hourly_count_series(ev: DataFrame) -> DataFrame:
     Unpersisted, column pruning would specialize each branch's scan
     schema, defeat ReusedExchange (the q21_triangle_count lesson), and
     re-run the fact scan up to four times — persist pins ONE fact scan
-    total. Same lifecycle convention as the k-core/label-prop edge
+    total. Same lifecycle convention as the PageRank and k-core edge
     lists (caller's action completes; session teardown reclaims the
     720 rows). Calendar-sized at ANY corpus size.
     """
@@ -926,31 +905,8 @@ def _hourly_count_series(ev: DataFrame) -> DataFrame:
 
 @register(
     "q22_acf_hourly",
-    oracle="""
-    WITH bounds AS (
-        SELECT
-            date_trunc('hour', min(CAST(ts AS TIMESTAMP))) AS h0,
-            date_trunc('hour', max(CAST(ts AS TIMESTAMP))) AS h1
-        FROM events
-    ),
-    spine AS (
-        SELECT CAST(unnest(generate_series(
-            0, date_diff('hour', h0, h1))) AS BIGINT) AS t
-        FROM bounds
-    ),
-    hourly AS (
-        SELECT
-            CAST(date_diff('hour',
-                (SELECT h0 FROM bounds),
-                date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT) AS t,
-            CAST(count(*) AS BIGINT) AS x
-        FROM events
-        GROUP BY 1
-    ),
-    series AS (
-        SELECT s.t, COALESCE(h.x, CAST(0 AS BIGINT)) AS x
-        FROM spine s LEFT JOIN hourly h USING (t)
-    ),
+    oracle=f"""
+    WITH {_SERIES_SQL},
     tot AS (
         SELECT
             CAST(count(*) AS BIGINT) AS n,
@@ -1083,31 +1039,8 @@ def q22_acf_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q22_seasonal_decompose",
-    oracle="""
-    WITH bounds AS (
-        SELECT
-            date_trunc('hour', min(CAST(ts AS TIMESTAMP))) AS h0,
-            date_trunc('hour', max(CAST(ts AS TIMESTAMP))) AS h1
-        FROM events
-    ),
-    spine AS (
-        SELECT CAST(unnest(generate_series(
-            0, date_diff('hour', h0, h1))) AS BIGINT) AS t
-        FROM bounds
-    ),
-    hourly AS (
-        SELECT
-            CAST(date_diff('hour',
-                (SELECT h0 FROM bounds),
-                date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT) AS t,
-            CAST(count(*) AS BIGINT) AS x
-        FROM events
-        GROUP BY 1
-    ),
-    series AS (
-        SELECT s.t, COALESCE(h.x, CAST(0 AS BIGINT)) AS x
-        FROM spine s LEFT JOIN hourly h USING (t)
-    ),
+    oracle=f"""
+    WITH {_SERIES_SQL},
     tr AS (
         SELECT
             t, x, t % 24 AS hod,

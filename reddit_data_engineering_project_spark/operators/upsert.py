@@ -36,7 +36,7 @@ from pyspark.sql.utils import AnalysisException
 
 from ..functions.numeric import dround
 from ..registry import register
-from ..tables import table
+from ..tables import _user_order, _user_order_sql, table
 
 
 def keep_latest(df: DataFrame, keys: list[str], order_cols: list) -> DataFrame:
@@ -168,14 +168,11 @@ def q19_upsert_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q19_scd2_history",
-    oracle="""
+    oracle=f"""
     WITH ordered AS (
         SELECT user_id, event_type,
                CAST(ts AS TIMESTAMP) AS ts, event_id,
-               lag(event_type) OVER (
-                   PARTITION BY user_id
-                   ORDER BY CAST(ts AS TIMESTAMP) NULLS FIRST, event_id
-               ) AS prev_type
+               lag(event_type) OVER ({_user_order_sql()}) AS prev_type
         FROM events
     ),
     changes AS (
@@ -189,9 +186,7 @@ def q19_upsert_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
            (lead(ts) OVER w IS NULL) AS is_current,
            CAST(row_number() OVER w AS INT) AS version
     FROM changes
-    WINDOW w AS (
-        PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id
-    )
+    WINDOW w AS ({_user_order_sql()})
     """,
     tags=("upsert", "scd2", "Q19", "R16"),
 )
@@ -214,27 +209,22 @@ def q19_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation), so cost is linear in input.
     """
     ev = table(spark, sf_dir, "events")
-    order_w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").asc(), F.col("event_id").asc()
-    )
+    w = _user_order()
     changes = (
         ev.select("user_id", "event_type", "ts", "event_id")
-        .withColumn("prev_type", F.lag("event_type").over(order_w))
+        .withColumn("prev_type", F.lag("event_type").over(w))
         .filter(
             F.col("prev_type").isNull()
             | ~F.col("prev_type").eqNullSafe(F.col("event_type"))
         )
     )
-    version_w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").asc(), F.col("event_id").asc()
-    )
     return changes.select(
         "user_id",
         "event_type",
         F.col("ts").alias("valid_from"),
-        F.lead("ts").over(version_w).alias("valid_to"),
-        F.lead("ts").over(version_w).isNull().alias("is_current"),
-        F.row_number().over(version_w).alias("version"),
+        F.lead("ts").over(w).alias("valid_to"),
+        F.lead("ts").over(w).isNull().alias("is_current"),
+        F.row_number().over(w).alias("version"),
     )
 
 

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.numeric import dround
 from ..registry import register
-from ..tables import table
+from ..tables import _RUNNING_SQL, _user_order, _user_order_sql, table
 
 
 @register(
@@ -111,7 +111,7 @@ def q13_rank_dense_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q13_lag_lead",
-    oracle="""
+    oracle=f"""
     SELECT
         user_id,
         event_id,
@@ -123,10 +123,7 @@ def q13_rank_dense_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             - epoch(lag(CAST(ts AS TIMESTAMP)) OVER w)
         ) AS BIGINT) AS secs_since_prev
     FROM events
-    WINDOW w AS (
-        PARTITION BY user_id
-        ORDER BY CAST(ts AS TIMESTAMP) NULLS FIRST, event_id
-    )
+    WINDOW w AS ({_user_order_sql()})
     """,
     tags=("windows", "Q13"),
 )
@@ -136,7 +133,7 @@ def q13_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     The sessionization primitive: gap-since-previous feeds the session
     window operator (S3). One shuffle by user_id, per-user sort.
     """
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = _user_order()
     ts_secs = F.col("ts").cast("double")
     prev_secs = F.lag(F.col("ts")).over(w).cast("double")
     return table(spark, sf_dir, "events").select(
@@ -151,7 +148,7 @@ def q13_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q13_running_frames",
-    oracle="""
+    oracle=f"""
     WITH q AS (
         SELECT
             user_id,
@@ -166,26 +163,17 @@ def q13_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
         user_id,
         event_id,
         ts,
-        round(sum(value_e4) OVER (
-            PARTITION BY user_id
-            ORDER BY ts NULLS FIRST, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-        ) / 100.0) / 100.0 + 0.0 AS running_value,
-        round(sum(value_e4) OVER (
-            PARTITION BY user_id
-            ORDER BY ts NULLS FIRST, event_id
-            ROWS BETWEEN 2 PRECEDING AND CURRENT ROW
-        ) / count(*) OVER (
-            PARTITION BY user_id
-            ORDER BY ts NULLS FIRST, event_id
-            ROWS BETWEEN 2 PRECEDING AND CURRENT ROW
-        )) / 10000.0 + 0.0 AS moving_avg_3,
-        first_value(event_type) OVER (
-            PARTITION BY user_id
-            ORDER BY ts NULLS FIRST, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-        ) AS first_type
+        round(sum(value_e4) OVER w_run / 100.0) / 100.0 + 0.0
+            AS running_value,
+        round(sum(value_e4) OVER w_mov / count(*) OVER w_mov) / 10000.0
+            + 0.0 AS moving_avg_3,
+        first_value(event_type) OVER w_run AS first_type
     FROM q
+    WINDOW
+        w_run AS ({_user_order_sql(_RUNNING_SQL)}),
+        w_mov AS ({_user_order_sql(
+            "ROWS BETWEEN 2 PRECEDING AND CURRENT ROW"
+        )})
     """,
     tags=("windows", "Q13"),
 )
@@ -205,13 +193,8 @@ def q13_running_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-order-free; the quantized sum renders back through the
     identical round spelling on both sides.
     """
-    order = [F.col("ts").asc(), F.col("event_id").asc()]
-    w_run = (
-        Window.partitionBy("user_id")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_mov = Window.partitionBy("user_id").orderBy(*order).rowsBetween(-2, 0)
+    w_run = _user_order(Window.unboundedPreceding)
+    w_mov = _user_order(-2)
     val_e4 = (
         F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 10000.0)
         .cast("long")
@@ -391,7 +374,7 @@ def q13_range_interval_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q13_value_functions",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
         SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS ts,
                CASE WHEN event_type = 'purchase'
@@ -410,10 +393,7 @@ def q13_range_interval_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         last_value(purchase_cents IGNORE NULLS) OVER w
             AS latest_purchase_cents
     FROM ev
-    WINDOW w AS (
-        PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id
-        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-    )
+    WINDOW w AS ({_user_order_sql(_RUNNING_SQL)})
     """,
     tags=("window", "Q13", "value-functions"),
 )
@@ -448,11 +428,7 @@ def q13_value_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100.0).cast("bigint"),
         ).alias("purchase_cents"),
     )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = _user_order(Window.unboundedPreceding)
     return ev.select(
         "event_id",
         "user_id",

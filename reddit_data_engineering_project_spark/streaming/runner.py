@@ -33,7 +33,7 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..session import ensure_session_confs
-from ..tables import contract_observe_metrics
+from ..tables import _SESSION_GAP_MIN, contract_observe_metrics
 
 _CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 _FS_CHECKPOINT_MANAGER = (
@@ -373,7 +373,7 @@ def run_session_stream(
     source_dir: str,
     sink_dir: str,
     checkpoint_dir: str,
-    gap: str = "30 minutes",
+    gap: str = f"{_SESSION_GAP_MIN} minutes",
     watermark: str = "1 hour",
     contract_table: str | None = "events",
 ) -> None:

@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..tables import _FRAME, _SESSION_GAP_MIN, _VAR_FLOOR
+
 #: NULL-event-time sentinel for the epoch-µs boundary column: int64
 #: min, the same value a NaT datetime64 view yields, so every "NaT
 #: sorts last / NaT drops" discipline keeps its comparison shape.
@@ -82,7 +84,9 @@ ZSCORE_OUT_SCHEMA = StructType(
     ]
 )
 
-_FRAME = 8  # matches q22_rolling_zscore's ROWS BETWEEN 7 PRECEDING
+# The trailing frame (``_FRAME`` rows) and the variance floor
+# (``_VAR_FLOOR``) are the batch operator's: ``tables``' event-order
+# contract, also read by q22_rolling_zscore and s08.
 
 
 def _half_up_e4(x: float) -> int:
@@ -109,12 +113,12 @@ def _half_up_e4_arr(x, out_dtype="int64"):
 
 def _zscore_fold(tail: list, event_ids, values) -> tuple:
     """Fold one user's (ts, event_id)-ordered events through the
-    trailing-8 z-score frame.
+    trailing ``_FRAME``-row z-score frame.
 
     ``event_ids`` and ``values`` are int64 and float64 ndarrays (NaN =
     NULL value). Returns ``(event_ids_i64, values_e4, values_mask,
     z_e4, z_mask, new_tail)`` — int64 ndarrays with their missing-masks
-    (mask True = NULL), and the ≤7-value state tail as a plain float
+    (mask True = NULL), and the ``_FRAME - 1``-value state tail as a float
     list. Raw numpy so :func:`score_rolling_zscore` can concatenate
     users without per-user pandas objects. This is the anomaly gate's
     transition core, which the s08 replay entry drives one user per
@@ -179,7 +183,7 @@ def _zscore_fold(tail: list, event_ids, values) -> tuple:
     v_ok = ~np.isnan(vals)
     n_safe = np.maximum(n, 2)
     var = (ss - s * s / n_safe) / (n_safe - 1)
-    z_ok = v_ok & (n > 1) & (var > 1e-12)
+    z_ok = v_ok & (n > 1) & (var > _VAR_FLOOR)
     with np.errstate(invalid="ignore", divide="ignore"):
         z = (vals - s / np.maximum(n, 1)) / np.sqrt(
             np.where(z_ok, var, 1.0)
@@ -279,7 +283,7 @@ def _zscore_fold_seq(tail: list, ev, vals) -> tuple:
                     s += x
                     ss += x * x
                 var = (ss - s * s / n) / (n - 1)
-                if var > 1e-12:
+                if var > _VAR_FLOOR:
                     z_e4 = _half_up_e4((v - s / n) / var**0.5)
                     z_missing = False
         out_val.append(_half_up_e4(v) if v is not None else 0)
@@ -308,10 +312,10 @@ def _user_bucket(n_buckets: int):
     )
 
 
-#: Per-BUCKET z-score state: each bucketed user's trailing ≤7-value
-#: frame (event-time order), as parallel arrays; tails carry NaN for
-#: null-value slots. An arriving event's 8-deep frame = its user's tail
-#: + itself, so state is O(frame) per user.
+#: Per-BUCKET z-score state: each bucketed user's trailing
+#: ``_FRAME - 1`` values (event-time order), as parallel arrays; tails
+#: carry NaN for null-value slots. An arriving event's frame = its
+#: user's tail + itself, so state is O(frame) per user.
 ZSCORE_STATE_SCHEMA = StructType(
     [
         StructField("user_ids", ArrayType(LongType(), containsNull=True)),
@@ -325,17 +329,17 @@ def score_rolling_zscore(
     batches: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    """Score each arriving event against its user's trailing 8-value
-    frame; one state key carries the frames of every user in the
-    bucket.
+    """Score each arriving event against its user's trailing
+    ``_FRAME``-value frame; one state key carries the frames of every
+    user in the bucket.
 
     Assumes per-user event-time-ordered arrival across micro-batches
     (the file-stream contract in the runner: files land in time
     order); within a batch, rows are sorted by (ts NULLS LAST,
     event_id) to make the frame deterministic. The variance formula is
     the batch operator's sum/sum-of-squares identity with the identical
-    1e-12 floor, so the streaming score converges to the batch score on
-    ordered input.
+    floor (``_VAR_FLOOR``), so the streaming score converges to the
+    batch score on ordered input.
 
     Why buckets: the anomaly gate is the stateful stream with the MOST
     keys at 100 TB (every active entity), so the ~7 ms/key
@@ -436,7 +440,8 @@ def run_zscore_stream(
     the checkpoint carries every user's tail across restarts, so a
     resumed stream scores new events against history it never re-reads
     — the anomaly-gate shape for a 100 TB/day event firehose (state is
-    ≤7 doubles per user, RocksDB-sharded by bucket across executors).
+    ``_FRAME - 1`` doubles per user, RocksDB-sharded by bucket across
+    executors).
     Only the columns the fold reads enter the shuffle/Arrow channel,
     grouped by ``pmod(xxhash64(user_id), n_buckets)`` (see
     :func:`score_rolling_zscore`).
@@ -484,9 +489,10 @@ def run_zscore_stream(
 # Event-time-timeout sessionizer: the live twin of batch q21_sessionize_gap.
 # ---------------------------------------------------------------------------
 
-#: Session-gap threshold shared with the batch sessionizer
-#: (q21_sessionize_gap) and the S3 session window: 30 minutes.
-_SESSION_GAP_MS = 30 * 60 * 1000
+#: The contract's session gap (``tables._SESSION_GAP_MIN``, shared with
+#: the batch sessionizer q21_sessionize_gap and the S3 session window),
+#: in milliseconds.
+_SESSION_GAP_MS = _SESSION_GAP_MIN * 60 * 1000
 
 #: Per-BUCKET sessionizer state: the open sessions of every user hashed
 #: into the bucket, as parallel arrays (user_ids may contain None — the

@@ -14,7 +14,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.window import WindowSpec
 
 from .session import ensure_session_confs
 
@@ -40,10 +41,11 @@ BROADCASTABLE: frozenset[str] = frozenset({"region", "nation", "supplier", "part
 
 # Ingest contract: every fact/entity table's primary key is engine-
 # assigned at ingest and therefore NOT NULL (and unique). This is a
-# DECLARED contract, not a per-read runtime check — twelve event-order
-# operators tie-break on ``(ts, event_id)`` and their oracles assume a
-# non-null key (Spark sorts NULLS FIRST by default, DuckDB NULLS LAST,
-# so a null arrival-sequence key would silently diverge the engines).
+# DECLARED contract, not a per-read runtime check — the event-order
+# operators (the contract below) tie-break on ``(ts, event_id)`` and
+# their oracles assume a non-null key (Spark sorts NULLS FIRST by
+# default, DuckDB NULLS LAST, so a null arrival-sequence key would
+# silently diverge the engines).
 # ``check_ingest_contracts`` is the runnable guard: point it at any
 # corpus/lake directory to verify the contract before trusting query
 # results over it.
@@ -116,6 +118,67 @@ PRIMARY_KEYS: dict[str, tuple[str, ...]] = {
     "documents": ("doc_id",),
     "embeddings": ("vec_id",),
 }
+
+# Event-order contract: a user's events run in ``ts`` order, NULL event
+# times first, ties broken by ``event_id``. The order is total only
+# because ``event_id`` is the events primary key (above). The batch
+# operators, their oracles and the stateful streaming twins take the
+# order, the scoring frame, the variance floor and the session gap from
+# here: ``_user_order`` in Spark, ``_user_order_sql`` in the oracles.
+
+#: Rows in the trailing scoring frame, current row included.
+_FRAME = 8
+#: Variance at or under which a frame has no z-score (NULL, not dust).
+_VAR_FLOOR = 1e-12
+#: Inactivity that starts a new session: a gap strictly over it splits.
+_SESSION_GAP_MIN = 30
+_SESSION_GAP_SQL = f"INTERVAL {_SESSION_GAP_MIN} MINUTE"
+_RUNNING_SQL = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+_FRAME_SQL = f"ROWS BETWEEN {_FRAME - 1} PRECEDING AND CURRENT ROW"
+
+
+def _user_order(lo: int | None = None, hi: int = Window.currentRow) -> WindowSpec:
+    """Each user's events in contract order; ROWS ``lo``..``hi`` when
+    ``lo`` is given (``Window`` row offsets, 0 the current row)."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return w if lo is None else w.rowsBetween(lo, hi)
+
+
+def _user_order_sql(frame: str = "") -> str:
+    """The oracles' twin of :func:`_user_order`, for an ``OVER (...)`` or
+    ``WINDOW`` clause; the cast makes it read raw and cast ``ts`` alike."""
+    return (
+        "PARTITION BY user_id "
+        f"ORDER BY CAST(ts AS TIMESTAMP) NULLS FIRST, event_id {frame}"
+    ).rstrip()
+
+
+def _new_session() -> Column:
+    """1 on a user's first event and on each event more than the gap
+    after the one before it, else 0 (µs-exact, like the oracle's
+    interval compare). The first row is found by ``lag(event_id)``, not
+    by a NULL gap: a NULL ``ts`` nulls the gap of its own row AND of the
+    next one, and the oracle flags neither."""
+    order = _user_order()
+    us = F.unix_micros(F.col("ts"))
+    gap = us - F.lag(us).over(order)
+    first_row = F.lag("event_id").over(order).isNull()
+    split = first_row | (gap > _SESSION_GAP_MIN * 60_000_000)
+    return F.when(split, 1).otherwise(0)
+
+
+def _session_seq() -> Column:
+    """Running count of ``new_session`` flags: the session ordinal."""
+    return F.sum("new_session").over(_user_order(Window.unboundedPreceding))
+
+
+#: SQL twins of :func:`_new_session` and :func:`_session_seq`.
+_NEW_SESSION_SQL = f"""CASE WHEN CAST(ts AS TIMESTAMP)
+                  - lag(CAST(ts AS TIMESTAMP)) OVER ({_user_order_sql()})
+                  > {_SESSION_GAP_SQL}
+             OR lag(event_id) OVER ({_user_order_sql()}) IS NULL
+             THEN 1 ELSE 0 END"""
+_SESSION_SEQ_SQL = f"sum(new_session) OVER ({_user_order_sql(_RUNNING_SQL)})"
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -274,6 +274,33 @@ TEXT_ENTRIES = sorted(
 ) + ["pipeline_split_leakage_audit"]
 
 
+#: The event-order contract's entries: every ``operators/timeseries.py``
+#: entry, the other batch entries over the per-user order or the session
+#: gap (with q13's RANGE frame, which keeps its own order) and the
+#: streaming replays that share the gap and the scoring frame.
+EVENT_ENTRIES = sorted(
+    n for n, fn in registry.QUERIES.items()
+    if fn.__module__.endswith("operators.timeseries")
+) + [
+    "pipeline_feature_store",
+    "q11_asof_join",
+    "q11_asof_tolerance",
+    "q13_lag_lead",
+    "q13_range_interval_frames",
+    "q13_running_frames",
+    "q13_value_functions",
+    "q19_scd2_history",
+    "q21_attribution_last_touch",
+    "q21_event_transitions",
+    "q21_next_event_prediction",
+    "q21_sessionize_gap",
+    "s03_session_window",
+    "s08_stateful_zscore_replay",
+    "s09_session_gap_replay",
+    "s09_session_timeout_replay",
+]
+
+
 @pytest.mark.parametrize("corpus", [0, 1], ids=["empty", "one"])
 @pytest.mark.parametrize(
     "name",
@@ -283,6 +310,7 @@ TEXT_ENTRIES = sorted(
         "x02_dedup_keep_best",
         *SIMILARITY_ENTRIES,
         *TEXT_ENTRIES,
+        *EVENT_ENTRIES,
     ],
 )
 def test_degenerate_neardup_components_match_oracle(
@@ -292,10 +320,12 @@ def test_degenerate_neardup_components_match_oracle(
     component entries (labels from the driver path), all fifteen vector
     entries (the shared query set, rank tail and recall roll-up) and the
     37 text entries (the shared token rule, quality gate, hashes,
-    bigrams, packing tail, curation stages and BPE census) match DuckDB
-    on the empty and one-row corpora."""
+    bigrams, packing tail, curation stages and BPE census) and the 26
+    event-order entries (the per-user order, scoring frame, session gap
+    and hourly grid) match DuckDB on the empty and one-row corpora."""
     assert len(SIMILARITY_ENTRIES) == 15
     assert len(TEXT_ENTRIES) == 37
+    assert len(EVENT_ENTRIES) == 26
     sf_dir = degenerate_dirs[corpus]
     con = _oracle_db(sf_dir)
     try:

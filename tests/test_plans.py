@@ -8,6 +8,10 @@ filter, these fail before any benchmark notices.
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
 from reddit_data_engineering_project_spark import registry
 
 from conftest import SF_DIR
@@ -936,3 +940,35 @@ def test_simhash16_plan_contracts(spark):
     assert "bit_count" in plan
     assert "Generate" in plan and "explode" in plan
     spark.catalog.clearCache()
+
+
+#: Entries whose windows all take the event-order contract's per-user
+#: order (``tables._user_order``).
+USER_ORDER_ENTRIES = [
+    "pipeline_events_monitor",
+    "q11_asof_join",
+    "q11_asof_tolerance",
+    "q13_lag_lead",
+    "q13_running_frames",
+    "q13_value_functions",
+    "q19_scd2_history",
+    "q21_attribution_last_touch",
+    "q21_event_transitions",
+    "q21_sessionize_gap",
+    "q22_cusum_drift",
+    "q22_ewma_window",
+    "q22_hampel_mad",
+    "q22_rolling_zscore",
+]
+
+
+@pytest.mark.parametrize("name", USER_ORDER_ENTRIES)
+def test_user_order_windows_share_one_sort(spark, name):
+    """Every window of the entry shares ONE sort, in contract order: a
+    helper that stopped handing out the same spec would add a sort."""
+    plan = _plan(spark, name)
+    tree = plan.split("\n\n")[0]
+    assert len(re.findall(r"\bSort \(\d+\)", tree)) == 1, tree
+    (args,) = re.findall(r"\(\d+\) Sort\n.*\nArguments: \[([^]]*)\]", plan)
+    keys = [k.split("#")[0] for k in args.split(", ")]
+    assert keys[-2:] == ["ts", "event_id"], args

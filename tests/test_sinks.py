@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import glob
 import os
+import subprocess
+import sys
+import tempfile
 
 from pyspark.sql import functions as F
 
@@ -51,3 +54,40 @@ def test_partitioned_parquet_layout_and_values(spark, tmp_path):
     )
     assert "PartitionFilters: [" in plan
     assert pruned.count() == ev.filter(F.col("ds") == F.lit(one_day)).count()
+
+
+#: Runs two write-then-read entries in a fresh process and prints the
+#: scratch directories they left while that process still runs.
+_SCRATCH_CHILD = """
+import glob, os, sys, tempfile
+from reddit_data_engineering_project_spark import registry
+from reddit_data_engineering_project_spark.session import get_spark
+registry.load_all_operators()
+spark = get_spark(app_name="scratch-child", master="local[1]", shuffle_partitions=1)
+for name in ("q01_csv_scan", "q18_sink_roundtrip"):
+    registry.QUERIES[name](spark, sys.argv[1]).collect()
+pattern = "reddit_data_engineering_project_spark_*_%d" % os.getpid()
+print("\\n".join(sorted(glob.glob(os.path.join(tempfile.gettempdir(), pattern)))))
+"""
+
+
+def test_scratch_dirs_are_removed_when_the_process_exits():
+    """The entries' per-process scratch directories outlive their lazy
+    frames' reads, and go when the process that made them exits."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_CHILD, SF_DIR],
+        capture_output=True,
+        text=True,
+        cwd=root,
+        timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
+    left = done.stdout.split()
+    tmp = tempfile.gettempdir()
+    assert sorted(os.path.basename(p).rsplit("_", 1)[0] for p in left) == [
+        "reddit_data_engineering_project_spark_csv_scan",
+        "reddit_data_engineering_project_spark_sink_roundtrip",
+    ], left
+    assert all(os.path.dirname(p) == tmp for p in left)
+    assert not [p for p in left if os.path.exists(p)]
