@@ -1057,18 +1057,9 @@ def x04_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: extends R16/Q8 dedup duties (README.md:13) to the
     sub-document granularity the north-star charter requires. Measured
-    10×-docs curve: SCALE.md (via ``boilerplate_removal_over`` — the
-    composable form ``tools/scale_curve.py --family text`` feeds
-    replica corpora).
+    10×-docs curve: SCALE.md.
     """
-    return boilerplate_removal_over(table(spark, sf_dir, "documents"))
-
-
-def boilerplate_removal_over(docs: DataFrame) -> DataFrame:
-    """Boilerplate removal over any ``(doc_id, source, text)``
-    DataFrame — the composable body of :func:`x04_boilerplate_removal`
-    (refactored round 15 for the scale harness; plan and output on the
-    graded corpus are unchanged)."""
+    docs = table(spark, sf_dir, "documents")
     blocks = (
         docs.select("doc_id", "source", tokens(F.col("text")).alias("toks"))
         .select(

@@ -483,7 +483,7 @@ def _simhash_pairs_over(
     """SimHash near-dup pairs over an arbitrary ``(doc_id, text)``
     corpus — the body both SimHash entries share (they differ only in
     ``(band_bits, radius)``) and the counterpart of
-    :func:`minhash_pairs_over` (``tools/scale_curve.py`` times it).
+    :func:`minhash_pairs_over`.
 
     One persisted distinct-shingle relation feeds BOTH the signature
     aggregate and the exact-Jaccard verify (r18): one corpus
@@ -617,8 +617,7 @@ def _verify_jaccard(
     scoped unpersist). Harness loops that run many queries in one
     session must ``spark.catalog.clearCache()`` between queries or
     accumulated cache pressure inflates later timings ~10x (measured;
-    bench.py / tools/check_oracle.py / tools/scale_curve.py and
-    perfbench's ``after_op`` all do).
+    ``tools/check_oracle.py`` and perfbench's ``after_op`` both do).
     At 100 TB the equivalent is an explicit checkpoint of cand_docs and
     sh_cand with TTL cleanup — the candidate set is small by
     construction, so the cost is bounded either way. Callers that need
@@ -757,8 +756,8 @@ def minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def minhash_pairs_over(docs: DataFrame) -> DataFrame:
     """MinHash-LSH near-dup pairs over an arbitrary ``(doc_id, text)``
-    corpus DataFrame — the scale-curve seam (``tools/scale_curve.py``
-    times this over synthesized multiples of the sf0.1 corpus)."""
+    corpus DataFrame; the corpus curation job's near-dup step calls it
+    on its own documents."""
     # MinHash minima are unchanged by duplicates: the signature reads the
     # raw shingle stream and skips the dedupe shuffle (doc-level
     # repartition parallelizes the map-side aggregate); only the exact

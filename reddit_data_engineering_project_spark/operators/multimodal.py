@@ -1235,8 +1235,8 @@ def x05_payload_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame, and the output partitioning is the scan's (the
     ensure_min_parallelism round-robin applies only when the corpus
     scans narrower than the session parallelism — false at 100 TB).
-    The relational formulation and its measured curve stay in
-    tools/scale_curve.py as the documented contrast.
+    The relational formulation's measured curve stays in SCALE.md as
+    the documented contrast.
     """
     docs = (
         table(spark, sf_dir, "documents")

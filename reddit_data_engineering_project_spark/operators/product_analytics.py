@@ -768,23 +768,14 @@ def q21_copurchase_reach2(spark: SparkSession, sf_dir: str) -> DataFrame:
     are therefore excluded from the hop join (they still appear as
     hop-1 endpoints); the middle filter is a left-semi equi-join on the
     same node-id key the hop join shuffles on.
-    """
-    return reach2_over(_copurchase_edges(spark, sf_dir))
-
-
-def reach2_over(edges: DataFrame) -> DataFrame:
-    """The ``q21_copurchase_reach2`` body over an arbitrary symmetric
-    edge list — factored out (r13 verdict item 7) so ``tools/
-    scale_curve.py`` can measure the registered plan at synthesized
-    10x edge count. The registered entry calls this with its own
-    co-purchase edges, so its plan and output are unchanged.
 
     Persists (r18, guide §5): EDGES is consumed by four plan branches
     (degree aggregate, both hop sides, the 1-hop union arm) and DEG by
     two (histogram chain + the cap filter) — with no cache every branch
     re-executed the upstream basket DAG (before-plan: 28 parquet scans,
-    0 ReusedExchange). Lifecycle as elsewhere (harness clearCache)."""
-    edges = edges.persist()
+    0 ReusedExchange). Lifecycle as elsewhere (harness clearCache).
+    """
+    edges = _copurchase_edges(spark, sf_dir).persist()
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("deg")
     ).persist()
@@ -886,25 +877,16 @@ def q21_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sorted-basket construction): consume it directly (r18) instead of
     # mirroring into the symmetric list and filtering back down — the
     # union+filter round-trip doubled the plan for zero information.
-    und = _copurchase_half_edges(spark, sf_dir).select(
-        F.col("src").alias("u"), F.col("dst").alias("v")
+    #
+    # UND is persisted (r18, guide §5): three branches consume it (both
+    # arms of the degree union + the oriented join input) and nothing
+    # reuses exchanges across them — the before-plan held 100
+    # parquet-scan references for one query.
+    und = (
+        _copurchase_half_edges(spark, sf_dir)
+        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .persist()
     )
-    return triangle_membership_over(und)
-
-
-def triangle_membership_over(und: DataFrame) -> DataFrame:
-    """The ``q21_triangle_count`` body over an arbitrary undirected
-    half-edge list (one ``(u, v)`` row per edge, ``u < v``) — factored
-    out (r13 verdict item 7) so ``tools/scale_curve.py`` can measure
-    the degree-ordering orientation at synthesized 10x edges. The
-    registered entry calls this with its own co-purchase half edges,
-    so its plan and output are unchanged.
-
-    UND is persisted here (r18, guide §5): three branches consume it
-    (both arms of the degree union + the oriented join input) and
-    nothing reuses exchanges across them — the before-plan held 100
-    parquet-scan references for one query."""
-    und = und.persist()
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -922,7 +904,7 @@ def triangle_membership_over(und: DataFrame) -> DataFrame:
     # Three plan branches (both wedge sides + the closing scan) read the
     # oriented list, and column pruning makes their subtrees non-identical
     # so ReusedExchange never fires — persist it once (same lifecycle as
-    # dedup's candidate stream: bench/check_oracle clearCache between
+    # dedup's candidate stream: the harness clearCache between
     # queries). At 100 TB this is the canonical materialization point:
     # the post-support-floor oriented edge list IS the graph artifact,
     # orders of magnitude smaller than the lineitem fact it derives from.

@@ -1461,6 +1461,8 @@ def x03_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (K ~ corpus/10k) for exactly this reason.
 _SEMDEDUP_K = 64
 _SEMDEDUP_COS = 0.999
+#: Key offset of the planted x1.01 copies, above every corpus vec_id.
+_SEMDEDUP_COPY_OFFSET = 100_000
 
 
 @register(
@@ -1470,7 +1472,7 @@ _SEMDEDUP_COS = 0.999
     corpus AS (
         SELECT vec_id, e FROM v
         UNION ALL
-        SELECT vec_id + 100000 AS vec_id,
+        SELECT vec_id + {_SEMDEDUP_COPY_OFFSET} AS vec_id,
                list_transform(e, x -> x * 1.01) AS e
         FROM v
     ),
@@ -1536,39 +1538,20 @@ def x02_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeded one — plan shape unchanged). Survivor selection is one
     groupBy on the removed id riding the pair stream's partitioning.
     """
-    return semantic_dedup_over(
-        embedded(spark, sf_dir)
-    )
+    return semantic_dedup_over(embedded(spark, sf_dir))
 
 
-def semantic_dedup_over(
-    emb: DataFrame,
-    k: int = _SEMDEDUP_K,
-    cos_threshold: float = _SEMDEDUP_COS,
-    copy_key_offset: int = 100_000,
-    centroid_pred: Column | None = None,
-) -> DataFrame:
-    """The ``x02_semantic_dedup`` body over an arbitrary embeddings
-    frame — factored out (r12 verdict item 5) so ``tools/
-    scale_curve.py`` can measure the registered plan at synthesized 10x
-    corpus size AND under the ``K ~ corpus`` scaling rule the docstring
-    prescribes. The registered entry calls this with its pinned
-    defaults, so its plan and output are unchanged.
-
-    ``centroid_pred`` overrides the default seed-selection predicate
-    (``vec_id < k``) for replicated-corpus measurements where seed ids
-    must be drawn from every replica's id range, not just the first
-    (r13 ADVICE finding); the caller is responsible for the predicate
-    selecting exactly ``k`` base vectors."""
+def semantic_dedup_over(emb: DataFrame) -> DataFrame:
+    """The ``x02_semantic_dedup`` body over a ``(vec_id, embedding)``
+    frame; the corpus curation job's semantic-dedup step calls it on
+    its own embeddings."""
     base = emb.select("vec_id", _vec_double("embedding").alias("e"))
     copies = base.select(
-        (F.col("vec_id") + copy_key_offset).alias("vec_id"),
+        (F.col("vec_id") + _SEMDEDUP_COPY_OFFSET).alias("vec_id"),
         F.transform(F.col("e"), lambda x: x * 1.01).alias("e"),
     )
     corpus = base.unionByName(copies)
-    if centroid_pred is None:
-        centroid_pred = F.col("vec_id") < k
-    cents = base.filter(centroid_pred).agg(
+    cents = base.filter(F.col("vec_id") < _SEMDEDUP_K).agg(
         F.transform(
             F.sort_array(F.collect_list(F.struct("vec_id", "e"))),
             lambda st: st.e,
@@ -1622,7 +1605,7 @@ def semantic_dedup_over(
             & (F.col("l.vec_id") < F.col("r.vec_id")),
         )
         .filter(
-            cosine(F.col("l.e"), F.col("r.e")) >= F.lit(cos_threshold)
+            cosine(F.col("l.e"), F.col("r.e")) >= F.lit(_SEMDEDUP_COS)
         )
         .select(
             F.col("l.cid").alias("cluster_id"),

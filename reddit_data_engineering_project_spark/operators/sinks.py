@@ -31,7 +31,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.numeric import dround
+from ..functions.numeric import dround, dround_sql
 from ..registry import register
 from ..tables import table
 
@@ -271,12 +271,14 @@ def vacuum_snapshots(root: str) -> list[str]:
 
 @register(
     "q18_snapshot_publish_read",
-    oracle="""
+    oracle=f"""
     SELECT
         o_orderpriority,
         count(*) AS n_rows,
         CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_custs,
-        round(sum(o_totalprice) * 100.0) / 100.0 AS total_price
+        {dround_sql(
+            "sum(CAST(round(o_totalprice * 10000.0) AS BIGINT)) / 10000.0"
+        )} AS total_price
     FROM orders
     GROUP BY 1
     """,
@@ -299,6 +301,12 @@ def q18_snapshot_publish_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     data volume; both snapshot writes are plain partitioned parquet
     writes and the read-back aggregation is the standard partial-agg
     shuffle on ``o_orderpriority``.
+
+    The price total sums e4-quantized BIGINTs, not doubles (the
+    ``q13_running_frames`` discipline): the read-back sums its rows in
+    another order than the oracle, and over exact half-cent prices a
+    double sum's last ulp decides which way ``dround`` rounds. Every
+    price fits e4 exactly, so the integer sum is order-free.
     """
     od = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"
@@ -314,7 +322,10 @@ def q18_snapshot_publish_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.groupBy("o_orderpriority").agg(
         F.count("*").alias("n_rows"),
         F.countDistinct("o_custkey").cast("bigint").alias("n_custs"),
-        dround(F.sum("o_totalprice")).alias("total_price"),
+        dround(
+            F.sum(F.round(F.col("o_totalprice") * 10000.0).cast("bigint"))
+            / 10000.0
+        ).alias("total_price"),
     )
 
 

@@ -1104,18 +1104,9 @@ def x04_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-term query that is a vanishing fraction of a 100 TB corpus. The
     df table (<= |query| rows) and the 1-row corpus stats broadcast;
     the corpus-side stream is shuffled once, on the high-cardinality
-    (doc_id, token) composite. Measured 10×-docs curve: SCALE.md
-    (via ``bm25_scores_over`` — the composable form
-    ``tools/scale_curve.py --family text`` feeds replica corpora).
+    (doc_id, token) composite. Measured 10×-docs curve: SCALE.md.
     """
-    return bm25_scores_over(table(spark, sf_dir, "documents"))
-
-
-def bm25_scores_over(docs: DataFrame) -> DataFrame:
-    """BM25 scoring over any ``(doc_id, text)`` DataFrame — the
-    composable body of :func:`x04_bm25_scores` (refactored round 15 so
-    the scale harness can feed replicated corpora; plan and output on
-    the graded corpus are unchanged)."""
+    docs = table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     tok = docs.select(
         "doc_id",

@@ -433,8 +433,10 @@ def check_ingest_contracts(
     non-conforming table raises ``ValueError`` naming it — run this
     before trusting event-order results over an UNVETTED lake
     directory. The driver corpus and the hostile corpus both conform
-    by construction (``tests/test_round11_ops.py`` pins both the pass
-    and the catch). Operational callers (round-12 verdict item 2):
+    by construction (``tests/test_round11_ops.py`` pins the pass and
+    the catch on the committed corpus, and
+    ``tests/test_adversarial_corpus.py`` the hostile corpus's pass).
+    Operational callers (round-12 verdict item 2):
     ``tests/test_oracle_contract.py`` vets the committed corpus,
     ``tools/check_oracle.py`` vets whatever corpus it sweeps (hostile
     included), and the live ingest runners enforce the row-local terms

@@ -22,7 +22,8 @@ the hostile classes:
   very-long / all-caps / digits-only document texts,
 - exact-duplicate and near-duplicate texts (dedup ladder),
 - zero vectors, duplicate vectors, 1e-7-apart vectors (cosine ties),
-  tiny-norm and huge-norm vectors (normalization overflow),
+  tiny-norm vectors and large-norm ones at the array-domain edge
+  (tables.ARRAY_DOMAINS),
 - orphan lineitem order keys (referential violations the dq_report
   family must COUNT, not choke on),
 - heavy key skew: a whale customer, a hub part, a whale user,
@@ -512,7 +513,9 @@ def gen_embeddings(rng: random.Random) -> dict:
         elif r == 3:
             vecs.append([x * 1e-20 for x in base])  # tiny norm
         elif r == 4:
-            vecs.append([x * 1e10 for x in base])   # huge norm
+            # large norm at the declared domain edge (tables.ARRAY_DOMAINS:
+            # +-100; base is in [-1, 1]), as events.value sits at 999.75
+            vecs.append([x * 99.0 for x in base])
         elif r == 5:
             vecs.append([-x for x in base])         # antipode
         else:

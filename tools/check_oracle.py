@@ -147,7 +147,6 @@ def run_checks(
     sf: str,
     only: set[str] | None = None,
     verbose: bool = False,
-    skip_contracts: bool = False,
     mutated_tables: set[str] | None = None,
 ) -> tuple[int, int, list[str]]:
     """One sweep of every registered query vs its oracle over the
@@ -179,8 +178,7 @@ def run_checks(
         check_ingest_contracts,
     )
 
-    if not skip_contracts:
-        check_ingest_contracts(spark, sf)
+    check_ingest_contracts(spark, sf)
 
     con = _oracle_db(sf)
     n_pass = n_fail = n_skip = 0
@@ -233,28 +231,13 @@ def main() -> int:
     ap.add_argument("--sf", default=os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01"))
     ap.add_argument("--only", default=None)
     ap.add_argument("--verbose", action="store_true")
-    ap.add_argument(
-        "--skip-contracts",
-        action="store_true",
-        help=(
-            "skip the pre-sweep ingest-contract vet — ONLY for a "
-            "hostile corpus that deliberately plants out-of-domain "
-            "values to probe behavior beyond the declared domains"
-        ),
-    )
     args = ap.parse_args()
 
     from reddit_data_engineering_project_spark.session import get_spark
 
     spark = get_spark(app_name="check_oracle")
     only = set(args.only.split(",")) if args.only else None
-    _, n_fail, _ = run_checks(
-        spark,
-        args.sf,
-        only=only,
-        verbose=args.verbose,
-        skip_contracts=args.skip_contracts,
-    )
+    _, n_fail, _ = run_checks(spark, args.sf, only=only, verbose=args.verbose)
     spark.stop()
     return 1 if n_fail else 0
 

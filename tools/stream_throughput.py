@@ -25,8 +25,8 @@ The stateful runners take an UNTIMED warm-up pass first (a ~200-row
 2-file stream into a throwaway sink/checkpoint): a fresh session's
 first stateful micro-batch pays ~3.5 s of python-worker imports and
 JVM codegen that a long-running production stream amortizes to zero,
-so the timed pass measures steady-state throughput — the same
-exclude-first-touch discipline as ``bench.py``'s warm-up query.
+so the timed pass measures steady-state throughput, excluding the
+first touch as perfbench's warm-up does.
 ``--cold`` skips it (the pre-r11 protocol; figures for both are in
 SCALE.md).
 
