@@ -112,6 +112,11 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32
     threads is the harness shape; tests use ``local[*]``).
+
+    The session keeps up to 2000 compiled whole-stage classes
+    (``spark.sql.codegen.cache.maxEntries``). That is a static conf, so
+    an externally built session, which this call then reuses, keeps
+    Spark's default of 100.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -127,6 +132,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # One warm ad-hoc cycle (11 queries, 3 curation steps) compiles
+        # over 200 distinct classes; under the default 100-entry LRU every
+        # cycle recompiled them all. Static conf: only the builder that
+        # creates the session can set it, so ensure_session_confs cannot
+        # apply it to an external session.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)

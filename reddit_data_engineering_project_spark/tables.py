@@ -1,9 +1,12 @@
 """Corpus table loaders.
 
 The driver corpus (``TESTDATA.md``/``FIXTURES.md``) is one parquet file per
-table under ``{sf_dir}/``. Loading is lazy: ``spark.read.parquet`` only
-reads footers, so per-query loads are cheap and Catalyst sees the scan
+table under ``{sf_dir}/``. Loading is lazy and Catalyst sees the scan
 directly (predicate pushdown + column pruning reach the parquet reader).
+Inferring a parquet schema runs a Spark job, so ``table()`` infers each
+local file's schema once per process and reads it again with
+``.schema(...)``, which runs no job; a rewritten file or a changed
+inference conf infers afresh (``_schema``).
 
 At 100 TB these would be directory-partitioned parquet/lakehouse tables;
 the API is identical — only the path changes — and every downstream
@@ -13,8 +16,10 @@ operator is written against the DataFrame, not the file layout.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import WindowSpec
 
 from .session import ensure_session_confs
@@ -181,6 +186,43 @@ _NEW_SESSION_SQL = f"""CASE WHEN CAST(ts AS TIMESTAMP)
 _SESSION_SEQ_SQL = f"sum(new_session) OVER ({_user_order_sql(_RUNNING_SQL)})"
 
 
+#: Parquet read confs that change the schema inference infers.
+_INFERENCE_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: realpath -> (file identity + inference confs, inferred schema). One
+#: entry per file, so a rewritten file replaces its entry; StructTypes
+#: only, never DataFrames, so no plan or cached relation is held.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _schema(spark: SparkSession, path: str) -> StructType | None:
+    """The parquet schema of the local regular file at ``path``, inferred
+    once per file identity (``st_ino``, ``st_mtime_ns``, ``st_size``) and
+    inference confs; ``None`` for a directory or a non-local URI, which
+    the caller reads with inference as before."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    real = os.path.realpath(path)
+    stamp = (st.st_ino, st.st_mtime_ns, st.st_size) + tuple(
+        spark.conf.get(k) for k in _INFERENCE_CONFS
+    )
+    hit = _SCHEMAS.get(real)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[real] = (stamp, schema)
+    return schema
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy scan of one corpus table.
 
@@ -204,7 +246,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown corpus table {name!r}; expected one of {TABLE_NAMES}")
     ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = _schema(spark, path)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     if name == "events":
         ts_dtype = dict(df.dtypes)["ts"]
         if ts_dtype == "bigint":  # legacy ns corpus via nanosAsLong

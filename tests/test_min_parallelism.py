@@ -54,3 +54,36 @@ def test_already_parallel_input_is_untouched(spark):
     out = ensure_min_parallelism(wide)
     # Same object, same plan: no repartition node was appended.
     assert out is wide
+
+
+def test_post_filter_multi_partition_input_is_never_narrowed(
+    spark, tmp_path, monkeypatch
+):
+    """A filtered scan over several files keeps at least its own fan-out
+    whatever its plan-time size estimate says: a low estimate leaves it
+    as it is (no exchange that would coalesce it), and an estimate over
+    the byte floor widens it to the full default parallelism."""
+    from pyspark.sql import functions as F
+
+    from reddit_data_engineering_project_spark import tables as T
+
+    target = spark.sparkContext.defaultParallelism
+    n_files = max(2, target - 1)
+    src = table(spark, SF_DIR, "documents")
+    for i in range(n_files):
+        src.filter(F.col("doc_id") % n_files == i).coalesce(1).write.parquet(
+            str(tmp_path / f"f{i}")
+        )
+    scan = spark.read.parquet(*(str(tmp_path / f"f{i}") for i in range(n_files)))
+    df = scan.filter(F.col("doc_id") % 7 == 0).select("doc_id")
+    n_in = df.rdd.getNumPartitions()
+    assert 1 < n_in < target  # several files, still narrower than the cluster
+    size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    assert -(-size // T._MIN_BYTES_PER_TASK) < n_in  # the low-estimate case
+
+    out = ensure_min_parallelism(df)
+    assert out is df
+    assert out.rdd.getNumPartitions() == n_in
+
+    monkeypatch.setattr(T, "_MIN_BYTES_PER_TASK", 1)
+    assert ensure_min_parallelism(df).rdd.getNumPartitions() == target
