@@ -35,7 +35,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.numeric import dround
-from ..registry import register
+from ..registry import hold, register
 from ..tables import ensure_min_parallelism, table
 from .curation import _split_bucket_sql, _split_sql, split_of
 
@@ -269,12 +269,8 @@ def x02_neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persist the shingle stream once (r17 opt): three plan branches
     # read it (both inverted-index join sides + the size counts) and
     # the planner broadcasts one join side, so without the cache the
-    # scan→shingle→dedupe DAG executes three times, serially. Same
-    # lifecycle as _verify_jaccard's caches; at 100 TB this entry IS
-    # the full-corpus verifier by design, and the materialized distinct
-    # shingle stream is its canonical intermediate (production would
-    # checkpoint it).
-    sh = shingles(table(spark, sf_dir, "documents")).persist()
+    # scan→shingle→dedupe DAG executes three times, serially.
+    sh = hold(shingles(table(spark, sf_dir, "documents")))
     jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
     return (
         _shingle_overlap(sh)
@@ -434,8 +430,8 @@ def _simhash_candidates(
     # first, stream side second). Persisting the 8·|docs|-row narrow
     # bucket relation computes the signature DAG once: measured 5.0 s →
     # 1.4 s for candidate generation at sf0.1 (both band widths). Guide
-    # §5 persist rule; lifecycle identical to _verify_jaccard's caches.
-    buckets = _simhash_buckets(_simhash_signatures_over(sh), band_bits).persist()
+    # §5 persist rule.
+    buckets = hold(_simhash_buckets(_simhash_signatures_over(sh), band_bits))
     r_l = (radius + 1) // 2
     r_r = radius - r_l
 
@@ -489,7 +485,7 @@ def _simhash_pairs_over(
     aggregate and the exact-Jaccard verify (r18): one corpus
     scan+tokenize per query, not two.
     """
-    sh = shingles(docs).persist()
+    sh = hold(shingles(docs))
     return _verify_jaccard(
         docs,
         _simhash_candidates(sh, band_bits, radius),
@@ -588,7 +584,6 @@ _BROADCAST_CAND_MAX_ROWS = 8_000_000
 def _verify_jaccard(
     docs: DataFrame,
     candidates: DataFrame,
-    persisted_out: list | None = None,
     sh_stream: DataFrame | None = None,
     sh_stream_distinct: bool = False,
 ) -> DataFrame:
@@ -612,29 +607,15 @@ def _verify_jaccard(
     scale). The candidate shingle stream is persisted for the same
     reason: three plan branches (both join sides + counts) read it.
 
-    Persist lifecycle: the cached intermediates stay in the session's
-    CacheManager after the caller's action completes (Spark has no
-    scoped unpersist). Harness loops that run many queries in one
-    session must ``spark.catalog.clearCache()`` between queries or
-    accumulated cache pressure inflates later timings ~10x (measured;
-    ``tools/check_oracle.py`` and perfbench's ``after_op`` both do).
-    At 100 TB the equivalent is an explicit checkpoint of cand_docs and
-    sh_cand with TTL cleanup — the candidate set is small by
-    construction, so the cost is bounded either way. Callers that need
-    SCOPED release without a blanket ``clearCache()`` (long-lived
-    streaming loops sharing a session with caller-owned caches) pass
-    ``persisted_out``: the intermediates this call persists are appended
-    there for the caller to ``unpersist()`` after its action completes.
-
     Eager: building the returned DataFrame already runs the candidate
     DAG (shingle, sign, band, candidate pairs) once, through the
     ``cand_docs.count()`` broadcast-size guard below. A caller that only
     plans or explains the query still pays for that job.
     """
-    cand_docs = (
-        candidates.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id"))
-        .dropDuplicates()
-        .persist()
+    cand_docs = hold(
+        candidates.select(
+            F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
+        ).dropDuplicates()
     )
     # Materialize the persisted id list NOW and count it (r18): the
     # count is the broadcast-size guard (ADVICE r17 — an adversarial
@@ -672,13 +653,11 @@ def _verify_jaccard(
         sh_cand = sh_stream.join(cand_side, "doc_id", "left_semi")
         if not sh_stream_distinct:
             sh_cand = sh_cand.dropDuplicates(["doc_id", "shingle"])
-        sh_cand = sh_cand.persist()
+        sh_cand = hold(sh_cand)
     else:
-        sh_cand = shingles(
-            docs.join(cand_side, "doc_id", "left_semi"), widen=False
-        ).persist()
-    if persisted_out is not None:
-        persisted_out.extend((cand_docs, sh_cand))
+        sh_cand = hold(
+            shingles(docs.join(cand_side, "doc_id", "left_semi"), widen=False)
+        )
     jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
     return (
         _shingle_overlap(sh_cand)
@@ -765,9 +744,9 @@ def minhash_pairs_over(docs: DataFrame) -> DataFrame:
     # persisted and shared with the verify stage (r18): one corpus
     # scan+tokenize per query — verification dedupes only the
     # candidate-restricted remnant.
-    sh = shingles(
-        docs.repartition(F.col("doc_id")), distinct=False, widen=False
-    ).persist()
+    sh = hold(
+        shingles(docs.repartition(F.col("doc_id")), distinct=False, widen=False)
+    )
     sig = minhash_signatures(sh)
 
     # Persist the band index once (r17 opt): both join branches read it,
@@ -775,12 +754,9 @@ def minhash_pairs_over(docs: DataFrame) -> DataFrame:
     # branches (measured: the whole shingle+signature DAG executed twice,
     # sequentially, because the planner broadcasts one side — the build
     # pays the full DAG before the stream side starts its own copy).
-    # Guide §5 persist rule: reused AND expensive to recompute. Same
-    # lifecycle as the _verify_jaccard caches (bench/check_oracle
-    # clearCache between queries; production stores this index — see
-    # build_band_index, which is the durable form of exactly this
-    # relation).
-    buckets = band_buckets(sig).persist()
+    # Guide §5 persist rule: reused AND expensive to recompute
+    # (build_band_index is the durable form of exactly this relation).
+    buckets = hold(band_buckets(sig))
 
     lhs = buckets.alias("l")
     rhs = buckets.alias("r")
@@ -863,7 +839,6 @@ def incremental_neardup_with_index(
     inc_docs: DataFrame,
     all_docs: DataFrame,
     index_table: str,
-    persisted_out: list | None = None,
 ) -> DataFrame:
     """Verified (inc_doc, corpus_doc) near-dup pairs via the stored index.
 
@@ -876,9 +851,7 @@ def incremental_neardup_with_index(
     candidates = incremental_candidates_against_index(
         spark, inc_docs, index_table
     )
-    pairs = _verify_jaccard(
-        all_docs, candidates, persisted_out=persisted_out
-    )
+    pairs = _verify_jaccard(all_docs, candidates)
     flagged = (
         pairs.join(
             inc_ids.withColumnRenamed("doc_id", "doc_a").withColumnRenamed(
@@ -1056,9 +1029,9 @@ def x02_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sign, corpus sign, verify re-scan). This also dissolves the r17
     # broadcast-serialization regression: the serial chain behind the
     # candidate broadcast no longer hides a corpus re-scan behind it.
-    sh_all = shingles(
-        docs.repartition(F.col("doc_id")), distinct=False, widen=False
-    ).persist()
+    sh_all = hold(
+        shingles(docs.repartition(F.col("doc_id")), distinct=False, widen=False)
+    )
     sig_inc = minhash_signatures(sh_all.filter(is_inc))
     sig_cor = minhash_signatures(sh_all.filter(~is_inc))
     lhs = band_buckets(sig_inc).alias("l")
@@ -1307,9 +1280,9 @@ def x02_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scaled-BIGINT scores are one IEEE division each over exact
     integer counts.
     """
-    # Persist the shingle stream once (r17 opt) — same three-branch
-    # re-evaluation as x02_neardup_jaccard, same lifecycle.
-    sh = shingles(table(spark, sf_dir, "documents")).persist()
+    # Hold the shingle stream once (r17 opt) — same three-branch
+    # re-evaluation as x02_neardup_jaccard.
+    sh = hold(shingles(table(spark, sf_dir, "documents")))
     c_ab = F.col("inter") / F.col("n_a")
     c_ba = F.col("inter") / F.col("n_b")
     return (
@@ -1450,7 +1423,7 @@ def pipeline_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same double-evaluation pathology r17 fixed inside the LSH
     # stages, recurring one level up in the composed report. The pair
     # relation is O(verified pairs) — tiny at any scale.
-    nd = x02_minhash_lsh_neardup(spark, sf_dir).persist()
+    nd = hold(x02_minhash_lsh_neardup(spark, sf_dir))
     nd_pairs = nd.agg(F.count("*").cast("bigint").alias("n_neardup_pairs"))
     nd_docs = (
         nd.select(F.col("doc_a").alias("d"))

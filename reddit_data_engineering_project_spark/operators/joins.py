@@ -22,7 +22,7 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.numeric import dround
 from ..registry import register
@@ -858,86 +858,6 @@ def q11_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Bloom-prune geometry: m bits (as m/64 packed BIGINT words in a map)
-#: and k probe positions per key, each a 32-bit md5 slice mod m.
-_BLOOM_BITS = 8192
-_BLOOM_K = 4
-
-
-def _bloom_probe_positions(col: Column) -> "list[Column]":
-    """The k bit positions a key sets/tests in the Bloom filter.
-
-    Four disjoint 8-hex-digit (32-bit) slices of md5(key) mod m —
-    independent-enough hashes from ONE digest call, all codegen
-    (md5/substring/conv are JVM built-ins). Deterministic, so the
-    pruned plan is reproducible run-to-run; correctness never depends
-    on hash quality because an exact join runs behind the filter.
-    """
-    h = F.md5(col.cast("string"))
-    return [
-        F.conv(F.substring(h, 1 + 8 * i, 8), 16, 10).cast("long")
-        % _BLOOM_BITS
-        for i in range(_BLOOM_K)
-    ]
-
-
-def build_bloom(keys: DataFrame, key: str) -> DataFrame:
-    """Aggregate a key column into a one-row Bloom filter.
-
-    Output: a single row holding ``map<int, bigint>`` from word index →
-    64-bit word (absent word = 0). Build cost is one partial-aggregating
-    pass over the (already filtered, small) build side; the result is a
-    ≤1 KiB broadcast no matter how large the build side grows, which is
-    the property that lets the probe-side scan stay map-side-only.
-    """
-    pos = keys.select(
-        F.explode(F.array(*_bloom_probe_positions(F.col(key)))).alias("pos")
-    )
-    words = (
-        pos.select(
-            (F.col("pos") / 64).cast("int").alias("word"),
-            (F.col("pos") % 64).cast("int").alias("bit"),
-        )
-        .select("word", F.expr("shiftleft(1L, bit)").alias("mask"))
-        .groupBy("word")
-        .agg(F.bit_or("mask").alias("bits"))
-    )
-    return words.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("word", "bits"))
-        ).alias("bloom")
-    )
-
-
-def bloom_prune(big: DataFrame, key: str, bloom: DataFrame) -> DataFrame:
-    """Filter ``big`` to rows whose ``key`` passes the Bloom filter.
-
-    The one-row bloom map is broadcast (BroadcastNestedLoopJoin over a
-    single row — free) and the k bit tests run inside the probe scan's
-    WholeStageCodegen: element_at on the 128-entry map + shiftright +
-    AND per probe, O(1) per row, no shuffle of ``big`` whatsoever.
-    False negatives are impossible (every build-key bit is set); false
-    positives are expected and removed by the exact join the caller
-    runs next.
-    """
-    probes = _bloom_probe_positions(F.col(key))
-    pruned = big.crossJoin(F.broadcast(bloom))
-    helper = []
-    for i, pos in enumerate(probes):
-        wcol, bcol = f"_bw{i}", f"_bb{i}"
-        pruned = pruned.withColumn(
-            wcol,
-            F.coalesce(
-                F.element_at(F.col("bloom"), (pos / 64).cast("int")), F.lit(0)
-            ),
-        ).withColumn(bcol, (pos % 64).cast("int"))
-        helper += [wcol, bcol]
-    test = " AND ".join(
-        f"((shiftright(_bw{i}, _bb{i}) & 1) = 1)" for i in range(_BLOOM_K)
-    )
-    return pruned.filter(F.expr(test)).drop("bloom", *helper)
-
-
 @register(
     "q10_bloom_prune",
     oracle="""
@@ -956,29 +876,17 @@ def bloom_prune(big: DataFrame, key: str, bloom: DataFrame) -> DataFrame:
     tags=("joins", "Q10", "bloom", "runtime-filter"),
 )
 def q10_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q10: Bloom-filter semi-join pruning — the explicit, deterministic
-    form of Spark's runtime bloom filter (the pattern behind
-    ``spark.sql.optimizer.runtime.bloomFilter.enabled``), owned by the
-    engine so the plan is pinned rather than optimizer-dependent.
+    """Q10: a selective star join whose fact scan meets only broadcasts.
 
-    A selective dim predicate (EUROPE suppliers ≈ 1/5 of suppliers)
-    should prune the FACT SCAN, not just the join: the filtered dim's
-    keys are folded into an m=8192-bit Bloom filter (one tiny agg),
-    broadcast as a single ≤1 KiB row, and every lineitem tests k=4 bit
-    positions inside its own scan stage — rows that cannot join are
-    dropped map-side BEFORE any join work. The exact broadcast join
-    behind it removes the ~p^k ≈ 1e-4 false positives, so the result is
-    bit-identical to the plain join and the oracle is the plain SQL
-    join: the bloom is provably transparent (also pinned by a pytest
-    that diffs the bloom path against the direct join).
-
-    Scale shape: at 100 TB the bloom build cost is one partial agg on
-    the dim, the broadcast is constant-size, and the FACT table never
-    shuffles — the plan's only Exchanges are the ≤25-row final nation
-    rollup plus two dim-sized ones inside the bloom build (≤4·|dim|
-    probe rows → ≤128 words → 1 row), all constant-size w.r.t. the
-    fact. This is exactly the shape that turns a selective star query
-    from scan-bound to index-like.
+    EUROPE suppliers (about 1/5 of ``supplier``) with their nation name
+    form the dimension, broadcast into one hash join with ``lineitem``:
+    the fact table never shuffles, and the only Exchange is the
+    nation rollup (at most 25 groups). A Bloom pre-filter on the fact side
+    pays only when the dimension is too large to broadcast; Spark's
+    runtime bloom filter (``spark.sql.optimizer.runtime.bloomFilter.*``)
+    covers that case on shuffle joins, and
+    ``tests/test_plans.py::test_runtime_bloom_filter_reaches_fact_side``
+    pins it.
     """
     s = table(spark, sf_dir, "supplier")
     n = table(spark, sf_dir, "nation")
@@ -989,15 +897,11 @@ def q10_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("r_name") == "EUROPE")
         .select("s_suppkey", F.col("n_name").alias("nation"))
     )
-    bloom = build_bloom(dim, "s_suppkey")
     li = table(spark, sf_dir, "lineitem").select(
         "l_suppkey", "l_extendedprice", "l_discount"
     )
-    pruned = bloom_prune(li, "l_suppkey", bloom)
-    exact = pruned.join(
-        F.broadcast(dim), pruned.l_suppkey == dim.s_suppkey
-    )
-    return exact.groupBy("nation").agg(
+    star = li.join(F.broadcast(dim), li.l_suppkey == dim.s_suppkey)
+    return star.groupBy("nation").agg(
         F.count("*").cast("bigint").alias("n_lineitems"),
         dround(
             F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..functions.numeric import dround
-from ..registry import register
+from ..registry import hold, register
 from ..tables import (
     _NEW_SESSION_SQL,
     _SESSION_SEQ_SQL,
@@ -543,10 +543,12 @@ def q21_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # caches each consumer re-executes the basket DAG (before-plan: 28
     # parquet scans, 0 ReusedExchange). With identical cached inputs the
     # per-iteration src-hash Exchange also becomes reusable.
-    edges = _copurchase_edges(spark, sf_dir).persist()
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").alias("degree")
-    ).persist()
+    edges = hold(_copurchase_edges(spark, sf_dir))
+    deg = hold(
+        edges.groupBy(F.col("src").alias("node")).agg(
+            F.count("*").alias("degree")
+        )
+    )
     ranks = deg.select(
         "node", "degree", F.lit(_PR_INIT_E6).cast("bigint").alias("rank_e6")
     )
@@ -773,12 +775,12 @@ def q21_copurchase_reach2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (degree aggregate, both hop sides, the 1-hop union arm) and DEG by
     two (histogram chain + the cap filter) — with no cache every branch
     re-executed the upstream basket DAG (before-plan: 28 parquet scans,
-    0 ReusedExchange). Lifecycle as elsewhere (harness clearCache).
+    0 ReusedExchange).
     """
-    edges = _copurchase_edges(spark, sf_dir).persist()
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").alias("deg")
-    ).persist()
+    edges = hold(_copurchase_edges(spark, sf_dir))
+    deg = hold(
+        edges.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("deg"))
+    )
     mid = (
         deg.join(F.broadcast(_degree_cap(deg)))
         .filter(F.col("deg") <= F.col("cap"))
@@ -882,10 +884,10 @@ def q21_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arms of the degree union + the oriented join input) and nothing
     # reuses exchanges across them — the before-plan held 100
     # parquet-scan references for one query.
-    und = (
-        _copurchase_half_edges(spark, sf_dir)
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .persist()
+    und = hold(
+        _copurchase_half_edges(spark, sf_dir).select(
+            F.col("src").alias("u"), F.col("dst").alias("v")
+        )
     )
     deg = (
         und.select(F.col("u").alias("node"))
@@ -903,16 +905,17 @@ def q21_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Three plan branches (both wedge sides + the closing scan) read the
     # oriented list, and column pruning makes their subtrees non-identical
-    # so ReusedExchange never fires — persist it once (same lifecycle as
-    # dedup's candidate stream: the harness clearCache between
-    # queries). At 100 TB this is the canonical materialization point:
-    # the post-support-floor oriented edge list IS the graph artifact,
-    # orders of magnitude smaller than the lineitem fact it derives from.
-    oriented = e.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
-        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("t_deg"),
-    ).persist()
+    # so ReusedExchange never fires — hold it once. At 100 TB this is
+    # the canonical materialization point: the post-support-floor
+    # oriented edge list IS the graph artifact, orders of magnitude
+    # smaller than the lineitem fact it derives from.
+    oriented = hold(
+        e.select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
+            F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("t_deg"),
+        )
+    )
     e1 = oriented.select(
         "s", F.col("t").alias("b"), F.col("t_deg").alias("b_deg")
     )
@@ -2114,28 +2117,26 @@ def q21_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # Each round references the previous edge list TWICE (degree agg +
     # the filtered survivor), so an unpersisted chain re-evaluates the
-    # basket build 2^rounds times. Persist per round — the iterative
-    # discipline label propagation uses (lifecycle: bench/check_oracle
-    # clearCache between queries; production checkpoints the shrinking
-    # edge list per peel, which is also what bounds lineage depth when
-    # the fixpoint loop replaces the fixed unroll).
-    edges = _copurchase_edges(spark, sf_dir).select("src", "dst").persist()
+    # basket build 2^rounds times. Hold each round — the iterative
+    # discipline label propagation uses (production checkpoints the
+    # shrinking edge list per peel, which is also what bounds lineage
+    # depth when the fixpoint loop replaces the fixed unroll).
+    edges = hold(_copurchase_edges(spark, sf_dir).select("src", "dst"))
     for _ in range(_KCORE_ROUNDS):
         # keep is consumed by BOTH semi-joins (src side + dst side);
-        # persisting it (r18) computes the round's degree aggregate
-        # once instead of once per broadcast build. Nothing unpersists
-        # it: like each round's edges, every round's keep stays cached
-        # until the caller's clearCache.
-        keep = (
+        # holding it (r18) computes the round's degree aggregate once
+        # instead of once per broadcast build.
+        keep = hold(
             edges.groupBy("src")
             .agg(F.count("*").alias("deg"))
             .filter(F.col("deg") >= _KCORE_K)
             .select("src")
-            .persist()
         )
-        edges = edges.join(keep, "src", "left_semi").join(
-            keep.select(F.col("src").alias("dst")), "dst", "left_semi"
-        ).persist()
+        edges = hold(
+            edges.join(keep, "src", "left_semi").join(
+                keep.select(F.col("src").alias("dst")), "dst", "left_semi"
+            )
+        )
     return edges.groupBy(F.col("src").alias("part")).agg(
         F.count("*").cast("bigint").alias("deg_in_core")
     )
@@ -2249,7 +2250,7 @@ def q21_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hub-capped form, and this unfiltered exact form is the
     semantics the oracle checks here.
     """
-    edges = _copurchase_edges(spark, sf_dir).persist()
+    edges = hold(_copurchase_edges(spark, sf_dir))
     term = (
         edges.groupBy(F.col("src").alias("v"))
         .agg(F.count("*").alias("deg"))
@@ -2311,7 +2312,7 @@ def q21_adamic_adar_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop being O(deg²) centers — the standard capped-AA trade (Σ
     capped-deg² work for a provably-bounded stage).
     """
-    edges = _copurchase_edges(spark, sf_dir).persist()
+    edges = hold(_copurchase_edges(spark, sf_dir))
     deg = edges.groupBy(F.col("src").alias("v")).agg(
         F.count("*").alias("deg")
     )

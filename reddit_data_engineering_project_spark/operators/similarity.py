@@ -38,7 +38,7 @@ import random
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..functions.numeric import dround, dround_sql
-from ..registry import register
+from ..registry import hold, register
 from ..tables import ensure_min_parallelism, table
 
 #: Random hyperplanes for SimHash bucketing — drawn once from a fixed
@@ -434,9 +434,8 @@ def x03_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assignment and the query probing crossJoin against it, and
     # without the cache the whole posexplode + two-shuffle percentile
     # build executes twice. ~10 rows; production stores the trained
-    # codebook anyway. Same cache lifecycle as the dedup family's
-    # intermediates.
-    centroids = (
+    # codebook anyway.
+    centroids = hold(
         by_dim.groupBy("label")
         .agg(
             F.map_from_entries(
@@ -450,7 +449,6 @@ def x03_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda j: F.element_at("cmap", j),
             ).alias("c"),
         )
-        .persist()
     )
     # Nearest-centroid proxy distance: dot(c,c) - 2*dot(e,c), the
     # engine-portable form (see docstring). Broadcast 10 centroid rows.
@@ -556,11 +554,10 @@ def x02_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it, and without the cache the planner broadcasts one side —
     # executing the interpreted 8-hyperplane signing per row twice,
     # sequentially (the simhash-buckets pathology). Production stores
-    # this index. Same cache lifecycle as the dedup family's
-    # intermediates.
-    indexed = corpus.select(
-        "vec_id", "e", _bucket_bits(F.col("e")).alias("bucket")
-    ).persist()
+    # this index.
+    indexed = hold(
+        corpus.select("vec_id", "e", _bucket_bits(F.col("e")).alias("bucket"))
+    )
     lhs = indexed.alias("l")
     rhs = indexed.alias("r")
     return (
@@ -1368,8 +1365,7 @@ def x03_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persist the 1-row coarse codebook (r17 opt): the corpus
     # assignment AND the query probing both crossJoin against it, and
     # without the cache its encode + collect aggregate executes twice.
-    # Same cache lifecycle as the dedup family's intermediates.
-    cc = _first_codebook(enc, "icode", _IVFPQ_COARSE_K, "ccents").persist()
+    cc = hold(_first_codebook(enc, "icode", _IVFPQ_COARSE_K, "ccents"))
     # Coarse assignment: argmin over the broadcast centroid list, the
     # materialize-once two-transform trick from X3f.
     cdists = F.transform(
@@ -1386,16 +1382,18 @@ def x03_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-runs the interpreted 16-centroid coarse assignment per row
     # (the most expensive per-row arithmetic in this entry). One cache
     # = one assignment pass; production stores exactly this residual
-    # layout. Same cache lifecycle as the dedup family's intermediates.
-    res = assigned.select(
-        "vec_id",
-        "cid",
-        F.zip_with(
-            "icode",
-            F.element_at(F.col("ccents"), F.col("cid").cast("int")),
-            lambda x, y: x - y,
-        ).alias("rvec"),
-    ).persist()
+    # layout.
+    res = hold(
+        assigned.select(
+            "vec_id",
+            "cid",
+            F.zip_with(
+                "icode",
+                F.element_at(F.col("ccents"), F.col("cid").cast("int")),
+                lambda x, y: x - y,
+            ).alias("rvec"),
+        )
+    )
     rcb = _first_codebook(res, "rvec", 16, "rcents")
     coded = res.crossJoin(F.broadcast(rcb)).select(
         "vec_id", "cid", _pq_codes(F.col("rvec"), "rcents").alias("codes")
@@ -1589,13 +1587,14 @@ def semantic_dedup_over(emb: DataFrame) -> DataFrame:
     # one side — executing the interpreted K·dim-per-row assignment
     # arithmetic twice, sequentially (the simhash-buckets pathology).
     # The assigned table is also exactly the artifact a production
-    # SemDeDup run checkpoints. Same cache lifecycle as the dedup
-    # family's intermediates.
-    assigned = corpus.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "e",
-        F.array_position(dists, F.array_min(dists)).alias("cid"),
-    ).persist()
+    # SemDeDup run checkpoints.
+    assigned = hold(
+        corpus.crossJoin(F.broadcast(cents)).select(
+            "vec_id",
+            "e",
+            F.array_position(dists, F.array_min(dists)).alias("cid"),
+        )
+    )
     lhs = assigned.alias("l")
     rhs = assigned.alias("r")
     pairs = (

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from ..registry import register
+from ..registry import hold, register
 from ..tables import (
     _FRAME,
     _FRAME_SQL,
@@ -871,15 +871,13 @@ def _hourly_count_series(ev: DataFrame) -> DataFrame:
     trend rows + seasonal means) all branch from the 720-row cache.
     Unpersisted, column pruning would specialize each branch's scan
     schema, defeat ReusedExchange (the q21_triangle_count lesson), and
-    re-run the fact scan up to four times — persist pins ONE fact scan
-    total. Same lifecycle convention as the PageRank and k-core edge
-    lists (caller's action completes; session teardown reclaims the
-    720 rows). Calendar-sized at ANY corpus size.
+    re-run the fact scan up to four times — holding it pins ONE fact
+    scan total. Calendar-sized at ANY corpus size.
     """
-    hourly = (
-        ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h"))
-        .agg(F.count("*").cast("bigint").alias("x"))
-        .persist()
+    hourly = hold(
+        ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
+            F.count("*").cast("bigint").alias("x")
+        )
     )
     bounds = hourly.agg(
         F.min("h").alias("h0"),

@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import functools
 import textwrap
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,6 +54,46 @@ ORACLES: dict[str, str] = {}
 TAGS: dict[str, tuple[str, ...]] = {}
 
 
+class _Scope(threading.local):
+    """Per thread: the relations :func:`hold` persisted and the depth of
+    registered entry calls in progress."""
+
+    def __init__(self) -> None:
+        self.held: list[DataFrame] = []
+        self.depth = 0
+
+
+_scope = _Scope()
+
+
+def hold(df: DataFrame) -> DataFrame:
+    """Persist ``df`` for the entry being built and return it.
+
+    The engine's one persist discipline: every relation the engine
+    persists goes through here and is released (unpersisted,
+    non-blocking) at the next outermost registered entry call on the
+    same thread, or at :func:`release`. It cannot be released after the
+    action instead: entries return lazy DataFrames, and the action
+    belongs to the caller. Entries that call other entries keep their
+    relations, because only the outermost call releases. Each thread
+    keeps its own list, so a streaming ``foreachBatch`` callback releases
+    only what its batch held, and caches the caller made itself are
+    never touched. A re-run after an input file is rewritten in place
+    therefore reads the new file instead of the relation the first run
+    cached.
+    """
+    df = df.persist()
+    _scope.held.append(df)
+    return df
+
+
+def release() -> None:
+    """Unpersist (non-blocking) every relation this thread :func:`hold`-s."""
+    for df in _scope.held:
+        df.unpersist(False)
+    _scope.held.clear()
+
+
 def register(
     name: str,
     oracle: str,
@@ -63,8 +104,15 @@ def register(
     def deco(fn: QueryFn) -> QueryFn:
         @functools.wraps(fn)
         def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-            ensure_session_confs(spark)
-            return fn(spark, sf_dir)
+            depth = _scope.depth
+            if depth == 0:
+                release()
+            _scope.depth = depth + 1
+            try:
+                ensure_session_confs(spark)
+                return fn(spark, sf_dir)
+            finally:
+                _scope.depth = depth
 
         if name in QUERIES:
             raise ValueError(f"duplicate query registration: {name}")

@@ -32,6 +32,7 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..registry import release
 from ..session import ensure_session_confs
 from ..tables import _SESSION_GAP_MIN, contract_observe_metrics
 
@@ -497,26 +498,12 @@ def run_dedup_index_stream(
     def flag_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # Verification persists candidate intermediates for its plan
-        # branches (_verify_jaccard); in an always-on stream those would
-        # accumulate per micro-batch in the session CacheManager and
-        # degrade later batches (the measured ~10x cache-pressure
-        # inflation documented in _verify_jaccard). Release ONLY what
-        # this batch registered (via persisted_out): a blanket
-        # clearCache() would also evict caller-owned caches (e.g. a
-        # cached `docs` corpus), silently re-pricing every later batch
-        # at |corpus|.
-        batch_persisted: list = []
         pairs = incremental_neardup_with_index(
-            spark,
-            batch_df,
-            docs.unionByName(batch_df),
-            index_table,
-            persisted_out=batch_persisted,
+            spark, batch_df, docs.unionByName(batch_df), index_table
         )
         write_pairs(pairs, batch_id)
-        for cached in batch_persisted:
-            cached.unpersist(False)
+        # The verify stage's held relations, this thread's only.
+        release()
 
     _drain(
         _file_stream(spark, source_dir), flag_batch, checkpoint_dir, "append"

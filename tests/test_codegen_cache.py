@@ -14,15 +14,15 @@ from reddit_data_engineering_project_spark import registry
 from conftest import SF_DIR
 
 # perfbench's adhoc_analytics queries and curation entries, plus a few
-# text entries. q10_bloom_prune and q21_copurchase_lift are left out:
-# with the cache sized they still recompile 0-10 classes on some warm
-# passes and none on others (their physical plans vary from run to run),
-# which no cache size removes.
+# text entries. q21_copurchase_lift is left out: with the cache sized it
+# still recompiles 0-10 classes on some warm passes and none on others
+# (its physical plan varies from run to run), which no cache size removes.
 ENTRIES = (
     "q04_topk",
     "q07_hash_aggregate",
     "q09_cube",
     "q10_star_report",
+    "q10_bloom_prune",
     "q11_asof_join",
     "q13_topn_per_group",
     "q21_funnel_conversion",

@@ -552,41 +552,6 @@ def test_weighted_sample_is_length_biased_not_uniform(spark):
     )
 
 
-def test_bloom_prune_no_false_negatives_and_bites(spark):
-    """The Bloom pre-filter must (a) never drop a joinable row — every
-    build-key bit is set, so survivors ⊇ exact matches — and (b)
-    actually prune: EUROPE holds ~1/5 of suppliers, so most lineitems
-    must die map-side before the join. Deterministic md5 probes make
-    both counts stable."""
-    from conftest import SF_DIR
-
-    from pyspark.sql import functions as FF
-
-    from reddit_data_engineering_project_spark.operators import joins as J
-    from reddit_data_engineering_project_spark.tables import table
-
-    li = table(spark, SF_DIR, "lineitem").select("l_suppkey")
-    s = table(spark, SF_DIR, "supplier")
-    n = table(spark, SF_DIR, "nation")
-    r = table(spark, SF_DIR, "region")
-    dim = (
-        s.join(n, s.s_nationkey == n.n_nationkey)
-        .join(r, n.n_regionkey == r.r_regionkey)
-        .filter(FF.col("r_name") == "EUROPE")
-        .select("s_suppkey")
-    )
-    bloom = J.build_bloom(dim, "s_suppkey")
-    survivors = J.bloom_prune(li, "l_suppkey", bloom)
-    total = li.count()
-    passed = survivors.count()
-    exact = li.join(dim, li.l_suppkey == dim.s_suppkey).count()
-    assert exact <= passed < total
-    # m=8192/k=4 at this fill keeps false positives ~1e-4: pin an
-    # upper bound so a probe-slicing regression (correlated probes)
-    # shows up as a selectivity explosion, not a silent slowdown.
-    assert passed - exact <= max(10, total // 100)
-
-
 def test_partitioned_prune_day_exists_in_fixture(spark):
     """The pruned day is a fixed literal; if a corpus regeneration ever
     moves the 2024-01 event window, the op would go silently empty-but-

@@ -46,9 +46,12 @@ def test_streamed_increment_matches_batch_pairs(spark, tmp_path: pathlib.Path):
     # 3 files → 3 micro-batches.
     inc.repartition(3).write.mode("overwrite").parquet(source)
 
+    spark.catalog.clearCache()
     run_dedup_index_stream(
         spark, source, "sdi.corpus_bands", corpus, sink, ckpt
     )
+    # Each micro-batch releases what its verify stage held.
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
 
     got_df = spark.read.parquet(os.path.join(sink, "batch=*"))
     got = {(r.inc_doc, r.corpus_doc) for r in got_df.collect()}

@@ -114,10 +114,6 @@ def _check_entry(spark, con, name: str, sf: str, verbose: bool = False):
     Errors on either engine propagate to the caller."""
     from reddit_data_engineering_project_spark import registry
 
-    # Cold-cache isolation between queries: persisted intermediates
-    # from earlier entries (LSH dedup family) otherwise accumulate in
-    # the shared session and slow later queries.
-    spark.catalog.clearCache()
     sdf = registry.QUERIES[name](spark, sf)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]

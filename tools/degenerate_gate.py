@@ -52,8 +52,8 @@ Cost (r13 verdict item 4), two stacked levers, both measured round 14:
    paid JVM startup + codegen warm-up eleven times (~29 min; 91–145 s
    floor each). The default mode runs every sweep IN-PROCESS through
    one SparkSession via ``check_oracle.run_checks`` (same-schema
-   corpora, per-query ``clearCache`` isolation, fresh DuckDB
-   connection per corpus): measured 22 m 43 s — an honest finding,
+   corpora, each entry call releasing the relations the previous one
+   held, fresh DuckDB connection per corpus): measured 22 m 43 s — an honest finding,
    warm-up was only ~25% of the old floor; the remainder is genuine
    208-entry execution per corpus.
 2. INPUT-IDENTICAL SKIP — nine of the eleven corpora mutate ONE to
